@@ -6,6 +6,8 @@ feature pipeline over a deterministic synthetic transcript corpus
 (~600k turns incl. hot-conversation skew). Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
+Core-scaling evidence comes from the traced run of perfbench/run.py
+(``flagship.scaling_eff_1to4``), not from this harness.
 """
 
 from __future__ import annotations
@@ -78,87 +80,6 @@ def force(df) -> int:
     return row["n"]
 
 
-def _scaling_row() -> dict | None:
-    import subprocess
-
-    from tools.scaling_bench import append_md, measure
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    # N=2 (2 vs 8 cores): the widest 4x span whose cycles this
-    # sandbox's hypervisor actually delivers — pure-codegen ceiling
-    # measured 0.964 at 2->8 but 0.734 at 4->16 and 0.673 at 8->32
-    # (co-tenant CPU overcommit; see tools/scaling_bench.py docstring).
-    # The in-row ceiling_scaling_efficiency re-measures that ceiling
-    # every run so the claim stays evidence, not folklore.
-    n = int(os.environ.get("BENCH_SCALING_N", "2"))
-    # 600k convs (~18M turns): the pipeline got ~1.5x faster across
-    # rounds 3-4, so at the old 200k-conv corpus the 16-core leg
-    # finished compute in ~6s and fixed per-job overhead (scheduling,
-    # codegen) dominated the ratio — an Amdahl artifact of the input
-    # size, not the plan. Size each leg to tens of seconds so the
-    # efficiency number measures the architecture.
-    n_convs = int(os.environ.get("BENCH_SCALING_CONVS", "600000"))
-    rounds = int(os.environ.get("BENCH_SCALING_ROUNDS", "2"))
-    try:
-        # Key on the last commit that touched the code the measurement
-        # actually exercises (library + the harness itself), not HEAD:
-        # a docs/entry-registry commit doesn't change the measured plan,
-        # so it shouldn't force a 2x ~90s re-measurement inside the
-        # driver's (possibly contended) bench window.
-        head = subprocess.run(
-            ["git", "-C", repo, "log", "-1", "--format=%H", "--",
-             "hipipe_spark", "tools/scaling_bench.py", "bench.py"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    except Exception:
-        head = "unknown"
-    cache_path = os.path.join(repo, "BENCH", "scaling_cache.json")
-    cached = None
-    try:
-        with open(cache_path) as f:
-            cached = json.load(f)
-        from datetime import datetime, timezone
-        age = (datetime.now(timezone.utc)
-               - datetime.fromisoformat(cached["result"]["date"]))
-        if cached["key"] != [head, n, n_convs] or age.total_seconds() >= 4 * 3600:
-            cached = None
-    except Exception:
-        cached = None
-    if cached is not None:
-        r = cached["result"]
-        # Reuse a cached row outright when it's the row we want (quiet
-        # host AND e2e over the 0.8 gate), or when the bounded
-        # re-measure budget for this key is spent — the driver runs
-        # bench.py several times per round and each 2-JVM protocol
-        # costs minutes; without the cap a noisy host would re-measure
-        # on every rep (VERDICT r4 #4: retries must be BOUNDED).
-        good = (r.get("quiet") and
-                r.get("e2e_scaling_efficiency", 0.0) >= 0.8)
-        if good or cached.get("attempts", 1) >= 3:
-            return r
-    result = measure(n=n, n_convs=n_convs, rounds=rounds)
-    if cached is not None:
-        # keep whichever measurement produced the better (quiet-
-        # preferred, then higher-e2e) row; never let a contended rerun
-        # overwrite a clean row
-        old = cached["result"]
-        def _rank(x):
-            return (bool(x.get("quiet")),
-                    x.get("e2e_scaling_efficiency", 0.0))
-        if _rank(old) > _rank(result):
-            result = old
-        else:
-            append_md(result)
-    else:
-        append_md(result)
-    os.makedirs(os.path.dirname(cache_path), exist_ok=True)
-    attempts = (cached.get("attempts", 1) + 1) if cached is not None else 1
-    with open(cache_path, "w") as f:
-        json.dump({"key": [head, n, n_convs], "result": result,
-                   "attempts": attempts}, f)
-    return result
-
-
 def main() -> None:
     import __spark_entry__ as E
     from hipipe_spark.datagen import gen_profile_updates, gen_transcripts
@@ -223,22 +144,6 @@ def main() -> None:
     tps = n_turns / pipe_sec
     tps_4x = n_turns_4x / pipe_sec_4x
 
-    # Core-scaling row (the north rule's >=0.8 criterion): same job,
-    # same input, local[N] vs local[4N] in fresh child JVMs, interleaved
-    # per-level best (VERDICT r3 #6 — the efficiency numbers must land
-    # in the driver's BENCH artifact, not only in hand-run
-    # BENCH/BASELINE.md). Defaults follow the protocol note: 4->16-core
-    # span (keeps the top level at half the machine so driver/GC/OS
-    # threads don't steal from executors) over a ~6.1M-turn corpus.
-    # The measurement is cached per git HEAD for 4h: the driver runs
-    # bench.py several times per round and the 2-JVM protocol is
-    # independent of those reps — re-measuring each rep would triple
-    # the cost for no information. BENCH_SCALING=0 skips (local
-    # iteration); BENCH_SCALING_CONVS sizes the child corpus.
-    scaling = None
-    if os.environ.get("BENCH_SCALING", "1") != "0":
-        scaling = _scaling_row()
-
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     print(json.dumps({
         "metric": "bench_total",
@@ -253,19 +158,8 @@ def main() -> None:
         "scale_eff_4x": round(tps_4x / tps, 3),
         "flagship_runs": flagship_runs,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "all"),
-        **({"scaling": scaling,
-            "compute_eff": scaling["compute_scaling_efficiency"],
-            "e2e_eff": scaling["e2e_scaling_efficiency"]}
-           if scaling else {}),
     }))
 
 
 if __name__ == "__main__":
-    if "--scaling" in sys.argv[1:]:
-        # scaling-only mode (VERDICT r4 #4): run just the load-aware
-        # two-parallelism protocol and print its row — for landing a
-        # quiet-window measurement without paying for the full query
-        # bench around it.
-        print(json.dumps({"scaling": _scaling_row()}))
-    else:
-        main()
+    main()

@@ -47,14 +47,19 @@ class SnapshotStore:
     def _dir(self, name: str, snap: str) -> str:
         return os.path.join(self.root, name, snap)
 
-    def latest(self, name: str) -> str | None:
+    def _snapshots(self, name: str) -> list[str]:
+        """Committed snapshot ids, oldest first. A commit in flight, or
+        one torn by a crash, sits in a ``.tmp-`` dot-directory that may
+        already hold its manifest: only the rename publishes it."""
         d = os.path.join(self.root, name)
         if not os.path.isdir(d):
-            return None
-        snaps = [
-            s for s in sorted(os.listdir(d))
-            if os.path.exists(os.path.join(d, s, "MANIFEST.json"))
-        ]
+            return []
+        return [s for s in sorted(os.listdir(d))
+                if not s.startswith(".")
+                and os.path.exists(os.path.join(d, s, "MANIFEST.json"))]
+
+    def latest(self, name: str) -> str | None:
+        snaps = self._snapshots(name)
         return snaps[-1] if snaps else None
 
     def manifest(self, name: str, snap: str) -> dict:
@@ -117,14 +122,7 @@ class SnapshotStore:
         count + any commit metadata keys, straight from the manifests
         — the north-rule 'row-count/throughput metrics' surfaced for
         SQL instead of file spelunking."""
-        import os
-
-        d = os.path.join(self.root, name)
-        snaps = []
-        if os.path.isdir(d):
-            snaps = [s for s in sorted(os.listdir(d))
-                     if os.path.exists(os.path.join(d, s, "MANIFEST.json"))]
-        rows = [self.manifest(name, s) for s in snaps]
+        rows = [self.manifest(name, s) for s in self._snapshots(name)]
         return spark.createDataFrame(
             [(m["snapshot"], m["name"], m["rows"], m["wall_sec"],
               m.get("rows_per_sec"), m["n_partitions"]) for m in rows],

@@ -41,41 +41,17 @@ def feature_pipeline(gap: str = "30 minutes") -> Pipeline:
 
 
 def featurize(turns: DataFrame, profiles: DataFrame | None = None,
-              gap: str = "30 minutes", asof_strategy: str = "auto",
-              payload: str = "inline") -> DataFrame:
+              gap: str = "30 minutes", asof_strategy: str = "auto") -> DataFrame:
     """Run the flagship pipeline; optionally as-of join profiles.
 
     ``asof_strategy="auto"`` broadcasts the packed profile side when it
     is small (one struct-array per conversation) so the wide feature
     output is never re-shuffled — the whole pipeline then needs exactly
     ONE exchange of the fact table; large profile sides fall back to
-    the union+window strategy (second shuffle, but no size limit).
-
-    ``payload`` picks how wide columns travel. ``"inline"`` (default):
-    one lineage, one exchange, payload rows ride through the window
-    sort — measured fastest and most stable for transcript-width text
-    (~200 B/row; interleaved A/B at 3M turns: median 5.4s vs 6.7s).
-    ``"rejoin"``: the window block sees only narrow columns; payload
-    columns skip the sort and are stitched back by a shuffled-hash
-    join on (conv_id, turn_idx). Choose it when payload bytes dwarf the
-    narrow columns (multimodal binary/media columns, KB+ rows), where
-    sort rewrites of full rows dominate; its costs are a second pass
-    over the source lineage (cheap on columnar stores) and per-task
-    hash-relation builds."""
-    df = turns.withColumn("text_len", F.length("text").cast("int"))
-    narrow_cols = ["conv_id", "turn_idx", "ts", "role", "tool", "text_len"]
-    wide_extra = [c for c in df.columns if c not in narrow_cols]
-
-    def run(d):
-        d = feature_pipeline(gap)(d)
-        if profiles is not None:
-            d = asof_join(d, profiles, on="ts", by="conv_id",
-                          strategy=asof_strategy, suffix="_asof")
-        return d
-
-    if not wide_extra or payload == "inline":
-        return run(df)
-    feats = run(df.select(*narrow_cols))
-    wide = df.select("conv_id", "turn_idx", *wide_extra)
-    # build the hash map on the narrower feature side
-    return wide.join(feats.hint("SHUFFLE_HASH"), ["conv_id", "turn_idx"])
+    the union+window strategy (second shuffle, but no size limit)."""
+    df = feature_pipeline(gap)(
+        turns.withColumn("text_len", F.length("text").cast("int")))
+    if profiles is not None:
+        df = asof_join(df, profiles, on="ts", by="conv_id",
+                       strategy=asof_strategy, suffix="_asof")
+    return df

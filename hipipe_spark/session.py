@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """60% of MemTotal, in MB: the rest is left to Python workers,
+    off-heap buffers and the OS."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(int(line.split()[1]) * 0.6 / 1024)}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "hipipe_spark",
     cores: int | None = None,
@@ -24,7 +34,8 @@ def get_spark(
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. Shuffle
     partitions default to the core count — on a real cluster you would
     size this to ~2-3x total executor cores; AQE coalesces at runtime
-    either way.
+    either way. The driver heap is ``$SPARK_DRIVER_MEM`` or 60% of the
+    host's MemTotal.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -43,7 +54,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

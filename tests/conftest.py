@@ -1,10 +1,25 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hipipe_spark.session import get_spark  # noqa: E402
+
+
+def pytest_runtest_setup(item):
+    """Stop the run once the shared Spark JVM has died (e.g. OOM-killed):
+    every later test would fail on the dead gateway and bury the cause."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None and proc.poll() is not None:
+        pytest.exit(f"the session Spark JVM exited with code {proc.returncode} "
+                    "during an earlier test (OOM kill? check dmesg; the "
+                    "driver heap is $SPARK_DRIVER_MEM or 60% of MemTotal); "
+                    "stopping instead of failing every later test",
+                    returncode=1)
 
 
 @pytest.fixture(scope="session")

@@ -270,3 +270,65 @@ def test_incremental_refresh_featurize_parity(spark, transcripts, tmp_path):
                                g[c].astype(float), equal_nan=True), c
         else:
             assert (w[c].fillna("∅") == g[c].fillna("∅")).all(), c
+
+
+def test_torn_commit_stays_invisible_and_refresh_resumes(
+        spark, transcripts, tmp_path, monkeypatch):
+    """A crash between the manifest write and the publishing rename
+    leaves a ``.tmp-`` directory that already holds MANIFEST.json. It
+    must not surface as a snapshot, and the next refresh must build on
+    the last committed one."""
+    import pytest
+
+    import hipipe_spark.checkpoint as checkpoint
+    from hipipe_spark.checkpoint import incremental_refresh
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    rename = os.rename
+
+    def crash_before_publish(src, dst):
+        if os.path.basename(src).startswith(".tmp-"):
+            assert os.path.exists(os.path.join(src, "MANIFEST.json"))
+            raise OSError("injected crash before the commit rename")
+        rename(src, dst)
+
+    def compute(df):
+        return df.groupBy("conv_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_turns"),
+            F.sum(F.length("text")).cast("bigint").alias("chars"))
+
+    delta_convs = transcripts.select("conv_id").distinct() \
+        .filter(F.crc32(F.col("conv_id")) % 3 == 0)
+    old = transcripts.join(delta_convs, "conv_id", "left_anti")
+
+    # torn first commit: nothing is published
+    monkeypatch.setattr(checkpoint.os, "rename", crash_before_publish)
+    with pytest.raises(OSError, match="injected"):
+        incremental_refresh(spark, store, "feats", old, compute)
+    assert store.latest("feats") is None
+    assert store.history(spark, "feats").count() == 0
+
+    monkeypatch.setattr(checkpoint.os, "rename", rename)
+    base, _ = incremental_refresh(spark, store, "feats", old, compute)
+
+    # torn incremental commit: the base stays the only snapshot
+    monkeypatch.setattr(checkpoint.os, "rename", crash_before_publish)
+    with pytest.raises(OSError, match="injected"):
+        incremental_refresh(spark, store, "feats", transcripts, compute,
+                            delta_keys=delta_convs)
+    monkeypatch.setattr(checkpoint.os, "rename", rename)
+    assert store.latest("feats") == base
+    assert [h.snapshot for h in store.history(spark, "feats").collect()] \
+        == [base]
+
+    # resume: the retried refresh builds on the base and matches a full run
+    snap, got = incremental_refresh(spark, store, "feats", transcripts,
+                                    compute, delta_keys=delta_convs)
+    man = store.manifest("feats", snap)
+    assert man["mode"] == "incremental"
+    assert man["parent_snapshot"] == base
+    assert store.latest("feats") == snap
+    want = compute(transcripts).toPandas().set_index("conv_id").sort_index()
+    have = got.toPandas().set_index("conv_id").sort_index()
+    assert len(want) == len(have)
+    assert (want == have).all().all()

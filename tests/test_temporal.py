@@ -39,7 +39,8 @@ def test_text_byte_equality(transcripts, transcripts_pdf):
 def test_parallelism_invariance(transcripts, profiles):
     """Same job at different partitioning → byte-identical features
     (the cluster-size-invariance the north rule demands; cross-JVM
-    N vs 4N evidence lives in tools/scaling_bench.py)."""
+    local[1] vs local[nproc] evidence is perfbench/run.py's traced
+    flagship.scaling_eff_1to4)."""
     a = featurize(transcripts.repartition(2), profiles).toPandas()
     b = featurize(transcripts.repartition(31), profiles).toPandas()
     cols = FEATURE_COLS + ["temperature_asof"]

@@ -21,10 +21,14 @@ self-sweep. Now:
 - timestamps canonicalize to their integer epoch value, not a
   formatted string, so ns-vs-us pandas units can't mask or fake a
   diff.
+- NaN canonicalizes to ``<NaN>``, its own token, never to ``<NULL>``.
+- a selection naming an unknown query (e.g. a path passed where the
+  comma-separated name list goes) exits 2 instead of passing 0/0.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 import time
@@ -34,7 +38,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -55,7 +59,7 @@ def _canon_cell(x):
         return "<NULL>"
     if isinstance(x, (float, np.floating)):
         if x != x:
-            return "<NULL>"
+            return "<NaN>"
         return struct.pack(">d", float(x)).hex()
     if isinstance(x, (bool, np.bool_)):
         return str(bool(x))
@@ -101,13 +105,18 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     import __spark_entry__ as E
     from hipipe_spark.session import get_spark
 
+    qs, oracles = E.queries(), E.oracle_sql()
+    unknown = sorted(set(only or ()) - set(qs))
+    if unknown:
+        print(f"no such queries: {unknown}; the argument is a "
+              "comma-separated list of query names", file=sys.stderr)
+        return 2
     spark = get_spark(cores=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs, oracles = E.queries(), E.oracle_sql()
     results = {}
     for name, fn in qs.items():
         if only and name not in only:
