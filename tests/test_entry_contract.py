@@ -7,8 +7,10 @@ so two operators lost their driver queries without any error). Pure
 AST checks — no Spark session."""
 
 import ast
+import os
 
-ENTRY = "/root/repo/__spark_entry__.py"
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "__spark_entry__.py")
 
 
 def _tree():
@@ -44,22 +46,36 @@ def test_no_shadowed_query_functions():
     assert not shadowed, f"redefined module functions: {shadowed}"
 
 
+# queries() keys with no oracle_sql() entry, by construction
+ROWS_ONLY = {"bpe_merges", "embedding_ivf_topk",
+             "embedding_pca", "media_features",
+             # zlib deflate runs in the Arrow batch, not in SQL —
+             # pinned instead by tests/test_round4_ops.py
+             "compress_ratio"}
+
+
 def test_every_query_has_oracle_or_is_disclosed():
     """Each queries() key must have an oracle_sql() entry unless it is
     on the explicit rows-only-by-construction list."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
-    rows_only = {"bpe_merges", "embedding_ivf_topk",
-                 "embedding_pca", "media_features",
-                 # zlib deflate runs in the Arrow batch, not in SQL —
-                 # pinned instead by tests/test_round4_ops.py
-                 "compress_ratio"}
     q, o = set(E.queries()), set(E.oracle_sql())
-    assert q - o == rows_only, (
-        f"undisclosed rows-only queries: {(q - o) - rows_only} / "
-        f"stale disclosure: {rows_only - (q - o)}")
+    assert q - o == ROWS_ONLY, (
+        f"undisclosed rows-only queries: {(q - o) - ROWS_ONLY} / "
+        f"stale disclosure: {ROWS_ONLY - (q - o)}")
     assert not o - q, f"oracles without a query: {o - q}"
+
+
+def test_oracle_sql_reads_no_data(monkeypatch):
+    """oracle_sql() is a pure string builder: with DuckDB unusable it
+    still returns an oracle for every query that has one."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    def refuse(*a, **kw):
+        raise RuntimeError("oracle_sql() must not open DuckDB")
+    monkeypatch.setattr(duckdb, "connect", refuse)
+    assert set(E.oracle_sql()) == set(E.queries()) - ROWS_ONLY
 
 
 def test_oracle_dict_no_reassigned_keys():

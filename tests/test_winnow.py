@@ -75,25 +75,86 @@ def test_max_len_guard():
         winnow_fingerprints(None, max_len=256)
 
 
-def test_matches_numpy_reference(spark):
-    # independent recomputation of the selection scheme (plain python,
-    # no shared code path beyond the constants)
+def _reference_fps(txt, k=K, w=W, cap=240):
+    """Plain-python winnowing of one text, ascending — an independent
+    recomputation of the selection scheme (no shared code path beyond
+    the hash constants)."""
     from hipipe_spark.functions.hashing import _A, _C, _M
+    t = ("" if txt is None else txt).lower()[:cap]
+    n = len(t) - k + 1
+    hs = []
+    for i in range(n):
+        acc = 0
+        for ch in t[i:i + k]:
+            acc = (acc * 31 + ord(ch)) % _M
+        hs.append(((acc * _A + _C) % _M * _A + _C) % _M)
+    enc = [h * 256 + (255 - (i + 1)) for i, h in enumerate(hs)]
+    return sorted({min(enc[p:p + w]) // 256 for p in range(n - w + 1)})
+
+
+def test_matches_numpy_reference(spark):
     rows = [(1, "the winnowing algorithm selects the minimum hash"),
             (2, "hash selection with rightmost tie break rules")]
     fps = _fps(spark, rows)
     for did, txt in rows:
-        t = txt.lower()[:240]
-        n = len(t) - K + 1
-        hs = []
-        for i in range(n):
-            acc = 0
-            for ch in t[i:i + K]:
-                acc = (acc * 31 + ord(ch)) % _M
-            hs.append(((acc * _A + _C) % _M * _A + _C) % _M)
-        enc = [h * 256 + (255 - (i + 1)) for i, h in enumerate(hs)]
-        want = {min(enc[p:p + W]) // 256 for p in range(n - W + 1)}
-        assert fps[did] == want
+        assert fps[did] == set(_reference_fps(txt))
+
+
+def _fence_texts(k, w, cap):
+    """~200 back-to-back docs that probe every document boundary of a
+    flattened batch: nulls, empties, one char short of / exactly one
+    window, beyond the cap, astral codepoints, case expansion under
+    ``lower`` ('İ' lowers to two codepoints), identical neighbours."""
+    base = ["", None, "a" * (k + w - 2), "b" * (k + w - 1),
+            "Winnowing Selects Minima " * 20,
+            "emoji 😀🎉 astral 𝔘𝔫𝔦 codepoints 😀🎉 again",
+            "İSTANBUL İİİ DOTTED İ capital", "ΣΊΣΥΦΟΣ ẞtraße ﬁne",
+            "identical neighbour text", "identical neighbour text"]
+    rnd = np.random.default_rng(7)
+    alphabet = list("abcdef İ😀Σ")
+    out = []
+    for _ in range(10):   # the edge cases back to back, then random docs
+        out += base
+        out += ["".join(rnd.choice(alphabet, int(rnd.integers(0, cap + 20))))
+                for _ in range(10)]
+    return out
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("k,w,cap", [(5, 4, 240), (3, 2, 50), (1, 1, 255)])
+def test_batch_boundaries_match_reference(spark, id_type, k, w, cap):
+    texts = _fence_texts(k, w, cap)
+    ids = list(range(len(texts))) if id_type == "long" else \
+        [f"doc{i:03d}" for i in range(len(texts))]
+    df = spark.createDataFrame(list(zip(ids, texts)),
+                               f"doc_id {id_type}, text string").coalesce(1)
+    out = winnow_fingerprints(df, "doc_id", "text", k=k, w=w, max_len=cap)
+    assert out.dtypes == [("doc_id", "bigint" if id_type == "long"
+                           else "string"), ("fp", "bigint")]
+    want = [(d, fp) for d, t in zip(ids, texts)
+            for fp in _reference_fps(t, k, w, cap)]
+    # one partition: emitted in input row order, fps ascending per doc
+    assert [(r["doc_id"], r["fp"]) for r in out.collect()] == want
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_all_short_partition_yields_empty_batch(spark, id_type):
+    short = [None, "", "abc", "abcdefg"]   # all below k + w - 1 = 8
+    ids = [1, 2, 3, 4] if id_type == "long" else ["a", "b", "c", "d"]
+    df = spark.createDataFrame(list(zip(ids, short)),
+                               f"doc_id {id_type}, text string").coalesce(1)
+    out = winnow_fingerprints(df, "doc_id", "text", k=K, w=W)
+    assert out.collect() == []
+    # an all-short partition next to a productive one: the empty
+    # batch must carry the declared schema through the same job
+    mixed = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            list(zip(ids, short)) + [(ids[0], "long enough document")], 2),
+        f"doc_id {id_type}, text string")
+    rows = winnow_fingerprints(mixed, "doc_id", "text", k=K, w=W).collect()
+    assert {r["doc_id"] for r in rows} == {ids[0]}
+    assert sorted(r["fp"] for r in rows) == \
+        _reference_fps("long enough document")
 
 
 def test_pairs_scoring_and_hub_exclusion(spark):
