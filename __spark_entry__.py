@@ -5083,8 +5083,8 @@ def oracle_sql() -> dict[str, str]:
       fl AS (SELECT coalesce(list(line), CAST([] AS VARCHAR[])) AS freq
              FROM f)
       SELECT doc_id,
-             array_to_string(list_filter(lines,
-                               x -> NOT list_contains(freq, x)), chr(10))
+             coalesce(array_to_string(list_filter(lines,
+                               x -> NOT list_contains(freq, x)), chr(10)), '')
                AS clean_text,
              CAST(len(lines) AS INTEGER) AS n_lines,
              CAST(len(lines) - len(list_filter(lines,
@@ -5932,15 +5932,16 @@ def oracle_sql() -> dict[str, str]:
     """
     d["walk_forward"] = f"""
       WITH t AS ({_T}),
-      span AS (SELECT min(epoch(ts)) AS t0, max(epoch(ts)) AS t1 FROM t),
+      span AS (SELECT CAST(floor(min(epoch(ts))) AS BIGINT) AS t0,
+                      CAST(ceil(max(epoch(ts))) AS BIGINT) AS t1 FROM t),
       d AS (SELECT epoch(ts) AS es FROM t),
       c AS (SELECT CASE WHEN t1 > t0
-                        THEN least(4, CAST(floor((es - t0)
-                                          / ((t1 - t0) / 5.0)) AS INTEGER))
+                        THEN least(4, ((CAST(floor(es) AS BIGINT) - t0 + 1) * 5
+                                       - 1) // (t1 - t0))
                         ELSE 0 END AS s,
                    es FROM d, span),
       e AS (SELECT s,
-                   CASE WHEN es >= t0 + (s + 1) * ((t1 - t0) / 5.0)
+                   CASE WHEN es >= CAST(t0 + (s + 1) * (t1 - t0) // 5 AS DOUBLE)
                                    - 86400.0
                         THEN 1 ELSE 0 END AS emb
             FROM c, span),
@@ -5956,9 +5957,9 @@ def oracle_sql() -> dict[str, str]:
                           AS BIGINT) AS n_test
               FROM folds CROSS JOIN h GROUP BY fold)
       SELECT fold,
-             round(t0 + fold * (t1 - t0) / 5.0 - 86400.0, 6) AS train_end_s,
-             round(t0 + fold * (t1 - t0) / 5.0, 6) AS test_start_s,
-             round(t0 + (fold + 1) * (t1 - t0) / 5.0, 6) AS test_end_s,
+             CAST(t0 + fold * (t1 - t0) // 5 AS DOUBLE) - 86400.0 AS train_end_s,
+             CAST(t0 + fold * (t1 - t0) // 5 AS DOUBLE) AS test_start_s,
+             CAST(t0 + (fold + 1) * (t1 - t0) // 5 AS DOUBLE) AS test_end_s,
              n_train, n_purged, n_test
       FROM agg CROSS JOIN span
     """

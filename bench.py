@@ -109,8 +109,7 @@ def main() -> None:
     # synthetic-transcript throughput (the north-rule metric: turns/sec
     # end-to-end through sessionize+lag/lead+rolling+backfill+as-of).
     # Strategy pinned to "union" — the 10^12-row architecture — so the
-    # headline number measures the pipeline, not the auto gate's
-    # estimate job + broadcast build (VERDICT r2 next-round #2).
+    # headline number measures the pipeline, not a broadcast build.
     def run_flagship(n_convs):
         turns = gen_transcripts(spark, n_convs=n_convs, avg_turns=20,
                                 hot_frac=0.01, hot_mult=50)

@@ -5,7 +5,7 @@ lacks it; pandas-on-Spark's ``merge_asof`` rewrites to union+window).
 hipipe users approximated point-in-time lookup with driver-side maps
 built from ``dataframe::index_cols`` (reference
 ``include/hipipe/core/dataframe.hpp:758-798``) applied inside per-batch
-``transform`` stages — single-node only. This module provides three
+``transform`` stages — single-node only. This module provides four
 distributed strategies with identical semantics:
 
 ``asof_join(left, right, on="ts", by="conv_id", direction="backward")``
@@ -15,25 +15,30 @@ within the same ``by`` key — i.e. zero temporal leakage by construction.
 
 Strategies
 ----------
+Four strategies plus ``auto``; each is the only path in some regime or
+the test reference.
+
 - **union** (default, the scale path): tag both sides, union, and take
   ``last(value, ignorenulls=True)`` over a window partitioned by the key
   ordered by (ts, side-tag). ONE shuffle of left+right, no per-group
-  materialization, no size limit on either side. This is the plan you
-  want at 10^12 rows: sort-merge within hash partitions of ``by``.
-- **cogroup** (validation path): ``left.groupBy(by).cogroup(right...)
-  .applyInPandas(pd.merge_asof)`` — Arrow-batched, per-key pandas. Used
-  to cross-check the union path; requires each key's rows to fit in
-  memory (BASELINE SURVEY §7.3 "group-size blowup").
-- **broadcast**: when the right side is small (a dimension table of
-  state changes), broadcast it as a sorted array per key and binary-
-  search JVM-side — zero shuffle of the (huge) left side.
-
-Skew: hot ``by`` keys concentrate a window partition. For the union
-strategy we optionally pre-split hot keys by a time-bucket salt
-(``salt_buckets``): right rows are replicated into every bucket at or
-after theirs... (v1: time-range re-bucketing handled by AQE skew hints;
-explicit salting is provided for the windowed aggregates where AQE
-can't help).
+  materialization, no size limit on either side.
+- **broadcast**: collapse the right side to one sorted struct array per
+  key, broadcast it, binary-search JVM-side — zero shuffle of the left
+  side. For dimension-sized right sides: traced ``asof.broadcast_s``
+  0.87 s vs ``asof.union_s`` 1.22 s (perfbench, seed 31); single traced
+  runs on a 4-core host have also measured the two equal (0.63-0.68 s
+  vs 0.66-0.69 s), so the margin at that size is unresolved.
+- **bucketed**: the hot-key path. Both sides are re-keyed by
+  (by, time bucket) and stitched with a carry-in table. 1.73x over
+  union at 16M rows on 32 cores, but 0.88x at 4M rows on 4 cores
+  (BENCH/SKEW.md, one conversation = half of the rows).
+- **cogroup**: ``cogroup(...).applyInPandas(pd.merge_asof)`` per key —
+  the validation reference the other strategies are checked against;
+  each key's rows must fit a Python worker.
+- **auto**: ``broadcast`` when Catalyst's optimized-plan size estimate
+  of the right side is at most ``AUTO_BROADCAST_BYTES``, else
+  ``union``. Reading the estimate runs no job; a source with no
+  statistics reports an unknown (huge) size and gets ``union``.
 """
 
 from __future__ import annotations
@@ -44,89 +49,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hipipe_spark.operators.temporal import ts_seconds
 
-_STATS_UNKNOWN = 1 << 61
+# broadcast packs per-key struct arrays of every value column, so the
+# gate is on bytes, not rows (cf. "To Partition, or Not to Partition",
+# SIGMOD 2021: pick broadcast vs partitioned join by build-side size)
+AUTO_BROADCAST_BYTES = 256 * 1024 * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes (no job). For
-    parquet scans this is file size × filter selectivity; for unknown
-    sources it is a very large default (→ conservative decisions)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes().toString())
-    except Exception:
-        return 1 << 62
+    """Catalyst's optimized-plan size estimate in bytes; no job runs.
+    Parquet scans report file size scaled by projection; sources with
+    no statistics (e.g. ``createDataFrame`` from a Python list) report
+    Long.MaxValue."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
-
-def _field_width(dt) -> int:
-    """Conservative per-value byte width (Catalyst defaultSize flavor)."""
-    from pyspark.sql import types as T
-    if isinstance(dt, (T.ByteType, T.BooleanType)):
-        return 1
-    if isinstance(dt, (T.ShortType,)):
-        return 2
-    if isinstance(dt, (T.IntegerType, T.FloatType, T.DateType)):
-        return 4
-    if isinstance(dt, T.StringType):
-        return 20
-    if isinstance(dt, T.BinaryType):
-        return 100
-    if isinstance(dt, T.ArrayType):
-        return 16 * _field_width(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return 16 * (_field_width(dt.keyType) + _field_width(dt.valueType))
-    if isinstance(dt, T.StructType):
-        return sum(_field_width(f.dataType) for f in dt.fields)
-    return 8  # long/double/timestamp/decimal-ish
-
-
-_EST_CACHE: dict[tuple[int, int], float] = {}
-
-
-def _est_bytes(df: DataFrame, byte_cap: int) -> float:
-    """Broadcast-size estimate for the asof auto gate. Prefer Catalyst's
-    free plan statistic; when the plan reports the unknown-default
-    (generated/shuffled lineages), fall back to ONE bounded job: count
-    up to a row cap (limit+count stops scanning early) and multiply by
-    the schema's per-row default width — so wide rows still disqualify
-    and an over-cap side costs at most cap rows of work, never a full
-    scan of a 100-TB lineage.
-
-    Memoized per (semantic plan hash, cap): repeated ``featurize()``
-    calls on the same profile lineage pay the bounded count job ONCE —
-    without this, every invocation of an auto-gated as-of re-executed
-    the right side's lineage just to decide the strategy (VERDICT r2
-    wrong-list #2)."""
-    try:
-        key = (df.semanticHash(), byte_cap)
-    except Exception:
-        key = None
-    if key is not None and key in _EST_CACHE:
-        return _EST_CACHE[key]
-    sz = _plan_size_bytes(df)
-    if sz < _STATS_UNKNOWN:
-        est = float(sz)
-    else:
-        width = max(sum(_field_width(f.dataType) for f in df.schema.fields), 1)
-        row_cap = max(byte_cap // width, 1)
-        rows = df.limit(row_cap + 1).count()
-        est = float("inf") if rows > row_cap else float(rows * width)
-    if key is not None:
-        if len(_EST_CACHE) > 256:  # bound driver memory; plans are few
-            _EST_CACHE.clear()
-        _EST_CACHE[key] = est
-    return est
-
-
-
-def _epoch_sec(col):
-    """Epoch seconds as DOUBLE (microsecond precision). F.unix_timestamp
-    truncates to whole seconds, which breaks nearest/tolerance math on
-    sub-second timestamps and diverges from the DuckDB oracle's
-    fractional epoch()."""
-    return F.col(col).cast("timestamp").cast("double") if isinstance(col, str) \
-        else col.cast("timestamp").cast("double")
 
 def asof_join(
     left: DataFrame,
@@ -140,37 +77,17 @@ def asof_join(
     value_cols: Sequence[str] | None = None,
     suffix: str = "",
     bucket_width_sec: int = 3600,
-    auto_broadcast_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """As-of join; see module docstring. ``value_cols`` defaults to all
     right columns except ``on``/``by``. Forward direction reads future
     rows — allowed for label construction, flagged in the name.
-
-    ``strategy="bucketed"`` is the hot-key path: both sides are
-    re-keyed by (by, time_bucket) so a single monster conversation is
-    split across ``bucket_width_sec`` slices instead of landing in one
-    window partition; per-bucket results are stitched with a carry-in
-    table (last right value from any earlier bucket), computed on the
-    tiny (by, bucket) grain. Exact same semantics as "union".
+    ``bucket_width_sec`` is the time-slice width of ``"bucketed"``.
     """
     by = [by] if isinstance(by, str) else list(by)
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in {on, *by}]
     if strategy == "auto":
-        # Broadcast when the right side is small enough to pack per-key
-        # (eliminates the second full-width shuffle of the fact side —
-        # on a single-disk node that shuffle is THE bottleneck; on a
-        # cluster it is the biggest network cost). Falls back to the
-        # shuffle-based union path for large right sides.
-        #
-        # Gate on Catalyst's BYTE-size estimate, not a row count: the
-        # broadcast packs per-key struct arrays of ALL value columns, so
-        # wide rows would blow the driver long before 1M rows — and a
-        # row count would cost an eager job over the right lineage.
-        # Plan stats are free (no job); when they are unknown Catalyst
-        # reports a huge default, which conservatively picks "union".
-        strategy = ("broadcast"
-                    if _est_bytes(right, auto_broadcast_bytes) <= auto_broadcast_bytes
+        strategy = ("broadcast" if _plan_size_bytes(right) <= AUTO_BROADCAST_BYTES
                     else "union")
     if strategy == "union":
         return _asof_union(left, right, on, by, direction, allow_exact_matches,
@@ -259,35 +176,10 @@ def asof_interpolate(
     by = [by] if isinstance(by, str) else list(by)
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in {on, *by}]
-    lcols = left.columns
-    l = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast("double").alias(f"__r_{c}") for c in value_cols],
-        F.lit(1).alias("__side"),
-    )
-    r = right.select(
-        *[
-            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in lcols
-        ],
-        *[F.col(c).cast("double").alias(f"__r_{c}") for c in value_cols],
-        F.lit(0).alias("__side"),  # right sorts first at equal ts: exact hits match
-    )
-    u = l.unionByName(r)
-    wb = (Window.partitionBy(*by).orderBy(F.col(on), F.col("__side"))
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wf = (Window.partitionBy(*by).orderBy(F.col(on).desc(), F.col("__side"))
-          .rowsBetween(Window.unboundedPreceding, 0))
-    right_on = F.when(F.col("__side") == 0, F.col(on))
-    sel = ["*"]
-    for c in value_cols:
-        sel.append(F.last(F.col(f"__r_{c}"), ignorenulls=True).over(wb).alias(f"__b_{c}"))
-        sel.append(F.last(F.col(f"__r_{c}"), ignorenulls=True).over(wf).alias(f"__f_{c}"))
-    sel.append(F.last(right_on, ignorenulls=True).over(wb).alias("__b_ts"))
-    sel.append(F.last(right_on, ignorenulls=True).over(wf).alias("__f_ts"))
-    out = u.select(*sel).filter(F.col("__side") == 1)
-    ts_l = _epoch_sec(F.col(on))
-    ts_b, ts_f = _epoch_sec(F.col("__b_ts")), _epoch_sec(F.col("__f_ts"))
+    u = _tagged_union(left, right, on, by, value_cols, 0, as_double=True)
+    out = _bracket(u, on, by, value_cols, _BOTH, is_right=F.col("__side") == 0)
+    ts_l = ts_seconds(F.col(on))
+    ts_b, ts_f = ts_seconds(F.col("__b_ts")), ts_seconds(F.col("__f_ts"))
     b_ok = F.col("__b_ts").isNotNull()
     f_ok = F.col("__f_ts").isNotNull()
     if tolerance_sec is not None:
@@ -307,7 +199,60 @@ def asof_interpolate(
             .when(f_ok, f_v)
             .alias(f"{c}{suffix}")
         )
-    return out.select(*[F.col(c) for c in lcols], *proj)
+    return out.select(*[F.col(c) for c in left.columns], *proj)
+
+
+def _tagged_union(left, right, on, by, value_cols, right_tag, as_double=False):
+    """Left rows (``__side`` 1, NULL ``__r_<col>``) union right rows
+    (``__side`` ``right_tag``, left columns NULL except ``on``/``by``,
+    values in ``__r_<col>``). Tag 0 sorts right rows before left rows
+    at equal ``on`` so exact matches are seen; tag 2 sorts them after
+    (strict)."""
+    lcols = left.columns
+    l = left.select(
+        *[F.col(c) for c in lcols],
+        *[F.lit(None).cast("double" if as_double else right.schema[c].dataType)
+          .alias(f"__r_{c}") for c in value_cols],
+        F.lit(1).alias("__side"),
+    )
+    r = right.select(
+        *[
+            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
+            for c in lcols
+        ],
+        *[(F.col(c).cast("double") if as_double else F.col(c)).alias(f"__r_{c}")
+          for c in value_cols],
+        F.lit(right_tag).alias("__side"),
+    )
+    return l.unionByName(r)
+
+
+def _running(keys, on, direction):
+    """Frame from the partition start to the current row of the tagged
+    union, in ``on`` order (``backward``) or reverse order
+    (``forward``), ties by side tag."""
+    t = F.col(on) if direction == "backward" else F.col(on).desc()
+    return (Window.partitionBy(*keys).orderBy(t, F.col("__side"))
+            .rowsBetween(Window.unboundedPreceding, 0))
+
+
+# (direction, value prefix, timestamp name) of the two-sided bracket
+_BOTH = (("backward", "__b_", "__b_ts"), ("forward", "__f_", "__f_ts"))
+
+
+def _bracket(u, on, by, value_cols, frames, is_right=None):
+    """The left rows of tagged union ``u``, each carrying, per
+    ``(direction, prefix, ts_name)`` frame, the last right row's values
+    ``<prefix><col>`` and timestamp ``ts_name`` in that direction.
+    ``is_right`` defaults to "not a left row"."""
+    if is_right is None:
+        is_right = F.col("__side") != 1
+    wins = [(_running(by, on, d), p, t) for d, p, t in frames]
+    fill = [F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w).alias(f"{p}{c}")
+            for c in value_cols for w, p, _ in wins]
+    ts = [F.last(F.when(is_right, F.col(on)), ignorenulls=True).over(w).alias(t)
+          for w, _, t in wins]
+    return u.select("*", *fill, *ts).filter(F.col("__side") == 1)
 
 
 def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
@@ -316,88 +261,30 @@ def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
                                    value_cols, suffix)
     if direction not in ("backward", "forward"):
         raise ValueError(direction)
-    lcols = left.columns
-    # Tag: right rows must sort BEFORE left rows at equal ts when exact
-    # matches are allowed (so last() sees them), AFTER when not.
-    right_tag = 0 if exact else 2
-    l = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(1).alias("__side"),
-    )
-    r = right.select(
-        *[
-            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in lcols
-        ],
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.lit(right_tag).alias("__side"),
-    )
-    u = l.unionByName(r)
-    order = [F.col(on), F.col("__side")]
-    if direction == "forward":
-        order = [F.col(on).desc(), F.col("__side")]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = [
-        F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w).alias(f"__f_{c}")
-        for c in value_cols
-    ]
-    matched_ts = F.last(
-        F.when(F.col("__side") != 1, F.col(on)), ignorenulls=True
-    ).over(w).alias("__match_ts")
-    out = u.select("*", *filled, matched_ts).filter(F.col("__side") == 1)
+    u = _tagged_union(left, right, on, by, value_cols, 0 if exact else 2)
+    out = _bracket(u, on, by, value_cols, [(direction, "__f_", "__match_ts")])
     if tol is not None:
-        delta = F.abs(_epoch_sec(F.col(on)) - _epoch_sec(F.col("__match_ts")))
+        delta = F.abs(ts_seconds(F.col(on)) - ts_seconds(F.col("__match_ts")))
         within = F.col("__match_ts").isNotNull() & (delta <= tol)
         proj = [
             F.when(within, F.col(f"__f_{c}")).alias(f"{c}{suffix}") for c in value_cols
         ]
     else:
         proj = [F.col(f"__f_{c}").alias(f"{c}{suffix}") for c in value_cols]
-    return out.select(*[F.col(c) for c in lcols], *proj)
+    return out.select(*[F.col(c) for c in left.columns], *proj)
 
 
 def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
-    """``direction="nearest"`` via one union + two window passes
-    (backward and forward over the same hash partition — one shuffle,
-    two partition-local sorts). pandas semantics: tolerance filters
-    each direction's candidate first, then the closer one wins; ties
-    prefer backward (``pd.merge_asof`` behavior)."""
-    lcols = left.columns
-    right_tag = 0 if exact else 2
-    l = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(1).alias("__side"),
-    )
-    r = right.select(
-        *[
-            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in lcols
-        ],
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.lit(right_tag).alias("__side"),
-    )
-    u = l.unionByName(r)
-    wb = (Window.partitionBy(*by).orderBy(F.col(on), F.col("__side"))
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wf = (Window.partitionBy(*by).orderBy(F.col(on).desc(), F.col("__side"))
-          .rowsBetween(Window.unboundedPreceding, 0))
-    right_on = F.when(F.col("__side") != 1, F.col(on))
-    sel = ["*"]
-    for c in value_cols:
-        sel.append(F.last(F.col(f"__r_{c}"), ignorenulls=True).over(wb).alias(f"__b_{c}"))
-        sel.append(F.last(F.col(f"__r_{c}"), ignorenulls=True).over(wf).alias(f"__f_{c}"))
-    sel.append(F.last(right_on, ignorenulls=True).over(wb).alias("__b_ts"))
-    sel.append(F.last(right_on, ignorenulls=True).over(wf).alias("__f_ts"))
-    out = u.select(*sel).filter(F.col("__side") == 1)
-    ts_l = _epoch_sec(F.col(on))
-    db = ts_l - _epoch_sec(F.col("__b_ts"))
-    df_ = _epoch_sec(F.col("__f_ts")) - ts_l
+    """``direction="nearest"``: one union, the backward and forward
+    brackets over the same hash partition (one shuffle, two
+    partition-local sorts). pandas semantics: tolerance filters each
+    direction's candidate first, then the closer one wins; ties prefer
+    backward (``pd.merge_asof`` behavior)."""
+    u = _tagged_union(left, right, on, by, value_cols, 0 if exact else 2)
+    out = _bracket(u, on, by, value_cols, _BOTH)
+    ts_l = ts_seconds(F.col(on))
+    db = ts_l - ts_seconds(F.col("__b_ts"))
+    df_ = ts_seconds(F.col("__f_ts")) - ts_l
     b_ok = F.col("__b_ts").isNotNull()
     f_ok = F.col("__f_ts").isNotNull()
     if tol is not None:
@@ -410,7 +297,7 @@ def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
         .alias(f"{c}{suffix}")
         for c in value_cols
     ]
-    return out.select(*[F.col(c) for c in lcols], *proj)
+    return out.select(*[F.col(c) for c in left.columns], *proj)
 
 
 # one cogroup (left rows + right rows for a key set) must fit a python
@@ -491,7 +378,7 @@ def _asof_broadcast(left, right, on, by, direction, exact, tol, value_cols, suff
     def gate_tol(col):
         if tol is None:
             return col
-        delta = F.abs(_epoch_sec(col["t"]) - _epoch_sec(lt))
+        delta = F.abs(ts_seconds(col["t"]) - ts_seconds(lt))
         return F.when(delta <= tol, col)
 
     if direction == "nearest":
@@ -499,8 +386,8 @@ def _asof_broadcast(left, right, on, by, direction, exact, tol, value_cols, suff
         # the closer candidate wins; ties prefer backward
         joined = joined.withColumn("__b", gate_tol(cand("backward", -1)))
         joined = joined.withColumn("__f", gate_tol(cand("forward", 1)))
-        db = _epoch_sec(lt) - _epoch_sec(F.col("__b.t"))
-        df_ = _epoch_sec(F.col("__f.t")) - _epoch_sec(lt)
+        db = ts_seconds(lt) - ts_seconds(F.col("__b.t"))
+        df_ = ts_seconds(F.col("__f.t")) - ts_seconds(lt)
         use_b = F.col("__b").isNotNull() & (
             F.col("__f").isNull() | (db <= df_))
         joined = joined.withColumn(
@@ -535,7 +422,7 @@ def _asof_bucketed(left, right, on, by, direction, exact, tol, value_cols,
     """
     if direction != "backward":
         raise ValueError("bucketed strategy supports backward as-of only")
-    sec = F.col(on).cast("timestamp").cast("double")
+    sec = ts_seconds(F.col(on))
     bexpr = F.floor(sec / F.lit(float(width))).cast("long")
     lcols = left.columns
     rstruct = F.struct(F.col(on).alias("t"),
@@ -556,7 +443,8 @@ def _asof_bucketed(left, right, on, by, direction, exact, tol, value_cols,
         *by, "__b", F.last("__last", ignorenulls=True).over(wc).alias("__carry")
     )
 
-    # phase 2: union within buckets
+    # phase 2: tagged union within buckets; the right values ride in
+    # ONE struct column so the in-bucket match and the carry share a type
     right_tag = 0 if exact else 2
     l = left.select(
         *[F.col(c) for c in lcols],
@@ -573,11 +461,7 @@ def _asof_bucketed(left, right, on, by, direction, exact, tol, value_cols,
         "__b",
     )
     u = l.unionByName(r3)
-    w = (
-        Window.partitionBy(*by, "__b")
-        .orderBy(F.col(on), F.col("__side"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    w = _running([*by, "__b"], on, "backward")
     u = u.withColumn("__inb", F.last("__r", ignorenulls=True).over(w)) \
          .filter(F.col("__side") == 1)
 
@@ -587,7 +471,7 @@ def _asof_bucketed(left, right, on, by, direction, exact, tol, value_cols,
     out = u.join(carry, on=[*by, "__b"], how="left")
     match = F.coalesce(F.col("__inb"), F.col("__carry"))
     if tol is not None:
-        delta = F.abs(sec - match["t"].cast("timestamp").cast("double"))
+        delta = F.abs(sec - ts_seconds(match["t"]))
         match = F.when(delta <= tol, match)
     return out.select(
         *[F.col(c) for c in lcols],

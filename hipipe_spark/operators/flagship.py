@@ -44,11 +44,13 @@ def featurize(turns: DataFrame, profiles: DataFrame | None = None,
               gap: str = "30 minutes", asof_strategy: str = "auto") -> DataFrame:
     """Run the flagship pipeline; optionally as-of join profiles.
 
-    ``asof_strategy="auto"`` broadcasts the packed profile side when it
-    is small (one struct-array per conversation) so the wide feature
-    output is never re-shuffled — the whole pipeline then needs exactly
-    ONE exchange of the fact table; large profile sides fall back to
-    the union+window strategy (second shuffle, but no size limit)."""
+    ``asof_strategy="auto"`` broadcasts the packed profile side when
+    Catalyst's plan estimate of it is small (one struct-array per
+    conversation) so the wide feature output is never re-shuffled — the
+    whole pipeline then needs exactly ONE exchange of the fact table.
+    Large or unknown-size profile sides take the union+window strategy
+    (second shuffle, but no size limit). The gate reads the estimate
+    and runs no job."""
     df = feature_pipeline(gap)(
         turns.withColumn("text_len", F.length("text").cast("int")))
     if profiles is not None:

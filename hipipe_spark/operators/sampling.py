@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hipipe_spark.functions.hashing import (
@@ -208,9 +208,11 @@ def walk_forward_splits(df: DataFrame, n_folds: int = 3,
                         embargo_s: float = 0.0,
                         ts_col: str = "ts") -> DataFrame:
     """Walk-forward (expanding-window) time-series cross-validation
-    audit: the [min ts, max ts] span is cut into ``n_folds + 1``
-    equal-width slices; fold ``i`` tests on slice ``i`` and trains on
-    everything strictly before that slice's start minus ``embargo_s``
+    audit: the whole-second span [t0, t1] = [floor(min ts), ceil(max
+    ts)] is cut into ``n_folds + 1`` slices at the whole-second
+    boundaries ``t0 + floor(i * (t1 - t0) / (n_folds + 1))``; fold
+    ``i`` tests on slice ``i`` and trains on everything strictly
+    before that slice's start minus ``embargo_s``
     (the purged band a lookback feature could leak across — the k-fold
     generalization of :func:`time_split`). Returns one row per fold:
     ``fold, train_end_s, test_start_s, test_end_s, n_train, n_purged,
@@ -227,19 +229,25 @@ def walk_forward_splits(df: DataFrame, n_folds: int = 3,
     """
     from hipipe_spark.operators.temporal import ts_seconds
     es = ts_seconds(F.col(ts_col))
-    span = df.agg(F.min(es).alias("__t0"), F.max(es).alias("__t1"))
+    k = n_folds + 1
+    span = df.agg(F.floor(F.min(es)).alias("__t0"), F.ceil(F.max(es)).alias("__t1"))
     d = df.select(es.alias("__es")).crossJoin(F.broadcast(span))
-    width = (F.col("__t1") - F.col("__t0")) / F.lit(float(n_folds + 1))
-    s = F.when(
-        F.col("__t1") > F.col("__t0"),
-        F.least(F.lit(n_folds),
-                F.floor((F.col("__es") - F.col("__t0")) / width)
-                 .cast("int")),
-    ).otherwise(F.lit(0))
+    t0, span_s = F.col("__t0"), F.col("__t1") - F.col("__t0")
+
+    def bound(i: Column) -> Column:
+        # t0 + floor(i * span / k): the floor of a quotient of integers
+        # below 2^53 / k is exact in double, so every engine lands on
+        # the same whole second
+        return t0 + F.floor(i * span_s / F.lit(float(k)))
+
+    # slice = number of boundaries 1..n_folds at or before the row, in
+    # whole seconds since t0: floor(es) >= bound(i) <=> i * span < (sec + 1) * k
+    sec = F.floor(F.col("__es")) - t0
+    s = F.when(span_s > 0, F.least(
+        F.lit(n_folds),
+        F.floor(((sec + 1) * k - 1) / span_s).cast("int"))).otherwise(F.lit(0))
     # within the embargo band just before the row's NEXT slice boundary
-    emb = (F.col("__es") >=
-           F.col("__t0") + (s + 1).cast("double") * F.coalesce(
-               width, F.lit(0.0)) - F.lit(float(embargo_s)))
+    emb = F.col("__es") >= bound(s + 1).cast("double") - F.lit(float(embargo_s))
     hist = (d.groupBy(s.alias("__slice"), emb.cast("int").alias("__emb"))
              .agg(F.count(F.lit(1)).alias("__n")))
     folds = (df.sparkSession.range(1, n_folds + 1)
@@ -255,16 +263,9 @@ def walk_forward_splits(df: DataFrame, n_folds: int = 3,
          .cast("bigint").alias("n_test")))
     bounds = (folds.crossJoin(F.broadcast(span)).select(
         "fold",
-        F.round(F.col("__t0")
-                + fd.cast("double") * (F.col("__t1") - F.col("__t0"))
-                / F.lit(float(n_folds + 1))
-                - F.lit(float(embargo_s)), 6).alias("train_end_s"),
-        F.round(F.col("__t0")
-                + fd.cast("double") * (F.col("__t1") - F.col("__t0"))
-                / F.lit(float(n_folds + 1)), 6).alias("test_start_s"),
-        F.round(F.col("__t0")
-                + (fd + 1).cast("double") * (F.col("__t1") - F.col("__t0"))
-                / F.lit(float(n_folds + 1)), 6).alias("test_end_s")))
+        (bound(fd).cast("double") - F.lit(float(embargo_s))).alias("train_end_s"),
+        bound(fd).cast("double").alias("test_start_s"),
+        bound(fd + 1).cast("double").alias("test_end_s")))
     return bounds.join(out, "fold").select(
         "fold", "train_end_s", "test_start_s", "test_end_s",
         "n_train", "n_purged", "n_test")

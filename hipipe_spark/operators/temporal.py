@@ -21,7 +21,7 @@ whole-stage-codegen'd, no Python in the hot path.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -257,26 +257,43 @@ class BucketedRollingAgg(Stage):
         self.key, self.idx_col, self.order = key, idx_col, order
 
     def apply(self, df: DataFrame) -> DataFrame:
-        B, k = self.bucket_size, self.lookback
-        idx = F.col(self.idx_col)
-        own = df.withColumn("__bkt", F.floor(idx / B).cast("long")) \
-                .withColumn("__ctx", F.lit(False))
-        # context rows: last k turns of the previous bucket, i.e. rows
-        # whose idx mod B >= B - k replicate into bucket+1
-        ctx = (
-            df.filter(F.pmod(idx, F.lit(B)) >= B - k)
-            .withColumn("__bkt", F.floor(idx / B).cast("long") + 1)
-            .withColumn("__ctx", F.lit(True))
-        )
-        u = own.unionByName(ctx)
-        w = (
-            Window.partitionBy(self.key, "__bkt")
-            .orderBy(*[F.col(c) for c in self.order])
-            .rowsBetween(-k, 0 if self.include_current else -1)
-        )
-        for out, (fn, col) in self.aggs.items():
-            u = u.withColumn(out, fn(col).over(w))
-        return u.filter(~F.col("__ctx")).drop("__bkt", "__ctx")
+        end = 0 if self.include_current else -1
+
+        def attach(u: DataFrame, w: WindowSpec) -> DataFrame:
+            w = w.rowsBetween(-self.lookback, end)
+            for out, (fn, col) in self.aggs.items():
+                u = u.withColumn(out, fn(col).over(w))
+            return u
+
+        return _in_turn_buckets(df, attach, self.lookback, self.bucket_size,
+                               self.key, self.idx_col, self.order)
+
+
+def _in_turn_buckets(df: DataFrame,
+                     attach: Callable[[DataFrame, WindowSpec], DataFrame],
+                     lookback: int, bucket_size: int, key: str, idx_col: str,
+                     order: Sequence[str]) -> DataFrame:
+    """Run ``attach(rows, window)`` within (key, idx_col // bucket_size)
+    partitions instead of whole keys: each bucket also receives the
+    previous bucket's last ``lookback`` rows as context rows, so any
+    frame reaching at most ``lookback`` rows back sees exactly what it
+    would over the whole key; context rows are dropped afterwards.
+    Partitions are bounded by bucket_size + lookback rows regardless
+    of key length. ``window`` is partitioned by (key, bucket) and
+    ordered by ``order``; ``idx_col`` must be dense per key (0,1,2,...)
+    and consistent with ``order``."""
+    B, k = bucket_size, lookback
+    idx = F.col(idx_col)
+    own = df.withColumn("__bkt", F.floor(idx / B).cast("long")) \
+            .withColumn("__ctx", F.lit(False))
+    # context rows: rows whose idx mod B >= B - k replicate into bucket+1
+    ctx = (
+        df.filter(F.pmod(idx, F.lit(B)) >= B - k)
+        .withColumn("__bkt", F.floor(idx / B).cast("long") + 1)
+        .withColumn("__ctx", F.lit(True))
+    )
+    out = attach(own.unionByName(ctx), ordered_window([key, "__bkt"], order))
+    return out.filter(~F.col("__ctx")).drop("__bkt", "__ctx")
 
 
 class DecayAgg(Stage):
@@ -341,24 +358,11 @@ class DecayAgg(Stage):
 
     def apply(self, df: DataFrame) -> DataFrame:
         if self.bucket_size is not None:
-            # Skew-proof path for monster conversations (same recipe as
-            # BucketedRollingAgg): bucket by turn_idx // B, replicate
-            # each bucket's last `lookback` rows into the next bucket
-            # as context, run the lags within (key, bucket) — partition
-            # size bounded by B + lookback regardless of conversation
-            # length. Requires idx_col dense per key (input_hint).
-            B, k = self.bucket_size, self.lookback
-            idx = F.col(self.idx_col)
-            own = df.withColumn("__bkt", F.floor(idx / B).cast("long")) \
-                    .withColumn("__ctx", F.lit(False))
-            ctx = (df.filter(F.pmod(idx, F.lit(B)) >= B - k)
-                     .withColumn("__bkt", F.floor(idx / B).cast("long") + 1)
-                     .withColumn("__ctx", F.lit(True)))
-            u = own.unionByName(ctx)
-            w = (Window.partitionBy(self.key, "__bkt")
-                 .orderBy(*[F.col(c) for c in self.order]))
-            out = self._attach(u, w)
-            return out.filter(~F.col("__ctx")).drop("__bkt", "__ctx")
+            # skew-proof path for monster conversations (input_hint:
+            # idx_col dense per key)
+            return _in_turn_buckets(df, self._attach, self.lookback,
+                                   self.bucket_size, self.key, self.idx_col,
+                                   self.order)
         return self._attach(df, ordered_window(self.key, self.order))
 
     def _attach(self, df: DataFrame, w: WindowSpec) -> DataFrame:

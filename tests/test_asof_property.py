@@ -1,6 +1,7 @@
 """Property-based as-of join test (hypothesis): random keyed, possibly
-tied, unsorted timestamp sets on both sides — union strategy must match
-``pd.merge_asof`` for every direction. Complements the fixture matrix in
+tied, unsorted timestamp sets on both sides — the union and broadcast
+strategies must match ``pd.merge_asof`` for every direction, bucketed
+for backward (its only direction). Complements the fixture matrix in
 test_asof.py the way the reference pins semantics with golden tests
 (/root/reference/test/core/stream/example.cpp:25-67); random inputs
 explore tie/boundary cases fixtures miss."""
@@ -51,13 +52,16 @@ def test_union_matches_merge_asof(spark, lspec, rspec, direction, exact):
         seen[(c, s)] = (c, s, v)
     rspec = sorted(seen.values())
     left, right, lpdf, rpdf = _frames(spark, lspec, rspec)
-    out = asof_join(left, right, strategy="union", direction=direction,
-                    allow_exact_matches=exact).toPandas()
     exp = pd.merge_asof(
         lpdf.sort_values("ts", kind="mergesort"),
         rpdf.sort_values("ts", kind="mergesort"),
         on="ts", by="conv_id", direction=direction, allow_exact_matches=exact)
-    a = out.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
     b = exp.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert a["value"].fillna(-9e9).tolist() == b["value"].fillna(-9e9).tolist()
+    strategies = ["union", "broadcast"] + (["bucketed"] if direction == "backward" else [])
+    for strategy in strategies:
+        # 10 s buckets split the 0-50 s span, so bucketed carries across
+        out = asof_join(left, right, strategy=strategy, direction=direction,
+                        allow_exact_matches=exact, bucket_width_sec=10).toPandas()
+        a = out.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
+        assert len(a) == len(b), strategy
+        assert a["value"].fillna(-9e9).tolist() == b["value"].fillna(-9e9).tolist(), strategy

@@ -44,17 +44,20 @@ def test_walk_forward_counts_match_python(transcripts, transcripts_pdf):
     out = walk_forward_splits(transcripts, n_folds=3,
                               embargo_s=600.0).toPandas()
     es = transcripts_pdf["ts"].astype("int64") / 1e9
-    t0, t1 = es.min(), es.max()
-    width = (t1 - t0) / 4.0
-    s = np.minimum(3, np.floor((es - t0) / width)).astype(int)
-    emb = es >= t0 + (s + 1) * width - 600.0
+    # whole-second boundaries b_0..b_4 over [floor(min), ceil(max)]
+    t0, t1 = np.floor(es.min()), np.ceil(es.max())
+    bounds = t0 + (np.arange(5) * (t1 - t0)) // 4
+    s = np.searchsorted(bounds[1:4], es.to_numpy(), side="right")
+    emb = es >= bounds[s + 1] - 600.0
     for _, r in out.iterrows():
-        i = r["fold"]
+        i = int(r["fold"])
         assert r["n_test"] == int((s == i).sum())
         assert r["n_purged"] == int(((s == i - 1) & emb).sum())
         assert r["n_train"] == int(
             ((s < i - 1) | ((s == i - 1) & ~emb)).sum())
-        assert abs(r["test_start_s"] - (t0 + i * width)) < 1e-4
+        assert r["test_start_s"] == bounds[i]
+        assert r["train_end_s"] == bounds[i] - 600.0
+        assert r["test_end_s"] == bounds[i + 1]
     # every row is accounted for in each fold up to its test slice
     total = out.iloc[0][["n_train", "n_purged", "n_test"]].sum()
     assert total == int((s <= 1).sum())

@@ -134,18 +134,29 @@ def test_brute_force_topk_metrics(spark):
     assert dd == cc
 
 
-def test_asof_gate_memoized(spark):
-    """The auto-gate estimate must not re-run its bounded count job for
-    the same logical plan."""
-    from hipipe_spark.operators import asof
+def test_asof_auto_gate_reads_plan_estimate(spark, transcripts, tmp_path):
+    """The ``auto`` as-of gate reads Catalyst's size estimate: building
+    an auto featurize starts no Spark job. A parquet profile side has a
+    small estimate and is broadcast; a list-built one has no statistics
+    and takes the union path."""
+    import datetime as dt
 
-    df = spark.range(100).selectExpr("id", "cast(id as string) s")
-    # force the stats-unknown path deterministically via a cache poke:
-    asof._EST_CACHE.clear()
-    e1 = asof._est_bytes(df, 1 << 20)
-    assert len(asof._EST_CACHE) == 1
-    e2 = asof._est_bytes(df, 1 << 20)
-    assert e1 == e2
-    # a semantically different plan gets its own entry
-    asof._est_bytes(df.filter("id > 5"), 1 << 20)
-    assert len(asof._EST_CACHE) == 2
+    from hipipe_spark.datagen import gen_profile_updates
+    from hipipe_spark.operators.flagship import featurize
+
+    path = str(tmp_path / "profiles")
+    gen_profile_updates(spark, n_convs=60).write.parquet(path)
+    parquet_profiles = spark.read.parquet(path)
+    listed = spark.createDataFrame(
+        [("conv_00000001", dt.datetime(2024, 1, 1), "m", 0.5)],
+        "conv_id string, ts timestamp, model string, temperature double")
+    tracker = spark.sparkContext.statusTracker()
+
+    def built(profiles):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = featurize(transcripts, profiles)
+        assert set(tracker.getJobIdsForGroup(None)) == before
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    assert "BroadcastExchange" in built(parquet_profiles)
+    assert "BroadcastExchange" not in built(listed)
