@@ -1,3816 +1,45 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)    — flagship feature pipeline on sf0.001 transcripts.
-queries()       — one entry per implemented operator (SURVEY.md §2).
-oracle_sql()    — DuckDB-runnable ANSI SQL equivalents.
+queries()       — every registered query, ``DRIVER_WINDOW`` first.
+oracle_sql()    — the DuckDB oracle of every query that has one.
 
-Column names are aliased identically on both sides; floats are rounded
-identically on both sides (the driver hash-compares values).
-
-Oracle-author rules (learned the hard way; enforced by the
-driver-strength bitwise replica in tools/check_oracles.py):
-
-1. **Signed zero**: Spark ``round()`` (BigDecimal HALF_UP) returns
-   ``+0.0`` where DuckDB (libm) returns ``-0.0`` for a tiny negative.
-   Any rounded output that can reach zero from below (trig,
-   correlations, log-ratios, differences) must use
-   ``functions.rounding.round_norm`` on the Spark side and
-   ``round(expr, n) + 0.0`` in the SQL.
-2. **Timestamps are MICROSECONDS**: testdata ``ts`` carries µs
-   components. Never difference timestamps via ``epoch_ms`` (truncates)
-   or via epoch-second doubles (loses the tail); use
-   ``(epoch_us(a) - epoch_us(b)) / 1000000.0`` in SQL and
-   ``unix_micros`` integer subtraction before the divide in Spark so
-   the operation order matches.
-3. **No raw array/struct output columns**: the driver's canonicalizer
-   TypeErrors on them. ``to_json`` integer arrays directly; route
-   float arrays through ``functions.rounding.json_units`` (integer
-   micro-units — float JSON rendering differs between engines).
-4. **DuckDB integer sums are HUGEINT** (fetch as float64):
-   ``CAST(sum(...) AS BIGINT)`` every count-like aggregate.
+The queries and their oracles are declared in ``driver_queries/`` (one
+``@query(oracle=...)`` function each); see that package's docstring
+for how to add one and the rules an oracle must follow.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hipipe_spark.datagen import transcripts_from_events
-from hipipe_spark.functions.casts import string_to_bool
-from hipipe_spark.functions.hashing import (
-    det_hash01, det_hash01_sql, det_hash_i64, det_hash_i64_sql,
-    det_hash_mix_i64_sql, det_hash_str_i64_sql,
-)
-from hipipe_spark.functions.text import (
-    fingerprint, punct_ratio, token_count, tokens,
-)
-from hipipe_spark.operators.asof import asof_interpolate, asof_join
-from hipipe_spark.operators.bpe import bpe_merge_table
-from hipipe_spark.operators.core import Filter, Pad, Transform
-from hipipe_spark.operators.decomposition import (
-    apply_pca, covariance_matrix, fit_pca,
-)
-from hipipe_spark.operators.features import categorical_entropy, make_labels
-from hipipe_spark.operators.joins import interval_join, salted_join
-from hipipe_spark.operators.packing import chunk_overlap
-from hipipe_spark.operators.dedup import (
-    embedding_near_pairs, exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
-    simhash_near_pairs,
-)
+from driver_queries import ORACLES, QUERIES, Query
+from driver_queries.testdata import asof_sides, read_transcripts
 from hipipe_spark.operators.flagship import featurize
-from hipipe_spark.operators.groups import (
-    build_index_mapper, encode, fixed_groups, generate_groups,
+
+# The driver records correctness rows for the first 50 queries only, so
+# this tuple decides which queries it value-checks. Change it only to
+# rotate the window.
+DRIVER_WINDOW = (
+    "embedding_pool", "hash_features", "onehot_encode", "bigram_pmi", "cuped",
+    "feature_hash", "compress_pinned", "embedding_ivf_full", "hits", "logrank",
+    "link_features", "kcore", "leakage_audit", "feature_corr", "impute",
+    "walk_forward", "distinctive_terms", "future_label", "role_streak",
+    "funnel", "winnow_dedup", "t_closeness", "random_projection", "hbos",
+    "modularity", "conv_winnow", "readability", "ad_test", "anova", "levene",
+    "jarque_bera", "kruskal_wallis", "cmh", "tost", "ols2", "durbin_watson",
+    "calendar", "ewma", "influence", "runs", "grubbs", "icc", "cronbach",
+    "partial_corr", "overdispersion", "pacf", "event_runs",
+    "unigram_roundtrip", "hurst", "theil_u",
 )
-from hipipe_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
-from hipipe_spark.operators.temporal import (
-    Backfill, CumulativeDistinct, DecayAgg, LagLead, PriorSessionStats,
-    RollingAgg, RollingQuantile, Sessionize, TimeSincePrev,
-    time_grid_resample, transition_matrix, ts_seconds,
-)
-from hipipe_spark.sources.multimodal import extract_features, gen_fake_media
-
-GAP_SEC = 1800
-
-# DuckDB view of the transcripts derived from `events` — must mirror
-# hipipe_spark.datagen.transcripts_from_events exactly.
-_T = f"""
-  SELECT 'conv_' || lpad(CAST(user_id AS VARCHAR), 8, '0') AS conv_id,
-         CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS INTEGER) AS turn_idx,
-         (CASE ({det_hash_i64_sql('event_id', 7)}) % 4
-            WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
-            WHEN 2 THEN 'system' ELSE 'tool' END) AS role,
-         COALESCE(props, '') AS text,
-         COALESCE(event_type, '') AS tool,
-         ts
-  FROM events
-"""
-
-# left/right split of events for as-of joins: odd event_ids are the
-# probe side, even event_ids carry the value to merge point-in-time.
-def _asof_sides(spark: SparkSession, sf_dir: str):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = ev.filter(F.col("event_id") % 2 == 1).select(
-        "event_id", "user_id", "ts"
-    )
-    right = ev.filter(F.col("event_id") % 2 == 0).select(
-        "user_id", "ts", F.round("value", 4).alias("val")
-    )
-    return left, right
-
-
-_ASOF_ORACLE = """
-  WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-       r AS (SELECT user_id, ts, round(value, 4) AS val FROM events WHERE event_id % 2 = 0)
-  SELECT l.event_id, l.user_id, l.ts, r.val
-  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-"""
-
-
-
-
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings scan spread to core count (single-row-group testdata
-    file → one split; the per-batch BLAS matmuls would run serial)."""
-    from hipipe_spark.operators.core import ensure_parallelism
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan spread to core count: the small testdata file
-    arrives as ONE split, which would serialize the expression-heavy
-    text pipelines (tokenize/score/shingle) onto a single task."""
-    from hipipe_spark.operators.core import ensure_parallelism
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return transcripts_from_events(spark, sf_dir)
-
-
-# --------------------------------------------------------------- queries
-def q_sessionize(spark, sf_dir):
-    t = _transcripts(spark, sf_dir)
-    out = Sessionize(gap="30 minutes")(t)
-    return out.select("conv_id", "turn_idx", "ts", "session_seq", "session_id")
-
-
-def q_lag_lead(spark, sf_dir):
-    t = _transcripts(spark, sf_dir)
-    out = LagLead("role", lags=[1], leads=[1])(TimeSincePrev()(t))
-    return out.select(
-        "conv_id", "turn_idx", "secs_since_prev",
-        "role_lag_1", F.col("role_lead_1_label").alias("role_lead_1"),
-    )
-
-
-def q_backfill(spark, sf_dir):
-    t = _transcripts(spark, sf_dir)
-    out = Backfill("tool", sentinel="", lookback=None)(t)
-    return out.select("conv_id", "turn_idx", "tool_filled")
-
-
-def q_rolling(spark, sf_dir):
-    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text").cast("int"))
-    out = RollingAgg(
-        {
-            "assistant_turns_10": (F.sum, F.when(F.col("role") == "assistant", 1).otherwise(0)),
-            "mean_text_len_10": (F.avg, F.col("text_len")),
-        },
-        lookback=10,
-    )(t)
-    return out.select(
-        "conv_id", "turn_idx", "assistant_turns_10",
-        F.round("mean_text_len_10", 4).alias("mean_text_len_10"),
-    )
-
-
-def q_rolling_bucketed(spark, sf_dir):
-    from hipipe_spark.operators.temporal import BucketedRollingAgg
-    t = _transcripts(spark, sf_dir).withColumn("text_len", F.length("text").cast("int"))
-    out = BucketedRollingAgg(
-        {
-            "assistant_turns_10": (F.sum, F.when(F.col("role") == "assistant", 1).otherwise(0)),
-            "mean_text_len_10": (F.avg, F.col("text_len")),
-        },
-        lookback=10, bucket_size=64,
-    )(t)
-    return out.select(
-        "conv_id", "turn_idx", "assistant_turns_10",
-        F.round("mean_text_len_10", 4).alias("mean_text_len_10"),
-    )
-
-
-def q_session_agg(spark, sf_dir):
-    t = Sessionize(gap="30 minutes")(_transcripts(spark, sf_dir))
-    return (
-        t.groupBy("conv_id", "session_seq")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.round(
-                F.max(ts_seconds(F.col("ts"))) - F.min(ts_seconds(F.col("ts"))), 6
-            ).alias("span_sec"),
-        )
-    )
-
-
-def q_asof_union(spark, sf_dir):
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="union")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_asof_broadcast(spark, sf_dir):
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="broadcast")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_asof_cogroup(spark, sf_dir):
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="cogroup")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_asof_bucketed(spark, sf_dir):
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="bucketed",
-                    bucket_width_sec=3600)
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_asof_forward(spark, sf_dir):
-    """Forward as-of (label-construction direction: FIRST right row at
-    or after each left ts) — oracled by DuckDB ASOF with the <= bound."""
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="union",
-                    direction="forward")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_leakage_audit(spark, sf_dir):
-    """Zero-temporal-leakage gate (validate.py leakage_audit): run two
-    point-in-time joins carrying the matched SOURCE timestamp as a
-    value column — backward (feature direction, must be clean) and
-    forward (label direction, expected to lead) — then audit every
-    source in ONE melted aggregate scan. The north rule's "no feature
-    may read ts' > ts" as a Spark plan: the backward row reports
-    n_leaks=0/ok=true, the forward row reports the leads loudly."""
-    from hipipe_spark.operators.validate import leakage_audit
-    left, right = _asof_sides(spark, sf_dir)
-    feat = right.select("user_id", "ts", F.col("ts").alias("src_ts_feature"))
-    lab = right.select("user_id", "ts", F.col("ts").alias("src_ts_label"))
-    out = asof_join(left, feat, on="ts", by="user_id", strategy="union")
-    out = asof_join(out, lab, on="ts", by="user_id", strategy="union",
-                    direction="forward")
-    return leakage_audit(out, "ts", ["src_ts_feature", "src_ts_label"])
-
-
-def q_asof_nearest(spark, sf_dir):
-    """Nearest as-of (pandas merge_asof semantics: closer of the
-    backward/forward candidates, ties prefer backward) — oracled by two
-    DuckDB ASOF joins plus the distance tiebreak."""
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="union",
-                    direction="nearest")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_filter_dim1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = Filter(["l_quantity", "l_discount"],
-                 lambda q, d: (q > 30) & (d < 0.05))(li)
-    return out.select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-
-
-def q_filter_dim2(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    out = Filter("embedding", lambda x: x > 0, dim=2)(em)
-    return out.select("vec_id", F.size("embedding").alias("n_pos"))
-
-
-def q_transform_map(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    # decimal math: inputs have ≤2 decimals; decimal arithmetic is exact
-    # in both engines, so results are bit-identical (doubles are not).
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    out = Transform(
-        ["l_extendedprice", "l_discount", "l_tax"],
-        ["revenue", "charged"],
-        lambda p, d, t: (
-            (dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))).cast("decimal(18,4)").cast("double"),
-            F.round(dec("l_extendedprice") * (1 - dec("l_discount")) * (1 + dec("l_tax")), 4).cast("double"),
-        ),
-    )(li)
-    return out.select("l_orderkey", "l_linenumber", "revenue", "charged")
-
-
-def q_transform_dim2(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    em = em.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    out = Transform("embedding", "embedding", lambda x: x * x, dim=2)(em)
-    return out.select(
-        "vec_id",
-        F.round(F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x), 6).alias("sq_norm"),
-    )
-
-
-def q_transform_dim3(spark, sf_dir):
-    """dim-3 transform: sentences -> words (array<array<string>>),
-    upper-case each word 2 levels deep, re-flatten for comparison."""
-    d = _docs(spark, sf_dir)
-    d = d.withColumn(
-        "sent_words",
-        F.transform(F.split(F.col("text"), r"\. "),
-                    lambda s: F.split(s, " ")))
-    out = Transform("sent_words", "sent_words",
-                    lambda w: F.upper(w), dim=3)(d)
-    return out.select(
-        "doc_id",
-        F.array_join(F.flatten("sent_words"), " ").alias("upper_text"),
-    )
-
-
-def q_transform_cond(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    o = o.withColumn("prio_u", F.col("o_orderpriority"))
-    out = Transform(
-        "o_orderpriority", "prio_u", lambda p: F.upper(F.reverse(p)),
-        cond=(F.col("o_orderstatus") == "F"),
-    )(o)
-    return out.select("o_orderkey", "prio_u")
-
-
-def q_transform_prob(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    o = o.withColumn("status2", F.col("o_orderstatus"))
-    out = Transform(
-        "o_orderstatus", "status2", lambda s: F.lower(s),
-        prob=0.3, key="o_orderkey", seed=11,
-    )(o)
-    return out.select("o_orderkey", "status2")
-
-
-def q_random_fill(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return o.select(
-        "o_orderkey",
-        F.round(det_hash01(F.col("o_orderkey"), 5), 9).alias("u"),
-    )
-
-
-def q_string_to_bool(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    parsed = string_to_bool(F.lower(F.col("l_returnflag")))
-    return (
-        li.select(
-            F.coalesce(parsed.cast("string"), F.lit("unparsed")).alias("flag")
-        )
-        .groupBy("flag").agg(F.count("*").alias("n"))
-    )
-
-
-def q_base64(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    # Spark's base64 is MIME-chunked (76-char lines); strip the newlines
-    # to get canonical RFC 4648 output comparable with DuckDB's.
-    enc = F.regexp_replace(F.base64(F.col("text").cast("binary")), "[\r\n]", "")
-    return d.select(
-        "doc_id",
-        F.length(enc).cast("int").alias("b64_len"),
-        F.substring(enc, 1, 16).alias("b64_prefix"),
-    )
-
-
-def q_index_mapper(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    mapper = build_index_mapper(o, "o_orderpriority")
-    return encode(o, "o_orderpriority", mapper).select(
-        "o_orderkey", F.col("o_orderpriority_idx").alias("prio_idx")
-    )
-
-
-def q_generate_groups(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = generate_groups(o, "o_orderkey", [2, 2, 6], seed=3)
-    return out.groupBy("group").agg(F.count("*").alias("n"))
-
-
-def q_generate_groups_multi(spark, sf_dir):
-    """n-clusterings split (reference groups.hpp:111-140): volatile
-    [1,1] + fixed [2] over 3 clusterings; the fixed group (label 2) is
-    identical in every clustering, volatile rows re-split per clustering
-    with exact counts. Per-row labels fully reproduced by the DuckDB
-    oracle (LCG rank thresholds)."""
-    from hipipe_spark.operators.groups import generate_groups_multi
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = generate_groups_multi(o, "o_orderkey", n=3,
-                                volatile_ratio=[1, 1], fixed_ratio=[2], seed=3)
-    return out.select("o_orderkey", "group_0", "group_1", "group_2")
-
-
-def q_fixed_groups(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = fixed_groups(o, "o_orderkey", 5, seed=3)
-    return out.groupBy("group").agg(F.count("*").alias("n"))
-
-
-def q_pad_mask(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    d = d.withColumn("toks", tokens(F.col("text")))
-    out = Pad("toks", value="<pad>")(d)
-    return out.select(
-        "doc_id",
-        F.size("toks").alias("padded_len"),
-        F.size(F.filter("toks_mask", lambda m: m)).alias("n_real"),
-    )
-
-
-def q_pad_mask2(spark, sf_dir):
-    """Multi-dim pad+mask (reference pad.hpp:30-44 mask-dimensionality
-    dispatch + ndim_pad, ndim.hpp:310-328): a ragged 2-deep nested array
-    (token chunks of 7 via reshaped_view, ndim.hpp:525-545) padded on
-    BOTH dims to the per-dimension global max, with a 2-level leaf mask.
-    Global maxes via agg + broadcast crossJoin — no single-task window."""
-    from hipipe_spark.functions.ndim import reshaped_view
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 10 == 0)
-    d = d.select(
-        "doc_id",
-        reshaped_view(tokens(F.lower(F.col("text"))), 7).alias("chunks"))
-    out = Pad("chunks", value="<pad>", depth=2)(d)
-    # JSON-serialize the nested arrays: value-hash comparators need not
-    # support 2-deep arrays, and both engines emit identical compact JSON
-    return out.select(
-        "doc_id",
-        F.to_json(F.col("chunks")).alias("chunks"),
-        F.to_json(F.col("chunks_mask")).alias("chunks_mask"))
-
-
-def q_ndim_ops(spark, sf_dir):
-    """ndim utility sweep over a ragged nested array (reference
-    ndim.hpp:192-209 ndim_size, :263-288 ndim_resize, :388-407 shape,
-    :451-471 flat_view, :586-646 generate/gendims): per-dimension
-    sizes, 1-D and 2-D resize (pad/truncate to target sizes),
-    first-element shape, recursive flatten, and the depth-first counter
-    fill at gendims 1 and 2 — all JSON-serialized for engine-neutral
-    hashing."""
-    from hipipe_spark.functions.ndim import (
-        flat_view, gen_fill, ndim_resize, ndim_resize2, ndim_size,
-        reshaped_view, shape)
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 10 == 0)
-    c = d.select(
-        "doc_id",
-        reshaped_view(tokens(F.lower(F.col("text"))), 7).alias("chunks"))
-    return c.select(
-        "doc_id",
-        ndim_size(F.col("chunks"), 1).alias("n_chunks"),
-        F.to_json(ndim_size(F.col("chunks"), 2)).alias("chunk_lens"),
-        F.to_json(shape(F.col("chunks"), 2)).alias("shp"),
-        F.size(flat_view(F.col("chunks"), 2)).alias("n_flat"),
-        F.to_json(gen_fill(F.col("chunks"), 1, ndims=2)).alias("gf1"),
-        F.to_json(gen_fill(F.col("chunks"), 2, ndims=2)).alias("gf2"),
-        F.to_json(ndim_resize(flat_view(F.col("chunks"), 2), 5, "<pad>")
-                  ).alias("rz1"),
-        F.to_json(ndim_resize2(
-            F.col("chunks"), 3,
-            F.array(F.lit(2), F.lit(2), F.lit(2)), "<pad>")).alias("rz2"),
-    )
-
-
-def q_token_stats(spark, sf_dir):
-    from hipipe_spark.functions.text import bpe_ish_token_count
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        bpe_ish_token_count(F.col("text")).alias("n_bpe"),
-        F.length("text").cast("int").alias("n_chars_calc"),
-        F.round(punct_ratio(F.col("text")), 6).alias("punct_ratio"),
-    )
-
-
-def q_token_budget(spark, sf_dir):
-    """Token-budget subsampling: a seeded hash permutation of doc_id +
-    the two-phase range-partitioned prefix sum keep the prefix of
-    documents totalling ≤ 15k tokens (~55% of the sf0.01 corpus — the prefix genuinely truncates) — the "N billion tokens of web"
-    knob stated by every corpus-mixing spec. Deterministic at any
-    parallelism (pytest pins 1/5/32 partitions)."""
-    from hipipe_spark.operators.sampling import sample_to_token_budget
-    d = _docs(spark, sf_dir).select(
-        "doc_id", token_count(F.col("text")).alias("n_tok"))
-    out = sample_to_token_budget(d, "doc_id", "n_tok",
-                                 budget=15000, seed=3)
-    return out.select("doc_id", F.col("n_tok").cast("long").alias("n_tok"),
-                      "tok_cum")
-
-
-def q_fingerprint(spark, sf_dir):
-    from hipipe_spark.functions.text import rolling_fingerprint
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        F.md5(F.col("text").cast("binary")).alias("fp_exact"),
-        fingerprint(F.col("text")).alias("fp_bag"),
-        rolling_fingerprint(F.col("text")).alias("fp_roll"),
-    )
-
-
-def q_exact_dedup(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return exact_dedup(d, "text", "doc_id").select("doc_id")
-
-
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition signals (dup lines / dup n-grams /
-    top-n-gram coverage) — one shared lowered tokenization, all pure
-    array expressions, zero shuffles."""
-    from hipipe_spark.functions.text import (
-        dup_line_char_frac, dup_line_frac, dup_ngram_frac, top_ngram_frac,
-    )
-    d = _docs(spark, sf_dir)
-    ltoks = tokens(F.lower(F.col("text")))
-    return d.select(
-        "doc_id",
-        F.round(dup_ngram_frac(F.col("text"), 2, toks=ltoks), 6)
-         .alias("dup_2gram_frac"),
-        F.round(dup_ngram_frac(F.col("text"), 3, toks=ltoks), 6)
-         .alias("dup_3gram_frac"),
-        F.round(top_ngram_frac(F.col("text"), 2, toks=ltoks), 6)
-         .alias("top_2gram_frac"),
-        F.round(dup_line_frac(F.col("text")), 6).alias("dup_line_frac"),
-        F.round(dup_line_char_frac(F.col("text")), 6)
-         .alias("dup_line_char_frac"),
-    )
-
-
-def q_contamination(spark, sf_dir):
-    """Benchmark decontamination check: distinct word-3-gram overlap
-    between the train split (doc_id % 25 != 0) and the eval split
-    (doc_id % 25 == 0); pairs sharing >= 2 grams. Eval side broadcast —
-    the train corpus is never shuffled on raw text."""
-    from hipipe_spark.operators.contamination import contamination_pairs
-    d = _docs(spark, sf_dir)
-    train = d.filter(F.col("doc_id") % 25 != 0)
-    test = d.filter(F.col("doc_id") % 25 == 0)
-    return contamination_pairs(train, test, "doc_id", "text",
-                               n=3, min_hits=2)
-
-
-_SEQ_LEN = 512  # training sequence length for the packing queries
-
-
-def q_pack_chunks(spark, sf_dir):
-    """Concat-and-chunk sequence packing: every document's global token
-    offset + the training-chunk span it lands in. Distributed
-    exclusive cumsum (two-phase range-partitioned, no global window)."""
-    from hipipe_spark.operators.packing import pack_chunks
-    d = _docs(spark, sf_dir).withColumn(
-        "n_tok", token_count(F.col("text")))
-    return pack_chunks(d, "doc_id", "n_tok", seq_len=_SEQ_LEN).select(
-        "doc_id", "n_tok", "tok_offset", "chunk_first", "chunk_last",
-        "n_chunks")
-
-
-def q_pack_stats(spark, sf_dir):
-    """Per-chunk packing stats over the q_pack_chunks layout: documents
-    started and tokens contributed before the chunk boundary."""
-    from hipipe_spark.operators.packing import pack_chunks, pack_stats
-    d = _docs(spark, sf_dir).withColumn(
-        "n_tok", token_count(F.col("text")))
-    packed = pack_chunks(d, "doc_id", "n_tok", seq_len=_SEQ_LEN)
-    return pack_stats(packed, "n_tok", _SEQ_LEN)
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII scrub stage: email/IPv4 placeholder redaction + per-kind
-    match counts. RE2-compatible patterns, so the DuckDB oracle runs
-    the byte-identical regex. One narrow JVM pass, zero shuffles."""
-    from hipipe_spark.functions.pii import pii_counts, scrub_pii
-    d = _docs(spark, sf_dir)
-    counts = pii_counts(F.col("text"), ("email", "ipv4"))
-    return d.select(
-        "doc_id",
-        scrub_pii(F.col("text"), ("email", "ipv4")).alias("scrubbed"),
-        counts["email"].cast("int").alias("n_email"),
-        counts["ipv4"].cast("int").alias("n_ipv4"),
-    )
-
-
-def q_c4_quality(spark, sf_dir):
-    """C4 cleaning-rule signals (terminal-punctuation line fraction,
-    mean words per line, brace / lorem-ipsum / javascript flags) — all
-    array/substring expressions, zero shuffles."""
-    from hipipe_spark.functions.text import (
-        c4_flags, mean_words_per_line, terminal_line_frac,
-    )
-    d = _docs(spark, sf_dir)
-    flags = c4_flags(F.col("text"))
-    return d.select(
-        "doc_id",
-        F.round(terminal_line_frac(F.col("text")), 6)
-         .alias("terminal_line_frac"),
-        F.round(mean_words_per_line(F.col("text")), 6)
-         .alias("mean_words_per_line"),
-        flags["has_brace"].alias("has_brace"),
-        flags["has_lorem"].alias("has_lorem"),
-        flags["has_javascript"].alias("has_javascript"),
-    )
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Corpus-level vocabulary: top-100 tokens by frequency with a
-    deterministic (count desc, token asc) tiebreak. Explode + partially
-    aggregated count — ONE shuffle on the token key, then a
-    TakeOrdered; the vocabulary-building plan that holds at 100 TB."""
-    d = _docs(spark, sf_dir)
-    return (d.select(F.explode(tokens(F.lower(F.col("text")))).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .orderBy(F.desc("n"), F.asc("word"))
-            .limit(100))
-
-
-def q_training_pipeline(spark, sf_dir):
-    """The full corpus build as ONE plan: quality+repetition filter →
-    exact dedup → benchmark decontamination (eval = doc_id % 25 == 0)
-    → concat-and-chunk packing. Shuffle budget: fingerprint shuffle +
-    broadcast anti-join + range shuffle; the filter rides the scan."""
-    from hipipe_spark.operators.corpus import CorpusFilter, build_training_set
-    d = _docs(spark, sf_dir)
-    train = d.filter(F.col("doc_id") % 25 != 0)
-    ev = d.filter(F.col("doc_id") % 25 == 0)
-    out = build_training_set(
-        train, ev, flt=CorpusFilter(min_tokens=10, max_dup_2gram=0.3),
-        contam_n=3, contam_min_hits=2, seq_len=_SEQ_LEN)
-    return out.select("doc_id", "n_tok", "tok_offset", "chunk_first",
-                      "chunk_last", "n_chunks")
-
-
-_BM25_TERMS = ["join", "dup", "vector"]  # common/rare/common in testdata
-
-
-def q_bm25(spark, sf_dir):
-    """BM25 scoring of the corpus against a fixed query-term set —
-    lexical sibling of the embedding top-k family. One dimension-sized
-    stats aggregate (N, avgdl, df_t), then a single narrow scoring
-    pass; nothing shuffles. Arithmetic written to be IEEE-identical in
-    DuckDB (same literal folding, same operation order)."""
-    from hipipe_spark.operators.retrieval import bm25_scores
-    d = _docs(spark, sf_dir)
-    out = bm25_scores(d, _BM25_TERMS, "doc_id", "text", k1=1.2, b=0.75)
-    return out.select("doc_id", F.round("score", 6).alias("bm25"))
-
-
-def q_tfidf(spark, sf_dir):
-    """Raw-tf/ln-idf variant of q_bm25 — same single-scan stats-fold
-    shape, linear in tf (no saturation)."""
-    from hipipe_spark.operators.retrieval import tfidf_scores
-    d = _docs(spark, sf_dir)
-    out = tfidf_scores(d, _BM25_TERMS, "doc_id", "text")
-    return out.select("doc_id", F.round("score", 6).alias("tfidf"))
-
-
-def q_boilerplate_lines(spark, sf_dir):
-    """CCNet/RefinedWeb line-level boilerplate removal: lines occurring
-    in ≥25 distinct docs are stripped, survivors rejoined in order.
-    Testdata text is single-line, so 2-token pseudo-lines (the pad_mask2
-    chunk idiom) stand in for real lines on BOTH engines."""
-    from hipipe_spark.functions.ndim import reshaped_view
-    from hipipe_spark.operators.boilerplate import remove_frequent_lines
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.transform(reshaped_view(tokens(F.lower(F.col("text"))), 2),
-                    lambda s: F.array_join(s, " ")).alias("lines"))
-    out = remove_frequent_lines(d, min_docs=25)
-    return out.select(
-        "doc_id",
-        F.array_join("clean_lines", "\n").alias("clean_text"),
-        "n_lines", "n_removed")
-
-
-def q_det_shuffle(spark, sf_dir):
-    """Deterministic global corpus shuffle: every doc's rank in the
-    seeded hash permutation, assigned by the two-phase range recipe (no
-    single-task sort) and bit-stable at any parallelism."""
-    from hipipe_spark.operators.ordering import deterministic_shuffle
-    d = _docs(spark, sf_dir).select("doc_id")
-    return deterministic_shuffle(d, "doc_id", seed=7)
-
-
-def q_temperature_mixture(spark, sf_dir):
-    """Temperature-based domain rebalancing (XLM-R/mT5 recipe) over the
-    skewed `lang` column: q_d ∝ n_d^0.5, realized as deterministic
-    per-row Bernoulli keeps with in-plan statistics."""
-    from hipipe_spark.operators.sampling import temperature_mixture
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
-    return temperature_mixture(d, "lang", "doc_id", alpha=0.5,
-                               target_rows=250, seed=3)
-
-
-def q_decay_features(spark, sf_dir):
-    """Recency-weighted (EWMA-style) activity features: exp(-dt/tau)
-    weighted sum/mean of the previous 8 turns' text lengths. The
-    bounded-lag formulation keeps every exponent in [-(max gap)/tau, 0]
-    at any timestamp span (the exp(t/tau) prefix-sum trick overflows
-    past ~709*tau); the oracle writes the identical left-associated
-    sum so values agree bit-for-bit up to libm exp."""
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    out = DecayAgg("text_len", lookback=8, tau="10 minutes")(t)
-    return out.select(
-        "conv_id", "turn_idx",
-        F.round("decay_wsum", 4).alias("decay_wsum"),
-        F.round("text_len_decay_sum", 4).alias("decay_sum"),
-        F.round("text_len_decay_mean", 4).alias("decay_mean"),
-    )
-
-
-def q_cum_distinct(spark, sf_dir):
-    """Distinct tools seen strictly before each turn — the running
-    set-cardinality feature, computed state-free via first-occurrence
-    flags + running sum (no per-row collect_set)."""
-    t = _transcripts(spark, sf_dir).withColumn(
-        "tool_v", F.when(F.col("tool") != "", F.col("tool")))
-    out = CumulativeDistinct("tool_v")(t)
-    return out.select(
-        "conv_id", "turn_idx",
-        F.col("tool_v_distinct_sofar").alias("tools_sofar"))
-
-
-def q_rolling_median_past(spark, sf_dir):
-    """Exact nearest-rank median of the previous 7 turns' text lengths
-    (integer-exact: no float rounding in the oracle compare). Distinct
-    from q_rolling_quantile (temporal.rolling_quantile, interpolated,
-    current-row-inclusive): this is the strictly-past leakage-safe
-    RollingQuantile STAGE. (The two briefly shared one dict key — the
-    later def shadowed this one; renamed so both keep driver rows.)"""
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    out = RollingQuantile("text_len", q=0.5, lookback=7)(t)
-    return out.select(
-        "conv_id", "turn_idx", F.col("text_len_q50").alias("med_len_7"))
-
-
-def q_bigram_pmi(spark, sf_dir):
-    """Collocation mining: PMI of adjacent token pairs with count >= 5
-    (the surviving set is integer-determined — no float-boundary
-    top-k), one shared tokenization + keyed counts + two equi-joins."""
-    from hipipe_spark.operators.retrieval import bigram_pmi
-    d = _docs(spark, sf_dir)
-    out = bigram_pmi(d, min_count=5)
-    # round_norm: PMI of an exactly-independent pair rounds to zero
-    # from below in DuckDB (-0.0) but +0.0 in Spark (r4 driver red on
-    # exactly one such cell) — functions/rounding.py.
-    from hipipe_spark.functions.rounding import round_norm
-    return out.select("tok_a", "tok_b", "n_ab",
-                      round_norm("pmi", 5).alias("pmi"))
-
-
-def q_hash_features(spark, sf_dir):
-    """Feature-hashing-trick count vectors (dim=16): scan-local, zero
-    shuffle, integer-exact via the det-hash family (subset of docs —
-    the per-token string hash is O(len) on the DuckDB side)."""
-    from hipipe_spark.functions.text import hashed_count_vector
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
-    # to_json: raw array output columns break the driver canonicalizer
-    # (functions/rounding.py); integer JSON renders identically.
-    return d.select(
-        "doc_id",
-        F.to_json(hashed_count_vector(F.col("text"), dim=16)).alias("fv"))
-
-
-def q_unigram_logprob(spark, sf_dir):
-    """Mean unigram log-probability of each doc under the corpus's own
-    token distribution (Laplace-smoothed) — the in-container stand-in
-    for CCNet's KenLM perplexity quality filter."""
-    from hipipe_spark.operators.retrieval import unigram_logprob
-    d = _docs(spark, sf_dir)
-    out = unigram_logprob(d, "doc_id", "text", alpha=0.5)
-    return out.select("id", "n_tokens",
-                      F.round("logprob", 5).alias("logprob"))
-
-
-def q_embedding_pool(spark, sf_dir):
-    """Element-wise mean pooling of turn embeddings into group vectors
-    via posexplode + per-dimension aggregate — no per-group array
-    state, no single-task stage at any group size."""
-    from hipipe_spark.operators.similarity import mean_pool
-    em = _embs(spark, sf_dir).withColumn(
-        "g", F.pmod(F.col("vec_id"), F.lit(50)))
-    out = mean_pool(em, "g")
-    # json_units: the driver's value-hash canonicalizer refuses raw
-    # array columns, and float JSON rendering diverges across engines
-    # -> integer micro-unit JSON (functions/rounding.py).
-    from hipipe_spark.functions.rounding import json_units
-    return out.select(
-        "g",
-        json_units("pooled", 6).alias("pooled"),
-        "n_vecs")
-
-
-def q_target_encode_ordered(spark, sf_dir):
-    """Ordered (strictly-past, conversation-local) smoothed target
-    encoding of role against text length — zero target leakage: each
-    row's encoding uses only labels the model would have seen.
-    Distinct from q_target_encode (out-of-fold corpus TE); the two
-    briefly shared one dict key — renamed so both keep driver rows."""
-    from hipipe_spark.operators.encoders import TargetEncode
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    out = TargetEncode("role", "text_len", prior=25.0, prior_weight=10.0)(t)
-    return out.select(
-        "conv_id", "turn_idx", F.round("role_te", 4).alias("role_te"))
-
-
-def q_standardize(spark, sf_dir):
-    """Fit/apply z-score discipline: moments fitted on the hash-split
-    train conversations ONLY, broadcast-applied to every row — eval
-    data never shapes the scaling."""
-    from hipipe_spark.operators.encoders import (
-        apply_standardizer, fit_standardizer)
-    from hipipe_spark.operators.sampling import group_split
-    t = group_split(
-        _transcripts(spark, sf_dir).withColumn(
-            "text_len", F.length("text").cast("int")),
-        "conv_id", seed=5)
-    stats = fit_standardizer(t.filter(F.col("split") == "train"), ["text_len"])
-    out = apply_standardizer(t, stats, ["text_len"])
-    return out.select(
-        "conv_id", "turn_idx", F.round("text_len_z", 4).alias("text_len_z"))
-
-
-def q_quantile_bin(spark, sf_dir):
-    """Fit/apply quantile binning: 4-bucket cut points fitted once
-    (exact percentile_cont interpolation so the DuckDB quantile_cont
-    oracle is bit-stable; ``exact=False`` percentile_approx is the
-    100-TB path), broadcast-applied as a scan-local array expression —
-    the fact side never shuffles."""
-    from hipipe_spark.operators.encoders import apply_buckets, fit_buckets
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    bounds = fit_buckets(t, ["text_len"], n_buckets=4, exact=True)
-    out = apply_buckets(t, bounds, ["text_len"])
-    return out.select(
-        "conv_id", "turn_idx",
-        F.col("text_len_bin").cast("long").alias("text_len_bin"))
-
-
-def q_robust_scale(spark, sf_dir):
-    """Median/IQR scaling fitted once (exact interpolated percentiles
-    for the oracle; the approx sketch is the 100-TB path) and
-    broadcast-applied — outlier-resistant where a single giant document
-    would wreck a mean/std fit. The fact side never shuffles."""
-    from hipipe_spark.operators.encoders import (
-        apply_robust_scaler, fit_robust_scaler)
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    stats = fit_robust_scaler(t, ["text_len"], exact=True)
-    out = apply_robust_scaler(t, stats, ["text_len"])
-    return out.select(
-        "conv_id", "turn_idx", F.round("text_len_r", 6).alias("text_len_r"))
-
-
-def q_winsorize(spark, sf_dir):
-    """Winsorization: clamp text length into its fitted [p05, p95]
-    quantile band (exact interpolation for the oracle; approx sketch at
-    100 TB) — the tail-taming step before mean/std fits. Broadcast
-    bounds, scan-local clamp, nulls preserved."""
-    from hipipe_spark.operators.encoders import apply_clip, fit_clip
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    stats = fit_clip(t, ["text_len"], lo_p=0.05, hi_p=0.95, exact=True)
-    out = apply_clip(t, stats, ["text_len"])
-    return out.select(
-        "conv_id", "turn_idx",
-        F.round("text_len_clip", 6).alias("text_len_clip"))
-
-
-def q_conv_split(spark, sf_dir):
-    """Leakage-safe train/val/test assignment by conversation hash —
-    no conv straddles splits, assignment frozen under corpus growth.
-    Output: per (split, role) row and distinct-conversation counts."""
-    from hipipe_spark.operators.sampling import group_split
-    t = _transcripts(spark, sf_dir)
-    s = group_split(t, "conv_id", seed=5)
-    return (s.groupBy("split", "role")
-             .agg(F.count("*").alias("n_rows"),
-                  F.countDistinct("conv_id").alias("n_convs")))
-
-
-def q_asof_multi(spark, sf_dir):
-    """Feature-store read path: one fact table enriched point-in-time
-    from TWO feature tables in one call (independent as-of merges —
-    staleness in one table never blocks the other). Oracle is two
-    chained DuckDB ASOF LEFT JOINs."""
-    from hipipe_spark.operators.asof import asof_join_multi
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    left = ev.filter(F.col("event_id") % 2 == 1).select(
-        "event_id", "user_id", "ts")
-    ra = ev.filter(F.col("event_id") % 4 == 0).select(
-        "user_id", "ts", F.round("value", 4).alias("val"))
-    rb = ev.filter(F.col("event_id") % 4 == 2).select(
-        "user_id", "ts", F.round("value", 4).alias("val"))
-    out = asof_join_multi(left, {"_a": ra, "_b": rb},
-                          on="ts", by="user_id", strategy="union")
-    return out.select("event_id", "user_id", "ts", "val_a", "val_b")
-
-
-def q_embedding_topk_int8(spark, sf_dir):
-    """int8-quantized top-k: both sides on the corpus max-|x| grid,
-    ranked by the exact INTEGER dot product of the codes — every value
-    in the result is an integer, so the oracle compare is bit-exact
-    with no float rounding. The 4x-less-bytes scale path for ANN."""
-    from hipipe_spark.operators.similarity import quantized_topk
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    return quantized_topk(em, q, k=5).select(
-        "query_id", "neighbor_id", "dot_q", "rank")
-
-
-def q_psi_drift(spark, sf_dir):
-    """Population Stability Index between two corpus slices (even vs
-    odd doc_id) over text length, 8 uniform buckets on [0, 2000):
-    per-bucket counts + smoothed PSI terms + repeated total. The
-    monitoring primitive every recurring 100-TB ingest runs first."""
-    from hipipe_spark.operators.drift import psi_table
-    d = _docs(spark, sf_dir).withColumn("text_len", F.length("text"))
-    a = d.filter(F.col("doc_id") % 2 == 0)
-    b = d.filter(F.col("doc_id") % 2 == 1)
-    out = psi_table(a, b, "text_len", lo=0.0, hi=2000.0, n_buckets=8)
-    return out.select(
-        "bucket", "n_a", "n_b",
-        F.round("psi_term", 6).alias("psi_term"),
-        F.round("psi", 6).alias("psi"),
-    )
-
-
-def q_ks_drift(spark, sf_dir):
-    """Two-sample Kolmogorov–Smirnov drift between the same slices as
-    psi_drift (even vs odd doc_id, text length): per-value eCDF gaps +
-    repeated max. Exact over the discrete length domain; the cumulative
-    window runs on the post-aggregation dimension-sized table only."""
-    from hipipe_spark.operators.drift import ks_table
-    d = _docs(spark, sf_dir).withColumn("text_len", F.length("text"))
-    a = d.filter(F.col("doc_id") % 2 == 0)
-    b = d.filter(F.col("doc_id") % 2 == 1)
-    out = ks_table(a, b, "text_len")
-    return out.select(
-        "value", "n_a", "n_b",
-        F.round("d", 6).alias("d"), F.round("ks", 6).alias("ks"))
-
-
-def q_cramers_v(spark, sf_dir):
-    """Chi-squared / Cramér's V association between role and a derived
-    length class over the transcript table — the categorical-redundancy
-    probe. Full R×C grid (zero cells carry chi² mass), margins and
-    totals broadcast from the dimension-sized contingency table."""
-    from hipipe_spark.operators.drift import cramers_v_table
-    t = _transcripts(spark, sf_dir).withColumn(
-        "len_bin", (F.length("text") % 3).cast("long"))
-    out = cramers_v_table(t, "role", "len_bin")
-    return out.select(
-        "a", "b", "n",
-        F.round("e", 4).alias("e"),
-        F.round("chi2_term", 6).alias("chi2_term"),
-        F.round("chi2", 4).alias("chi2"),
-        F.round("cramers_v", 6).alias("cramers_v"))
-
-
-def q_mutual_info(spark, sf_dir):
-    """Mutual information / NMI between role and a derived length
-    class — "how much does one categorical reveal about the other",
-    the feature-selection sibling of cramers_v. Same single-exchange
-    contingency plan; marginal entropies broadcast back."""
-    from hipipe_spark.operators.drift import mutual_info_table
-    t = _transcripts(spark, sf_dir).withColumn(
-        "len_bin", (F.length("text") % 3).cast("long"))
-    out = mutual_info_table(t, "role", "len_bin")
-    return out.select(
-        "a", "b", "n",
-        F.round("mi_term", 6).alias("mi_term"),
-        F.round("mi", 6).alias("mi"),
-        F.round("h_a", 6).alias("h_a"),
-        F.round("h_b", 6).alias("h_b"),
-        F.round("nmi", 6).alias("nmi"))
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 20 == 0
-    )
-    return ngram_jaccard_pairs(d, "doc_id", "text", n=1, threshold=0.5)\
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_dedup_clusters(spark, sf_dir):
-    """Corpus near-dup removal end-to-end: n-gram Jaccard pairs ->
-    connected components (distributed min-label propagation) -> keep
-    canonical min-id doc per cluster."""
-    from hipipe_spark.operators.dedup import dedup_clusters
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 20 == 0)
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", n=1, threshold=0.5)
-    return dedup_clusters(d, pairs, id_col="doc_id")
-
-
-def q_minhash_lsh(spark, sf_dir):
-    """Full MinHash+LSH pipeline with hash_family="det": the signature
-    hashes are the LCG/polynomial family a DuckDB oracle reproduces
-    bit-for-bit, so shingle→minhash→band→bucket-join→verify is checked
-    end-to-end by the driver (VERDICT r1 next-round #2), exact-dup
-    prepass included (star edges, jaccard 1.0)."""
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 20 == 0
-    )
-    return minhash_lsh_pairs(
-        d, "doc_id", "text", shingle="word", shingle_k=1,
-        n_hashes=32, bands=16, jaccard_threshold=0.5, hash_family="det",
-    ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash near-pairs with hash_family="det" (60-bit hash, 4×15-bit
-    pigeonhole blocks) — every bit stream reproducible in DuckDB, so the
-    whole tokenize→simhash→block-join→hamming-verify path is oracled."""
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id") % 20 == 0
-    )
-    out = simhash_near_pairs(d, "doc_id", "text", max_hamming=8,
-                             bits=60, n_blocks=4, hash_family="det")
-    return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
-
-
-def q_ad_test(spark, sf_dir):
-    """Two-sample Anderson-Darling (drift.ad_table) between view and
-    purchase value distributions — the tail-weighted sibling of ks/
-    wasserstein in the drift family; same one-exchange plan, windows
-    on the dimension-sized merged support."""
-    from hipipe_spark.operators.drift import ad_table
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = e.where("event_type = 'view'").select("value")
-    b = e.where("event_type = 'purchase'").select("value")
-    return ad_table(a, b, "value")
-
-
-def q_readability(spark, sf_dir):
-    """Flesch Reading Ease / Flesch-Kincaid grade / ARI
-    (functions/text.readability): three shared JVM regex counts, all
-    indices one narrow projection — the classic quality-filter axes
-    next to quality_score."""
-    from hipipe_spark.functions.text import readability
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 4 == 0)
-    cols = readability(F.col("text"))
-    return d.select("doc_id",
-                    *[c.alias(n) for n, c in cols.items()])
-
-
-def q_conv_winnow(spark, sf_dir):
-    """Conversation-level near-dup pairs: render transcripts to text
-    (transcripts.render_conversations — oracle-pinned by
-    render_convs), then the winnowing local-guarantee fingerprint
-    tier over the rendered string. The transcript twin of
-    winnow_dedup: shared dialogue spans >= w+k-1 chars can never be
-    missed."""
-    from hipipe_spark.operators.dedup import (
-        winnow_fingerprints, winnow_pairs,
-    )
-    from hipipe_spark.operators.transcripts import render_conversations
-    t = _transcripts(spark, sf_dir)
-    r = render_conversations(t, template="plain").select(
-        "conv_id", "rendered")
-    fps = winnow_fingerprints(r, "conv_id", "rendered", k=5, w=4,
-                              max_len=240)
-    return winnow_pairs(fps, "conv_id", threshold=0.2, max_df=60)
-
-
-def q_modularity(spark, sf_dir):
-    """Newman modularity (graph.modularity) of the brand
-    partition over the co-purchase projection: does p_brand explain
-    the co-purchase structure? Per-community contributions; the
-    graph's Q = sum(q_contrib)."""
-    from hipipe_spark.operators.graph import bipartite_project, modularity
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = bipartite_project(li, "l_partkey", "l_orderkey",
-                              min_weight=2, max_right_degree=8)
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        F.col("p_partkey").alias("node"),
-        F.col("p_brand").alias("community"))
-    return modularity(edges, part)
-
-
-def q_hbos(spark, sf_dir):
-    """Histogram-based outlier score (features.hbos_fit/hbos_scores)
-    over three lineitem measures: two fit aggregates (min/max +
-    conditional bin counts, both one-row collects), then a pure-JVM
-    literal-histogram scoring scan. Oracle recomputes the identical
-    equal-width histograms in CTEs — same IEEE double arithmetic."""
-    from hipipe_spark.operators.features import hbos_scores
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-        "l_discount")
-    out = hbos_scores(li, ["l_quantity", "l_extendedprice", "l_discount"],
-                      n_bins=12)
-    return out.select("l_orderkey", "l_linenumber", "hbos")
-
-
-def q_random_projection(spark, sf_dir):
-    """Johnson-Lindenstrauss sign projection 64->8 dims
-    (decomposition.random_projection): data-INDEPENDENT compression —
-    no fit pass; one narrow JVM fold per row. Signs are the det
-    avalanche-mix family, so the oracle bakes identical literals."""
-    from hipipe_spark.operators.decomposition import random_projection
-    em = _embs(spark, sf_dir)
-    return random_projection(em.select("vec_id", "label", "embedding"),
-                             "embedding", dims=64, k=8, seed=0,
-                             round_to=6).drop("embedding")
-
-
-def q_winnow(spark, sf_dir):
-    """Winnowing (MOSS) fingerprint near-dup pairs — the LOCAL-guarantee
-    tier of the dedup family: any shared substring of length >= w+k-1
-    yields a shared fingerprint. Every hash is the det LCG family, so
-    the full fingerprint→pair pipeline is bit-reproducible in DuckDB."""
-    from hipipe_spark.operators.dedup import winnow_fingerprints, winnow_pairs
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 == 0)
-    fps = winnow_fingerprints(d, "doc_id", "text", k=5, w=4, max_len=240)
-    return winnow_pairs(fps, "doc_id", threshold=0.25, max_df=50)
-
-
-def q_embedding_topk(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = brute_force_topk(em, q, k=5)
-    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def q_embedding_topk_dot(spark, sf_dir):
-    """Inner-product top-k (the pre-normalized-embeddings metric)."""
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = brute_force_topk(em, q, k=5, metric="dot")
-    return out.select("query_id", "neighbor_id",
-                      F.round("score", 6).alias("score"), "rank")
-
-
-def q_embedding_topk_l2(spark, sf_dir):
-    """Euclidean top-k (nearest first — ascending rank order)."""
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = brute_force_topk(em, q, k=5, metric="l2")
-    return out.select("query_id", "neighbor_id",
-                      F.round("score", 6).alias("score"), "rank")
-
-
-def q_embedding_topk_numpy(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = brute_force_topk(em, q, k=5, impl="numpy")
-    return out.select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def q_embedding_lsh_topk(spark, sf_dir):
-    """Hyperplane-LSH top-k with probe_all=True: probing every bucket is
-    provably the brute-force result (each corpus row lives in exactly
-    one bucket), so the exact top-k oracle applies — pins the LSH
-    sketch/bucket/probe/re-rank machinery in the driver gate, in the
-    style of embedding_ivf_full. The approximate multi-probe path
-    (probe_radius=1) is recall-tested in pytest."""
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    return lsh_topk(em, q, k=5, probe_all=True).select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def q_tpch_q3(spark, sf_dir):
-    """TPC-H Q3 shape: dim filter -> broadcast join -> fact join ->
-    grouped revenue -> global top-10. Customer dim broadcasts; the only
-    fact shuffle is the final group/top-k."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderdate") < "1995-03-15")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
-        F.col("l_shipdate") > "1995-03-15")
-    dec = lambda col: F.col(col).cast("decimal(18,2)")  # noqa: E731
-    j = (li.join(o, li.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey))
-    return (j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(F.sum(dec("l_extendedprice") * (1 - dec("l_discount")))
-                 .cast("double").alias("revenue"))
-            .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-            .limit(10))
-
-
-def q_rank_stats(spark, sf_dir):
-    """Ranking-window completeness: rank / dense_rank / percent_rank /
-    cume_dist / ntile in one window pass (single shuffle on the
-    partition key)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderkey") <= 2000)
-    w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
-    return o.select(
-        "o_orderkey", "o_orderstatus",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.round(F.percent_rank().over(w), 6).alias("prnk"),
-        F.round(F.cume_dist().over(w), 6).alias("cd"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
-def q_melt(spark, sf_dir):
-    """Wide->long unpivot (the pandas/tidy 'melt'): per-lineitem metric
-    rows. Narrow map-side op — no shuffle at any scale."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-        .filter(F.col("l_orderkey") <= 100)
-    return li.unpivot(
-        ["l_orderkey", "l_linenumber"],
-        ["l_quantity", "l_extendedprice", "l_discount"],
-        "metric", "value",
-    ).withColumn("value", F.round(F.col("value").cast("double"), 4))
-
-
-def q_cube_counts(spark, sf_dir):
-    """CUBE aggregation over orders: all 4 grouping combinations in one
-    pass (partial aggregation map-side, one shuffle)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (o.cube("o_orderstatus", "o_orderpriority")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total")))
-
-
-def q_corpus_pipeline(spark, sf_dir):
-    """End-to-end training-corpus pipeline over `documents`: language-ID
-    + quality score -> quality gate -> exact-dedup (keep lowest doc_id
-    per md5 fingerprint) -> token stats. One narrow scan + one
-    fingerprint-partitioned window; fully oracle-checked."""
-    from hipipe_spark.functions.text import (
-        exact_fingerprint, lang_id, quality_score, token_count, tokens,
-    )
-    d = _docs(spark, sf_dir)
-    # tokenize ONCE and share (a separate non-cheap projection that
-    # CollapseProject keeps, so the split runs once per row instead of
-    # once per feature — HOF lambdas get no subexpression elimination)
-    t = d.withColumn("__toks", tokens(F.lower(F.col("text"))))
-    tk = F.col("__toks")
-    scored = t.select(
-        "doc_id",
-        lang_id(F.col("text"), tk).alias("lang_pred"),
-        F.round(quality_score(F.col("text"), tk), 4).alias("quality"),
-        token_count(F.col("text"), tk).alias("n_tokens"),
-        exact_fingerprint(F.col("text")).alias("fp"),
-    )
-    good = scored.filter(F.col("quality") >= 0.5)
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    return (good.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).drop("rn"))
-
-
-def q_latest_per_key(spark, sf_dir):
-    """Keep-latest dedup: newest event per (user_id, event_type) —
-    the 'latest crawl snapshot per URL' pattern. Single shuffle on the
-    dedup key; at scale this is the canonical row_number()=1 idiom."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc())
-    return (ev.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "event_type", "event_id",
-                    F.round("value", 4).alias("value")))
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    out = embedding_near_pairs(em, threshold=0.3, brute_force=True)
-    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def q_embedding_ivf_topk(spark, sf_dir):
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = ivf_topk(em, q, k=5, n_cells=16, n_probe=4)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
-def q_embedding_ivf_full(spark, sf_dir):
-    """IVF with n_probe == n_cells probes every cell — exactly the
-    brute-force result, so the full DuckDB top-k oracle applies; pins
-    the IVF index/search machinery (train, assignment, probe, re-rank)
-    inside the driver gate, not just pytest."""
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = ivf_topk(em, q, k=5, n_cells=16, n_probe=16)
-    return out.select("query_id", "neighbor_id",
-                      F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def q_media_features(spark, sf_dir):
-    media = gen_fake_media(spark, n=128)
-    return extract_features(media)
-
-
-def q_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(dec("l_extendedprice") * (1 - dec("l_discount")))
-             .cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_join_agg(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    # dims broadcast; fact side shuffles once for the agg
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-             .cast("double").alias("total"),
-        )
-    )
-
-
-def q_topk_per_group(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rk")
-    )
-
-
-def q_pivot_status(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.count(F.lit(1)))
-        .select(
-            "l_returnflag",
-            F.coalesce(F.col("O"), F.lit(0)).alias("n_open"),
-            F.coalesce(F.col("F"), F.lit(0)).alias("n_filled"),
-        )
-    )
-
-
-def q_asof_tolerance(spark, sf_dir):
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="union",
-                    tolerance_sec=600)
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-def q_backfill_bounded(spark, sf_dir):
-    t = _transcripts(spark, sf_dir)
-    out = Backfill("tool", sentinel="", lookback=5, include_current=True)(t)
-    return out.select("conv_id", "turn_idx", "tool_filled")
-
-
-def q_rolling_range(spark, sf_dir):
-    # time-based range frame: events per user in the trailing 10 minutes
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(ts_seconds(F.col("ts")))
-        .rangeBetween(-600, 0)
-    )
-    return ev.select(
-        "event_id", "user_id",
-        F.count(F.lit(1)).over(w).alias("n_10min"),
-        F.round(F.sum("value").over(w), 4).alias("sum_10min"),
-    )
-
-
-def q_distinct_count(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-    )
-
-
-def q_percentiles(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile("l_extendedprice", 0.5), 4).alias("p50"),
-        F.round(F.percentile("l_extendedprice", 0.9), 4).alias("p90"),
-    )
-
-
-def q_rollup_counts(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.coalesce(F.col("l_returnflag"), F.lit("<ALL>")).alias("rf"),
-            F.coalesce(F.col("l_linestatus"), F.lit("<ALL>")).alias("ls"),
-            "n",
-        )
-    )
-
-
-def q_semi_anti(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    big = li.filter(F.col("l_quantity") > 45).select("l_orderkey")
-    semi = o.join(big, o.o_orderkey == big.l_orderkey, "left_semi").select(
-        "o_orderkey", F.lit("has_big_line").alias("tag"))
-    anti = o.join(big, o.o_orderkey == big.l_orderkey, "left_anti").select(
-        "o_orderkey", F.lit("no_big_line").alias("tag"))
-    return semi.unionByName(anti)
-
-
-def q_set_ops(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    ordering = o.select(F.col("o_custkey").alias("k")).distinct()
-    known = c.select(F.col("c_custkey").alias("k")).distinct()
-    never_ordered = known.exceptAll(ordering).select("k", F.lit("never_ordered").alias("tag"))
-    both = known.intersect(ordering).select("k", F.lit("ordered").alias("tag"))
-    return never_ordered.unionByName(both)
-
-
-def q_approx_stats(spark, sf_dir):
-    """Approximate sketches, oracle-gated (VERDICT r3 #7): the sketch
-    values themselves have no SQL twin by construction, so the plan
-    computes the exact statistics ALONGSIDE the sketches and emits
-    deterministic accuracy booleans — ``parts_ok`` (HLL distinct within
-    3x its 5% rsd of the exact count) and ``p50_ok`` (percentile_approx
-    at accuracy=1000 lands between the exact 0.49/0.51 quantiles, the
-    sketch's published rank guarantee). Both sketches are hash-based and
-    deterministic for fixed data, so the booleans are stable; the oracle
-    recomputes the exact distinct count and asserts the gates hold."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    agg = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_p50"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-        F.expr("percentile(l_extendedprice, 0.49)").alias("p49"),
-        F.expr("percentile(l_extendedprice, 0.51)").alias("p51"),
-    )
-    return agg.select(
-        "l_returnflag", "exact_parts",
-        (F.abs(F.col("approx_parts") - F.col("exact_parts"))
-         / F.col("exact_parts") < 0.15).alias("parts_ok"),
-        ((F.col("approx_p50") >= F.col("p49"))
-         & (F.col("approx_p50") <= F.col("p51"))).alias("p50_ok"))
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Exact-count stratified sample: 50 orders per o_orderstatus chosen
-    by deterministic hash rank — strata sample in parallel, one shuffle
-    on the stratum key; every kept row reproduced by the oracle."""
-    from hipipe_spark.operators.sampling import stratified_sample
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = stratified_sample(o, "o_orderstatus", "o_orderkey",
-                            n_per_stratum=50, seed=11)
-    return out.select("o_orderkey", "o_orderstatus")
-
-
-def q_mixture_sample(spark, sf_dir):
-    """Weighted corpus mixture: two document sources independently
-    Bernoulli-downsampled (0.5 / 0.2) by key-derived hash and unioned —
-    shuffle-free, filters pushed to each scan, bit-reproducible."""
-    from hipipe_spark.operators.sampling import weighted_mixture
-    # plain read: sampling is a cheap filter — no need for the
-    # expression-parallelism spread, keep the plan exchange-free
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = d.filter(F.col("doc_id") % 2 == 0)
-    b = d.filter(F.col("doc_id") % 2 == 1)
-    out = weighted_mixture([(a, 0.5), (b, 0.2)], key="doc_id", seed=11)
-    return out.select("doc_id", "source")
-
-
-def q_bernoulli_sample(spark, sf_dir):
-    """Key-level Bernoulli sample (all rows of a kept key survive —
-    conversation-level sampling semantics): zero shuffle."""
-    from hipipe_spark.operators.sampling import bernoulli_sample
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = bernoulli_sample(ev, "user_id", 0.25, seed=4)
-    return out.select("event_id", "user_id")
-
-
-def q_quality_mlp(spark, sf_dir):
-    """REAL model inference through InferenceStage (VERDICT r3 #5): the
-    vendored deterministic numpy MLP (operators/mlp.py) scores every
-    document — JVM feature extraction, broadcast weights, per-worker
-    loader, Arrow batch forward pass. Dyadic weights + ReLU + pinned
-    accumulation order make the score bit-identical to the SQL oracle
-    with the weights folded in as literals (the bm25 pattern)."""
-    from hipipe_spark.operators.mlp import score_quality_mlp
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return score_quality_mlp(d).select(
-        "doc_id", F.round("mlp_score", 6).alias("mlp_score"))
-
-
-def q_quality_lang(spark, sf_dir):
-    from hipipe_spark.functions.text import lang_id, quality_score, tokens
-    d = _docs(spark, sf_dir)
-    t = d.withColumn("__toks", tokens(F.lower(F.col("text"))))
-    return t.select(
-        "doc_id",
-        lang_id(F.col("text"), F.col("__toks")).alias("lang_pred"),
-        F.round(quality_score(F.col("text"), F.col("__toks")), 4).alias("quality"),
-    )
-
-
-def q_flagship(spark, sf_dir):
-    t = _transcripts(spark, sf_dir)
-    out = featurize(t, profiles=None)
-    return out.select(
-        "conv_id", "turn_idx", "ts", "session_seq", "secs_since_prev",
-        "role_lag_1", "text_len_lag_1", "assistant_turns_10",
-        F.round("mean_text_len_10", 4).alias("mean_text_len_10"), "tool_filled",
-    )
-
-
-def q_flagship_profiles(spark, sf_dir):
-    """Flagship WITH the as-of profile enrichment — the entry() shape,
-    under the full driver oracle: seven leakage-free windows plus a
-    point-in-time profile join (DuckDB ASOF JOIN on the oracle side).
-    Pinned to strategy="union", the 10^12-row architecture."""
-    t = _transcripts(spark, sf_dir)
-    _, right = _asof_sides(spark, sf_dir)
-    prof = right.select(
-        F.concat(F.lit("conv_"),
-                 F.lpad(F.col("user_id").cast("string"), 8, "0")).alias("conv_id"),
-        "ts", F.col("val").alias("temperature"),
-    )
-    out = featurize(t, profiles=prof, asof_strategy="union")
-    return out.select(
-        "conv_id", "turn_idx", "ts", "session_seq", "secs_since_prev",
-        "role_lag_1", "assistant_turns_10",
-        F.round("mean_text_len_10", 4).alias("mean_text_len_10"),
-        "tool_filled", F.col("temperature_asof").alias("temp_asof"),
-    )
-
-
-def q_ngram_jaccard_capped(spark, sf_dir):
-    """The hub-gram-guard configuration of ngram_jaccard (VERDICT r2
-    #3): ``max_df`` drops grams appearing in more than max_df docs from
-    CANDIDATE GENERATION (a gram shared by f docs fans out O(f²) join
-    rows — one stopword gram melts the inverted-index join at corpus
-    scale); verification still uses the full gram sets, so reported
-    jaccard values stay exact. The oracle mirrors the doc-frequency
-    exclusion bit-for-bit. max_df=20 here drops the ~18 heaviest
-    template grams (df 21-23 of 23 docs) from the inverted index while
-    every true pair still shares a below-cap gram — identical output to
-    the uncapped query, with the quadratic hub fan-out bounded."""
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-    return ngram_jaccard_pairs(d, "doc_id", "text", n=1, threshold=0.5,
-                               max_df=20)\
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_ngram_containment(spark, sf_dir):
-    """Asymmetric n-gram containment |A∩B|/|A| — the quote/snippet
-    detector: a short doc pasted into a long one has tiny jaccard but
-    containment ≈ 1. Same inverted-index candidate generation and
-    max_df hub guard as the jaccard family; full-set verify keeps the
-    reported values exact."""
-    from hipipe_spark.operators.dedup import ngram_containment_pairs
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-    return ngram_containment_pairs(d, "doc_id", "text", n=1,
-                                   threshold=0.6, max_df=20)\
-        .select("id_a", "id_b",
-                F.round("c_a_in_b", 6).alias("c_a_in_b"),
-                F.round("c_b_in_a", 6).alias("c_b_in_a"))
-
-
-def q_media_meta(spark, sf_dir):
-    """Oracle-able slice of the multimodal extractor (VERDICT r2 #5):
-    the fake decoder is deterministic arithmetic over (id, seed) —
-    content length, thumbnail clamps, and frame counts are reproduced
-    exactly in DuckDB SQL. Only the crc32 checksum (no DuckDB builtin)
-    stays in the rows-only ``media_features`` twin."""
-    media = gen_fake_media(spark, n=128)
-    return extract_features(media).select(
-        "media_id", "kind", "n_bytes", "thumb_w", "thumb_h", "n_frames")
-
-
-def q_media_decode(spark, sf_dir):
-    """REAL stdlib media decode (VERDICT r3 #3): gen_real_media emits
-    actual PNG (all five filter types), PCM-16 WAV, and APNG video
-    bytes whose generation parameters are pure arithmetic in the id;
-    decode_features (sources/multimodal.py) recovers width/height/
-    channels/mean from the PNG pipeline (zlib inflate + filter
-    reconstruction), rate/duration/RMS from the WAV pipeline, and
-    frame count/duration/sampled-frame mean from the APNG pipeline.
-    The oracle recomputes what a correct decode MUST recover — a
-    value-check of the codecs themselves."""
-    from hipipe_spark.sources.multimodal import decode_features, gen_real_media
-
-    out = decode_features(gen_real_media(spark, n=128))
-    return out.select(
-        "media_id", "kind", "width", "height", "channels", "sample_rate",
-        "duration_ms", "n_frames", F.round("mean_val", 4).alias("mean_val"),
-        "thumb_w", "thumb_h")
-
-
-def q_csv_roundtrip(spark, sf_dir):
-    """CSV dialect round-trip driver row (VERDICT r3 #10): derive a
-    deliberately hostile string column from orders (leading space,
-    embedded separator, quote, escape char, AND newline), write it with
-    the reference-dialect writer (sources/csv.py write_csv, quoting per
-    csv.cpp:200-229), read it back with the state-machine reader, and
-    cast with typed(). The oracle recomputes the source rows directly —
-    equality proves the writer/reader pair is lossless on every quoting
-    path, not just the pytest fixtures."""
-    import os
-    import tempfile
-
-    from hipipe_spark.sources.csv import read_csv, typed, write_csv
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderkey") % 100 == 0)
-    tricky = F.concat(
-        F.lit(" pad,"), F.col("o_orderstatus"), F.lit(',x"y\\z\nend'),
-        (F.col("o_orderkey") % 7).cast("string"))
-    src = o.select(
-        F.col("o_orderkey").alias("okey"),
-        F.round("o_totalprice", 4).alias("total"),
-        tricky.alias("tricky"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"hipipe_csv_roundtrip_{os.getpid()}")
-    write_csv(src, path)
-    back = read_csv(spark, path)
-    return typed(back, {"okey": "long", "total": "double",
-                        "tricky": "string"})
-
-
-def q_asof_interp(spark, sf_dir):
-    """Time-weighted linear interpolation between the bracketing right
-    rows (offline gap-fill; asof.py asof_interpolate) — oracled by two
-    DuckDB ASOF joins plus the identical interpolation arithmetic."""
-    left, right = _asof_sides(spark, sf_dir)
-    out = asof_interpolate(left, right, on="ts", by="user_id")
-    return out.select("event_id", "user_id", "ts",
-                      F.round("val_interp", 6).alias("val_interp"))
-
-
-def q_prior_session(spark, sf_dir):
-    """Previous-session features (length, mean text_len, seconds since
-    it ended) via the RANGE [-1,-1] window over session_seq — zero
-    shuffle beyond sessionize (temporal.py PriorSessionStats)."""
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("int"))
-    out = PriorSessionStats(value_cols="text_len")(
-        Sessionize(gap="30 minutes")(t))
-    return out.select(
-        "conv_id", "turn_idx", "prev_session_n_turns",
-        F.round("prev_session_mean_text_len", 6).alias("prev_session_mean_text_len"),
-        "secs_since_prev_session_end")
-
-
-def q_transitions(spark, sf_dir):
-    """Corpus role-transition Markov matrix (temporal.py
-    transition_matrix): one conv-window pass + tiny (from,to) agg."""
-    t = _transcripts(spark, sf_dir)
-    return transition_matrix(t, col="role")
-
-
-def q_salted_join(spark, sf_dir):
-    """Hot-key-safe salted join (joins.py): results must be
-    row-identical to the plain join the oracle runs."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_quantity")
-    dim = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderkey") % 2 == 0).select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
-    return salted_join(li, dim, on="l_orderkey", how="left", salts=8)
-
-
-def q_time_grid(spark, sf_dir):
-    """Regular 6-hour grid per user carrying the as-of event value
-    (temporal.py time_grid_resample) — oracled by DuckDB
-    generate_series + ASOF join."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", F.round("value", 4).alias("val"))
-    return time_grid_resample(ev, step="6 hours", cols=["val"],
-                              key="user_id", ts_col="ts")
-
-
-def q_bpe_merges(spark, sf_dir):
-    """First 8 BPE merges learned distributed over documents.text
-    (bpe.py). Iterative driver-loop algorithm — no single SQL oracle
-    exists (rows-only driver check, disclosed); exactness is pinned to
-    the pure-Python reference in tests/test_bpe.py."""
-    return bpe_merge_table(_docs(spark, sf_dir), text_col="text", k=8)
-
-
-def q_interval_join(spark, sf_dir):
-    """Point-in-interval range join (joins.py interval_join): every
-    event inside [user's first purchase, +2h), bucketed onto a 1-hour
-    slice grid so the range predicate becomes an equi-join + exact
-    filter instead of a nested loop. Oracle = plain SQL BETWEEN join."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    iv = (ev.filter(F.col("event_type") == "purchase")
-          .groupBy("user_id").agg(F.min("ts").alias("win_start"))
-          .withColumn("win_end",
-                      F.col("win_start") + F.expr("INTERVAL 2 HOURS")))
-    out = interval_join(
-        ev.select("event_id", "user_id", "ts"), iv,
-        time_col="ts", start_col="win_start", end_col="win_end",
-        on="user_id", slice_seconds=3600)
-    return out.select(
-        "event_id", "user_id",
-        F.round(ts_seconds(F.col("win_start")), 6).alias("win_start_s"))
-
-
-def q_event_entropy(spark, sf_dir):
-    """Per-conversation Shannon entropy of the role mix
-    (features.py categorical_entropy) — a distribution feature a
-    transcript curriculum filters on; two map-side-combinable aggs."""
-    t = _transcripts(spark, sf_dir)
-    return categorical_entropy(t, key="conv_id", cat="role",
-                               out_prefix="role")
-
-
-def q_labels_next(spark, sf_dir):
-    """Supervised-target generation (features.py make_labels):
-    next-turn gap / end-of-session flags that DELIBERATELY read the
-    future row — kept disjoint from featurize() output by the leakage
-    suite. Oracle = LEAD window."""
-    t = _transcripts(spark, sf_dir)
-    out = make_labels(t, key="conv_id", ts_col="ts",
-                      order_cols=("turn_idx",), gap=1800.0)
-    return out.select("conv_id", "turn_idx", "label_next_gap",
-                      "label_is_last", "label_session_end")
-
-
-def q_chunk_overlap(spark, sf_dir):
-    """Sliding-window chunking of long documents (packing.py
-    chunk_overlap): window 50 tokens, stride 30 (20-token overlap);
-    stops at the first chunk reaching the document end. Pure per-row
-    explode arithmetic — no shuffle."""
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", tokens(F.lower(F.col("text"))).alias("toks"))
-    out = chunk_overlap(toks, "toks", window=50, stride=30,
-                        id_cols=("doc_id",), out_col="chunk")
-    return out.select(
-        "doc_id", "chunk_idx", "chunk_start", "chunk_len",
-        F.concat_ws(" ", F.col("chunk")).alias("chunk_text"))
-
-
-def q_ann_recall(spark, sf_dir):
-    """ANN evaluation harness (similarity.py recall_at_k): per-query
-    recall@5 of the int8-quantized top-k against the exact cosine
-    top-k — the trust-but-verify number computed on top-k RESULTS
-    (|Q|·k rows), never the corpus. Missing queries score 0, not
-    NULL."""
-    from hipipe_spark.operators.similarity import (
-        quantized_topk, recall_at_k)
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(em, q, k=5)
-    approx = quantized_topk(em, q, k=5)
-    return recall_at_k(approx, exact, k=5)
-
-
-def q_freq_encode(spark, sf_dir):
-    """Categorical encoders (encoders.py fit_frequency_encoder /
-    apply_frequency_encoder / collapse_rare): frequency-encode and
-    rare-collapse the documents ``lang`` column with the vocabulary
-    FITTED on the even-doc_id half only — the train/eval discipline the
-    encoders exist for. Unseen/below-threshold categories encode 0.0 /
-    ``__other__``."""
-    from hipipe_spark.operators.encoders import (
-        apply_frequency_encoder, collapse_rare, fit_frequency_encoder)
-    docs = _docs(spark, sf_dir)
-    fit = docs.filter(F.col("doc_id") % 2 == 0)
-    freqs = fit_frequency_encoder(fit, "lang")
-    out = apply_frequency_encoder(docs, freqs, "lang")
-    out = collapse_rare(out, "lang", min_count=50, fit_df=fit)
-    return out.select(
-        "doc_id", "lang",
-        F.round("lang_freq", 6).alias("lang_freq"),
-        "lang_c")
-
-
-def q_onehot_encode(spark, sf_dir):
-    """Fitted one-hot (encoders.py fit_onehot / apply_onehot): vocab
-    positions by (count DESC, value ASC) from the even-doc_id fit half,
-    broadcast-applied to all docs as sparse index + dense indicator
-    vector. Unseen/rare/null -> -1 / all-zeros."""
-    from hipipe_spark.operators.encoders import apply_onehot, fit_onehot
-    docs = _docs(spark, sf_dir)
-    fit = docs.filter(F.col("doc_id") % 2 == 0)
-    vocab = fit_onehot(fit, "lang", min_count=50)
-    # to_json: raw array output columns break the driver canonicalizer
-    # (functions/rounding.py); integer JSON renders identically.
-    return apply_onehot(docs, vocab, "lang", dense=True).select(
-        "doc_id", "lang", "lang_idx",
-        F.to_json("lang_vec").alias("lang_vec"))
-
-
-def q_lift_report(spark, sf_dir):
-    """Decile/lift table (features.py lift_table): document length as
-    the score vs is-English as the label, 10 quantile bins, per-bin +
-    top-down cumulative rates and lifts. Exact percentile edges here
-    for the bit-stable oracle; percentile_approx is the 100-TB fit
-    path."""
-    from hipipe_spark.operators.features import lift_table
-    t = _docs(spark, sf_dir).select(
-        F.length("text").cast("double").alias("text_len"),
-        (F.col("lang") == "en").cast("int").alias("y"))
-    return lift_table(t, "text_len", "y", n_bins=10, exact=True)
-
-
-def q_conv_tempo(spark, sf_dir):
-    """Per-conversation pacing features (features.py conv_tempo):
-    turn count, span, inter-turn gap stats and burstiness. One
-    conversation-bounded window sort + one map-side-combinable agg."""
-    from hipipe_spark.operators.features import conv_tempo
-    return conv_tempo(_transcripts(spark, sf_dir))
-
-
-def q_woe_iv(spark, sf_dir):
-    """Weight-of-evidence fit table (encoders.py fit_woe): per-source
-    class counts, smoothed WoE against the is-English label, and each
-    category's information-value contribution. One agg + window totals
-    on the dimension-sized category frame."""
-    from hipipe_spark.operators.encoders import fit_woe
-    # fit on doc_id % 3 > 0: the 2/3 "train" half. (% 2 would alias the
-    # synthetic source column, which cycles with doc_id, to evens only.)
-    fit = _docs(spark, sf_dir).filter(F.col("doc_id") % 3 > 0).withColumn(
-        "y", (F.col("lang") == "en").cast("int"))
-    return fit_woe(fit, "source", "y")
-
-
-def q_woe_encode(spark, sf_dir):
-    """WoE apply (encoders.py apply_woe): broadcast the fitted
-    per-source WoE onto every document; unseen/null encode 0.0 (the
-    log-odds neutral point). The encoded frame never shuffles."""
-    from hipipe_spark.operators.encoders import apply_woe, fit_woe
-    docs = _docs(spark, sf_dir)
-    fit = docs.filter(F.col("doc_id") % 3 > 0).withColumn(
-        "y", (F.col("lang") == "en").cast("int"))
-    woe = fit_woe(fit, "source", "y")
-    return apply_woe(docs, woe, "source").select(
-        "doc_id", "source", "source_woe")
-
-
-def q_time_split(spark, sf_dir):
-    """Purged temporal split audit (sampling.py time_split): train
-    strictly before cutoff-embargo, test at/after cutoff, the 1-day
-    boundary band purged — rows a lookback feature could leak across.
-    Scan-local labeling; this query audits the volumes per split."""
-    from hipipe_spark.operators.sampling import time_split
-    t = _transcripts(spark, sf_dir)
-    s = time_split(t, "2024-01-20 00:00:00", embargo_s=86400.0)
-    return (s.groupBy("split")
-             .agg(F.count(F.lit(1)).alias("n_rows"),
-                  F.countDistinct("conv_id").alias("n_convs")))
-
-
-def q_freshness(spark, sf_dir):
-    """Feature-freshness audit (diagnostics.py freshness_report): match
-    rate + staleness percentiles of the standard events as-of
-    enrichment, one output row. Exact percentiles for the oracle;
-    percentile_approx is the 100-TB path."""
-    from hipipe_spark.operators.diagnostics import freshness_report
-    left, right = _asof_sides(spark, sf_dir)
-    return freshness_report(left, right, on="ts", by="user_id",
-                            strategy="union", exact=True)
-
-
-def q_bigram_ppl(spark, sf_dir):
-    """Bigram-LM self-perplexity (retrieval.py bigram_perplexity):
-    add-k bigram model fitted on the corpus itself, each doc scored by
-    mean transition log-prob over BOS..EOS — the sequence-aware step up
-    from the unigram KenLM stand-in. Counts ≪ corpus; two equi-joins."""
-    from hipipe_spark.operators.retrieval import bigram_perplexity
-    out = bigram_perplexity(_docs(spark, sf_dir), k=0.5)
-    return out.select("id", "n_events",
-                      F.round("logprob", 5).alias("logprob"),
-                      F.round("ppl", 4).alias("ppl"))
-
-
-def q_hot_keys(spark, sf_dir):
-    """Skew diagnostics (diagnostics.py hot_keys): the 10 heaviest
-    conversations with corpus share + cumulative share — the report
-    that tells you WHICH keys need salting before a join melts. One
-    hash agg; ranking on the key-sized frame."""
-    from hipipe_spark.operators.diagnostics import hot_keys
-    return hot_keys(_transcripts(spark, sf_dir), "conv_id", top_n=10)
-
-
-def q_group_stats(spark, sf_dir):
-    """Group-size distribution (diagnostics.py group_size_stats): one
-    row of exact percentiles + max/mean skew factor over conversation
-    sizes — the number a salted join's salt count comes from."""
-    from hipipe_spark.operators.diagnostics import group_size_stats
-    return group_size_stats(_transcripts(spark, sf_dir), "conv_id")
-
-
-def q_token_truncate(spark, sf_dir):
-    """Token-budget suffix truncation (transcripts.py
-    truncate_token_budget): keep the longest recent-turns suffix whose
-    whitespace-token total fits the budget — the actual SFT context
-    constraint. One window exchange; reverse running sum in one sort."""
-    from hipipe_spark.operators.transcripts import truncate_token_budget
-    t = _transcripts(spark, sf_dir)
-    return truncate_token_budget(t, budget=40).select(
-        "conv_id", "turn_idx", "turn_tokens", "suffix_tokens")
-
-
-def q_sft_pipeline(spark, sf_dir):
-    """Transcript-side training-set composite (transcripts.py
-    build_sft_examples): render -> min-turns + has-assistant filters ->
-    exact-dedup of the rendered text, one lazy plan with two exchanges
-    (conv-key agg + fingerprint window)."""
-    from hipipe_spark.operators.transcripts import build_sft_examples
-    t = _transcripts(spark, sf_dir)
-    return build_sft_examples(t, min_turns=2, require_assistant=True)
-
-
-def q_source_report(spark, sf_dir):
-    """Corpus-composition governance table (corpus.py source_report):
-    per source×lang doc/char/token counts + corpus shares. One
-    map-side-combinable agg; the share divisions run on the group-sized
-    frame (dimension-sized, constant cost at any corpus size)."""
-    from hipipe_spark.operators.corpus import source_report
-    return source_report(_docs(spark, sf_dir))
-
-
-def q_source_cap(spark, sf_dir):
-    """Dominance capping (corpus.py cap_per_group): keep the 30
-    longest docs per source (C4-style per-domain cap), ties -> min
-    doc_id; one window exchange on the source key."""
-    from hipipe_spark.operators.corpus import cap_per_group
-    d = _docs(spark, sf_dir)
-    return cap_per_group(d, "source", cap=30, order_by="n_chars")\
-        .select("doc_id", "source", "n_chars")
-
-
-def q_dedup_keep_best(spark, sf_dir):
-    """Near-dup removal keeping the BEST cluster member instead of the
-    min id (dedup.py dedup_clusters keep_by): canonical = longest text
-    (ties → min id) — the production knob (keep the highest-quality
-    copy). Same clustering as dedup_clusters + one component-keyed
-    window."""
-    from hipipe_spark.operators.dedup import dedup_clusters
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)\
-        .withColumn("qlen", F.length("text"))
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", n=1, threshold=0.5)
-    return dedup_clusters(d, pairs, id_col="doc_id", keep_by="qlen")
-
-
-def q_render_convs(spark, sf_dir):
-    """Conversation → SFT training example (transcripts.py
-    render_conversations): one row per conversation with the
-    role-templated rendered text plus assistant turn/char share (the
-    assistant-only-loss signal stats). One map-side-combinable
-    collect + per-group array sort."""
-    from hipipe_spark.operators.transcripts import render_conversations
-    t = _transcripts(spark, sf_dir)
-    return render_conversations(t, template="plain")
-
-
-def q_truncate_convs(spark, sf_dir):
-    """Head+tail context truncation (transcripts.py truncate_context):
-    keep the first 1 + last 3 turns per conversation (system prompt +
-    recent exchange), drop the middle; short conversations pass
-    through whole. One exchange shared by the ordered row_number and
-    the group count."""
-    from hipipe_spark.operators.transcripts import truncate_context
-    t = _transcripts(spark, sf_dir)
-    out = truncate_context(t, head=1, tail=3)
-    return out.select("conv_id", "turn_idx", "role",
-                      "kept_rank", "conv_turns")
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Hard-negative mining (similarity.py hard_negative_mine): per
-    anchor vector, the 5 most cosine-similar corpus vectors with a
-    DIFFERENT label, restricted to the semi-hard band cosine >= 0.1 —
-    the contrastive-training negative sampler. Broadcast query side,
-    label + band predicates inside the scan, one final top-k window."""
-    from hipipe_spark.operators.similarity import hard_negative_mine
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    out = hard_negative_mine(em, q, k=5, min_sim=0.1)
-    return out.select("query_id", "neighbor_id",
-                      F.round("cosine", 6).alias("cosine"), "rank")
-
-
-def q_ngram_jaccard_prefix(spark, sf_dir):
-    """PREFIX-FILTERED exact Jaccard join (dedup.py
-    ngram_jaccard_prefix_pairs): the inverted index holds only each
-    doc's rarest ``|x| − ⌈t·|x|⌉ + 1`` grams (global order = ascending
-    doc frequency), plus a size-ratio length filter — complete by the
-    prefix-filtering principle, so the output is IDENTICAL to
-    ngram_jaccard while hub grams never reach the candidate join.
-    Oracle = the same plain inverted-index SQL, proving equivalence."""
-    from hipipe_spark.operators.dedup import ngram_jaccard_prefix_pairs
-    d = _docs(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
-    return ngram_jaccard_prefix_pairs(d, "doc_id", "text", n=1,
-                                      threshold=0.5)\
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_embedding_cov(spark, sf_dir):
-    """Exact sample covariance of the first 8 embedding coordinates
-    (decomposition.py covariance_matrix) — the SQL-expressible anchor
-    for fit_pca's moment pass (the eigh step itself is pytest-pinned
-    against numpy)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return covariance_matrix(e, "embedding", dims=8)
-
-
-def q_embedding_pca(spark, sf_dir):
-    """Distributed PCA fit (one moment pass) + JVM-side projection onto
-    the top-4 components (decomposition.py). eigh is not SQL-expressible
-    — rows-only driver check (disclosed); exactness vs numpy PCA is
-    pytest-pinned (allclose) and the covariance input is fully oracled
-    by embedding_cov."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    model = fit_pca(e, "embedding", k=4)
-    return apply_pca(e, "embedding", model, round_to=4).select(
-        "vec_id", "pc0", "pc1", "pc2", "pc3")
-
-
-def q_group_znorm(spark, sf_dir):
-    """Within-group z-normalization (encoders.py group_znorm): each
-    turn's text length scaled by ITS conversation's mean/stddev — the
-    leakage-safe local normalization (moments never cross groups, so
-    train/test splits can't leak). One conversation-bounded unbounded
-    window; degenerate groups emit 0.0."""
-    from hipipe_spark.operators.encoders import group_znorm
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("double"))
-    return group_znorm(t, "text_len", by="conv_id").select(
-        "conv_id", "turn_idx", "text_len", "text_len_z")
-
-
-def q_turn_similarity(spark, sf_dir):
-    """Consecutive-turn edit-distance features (features.py
-    turn_similarity): Levenshtein + normalized similarity vs the
-    previous turn and the previous SAME-ROLE turn — the assistant-loop
-    / tool-echo detector. Texts capped at 64 chars before the O(len²)
-    distance; both windows conversation-bounded."""
-    from hipipe_spark.operators.features import turn_similarity
-    t = _transcripts(spark, sf_dir)
-    return turn_similarity(t, cap=64).select(
-        "conv_id", "turn_idx", "lev_prev", "sim_prev",
-        "lev_prev_role", "sim_prev_role")
-
-
-def q_feature_corr(spark, sf_dir):
-    """Pairwise Pearson feature correlation (features.py feature_corr):
-    all d·(d−1)/2 F.corr aggregates in ONE map-side-combinable scan,
-    melted to one row per pair on the single-row aggregate — the
-    pre-training feature-QA pass that finds near-duplicate columns."""
-    from hipipe_spark.operators.features import feature_corr
-    d = _docs(spark, sf_dir).select(
-        F.length("text").cast("double").alias("len_chars"),
-        F.length(F.regexp_replace("text", "[^A-Z]", ""))
-         .cast("double").alias("n_upper"),
-        F.length(F.regexp_replace("text", "[^0-9]", ""))
-         .cast("double").alias("n_digits"))
-    return feature_corr(d, ["len_chars", "n_upper", "n_digits"])
-
-
-def q_impute(spark, sf_dir):
-    """Missing-value imputation (encoders.py fit_impute/apply_impute):
-    median fill FITTED on the doc_id%3>0 train split, broadcast-applied
-    with a missingness indicator. Exact percentile for the oracle;
-    percentile_approx is the 100-TB fit path."""
-    from hipipe_spark.operators.encoders import apply_impute, fit_impute
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 7 != 0,
-               F.col("n_chars").cast("double")).alias("x"))
-    fit = d.filter(F.col("doc_id") % 3 > 0)
-    fills = fit_impute(fit, ["x"], strategy="median", exact=True)
-    return apply_impute(d, fills, ["x"]).select(
-        "doc_id", "x", "x__was_null", F.round("x_f", 6).alias("x_f"))
-
-
-def q_walk_forward(spark, sf_dir):
-    """Walk-forward CV audit (sampling.py walk_forward_splits): 4
-    expanding-window folds over the transcript time span with a 1-day
-    embargo — per-fold train/purged/test volumes plus boundary epochs.
-    Two corpus scans (span + slice histogram); fold math runs on the
-    10-row histogram."""
-    from hipipe_spark.operators.sampling import walk_forward_splits
-    t = _transcripts(spark, sf_dir)
-    return walk_forward_splits(t, n_folds=4, embargo_s=86400.0)
-
-
-def q_distinctive_terms(spark, sf_dir):
-    """Per-document keyword extraction (retrieval.py
-    distinctive_terms): top-3 TF-IDF terms per doc over the real
-    inverted index (explode → tf → df → join → per-doc top-k window);
-    min_df=2 prunes hapax terms before the join."""
-    from hipipe_spark.operators.retrieval import distinctive_terms
-    return distinctive_terms(_docs(spark, sf_dir), top_k=3, min_df=2)
-
-
-def q_future_label(spark, sf_dir):
-    """Horizon labels (features.py future_window_label): count and
-    text-length sum of STRICTLY-later same-conversation turns within
-    10 minutes — range-frame [0,h] minus the [0,0] tie group, one
-    shared conversation window, no self-join."""
-    from hipipe_spark.operators.features import future_window_label
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("double"))
-    out = future_window_label(t, horizon_s=600.0, value="text_len")
-    return out.select("conv_id", "turn_idx",
-                      "label_future_count", "label_future_sum")
-
-
-def q_role_streak(spark, sf_dir):
-    """Run-length features (features.py role_streak): consecutive
-    same-role streak position + 0-based island index per conversation
-    — the gaps-and-islands double-row_number identity, three windows
-    sharing one conversation exchange."""
-    from hipipe_spark.operators.features import role_streak
-    t = _transcripts(spark, sf_dir)
-    return role_streak(t).select(
-        "conv_id", "turn_idx", "role", "role_streak", "role_island")
-
-
-def q_funnel(spark, sf_dir):
-    """Ordered funnel (analytics.py funnel): view → click → purchase
-    within 7 days of the first view, greedy-earliest completion times
-    via chained filtered min-aggregates — one lazy plan, per-step user
-    counts + conversion rate."""
-    from hipipe_spark.operators.analytics import funnel
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return funnel(ev, ["view", "click", "purchase"], within_s=604800.0)
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Cohort-retention triangle (analytics.py cohort_retention):
-    1-day epoch periods, per (cohort, age) distinct active users and
-    retention vs the cohort's age-0 size. Entity-keyed aggregates
-    only; the triangle itself is dimension-sized."""
-    from hipipe_spark.operators.analytics import cohort_retention
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cohort_retention(ev, period_s=86400.0)
-
-
-def q_target_encode(spark, sf_dir):
-    """Out-of-fold target encoding (encoders.py target_encode_oof):
-    source -> P(lang='en') with leave-one-fold-out statistics — 4
-    det-hash folds keyed on doc_id, smoothing m=20 toward the
-    fold-excluded prior. A row's own label never reaches its own
-    feature; one corpus hash agg, all OOF math on the (category x
-    fold) cell frame."""
-    from hipipe_spark.operators.encoders import target_encode_oof
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "source",
-        (F.col("lang") == "en").cast("int").alias("y"))
-    out = target_encode_oof(d, "source", "y", key="doc_id",
-                            n_folds=4, smoothing=20.0, seed=3,
-                            round_to=6)
-    return out.select("doc_id", "source", "source__fold", "source__te")
-
-
-def q_feature_hash(spark, sf_dir):
-    """Hashing-trick encoder (encoders.py hash_features): lang, source
-    and the lang x source cross into a 64-bucket signed sparse vector
-    — det-hash buckets/signs, bit-reproducible by the oracle; pure
-    narrow map, no fit pass, no vocab."""
-    from hipipe_spark.operators.encoders import hash_features
-    d = _docs(spark, sf_dir)
-    # to_json: raw array output columns break the driver canonicalizer
-    # (functions/rounding.py). fh_val is integral by construction (sums
-    # of +-1.0 signs) -> BIGINT elements render identically in both
-    # engines' JSON where raw doubles would not.
-    return hash_features(
-        d, ["lang", "source", ("lang", "source")],
-        n_buckets=64, seed=7).select(
-        "doc_id", F.to_json("fh_idx").alias("fh_idx"),
-        F.to_json(F.transform("fh_val", lambda x: x.cast("bigint")))
-        .alias("fh_val"))
-
-
-def q_rolling_quantile(spark, sf_dir):
-    """Exact rolling median (temporal.py rolling_quantile): text length
-    over the last 5 turns per conversation — sorted collect_list ROWS
-    frame + percentile_cont interpolation, O(n log n) per row at
-    constant n, one conversation exchange."""
-    from hipipe_spark.operators.temporal import rolling_quantile
-    t = _transcripts(spark, sf_dir)
-    out = rolling_quantile(t, F.length("text"), q=0.5, n=5, round_to=6)
-    return out.select("conv_id", "turn_idx", "roll_q")
-
-
-def q_expectations(spark, sf_dir):
-    """Declarative data-quality gate (validate.py check_rules): four
-    named boolean expectations over documents folded into ONE aggregate
-    scan (conditional counts, map-side combined), melted to a per-rule
-    (n_rows, n_fail, fail_rate) report."""
-    from hipipe_spark.operators.validate import check_rules
-    d = _docs(spark, sf_dir)
-    return check_rules(d, [
-        ("n_chars_positive", F.col("n_chars") > 0),
-        ("len_matches_n_chars", F.length("text") == F.col("n_chars")),
-        ("lang_present", F.col("lang").isNotNull()),
-        ("text_min_len", F.length("text") >= 10),
-    ])
-
-
-def q_fk_audit(spark, sf_dir):
-    """Referential-integrity audit (validate.py fk_audit): orders ->
-    customer with a third of the parent keys withheld, so the orphan
-    path is actually exercised. One parent distinct + one left join +
-    one aggregate; the fact side never shuffles when the key side
-    broadcasts."""
-    from hipipe_spark.operators.validate import fk_audit
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-            .filter(F.col("c_custkey") % 3 != 0))
-    return fk_audit(orders, cust, "o_custkey", "c_custkey")
-
-
-def q_column_profile(spark, sf_dir):
-    """Single-pass column profiler (validate.py profile_columns): null
-    rate / exact distinct / min / max / mean for three document columns
-    in one aggregate scan (exact distinct for the oracle;
-    approximate=True is the 100-TB HLL path)."""
-    from hipipe_spark.operators.validate import profile_columns
-    return profile_columns(_docs(spark, sf_dir),
-                           ["lang", "source", "n_chars"])
-
-
-def q_pq_adc_topk(spark, sf_dir):
-    """Product-quantization ADC top-k (similarity.py pq_topk,
-    impl='jvm'): 64-dim embeddings compressed to 4 sub-codes (16
-    codes/subspace) against formula codebooks — encode (per-subspace
-    argmin) and query LUTs as pure unrolled JVM expressions, scoring
-    = 4 array lookups per pair instead of 64 multiplies. Every double
-    is bit-reproducible by the oracle (same left-fold order); trained
-    codebooks (pq_train: sampled k-means++ + distributed Lloyd) are
-    the production path, pytest-anchored."""
-    from hipipe_spark.operators.similarity import (
-        pq_formula_codebooks, pq_topk)
-    em = _embs(spark, sf_dir)
-    q = em.filter(F.col("vec_id") < 5)
-    books = pq_formula_codebooks(m=4, n_codes=16, dsub=16)
-    out = pq_topk(em, q, k=5, m=4, codebooks=books, impl="jvm")
-    return out.select("query_id", "neighbor_id",
-                      F.round("score", 6).alias("score"), "rank")
-
-
-def q_sliding_distinct(spark, sf_dir):
-    """Rolling active-entity counts (analytics.py sliding_distinct):
-    distinct users per 3-day window sliding daily — exact mode (each
-    event explodes into its 3 containing windows, one distinct +
-    count); approximate=True swaps in per-bucket HLL sketches unioned
-    per window (no row fan-out), the 100-TB path, pytest-anchored
-    against exact."""
-    from hipipe_spark.operators.analytics import sliding_distinct
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sliding_distinct(ev, window_s=3 * 86400.0, slide_s=86400.0)
-
-
-def q_tool_profile(spark, sf_dir):
-    """Per-conversation tool-usage profile: turn count, distinct
-    tools, Shannon entropy of the tool mix (features.py
-    categorical_entropy — two hash aggs, no window over the corpus),
-    plus the dominant tool (count desc, name asc). The
-    conversation-level fingerprint an agent-behavior dashboard reads."""
-    from hipipe_spark.operators.features import categorical_entropy
-    t = _transcripts(spark, sf_dir)
-    ent = categorical_entropy(t, "conv_id", "tool", out_prefix="tool")
-    counts = t.groupBy("conv_id", "tool").agg(
-        F.count(F.lit(1)).alias("__c"))
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("__c").desc(), F.col("tool"))
-    top = (counts.withColumn("__rn", F.row_number().over(w))
-           .filter(F.col("__rn") == 1)
-           .select("conv_id", F.col("tool").alias("top_tool")))
-    return ent.join(top, "conv_id").select(
-        "conv_id", "tool_n", "tool_n_cats", "tool_entropy",
-        "tool_norm_entropy", "top_tool")
-
-
-def q_gap_autocorr(spark, sf_dir):
-    """Lag-1 autocorrelation of inter-turn gaps per conversation
-    (features.py lag_autocorr): the rhythm detector — machine-paced
-    retry loops autocorrelate, human turns don't. One conversation
-    window (gap + lag) + one co-moment hash aggregate; NaN (zero
-    variance) normalized to null so the oracle's NULL matches."""
-    from hipipe_spark.operators.features import lag_autocorr
-    from hipipe_spark.operators.temporal import ts_seconds
-    t = _transcripts(spark, sf_dir)
-    es = ts_seconds(F.col("ts"))
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    t = t.withColumn("gap", es - F.lag(es).over(w))
-    out = lag_autocorr(t, "gap", lag=1)
-    return out.select(
-        "conv_id", "n_pairs",
-        F.when(~F.isnan(F.coalesce(F.col("autocorr"), F.lit(0.0))),
-               F.col("autocorr")).alias("autocorr"))
-
-
-def q_turn_flags(spark, sf_dir):
-    """Dialogue-act/structure flags per turn (text.py dialogue_flags):
-    question / code-fence / URL / line-count / clean-ending signals as
-    pure contains/suffix JVM expressions — zero shuffle, pushed onto
-    the scan."""
-    from hipipe_spark.functions.text import dialogue_flags
-    t = _transcripts(spark, sf_dir)
-    flags = dialogue_flags(F.col("text"))
-    return t.select("conv_id", "turn_idx",
-                    *[c.alias(n) for n, c in flags.items()])
-
-
-def q_relevance_context(spark, sf_dir):
-    """Relevance-ranked context selection (transcripts.py
-    relevance_context): greedy by score (token count here) under a
-    40-token budget, ties to the later turn — the RAG sibling of the
-    recency suffix truncator; one window sort per conversation."""
-    from hipipe_spark.operators.transcripts import relevance_context
-    t = _transcripts(spark, sf_dir).withColumn(
-        "score", F.length("text").cast("double"))
-    out = relevance_context(t, "score", budget=40)
-    return out.select("conv_id", "turn_idx", "turn_tokens",
-                      "sel_tokens", "kept")
-
-
-def q_transcript_integrity(spark, sf_dir):
-    """Per-conversation ordering audit (transcripts.py
-    transcript_integrity): duplicate/gapped turn indexes, timestamp
-    inversions, role repeats, first-index check — the gate for the
-    engine's stable-turn-ordering invariant. One conversation window +
-    one hash aggregate."""
-    from hipipe_spark.operators.transcripts import transcript_integrity
-    t = _transcripts(spark, sf_dir)
-    return transcript_integrity(t)
-
-
-def q_incremental_refresh(spark, sf_dir):
-    """Snapshot-incremental feature refresh (checkpoint.py
-    incremental_refresh): base snapshot computed on ~3/4 of the
-    conversations, then a delta refresh for the held-out quarter —
-    the ORACLE IS THE FULL RECOMPUTE, so the driver verifies the
-    carry-forward + recompute union is exactly equivalent to
-    recomputing everything. Writes snapshots to a temp dir (the local
-    stand-in for Iceberg snapshots, checkpoint.py:8-14)."""
-    import tempfile
-
-    from hipipe_spark.checkpoint import SnapshotStore, incremental_refresh
-
-    store = SnapshotStore(tempfile.mkdtemp(prefix="hipipe_incr_"))
-    t = _transcripts(spark, sf_dir)
-
-    def compute(df):
-        return df.groupBy("conv_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_turns"),
-            F.sum(F.length("text")).cast("bigint").alias("chars"),
-            F.min("turn_idx").cast("bigint").alias("first_idx"))
-
-    delta_convs = (t.select("conv_id").distinct()
-                   .filter(F.crc32(F.col("conv_id")) % 4 == 0))
-    old = t.join(delta_convs, "conv_id", "left_anti")
-    incremental_refresh(spark, store, "feats", old, compute)
-    _, got = incremental_refresh(spark, store, "feats", t, compute,
-                                 delta_keys=delta_convs)
-    return got
-
-
-def q_pit_window(spark, sf_dir):
-    """Point-in-time windowed aggregate join (joins.py pit_window_agg):
-    per event, the count and sum of the SAME user's events in the
-    strictly-prior hour — the feature-store primitive. The operator
-    delta-encodes each event as (+1 at ts, -1 at ts+horizon) and reads
-    a running sum at the spine row: O(S+E) rows, ONE shuffle, no
-    range-join explosion. Oracle = the naive O(S x density) self-join.
-    The summed value is pre-rounded to integer cents so the running
-    sum is fp-exact at any accumulation order (hash-stable vs DuckDB's
-    aggregate order)."""
-    from hipipe_spark.operators.joins import pit_window_agg
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev = ev.withColumn("value_c", F.round(F.col("value") * 100))
-    spine = ev.select("event_id", "user_id", "ts")
-    out = pit_window_agg(spine, ev, by="user_id", on="ts",
-                         horizon=3600.0, value_col="value_c",
-                         strict=True)
-    return out.select("event_id", "user_id", "pit_count", "pit_sum")
-
-
-def q_pit_multi(spark, sf_dir):
-    """Multi-horizon point-in-time features (joins.py pit_window_multi):
-    per event, the same user's strictly-prior event count and cent-sum
-    at BOTH a 30-minute and a 2-hour trailing window, computed in one
-    shuffle + one sort (events explode x3: one add + two expiries).
-    Oracle = one naive range self-join with conditional aggregation."""
-    from hipipe_spark.operators.joins import pit_window_multi
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev = ev.withColumn("value_c", F.round(F.col("value") * 100))
-    spine = ev.select("event_id", "user_id", "ts")
-    out = pit_window_multi(spine, ev, by="user_id", on="ts",
-                           horizons=(1800.0, 7200.0),
-                           value_col="value_c", strict=True)
-    return out.select("event_id", "user_id",
-                      "pit_count_1800s", "pit_sum_1800s",
-                      "pit_count_7200s", "pit_sum_7200s")
-
-
-def q_pit_extrema(spark, sf_dir):
-    """Trailing-window extrema (joins.py pit_window_extrema): per
-    event, the same user's strictly-prior-hour max and min value via
-    the panes decomposition — two (user, slice)-keyed window sorts +
-    one narrow rejoin, O(S+E) rows, int64-microsecond-exact
-    boundaries. Oracle = naive range self-join MAX/MIN."""
-    from hipipe_spark.operators.joins import pit_window_extrema
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    spine = ev.select("event_id", "user_id", "ts")
-    out = pit_window_extrema(spine, ev, by="user_id", value_col="value",
-                             on="ts", horizon=3600.0, strict=True)
-    return out.select("event_id", "user_id",
-                      F.round("pit_max", 6).alias("pit_max"),
-                      F.round("pit_min", 6).alias("pit_min"))
-
-
-def q_auc_score(spark, sf_dir):
-    """Exact tie-corrected ROC-AUC + Gini (evaluation.py auc_roc) of
-    the n_chars score against the is-English label. Never sorts the
-    corpus: per-DISTINCT-score aggregation, one window over the score
-    table, one final fold. Oracle = the same Mann-Whitney cumulative
-    formula in SQL windows."""
-    from hipipe_spark.operators.evaluation import auc_roc
-    d = _docs(spark, sf_dir).select(
-        F.col("n_chars").cast("double").alias("score"),
-        (F.col("lang") == "en").cast("int").alias("y"))
-    return auc_roc(d, "score", "y")
-
-
-def q_kappa(spark, sf_dir):
-    """Cohen's kappa (evaluation.py cohens_kappa) between two
-    deterministic labeling heuristics (length buckets at different
-    thresholds) — the agreement-beyond-chance gate every multi-rater
-    labeling job runs before trusting its labels. Two hash
-    aggregations + broadcast marginal fold, no window."""
-    from hipipe_spark.operators.evaluation import cohens_kappa
-    d = _docs(spark, sf_dir).select(
-        F.when(F.col("n_chars") < 200, "short")
-         .when(F.col("n_chars") < 350, "medium")
-         .otherwise("long").alias("rater_a"),
-        F.when(F.length("text") < 250, "short")
-         .when(F.length("text") < 400, "medium")
-         .otherwise("long").alias("rater_b"))
-    return cohens_kappa(d, "rater_a", "rater_b")
-
-
-def q_pref_pairs(spark, sf_dir):
-    """RLHF preference-pair construction (evaluation.py
-    preference_pairs): per prompt group (doc_id % 50), pair the i-th
-    best with the i-th worst candidate by score (i <= 2), skipping
-    middle-crossing and sub-margin pairs. One window sort per group +
-    a never-fanning equi-join on (group, pair_rank); output bounded
-    at per_group rows/group no matter how hot the prompt."""
-    from hipipe_spark.operators.evaluation import preference_pairs
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 50).alias("prompt_id"),
-        F.col("doc_id"),
-        F.col("n_chars").cast("double").alias("score"))
-    return preference_pairs(d, "prompt_id", "doc_id", "score",
-                            per_group=2)
-
-
-def q_trend_slope(spark, sf_dir):
-    """Trailing-window OLS trend (temporal.py rolling_slope): the
-    least-squares slope of reply length vs turn_idx over the last 8
-    turns of each conversation — 'is this conversation ramping up?'
-    as one number per turn. Five window sums in one frame, one
-    exchange+sort; integer x keeps the closed form bit-stable."""
-    from hipipe_spark.operators.temporal import rolling_slope
-    t = _transcripts(spark, sf_dir).withColumn(
-        "text_len", F.length("text").cast("double"))
-    out = rolling_slope(t, "text_len", n=8, x="turn_idx", round_to=6)
-    return out.select("conv_id", "turn_idx", "roll_slope")
-
-
-def q_tool_cooccur(spark, sf_dir):
-    """Tool co-occurrence association stats (analytics.py
-    cooccurrence): support / directional confidence / lift for every
-    unordered tool pair sharing a conversation. DISTINCT (conv, tool)
-    prepass bounds the self-join by the per-conv tool vocabulary;
-    marginals broadcast."""
-    from hipipe_spark.operators.analytics import cooccurrence
-    t = _transcripts(spark, sf_dir)
-    return cooccurrence(t, group="conv_id", item="tool")
-
-
-def q_typo_pairs(spark, sf_dir):
-    """SymSpell/FastSS fuzzy vocabulary matching (dedup.py
-    fuzzy_token_pairs): every distinct token pair within Levenshtein
-    distance 1, found via the deletion-neighborhood complete candidate
-    generator — O(word_len) keys per VOCAB entry (never per corpus
-    row), equi-join on shared variants, Levenshtein verify on
-    candidates only. freq_ratio separates typo→correction pairs from
-    inflection pairs. The synthetic vocabulary has no distance-1
-    pairs, so every 7th doc contributes a deterministic typo (its
-    first ≥5-char token with the 2nd character deleted) — the oracle
-    must recover exactly those pairs."""
-    from hipipe_spark.functions.text import tokens
-    from hipipe_spark.operators.dedup import fuzzy_token_pairs
-    d = _docs(spark, sf_dir)
-    toks = F.filter(tokens(F.lower(F.col("text"))),
-                    lambda t: F.length(t) >= 5)
-    first = F.get(toks, 0)
-    typo = F.concat(first.substr(F.lit(1), F.lit(1)),
-                    first.substr(F.lit(3), F.length(first)))
-    aug = (d.filter(F.col("doc_id") % 7 == 0)
-            .select(typo.alias("text"))
-            .filter(F.col("text").isNotNull()))
-    corpus = d.select("text").unionByName(aug)
-    return fuzzy_token_pairs(corpus, min_len=4)
-
-
-def q_sb_ppl(spark, sf_dir):
-    """Trigram Stupid Backoff self-scoring (retrieval.py
-    stupid_backoff_logprob — Brants et al. 2007): counts-only web-scale
-    LM; every count table cascades from ONE trigram aggregate, scoring
-    is five equi-joins vs Heaps'-sized tables. The quality-filter rung
-    above bigram_ppl."""
-    from hipipe_spark.operators.retrieval import stupid_backoff_logprob
-    out = stupid_backoff_logprob(_docs(spark, sf_dir))
-    return out.select(
-        "id", "n_events",
-        F.round("sb_logscore", 5).alias("sb_logscore"),
-        F.round("sb_ppl", 4).alias("sb_ppl"))
-
-
-def q_pagerank(spark, sf_dir):
-    """Damped PageRank (graph.py pagerank) over the user-journey
-    transition graph: edges = consecutive event_type pairs per user in
-    (ts, event_id) order. 10 iterations, each two node-sized shuffles
-    (the edge list is normalized + persisted once); lineage cut per
-    iteration via localCheckpoint. Oracle: the iteration unrolled into
-    chained DuckDB CTEs (graph.py pagerank_oracle_sql)."""
-    from pyspark.sql import Window
-    from hipipe_spark.operators.graph import pagerank
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (ev.select("user_id", "ts", "event_id", "event_type",
-                       F.lag("event_type").over(w).alias("prev"))
-               .filter(F.col("prev").isNotNull())
-               .select(F.col("prev").alias("src"),
-                       F.col("event_type").alias("dst")))
-    return pagerank(edges, n_iter=10, round_to=6).orderBy("node")
-
-
-def q_vocab_growth(spark, sf_dir):
-    """Heaps-law vocabulary growth curve (corpus.py vocab_growth):
-    cumulative docs / tokens / distinct vocabulary / type-token ratio
-    at 10 arrival-order checkpoints. One explode->groupBy(token)
-    shuffle (min first-occurrence bin per token); everything after the
-    two aggregates is 10-row dimension arithmetic."""
-    from hipipe_spark.operators.corpus import vocab_growth
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return vocab_growth(docs, n_checkpoints=10)
-
-
-def q_zorder(spark, sf_dir):
-    """Morton/z-order locality key (layout.py zorder_key, minmax mode):
-    16-bit-per-dim interleave of (o_custkey, o_totalprice). The
-    write-side layout for multi-column file skipping at 100 TB — one
-    2-double agg job for bounds, then pure JVM bit arithmetic."""
-    from hipipe_spark.operators.layout import zorder_key
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (zorder_key(orders, ["o_custkey", "o_totalprice"], bits=16)
-            .select("o_orderkey", "z"))
-
-
-def q_substring_dedup(spark, sf_dir):
-    """Distributed exact substring dedup (spans.py substring_dedup —
-    Lee et al. 2022 semantics): every duplicated 8-token window, first
-    occurrence canonical, overlaps merged per doc via gaps-and-islands.
-    hash="exact" keys windows on the joined string so the DuckDB
-    oracle replicates bit-for-bit (xxhash64 is the prod default)."""
-    from hipipe_spark.operators.spans import substring_dedup
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return substring_dedup(docs, window=8, hash="exact")
-
-
-def q_jsd_drift(spark, sf_dir):
-    """Jensen-Shannon divergence between even/odd doc_id slices over
-    text length (drift.py jsd_table) — PSI's symmetric, ln2-bounded
-    cousin; same one-exchange bucket-count plan."""
-    from hipipe_spark.operators.drift import jsd_table
-    d = _docs(spark, sf_dir).withColumn("text_len", F.length("text"))
-    a = d.filter(F.col("doc_id") % 2 == 0)
-    b = d.filter(F.col("doc_id") % 2 == 1)
-    out = jsd_table(a, b, "text_len", lo=0.0, hi=2000.0, n_buckets=8)
-    return out.select(
-        "bucket", "n_a", "n_b",
-        F.round("jsd_term", 6).alias("jsd_term"),
-        F.round("jsd", 6).alias("jsd"))
-
-
-def q_ranking_metrics(spark, sf_dir):
-    """Per-query nDCG@10 / MRR / precision / recall (evaluation.py
-    ranking_metrics): synthetic queries = l_suppkey%20, score =
-    extendedprice, graded rel from quantity. One group exchange + two
-    in-partition window sorts."""
-    from hipipe_spark.operators.evaluation import ranking_metrics
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        (F.col("l_suppkey") % 20).alias("q"),
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("cid"),
-        F.col("l_extendedprice").alias("score"),
-        F.when(F.col("l_quantity") >= 48, 2)
-         .when(F.col("l_quantity") >= 45, 1).otherwise(0).alias("rel"))
-    return ranking_metrics(li, "q", "score", "rel", "cid", k=10)
-
-
-def q_attribution(spark, sf_dir):
-    """Position-based (40/20/40) multi-touch attribution over the
-    events stream (analytics.py attribution): touches view/click/
-    signup credit the next purchase; windows never overlap, so hot
-    users cost O(events), not O(events^2)."""
-    from hipipe_spark.operators.analytics import attribution
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return attribution(ev, ["view", "click", "signup"], "purchase",
-                       model="position")
-
-
-def q_dsir(spark, sf_dir):
-    """DSIR importance log-weights (selection.py dsir_weights — Xie et
-    al. 2023): hashed unigram+bigram multinomials, target = doc_id%7
-    slice vs the full raw pool, det hash family so DuckDB replicates
-    every bucket id. Both fitted distributions are broadcast
-    n_buckets-row tables; scoring is one doc-key aggregate."""
-    from hipipe_spark.operators.selection import dsir_weights
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = docs.filter(F.col("doc_id") % 7 == 0)
-    return dsir_weights(docs, target, n_buckets=1024,
-                        hash_family="det")
-
-
-def q_dsir_select(spark, sf_dir):
-    """Deterministic Gumbel top-k resampling over DSIR log-weights
-    (selection.py gumbel_topk): key-derived Gumbel noise, global top-k
-    via TakeOrderedAndProject — the selection step that turns weights
-    into a training subset."""
-    from hipipe_spark.operators.selection import dsir_weights, gumbel_topk
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = docs.filter(F.col("doc_id") % 7 == 0)
-    w = dsir_weights(docs, target, n_buckets=1024, hash_family="det")
-    return gumbel_topk(w, "dsir_logweight", 50, seed=3)
-
-
-def q_scd2(spark, sf_dir):
-    """SCD2 validity intervals (scd.py scd2) from the events stream:
-    per-user event_type change tracking with no-op collapse and
-    event_id tiebreak — the write-side twin of the as-of profile read
-    path. One exchange on user_id."""
-    from hipipe_spark.operators.scd import scd2
-    from hipipe_spark.operators.temporal import ts_seconds
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = scd2(ev, "user_id", "ts", ["event_type"], tiebreak="event_id")
-    # epoch-second doubles: a NULLABLE timestamp column trips pandas'
-    # ns-vs-us unit comparison in the driver gate (NaT + mixed units)
-    return out.select("user_id", "event_type",
-                      ts_seconds(F.col("valid_from")).alias("valid_from"),
-                      ts_seconds(F.col("valid_to")).alias("valid_to"),
-                      "is_current", "version")
-
-
-def q_sample_per_key(spark, sf_dir):
-    """Deterministic per-group fixed-size sample (sampling.py
-    sample_per_key): 20 events per event_type ranked by key-derived
-    hash — rerun/cluster-size/input-order stable, unlike a streaming
-    reservoir."""
-    from hipipe_spark.operators.sampling import sample_per_key
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = sample_per_key(ev, "event_type", "event_id", 20, seed=5)
-    return out.select("event_id", "event_type", "user_id")
-
-
-def q_calibration(spark, sf_dir):
-    """Reliability table + ECE + Brier (evaluation.py
-    calibration_report) over a det-hash-derived probability and a
-    parity label: one map-combined aggregate to 10 bins, scalars via
-    window sums over the tiny table."""
-    from hipipe_spark.functions.hashing import det_hash01
-    from hipipe_spark.operators.evaluation import calibration_report
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        det_hash01(F.col("event_id"), 9).alias("p"),
-        (F.col("user_id") % 2).alias("y"))
-    return calibration_report(ev, "p", "y", n_bins=10)
-
-
-def q_minhash_incremental(spark, sf_dir):
-    """Incremental MinHash near-dedup (dedup.py minhash_index +
-    minhash_lsh_pairs_incremental): the delta (doc_id%20==10) dedups
-    against the indexed corpus (doc_id%20==0) and within itself —
-    corpus cost per delta is ONE scan (band keys are a narrow map over
-    the stored signatures, the delta band table broadcasts). det hash
-    family end-to-end for the DuckDB oracle."""
-    from hipipe_spark.operators.dedup import (
-        minhash_index, minhash_lsh_pairs_incremental)
-    docs = _docs(spark, sf_dir)
-    corpus = docs.filter(F.col("doc_id") % 20 == 0)
-    delta = docs.filter(F.col("doc_id") % 20 == 10)
-    idx = minhash_index(corpus, shingle="word", shingle_k=1,
-                        n_hashes=32, hash_family="det")
-    out = minhash_lsh_pairs_incremental(
-        idx, delta, shingle="word", shingle_k=1, n_hashes=32, bands=16,
-        jaccard_threshold=0.5, hash_family="det")
-    return out.select("id_a", "id_b",
-                      F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_bootstrap_ci(spark, sf_dir):
-    """Poisson-bootstrap CI for the mean (bootstrap.py
-    bootstrap_mean_ci): 50 key-derived Poisson(1) replicate weights
-    per row, 100 map-side-combinable aggregate columns, ONE pass — no
-    row explosion. Integer l_quantity keeps every replicate sum
-    exactly representable, so the CI is bit-identical to the DuckDB
-    oracle at any accumulation order."""
-    from hipipe_spark.operators.bootstrap import bootstrap_mean_ci
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("rid"),
-        "l_returnflag", "l_quantity")
-    return bootstrap_mean_ci(li, "l_quantity", "rid",
-                             group="l_returnflag", n_reps=50, seed=7)
-
-
-def q_label_prop(spark, sf_dir):
-    """Semi-supervised label propagation (graph.py label_propagation):
-    two seed labels spread 3 majority-vote rounds through the
-    user-journey transition graph; seeds clamped, ties to smallest
-    label. Two node-sized shuffles per round."""
-    from pyspark.sql import Window
-    from hipipe_spark.operators.graph import label_propagation
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (ev.select("user_id", "ts", "event_id", "event_type",
-                       F.lag("event_type").over(w).alias("prev"))
-               .filter(F.col("prev").isNotNull())
-               .select(F.col("prev").alias("src"),
-                       F.col("event_type").alias("dst")))
-    seeds = spark.createDataFrame(
-        [("view", "content"), ("error", "bad")], "node string, label string")
-    return label_propagation(edges, seeds, n_iter=3)
-
-
-def q_topic_segments(spark, sf_dir):
-    """Content-based conversation segmentation (transcripts.py
-    topic_segments): new segment when consecutive-turn token Jaccard
-    drops below 0.2 — sessionize-on-content; one conversation window
-    shared by the lag and the running segment sum."""
-    from hipipe_spark.operators.transcripts import topic_segments
-    t = _transcripts(spark, sf_dir)
-    out = topic_segments(t, threshold=0.2)
-    return out.select("conv_id", "turn_idx", "prev_jaccard",
-                      "segment_seq", "segment_id")
-
-
-def q_dup_weights(spark, sf_dir):
-    """Soft dedup via loss reweighting (dedup.py dup_weights): every
-    doc keeps weight 1/cluster_size over the exact-duplicate graph —
-    coverage preserved, duplication bias removed; connected components
-    + one size aggregate + broadcast rejoin."""
-    from hipipe_spark.operators.dedup import _exact_prepass, dup_weights
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    _, star = _exact_prepass(docs, "doc_id", "text")
-    return dup_weights(docs, star)
-
-
-def q_k_anonymity(spark, sf_dir):
-    """Privacy-release audit (validate.py k_anonymity): k-anonymity +
-    l-diversity violations over (event_type, user_id%50) classes with
-    the event value band as the sensitive attribute; one hash
-    aggregate, only the failing tail survives."""
-    from hipipe_spark.operators.validate import k_anonymity
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("user_id") % 50).alias("user_bucket"),
-        F.floor(F.col("value") / 25).cast("int").alias("val_band"))
-    return k_anonymity(ev, ["event_type", "user_bucket"], k=35,
-                       sensitive_col="val_band")
-
-
-def q_t_closeness(spark, sf_dir):
-    """Entropy l-diversity + t-closeness audit (validate.t_closeness)
-    over (c_nationkey, c_mktsegment) classes with the account-balance
-    band as the sensitive attribute. violations_only=False so the
-    driver row pins entropy/tvd for EVERY class, not just the failing
-    tail."""
-    from hipipe_spark.operators.validate import t_closeness
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_nationkey", "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 2000).cast("long").alias("bal_band"))
-    return t_closeness(cust, ["c_nationkey", "c_mktsegment"],
-                       "bal_band", l=3, t=0.25, violations_only=False)
-
-
-def q_json_features(spark, sf_dir):
-    """Typed JSON field extraction (functions/json.py json_features):
-    ONE from_json parse per row (get_json_object would re-parse per
-    field), scan-local, PERMISSIVE nulls on malformed payloads."""
-    from hipipe_spark.functions.json import json_features
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = json_features(ev, "props", {"k": "int"})
-    return out.select("event_id", "k")
-
-
-def q_json_profile(spark, sf_dir):
-    """JSON payload schema discovery (functions/json.py
-    json_key_profile): per top-level key, document count + share —
-    one explode + one key aggregate + one count job."""
-    from hipipe_spark.functions.json import json_key_profile
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return json_key_profile(ev, "props")
-
-
-def q_table_diff(spark, sf_dir):
-    """Snapshot change data feed (validate.py table_diff): orders
-    'yesterday' (o_orderkey%3!=0, price as-was) vs 'today' (all rows,
-    10% of keys repriced) — inserted/deleted/changed per key, null-safe
-    compare, unchanged bulk filtered before output. One key shuffle
-    per side."""
-    from hipipe_spark.operators.validate import table_diff
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    old = (orders.filter(F.col("o_orderkey") % 3 != 0)
-           .select("o_orderkey", "o_totalprice"))
-    new = orders.select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 10 == 1,
-               F.round(F.col("o_totalprice") * 1.1, 2))
-         .otherwise(F.col("o_totalprice")).alias("o_totalprice"))
-    return table_diff(old, new, ["o_orderkey"])
-
-
-def q_bt_ratings(spark, sf_dir):
-    """Bradley-Terry arena leaderboard (evaluation.py bradley_terry):
-    7 synthetic 'models' (doc_id % 7 beats (3*doc_id+1) % 7 — a
-    deterministic comparison per document row, self-matches dropped),
-    12 MM rounds. The comparison log collapses in one shuffle to the
-    item²-bounded pair aggregate; the MM iteration is driver-side
-    numpy on that dimension-sized state."""
-    from hipipe_spark.operators.evaluation import bradley_terry
-    d = _docs(spark, sf_dir).select(
-        F.concat(F.lit("m"), (F.col("doc_id") % 7).cast("string"))
-         .alias("winner"),
-        F.concat(F.lit("m"),
-                 ((F.col("doc_id") * 3 + 1) % 7).cast("string"))
-         .alias("loser"))
-    return bradley_terry(d.filter(F.col("winner") != F.col("loser")),
-                         n_iter=12, round_to=6)
-
-
-def q_fleiss(spark, sf_dir):
-    """Fleiss' kappa multi-rater agreement (evaluation.py
-    fleiss_kappa): 200 synthetic items (doc_id % 200), each document
-    row one rating ('c' || length(text) % 4). One shuffle to the
-    (item, category) cell table; everything after is cell-sized."""
-    from hipipe_spark.operators.evaluation import fleiss_kappa
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 200).alias("item"),
-        F.concat(F.lit("c"), (F.length("text") % 4).cast("string"))
-         .alias("rating"))
-    return fleiss_kappa(d, "item", "rating")
-
-
-def q_kripp(spark, sf_dir):
-    """Krippendorff's alpha (evaluation.py krippendorff_alpha) over
-    the same synthetic rating log as `fleiss` — the missing-data-
-    robust agreement twin. One shuffle to cells, cell-sized folds."""
-    from hipipe_spark.operators.evaluation import krippendorff_alpha
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 200).alias("item"),
-        F.concat(F.lit("c"), (F.length("text") % 4).cast("string"))
-         .alias("rating"))
-    return krippendorff_alpha(d, "item", "rating")
-
-
-def q_spearman(spark, sf_dir):
-    """Pairwise Spearman rank correlation (features.py spearman_corr)
-    over lineitem qty/price/discount — per column the two-phase
-    range-partitioned average rank (no single-task sort) + one
-    value-join; all three pairs fold in feature_corr's single
-    map-side-combinable scan."""
-    from hipipe_spark.operators.features import spearman_corr
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_quantity").cast("double").alias("qty"),
-        F.col("l_extendedprice").cast("double").alias("price"),
-        F.col("l_discount").cast("double").alias("disc"))
-    return spearman_corr(li, ["qty", "price", "disc"])
-
-
-def q_mad_outliers(spark, sf_dir):
-    """Per-group robust outlier flags (features.py mad_outliers):
-    modified z-score vs the l_returnflag group median/MAD, exact
-    percentiles for the oracle; the row side never shuffles — two
-    group-dimension stat joins broadcast by AQE."""
-    from hipipe_spark.operators.features import mad_outliers
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_returnflag",
-        F.col("l_extendedprice").cast("double").alias("l_extendedprice"))
-    return mad_outliers(li, "l_returnflag", "l_extendedprice",
-                        exact=True)
-
-
-def q_rrf(spark, sf_dir):
-    """Reciprocal Rank Fusion (retrieval.py rrf_fuse): two synthetic
-    per-query runs over documents (25 query groups; run A = length
-    ranking, run B = a derived-hash ranking), top-10 each, fused with
-    k=60. One (query, doc) shuffle + one query-partitioned window."""
-    from hipipe_spark.operators.retrieval import rrf_fuse
-    d = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 25).alias("q"), "doc_id",
-        F.col("n_chars").alias("len_key"),
-        ((F.col("doc_id") * 37) % 1000).alias("hash_key"))
-    wa = Window.partitionBy("q").orderBy(F.col("len_key").desc(), "doc_id")
-    wb = Window.partitionBy("q").orderBy(F.col("hash_key").asc(), "doc_id")
-    run_a = (d.withColumn("rank", F.row_number().over(wa))
-             .filter(F.col("rank") <= 10).select("q", "doc_id", "rank"))
-    run_b = (d.withColumn("rank", F.row_number().over(wb))
-             .filter(F.col("rank") <= 10).select("q", "doc_id", "rank"))
-    return rrf_fuse(run_a.unionAll(run_b), k=60,
-                    query="q", doc="doc_id", rank="rank")
-
-
-def q_isotonic(spark, sf_dir):
-    """Isotonic (PAV) calibration (evaluation.py isotonic_calibrate):
-    deterministic pseudo-probabilities and correlated labels from
-    integer arithmetic on o_orderkey; one aggregate to 20 bins, PAV
-    driver-side with integer-exact pooling. Oracle = the minimax
-    max-min range-average characterization of PAV, expressible in SQL
-    because the bin table is tiny."""
-    from hipipe_spark.operators.evaluation import isotonic_calibrate
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        ((F.col("o_orderkey") * 2654435761) % 1000000).alias("pr"),
-        ((F.col("o_orderkey") * 7919) % 1000).alias("u"))
-    scored = o.select(
-        (F.col("pr") / 1000000.0).alias("prob"),
-        (F.col("u") < 200 + F.floor(F.col("pr") / 2000))
-        .cast("double").alias("label"))
-    return isotonic_calibrate(scored, "prob", "label", n_bins=20)
-
-
-def q_ab_tests(spark, sf_dir):
-    """Per-segment Welch t-test + Benjamini-Hochberg FDR chained
-    (stats.py welch_ttest → bh_fdr): events value, arms = user_id
-    parity, one family of 5 hypotheses (event_type segments). ONE
-    map-side-combinable aggregate for all sufficient statistics, then
-    dimension-sized window arithmetic; q is computed from the ROUNDED
-    p both here and in the oracle, so the hash compare is exact."""
-    from hipipe_spark.operators.stats import bh_fdr, welch_ttest
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"))
-    t = welch_ttest(e, "event_type", "value", "arm", "a", "b")
-    return bh_fdr(t, "p_value", tiebreak=["event_type"], alpha=0.2)
-
-
-def q_mann_whitney(spark, sf_dir):
-    """Tie-corrected Mann-Whitney U per segment (stats.py
-    mann_whitney): rank sums from the (segment, value)-aggregated
-    table — cumulative-count windows over the value-dimension frame,
-    never a raw-row rank — with the Bowling normal-CDF approximation
-    mirrored exactly in the oracle."""
-    from hipipe_spark.operators.stats import mann_whitney
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"))
-    return mann_whitney(e, "event_type", "value", "arm", "a", "b")
-
-
-def q_kaplan_meier(spark, sf_dir):
-    """Kaplan-Meier survival over user lifetimes (stats.py
-    kaplan_meier): per-user duration = hours between first and last
-    event (one aggregate from raw rows), deterministic 25% censoring
-    (user_id % 4), then the product-limit curve via exp(Σ ln) with an
-    explicit zero-step flag — windows run on the duration-dimension
-    frame only."""
-    from hipipe_spark.operators.stats import kaplan_meier
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sec = F.col("ts").cast("timestamp").cast("double")
-    life = e.groupBy("user_id").agg(
-        F.floor((F.max(sec) - F.min(sec)) / 3600)
-         .cast("bigint").alias("dur_h"),
-        F.max(F.when(F.col("user_id") % 4 != 0, 1).otherwise(0))
-         .cast("int").alias("ev"))
-    return kaplan_meier(life, "dur_h", "ev")
-
-
-def q_cuped(spark, sf_dir):
-    """CUPED variance reduction (stats.py cuped): adjust
-    l_extendedprice by the l_quantity covariate, report per-
-    l_returnflag adjusted means and variance reduction. θ and x̄ are
-    rounded BEFORE the adjustment so both engines use identical
-    constants — the rounded-handoff pattern that makes a two-stage
-    float pipeline hash-comparable."""
-    from hipipe_spark.operators.stats import cuped
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_returnflag",
-        F.col("l_extendedprice").cast("double").alias("y"),
-        F.col("l_quantity").cast("double").alias("x"))
-    return cuped(li, "l_returnflag", "y", "x")
-
-
-def q_cusum(spark, sf_dir):
-    """Per-user one-sided CUSUM change flags (stats.py cusum_flags):
-    the recursive max(0, s+x−k) in closed form S − min(0, running
-    min S) — two cumulative windows sharing one sort, no recursion,
-    no Python. k=60 (above the ~50 global mean), h=300: flags
-    sustained high-value runs (554 rows / 58 users at sf0.01)."""
-    from hipipe_spark.operators.stats import cusum_flags
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "value")
-    return cusum_flags(e, "user_id", "event_id", "value", k=60.0, h=300.0)
-
-
-def q_edit_pairs(spark, sf_dir):
-    """Exact Levenshtein near-dup pairs (stats.py
-    edit_distance_pairs) on 30-char document prefixes, max_dist=8:
-    length-band blocking (explode to ≤ 2+2d/band buckets, equi-join,
-    |Δlen| guard) + Spark's threshold-pruned JVM levenshtein verify.
-    The oracle is the O(n²) cross join — affordable at 500 docs,
-    which is exactly why the blocked plan exists for the 100-TB
-    path."""
-    from hipipe_spark.operators.stats import edit_distance_pairs
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring("text", 1, 30).alias("prefix"))
-    return edit_distance_pairs(d, "doc_id", "prefix", max_dist=8)
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """Threshold-KMV distinct-count sketch (sketches.py kmv_distinct):
-    distinct l_orderkey per l_returnflag with k=64, tau=0.05 — the
-    hash prefilter is a scan-pushed literal predicate, so at 100 TB
-    only ~5% of distinct hashes ever shuffle. The det-hash family
-    makes the sketch itself (not a tolerance band) DuckDB-checkable."""
-    from hipipe_spark.operators.sketches import kmv_distinct
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return kmv_distinct(li, "l_returnflag", "l_orderkey", k=64, tau=0.05)
-
-
-def q_cms_heavy(spark, sf_dir):
-    """Count-Min heavy hitters (sketches.py cms_heavy_hitters): 4×32
-    sketch over events.user_id (150 users in 32 buckets — collisions
-    by construction, so the overestimate column is exercised), probed
-    for the exact top-10. The sketch build is ONE map-side-combinable
-    aggregate producing 128 rows regardless of input size."""
-    from hipipe_spark.operators.sketches import cms_heavy_hitters
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cms_heavy_hitters(e, "user_id", top_n=10, depth=4, width=32)
-
-
-def q_bloom_semi(spark, sf_dir):
-    """Bloom-prefilter semi-join audit (sketches.py bloom_prefilter):
-    orders.o_custkey probed against a 4096-bit / 3-hash filter built
-    from high-balance customers. Zero false negatives by construction
-    (n_true == the exact semi-join count — pytest-pinned); the report
-    quantifies the false-positive rate the prefilter would admit
-    before the exact verify join at scale."""
-    from hipipe_spark.operators.sketches import bloom_prefilter
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-         .where("c_acctbal > 5000"))
-    return bloom_prefilter(o, "o_custkey", c, "c_custkey",
-                           m=4096, n_hashes=3)
-
-
-def q_kendall(spark, sf_dir):
-    """Kendall tau-b per event_type between floor(value) (forced
-    ties) and event time (stats.py kendall_tau): Knight's O(n log n)
-    merge-sort inversion count inside one applyInPandas per group;
-    the oracle is the O(n²) pair enumeration — 2k-row groups keep it
-    affordable there, which is exactly the path that does NOT scale
-    and why the log-linear UDF exists."""
-    from hipipe_spark.operators.stats import kendall_tau
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.floor("value").cast("double").alias("xv"),
-        F.col("ts").cast("timestamp").cast("double").alias("yv"))
-    return kendall_tau(e, "event_type", "xv", "yv")
-
-
-def _clf_frame(spark, sf_dir):
-    """Deterministic multiclass prediction table: label = event_type,
-    pred corrupted to 'view' on a 30% det-hash coin."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    u = det_hash01(F.col("event_id"), seed=11)
-    return e.select(
-        F.col("event_type").alias("label"),
-        F.when(u < 0.3, F.lit("view")).otherwise(F.col("event_type"))
-         .alias("pred"))
-
-
-def q_class_report(spark, sf_dir):
-    """Per-class precision/recall/F1 from ONE confusion-cell
-    aggregate (evaluation.py classification_report) — class²-sized
-    state, sklearn null conventions for undefined ratios."""
-    from hipipe_spark.operators.evaluation import classification_report
-    return classification_report(_clf_frame(spark, sf_dir),
-                                 "label", "pred")
-
-
-def q_clf_summary(spark, sf_dir):
-    """Accuracy, macro/weighted F1 and the Gorodkin multiclass MCC
-    (evaluation.py classifier_summary) folded from the same
-    confusion cells as class_report."""
-    from hipipe_spark.operators.evaluation import classifier_summary
-    return classifier_summary(_clf_frame(spark, sf_dir),
-                              "label", "pred")
-
-
-def q_seasonal(spark, sf_dir):
-    """Classical additive decomposition of the hourly event-count
-    series, period 24 (temporal.py seasonal_decompose): 2×24
-    half-weighted centered MA trend, phase-mean seasonal centered to
-    zero, residual. The series is the AGGREGATE of the raw log
-    (dimension-sized), so the one unpartitioned sort is over ~720
-    rows regardless of corpus size."""
-    from hipipe_spark.operators.temporal import seasonal_decompose
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").alias("cnt")))
-    return seasonal_decompose(hours, "hour", "cnt", period=24)
-
-
-def q_dp_counts(spark, sf_dir):
-    """ε-DP noisy histogram with deterministic inverse-CDF Laplace
-    noise keyed on the cell (validate.py dp_counts, ε=0.5, seed=42):
-    the release itself — not a tolerance band around it — is
-    reproduced bit-for-bit by the DuckDB oracle via the det-hash
-    family."""
-    from hipipe_spark.operators.validate import dp_counts
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return dp_counts(e, ["event_type"], epsilon=0.5, seed=42)
-
-
-def q_triangles(spark, sf_dir):
-    """Triangle census + global clustering coefficient (graph.py
-    triangle_stats) over the part co-purchase graph (parts sharing an
-    order). Compact-forward orientation a<b<c: each triangle
-    enumerated exactly once via two equi-joins on node ids — the
-    standard distributed triangle plan, AQE-skew-splittable."""
-    from hipipe_spark.operators.graph import triangle_stats
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .select(F.col("a.l_partkey").alias("src"),
-                     F.col("b.l_partkey").alias("dst")))
-    return triangle_stats(pairs)
-
-
-def q_histq(spark, sf_dir):
-    """Mergeable histogram quantile sketch (sketches.py
-    hist_quantiles): 64 fixed bins of l_extendedprice per
-    l_returnflag, estimates vs the exact interpolated percentile.
-    The sketch state is 64 counters per group — mergeable by summing,
-    served in O(bins); the rounded-handoff (lo, hi) makes bin
-    assignment bit-identical in the oracle."""
-    from hipipe_spark.operators.sketches import hist_quantiles
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return hist_quantiles(li, "l_returnflag", "l_extendedprice",
-                          n_bins=64, qs=(0.25, 0.5, 0.75, 0.9))
-
-
-def q_lttb(spark, sf_dir):
-    """LTTB downsampling (temporal.py lttb_downsample, fixed-anchor
-    parallel variant) of the hourly event-count series to 48 points:
-    every bucket's triangle-area argmax is independent (anchors =
-    neighbor-bucket means), so the classic sequential chain becomes
-    one mean aggregate + one per-bucket window — the shape that
-    survives a 10⁹-point series."""
-    from hipipe_spark.operators.temporal import lttb_downsample
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").alias("cnt")))
-    return lttb_downsample(hours, "hour", "cnt", n_out=48)
-
-
-def q_kmv_join(spark, sf_dir):
-    """Sketch-based join-cardinality estimation (sketches.py
-    kmv_join_estimate): distinct-key overlap of orders.o_custkey vs
-    high-balance customers WITHOUT running the join — KMV set algebra
-    (union (k−1)/h_k, Jaccard from shared k-minima, intersection =
-    J×union), the planner-side estimate that decides broadcast vs
-    shuffle at 100 TB. Exact overlap rides along as the error
-    column."""
-    from hipipe_spark.operators.sketches import kmv_join_estimate
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-         .where("c_acctbal > 2500"))
-    return kmv_join_estimate(o, "o_custkey", c, "c_custkey",
-                             k=128, tau=0.2)
-
-
-def _hourly_by_type(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (e.groupBy(
-        "event_type",
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").alias("cnt")))
-
-
-def q_theil_sen(spark, sf_dir):
-    """Theil–Sen robust trend per event_type over the hourly count
-    series (stats.py theil_sen): median of pairwise slopes (29%
-    breakdown point vs OLS's 0), intercept from the rounded-slope
-    handoff. The O(n²) pair join runs on the SERIES — the
-    dimension-sized aggregate — never the raw log."""
-    from hipipe_spark.operators.stats import theil_sen
-    return theil_sen(_hourly_by_type(spark, sf_dir),
-                     "event_type", "hour", "cnt")
-
-
-def q_did(spark, sf_dir):
-    """Difference-in-differences per event_type (stats.py
-    diff_in_diff): treat = even user_id, post = second half of the
-    month, outcome = value. Four cell means + DiD effect + Welch-
-    composed SE + Bowling p from ONE conditional-sum aggregate."""
-    from hipipe_spark.operators.stats import diff_in_diff
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        (F.col("user_id") % 2 == 0).alias("treat"),
-        (F.col("ts") >= F.lit("2024-01-16").cast("timestamp"))
-        .alias("post"))
-    return diff_in_diff(e, "event_type", "treat", "post", "value")
-
-
-def q_forecast_eval(spark, sf_dir):
-    """Naive vs seasonal-naive forecast backtest on the hourly count
-    series (temporal.py forecast_eval): MAE/RMSE/sMAPE/MASE on the
-    common support — the baseline floor any forecaster must beat;
-    MASE(naive) ≡ 1 is the built-in self-check."""
-    from hipipe_spark.operators.temporal import forecast_eval
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").alias("cnt")))
-    return forecast_eval(hours, "hour", "cnt", season=24)
-
-
-def q_hll(spark, sf_dir):
-    """HyperLogLog distinct count (sketches.py hll_distinct, p=10 →
-    1024 registers ≈ 1 KB per group at ANY input size): distinct
-    l_orderkey per l_returnflag, same probe as kmv_distinct so the
-    two sketches' error profiles are directly comparable. Registers
-    come from an integer CASE rank ladder (no float log2), so both
-    engines compute identical registers and the oracle checks the
-    SKETCH, not a tolerance."""
-    from hipipe_spark.operators.sketches import hll_distinct
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return hll_distinct(li, "l_returnflag", "l_orderkey", p=10)
-
-
-def q_gini(spark, sf_dir):
-    """Gini concentration of event value per event_type (stats.py
-    gini_coefficient): the rank identity 2Σi·x/(nΣx) − (n+1)/n, tie-
-    order invariant — the skew diagnostic that sizes salting factors
-    before a 100-TB shuffle is committed."""
-    from hipipe_spark.operators.stats import gini_coefficient
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return gini_coefficient(e, "event_type", "value")
-
-
-def q_benford(spark, sf_dir):
-    """Benford first-digit audit of l_extendedprice per l_returnflag
-    (validate.py benford): digit from the integer-part STRING (float
-    log10 at power-of-ten boundaries is engine-dependent — substring
-    of a cast integer is exact in both), all 9 digits materialized,
-    Nigrini MAD conformity per group."""
-    from hipipe_spark.operators.validate import benford
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return benford(li, "l_returnflag", "l_extendedprice")
-
-
-def q_qnorm(spark, sf_dir):
-    """Quantile normalization across event_type groups (encoders.py
-    quantile_normalize): every group forced onto the averaged order-
-    statistic reference — the batch-effect correction that makes
-    per-source score distributions comparable before mixing. Input
-    capped to exactly least(1500, smallest group) rows per type (the
-    classical equal-size contract, SF-adaptive so the query is valid at
-    any scale factor), event_id as the deterministic tiebreak. The cap
-    rides a broadcast one-row frame — no driver round trip."""
-    from hipipe_spark.operators.encoders import quantile_normalize
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cap = (e.groupBy("event_type").count()
-           .agg(F.least(F.lit(1500), F.min("count")).alias("__cap")))
-    w = Window.partitionBy("event_type").orderBy("event_id")
-    capped = (e.select("event_id", "event_type", "value")
-              .withColumn("__rn", F.row_number().over(w))
-              .crossJoin(F.broadcast(cap))
-              .where(F.col("__rn") <= F.col("__cap"))
-              .drop("__rn", "__cap"))
-    out = quantile_normalize(capped, "event_type", "value", "event_id")
-    return out.select("event_id", "event_type",
-                      F.round(F.col("value"), 6).alias("value"),
-                      "qn_value").orderBy("event_id")
-
-
-def q_fs_link(spark, sf_dir):
-    """Fellegi–Sunter record-linkage scoring (linkage.py
-    fs_link_score) over customer pairs blocked by nation: three
-    agreement fields (market segment, account-balance proximity,
-    custkey residue) with fixed (m, u) parameters → log₂ likelihood-
-    ratio weight → link / possible / non-link. Blocking bounds the
-    pair fan-out exactly like the dedup LSH tiers."""
-    from hipipe_spark.operators.linkage import fs_link_score
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    a, b = c.alias("a"), c.alias("b")
-    pairs = (a.join(b, (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-                    & (F.col("a.c_custkey") < F.col("b.c_custkey")))
-             .select(F.col("a.c_custkey").alias("id_a"),
-                     F.col("b.c_custkey").alias("id_b"),
-                     (F.col("a.c_mktsegment") == F.col("b.c_mktsegment"))
-                     .alias("seg_agree"),
-                     (F.abs(F.col("a.c_acctbal") - F.col("b.c_acctbal"))
-                      < 1000).alias("bal_agree"),
-                     (F.col("a.c_custkey") % 10
-                      == F.col("b.c_custkey") % 10).alias("key_agree")))
-    return fs_link_score(pairs, ["seg_agree", "bal_agree", "key_agree"],
-                         m=[0.9, 0.8, 0.7], u=[0.2, 0.18, 0.1],
-                         upper=4.0, lower=-2.0)
-
-
-def q_textrank(spark, sf_dir):
-    """TextRank corpus keywords (graph.py textrank_keywords):
-    PageRank over the word co-occurrence graph (window 2, both
-    directions, weights = corpus counts). The iteration state is
-    VOCABULARY-sized regardless of corpus size; the co-occurrence
-    self-join fans out ≤ window per token — linear, never quadratic.
-    Oracle: the same edges fed to the unrolled-CTE PageRank replica."""
-    from hipipe_spark.operators.graph import textrank_keywords
-    return textrank_keywords(_docs(spark, sf_dir), "doc_id", "text",
-                             window=2, n_iter=6, top_k=20)
-
-
-def q_acf(spark, sf_dir):
-    """ACF + cumulative Ljung–Box over the hourly event-count series
-    (temporal.py acf_ljung_box, lags 1..12): the is-it-white-noise
-    diagnostic behind every forecaster; all lag columns share ONE
-    sort window, Q from rounded-handoff r_k, Wilson–Hilferty χ²
-    tail via the Bowling Φ — identical expression in the oracle."""
-    from hipipe_spark.operators.temporal import acf_ljung_box
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").cast("double").alias("cnt")))
-    return acf_ljung_box(hours, "hour", "cnt", max_lag=12)
-
-
-def q_node_cc(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficient
-    (graph.py node_clustering) over the part co-purchase graph: same
-    a<b<c enumeration as `triangles`, each triangle credits its three
-    corners via one explode — top-20 most triangle-dense parts."""
-    from hipipe_spark.operators.graph import node_clustering
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .select(F.col("a.l_partkey").alias("src"),
-                     F.col("b.l_partkey").alias("dst")))
-    return node_clustering(pairs, top_k=20)
-
-
-def q_seasonal_anom(spark, sf_dir):
-    """Seasonal-hybrid anomaly flags on the hourly series (temporal.py
-    seasonal_anomalies): decompose away trend + daily cycle, then
-    flag residuals beyond 3.5 robust sigmas (median/MAD, rounded
-    handoff) — a level shift or the cycle itself can never
-    masquerade as an anomaly."""
-    from hipipe_spark.operators.temporal import seasonal_anomalies
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").alias("cnt")))
-    return seasonal_anomalies(hours, "hour", "cnt", period=24, k=3.5)
-
-
-def q_mde(spark, sf_dir):
-    """Per-segment minimum detectable effect at current sample size
-    (stats.py mde_report): (z_{α/2}+z_β)·σ·√(4/n) from ONE
-    sufficient-statistics aggregate — the pre-experiment sizing
-    answer the welch/mann-whitney family needs."""
-    from hipipe_spark.operators.stats import mde_report
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return mde_report(e, "event_type", "value")
-
-
-def q_burstiness(spark, sf_dir):
-    """Per-user burstiness B = (σ−μ)/(σ+μ) of inter-event gaps
-    (stats.py burstiness, Goh–Barabási): −1 periodic, 0 Poisson, →1
-    bursty — plus CV; one shared lag sort + one aggregate."""
-    from hipipe_spark.operators.stats import burstiness
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return burstiness(e, "user_id", "ts", "event_id")
-
-
-def q_seq_patterns(spark, sf_dir):
-    """Frequent event-type trigrams per user journey (temporal.py
-    seq_patterns): contiguous length-3 patterns with distinct-user
-    support — the n-gram tier of sequence mining at a lag-window
-    price (two lags share one sort)."""
-    from hipipe_spark.operators.temporal import seq_patterns
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return seq_patterns(e, "user_id", "event_type",
-                        ["ts", "event_id"], n=3, min_support=2,
-                        top_k=25)
-
-
-def q_rfm(spark, sf_dir):
-    """RFM segmentation per user (analytics.py rfm_segments): one
-    raw-data aggregate, three ntile windows on the USER-dimension
-    frame; recency anchored to corpus max(ts) (no extra scan); ties
-    ntile-broken by key so the driver hash is stable."""
-    from hipipe_spark.operators.analytics import rfm_segments
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return rfm_segments(e, "user_id", "ts", "value", n_tiles=5)
-
-
-def q_entropy_rate(spark, sf_dir):
-    """First-order Markov entropy rate of the event-type process
-    (analytics.py entropy_rate): conditional bits/next-event vs the
-    marginal — the predictability gap a sequence model can exploit;
-    two state²-dimension aggregates off one bigram lag window."""
-    from hipipe_spark.operators.analytics import entropy_rate
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return entropy_rate(e, "user_id", "event_type", ["ts", "event_id"])
-
-
-def q_ccf(spark, sf_dir):
-    """Cross-correlation (temporal.py ccf, lags −6..6) between hourly
-    purchase value and hourly view count — the lead–lag discovery
-    tool; all 13 shift columns share ONE sort, correlations fold in
-    one aggregate, means rounded-handoff."""
-    from hipipe_spark.operators.temporal import ccf
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.sum(F.when(F.col("event_type") == "purchase",
-                          F.col("value")).otherwise(0.0)).alias("a"),
-             F.sum(F.when(F.col("event_type") == "view", 1)
-                   .otherwise(0)).alias("b")))
-    return ccf(hours, "hour", "a", "b", max_lag=6)
-
-
-def q_copurchase(spark, sf_dir):
-    """Weighted left-projection of the bipartite (part, order)
-    relation (graph.py bipartite_project): part pairs sharing ≥ 2
-    orders, hub orders (> 8 parts) dropped BEFORE the self-join —
-    the quadratic-in-hub-degree guard that keeps a 100-TB projection
-    linear-ish."""
-    from hipipe_spark.operators.graph import bipartite_project
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (bipartite_project(li, "l_partkey", "l_orderkey",
-                              min_weight=2, max_right_degree=8)
-            .orderBy("src", "dst"))
-
-
-def q_nelson_aalen(spark, sf_dir):
-    """Nelson–Aalen cumulative hazard over the same censored user
-    lifetimes as kaplan_meier (stats.py nelson_aalen): H(t) = Σ d/n
-    on the duration-dimension grid; exp(−H) rides along as the
-    Breslow survival cross-check against the KM curve."""
-    from hipipe_spark.operators.stats import nelson_aalen
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sec = F.col("ts").cast("timestamp").cast("double")
-    life = e.groupBy("user_id").agg(
-        F.floor((F.max(sec) - F.min(sec)) / 3600)
-         .cast("bigint").alias("dur_h"),
-        F.max(F.when(F.col("user_id") % 4 != 0, 1).otherwise(0))
-         .cast("int").alias("ev"))
-    return nelson_aalen(life, "dur_h", "ev")
-
-
-def q_wasserstein(spark, sf_dir):
-    """Exact 1-Wasserstein distance between view and purchase value
-    distributions (drift.py wasserstein_table): the drift metric
-    with UNITS — Σ|F_a−F_b|·Δv on the merged support, one exchange
-    on the value key, windows on the dimension-sized support table.
-    Completes the drift family (PSI, KS, JSD, Cramér's V, MI)."""
-    from hipipe_spark.operators.drift import wasserstein_table
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = e.where("event_type = 'view'").select("value")
-    b = e.where("event_type = 'purchase'").select("value")
-    return wasserstein_table(a, b, "value")
-
-
-def q_sprt(spark, sf_dir):
-    """Wald SPRT per user on the high-value indicator (stats.py
-    sprt_bernoulli, H0 p=0.3 vs H1 p=0.5, α=β=0.05): INTEGER-exact
-    micro-LLR accumulation — a float running sum's engine-specific
-    addition order could flip a threshold crossing; BIGINTs cannot.
-    The sequential test that halves sample size vs fixed-n."""
-    from hipipe_spark.operators.stats import sprt_bernoulli
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", "event_id",
-        (F.col("value") > 60).cast("int").alias("hi"))
-    return sprt_bernoulli(e, "user_id", ["ts", "event_id"], "hi",
-                          p0=0.3, p1=0.5)
-
-
-def _part_pairs(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    return (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                   & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-            .select(F.col("a.l_partkey").alias("src"),
-                    F.col("b.l_partkey").alias("dst")))
-
-
-def q_powerlaw(spark, sf_dir):
-    """Clauset–Shalizi–Newman power-law exponent MLE of the
-    co-purchase degree distribution (graph.py degree_powerlaw):
-    α = 1 + n/Σln(k/(k_min−½)) over the tail — the skew number that
-    sizes salting factors before a shuffle is committed."""
-    from hipipe_spark.operators.graph import degree_powerlaw
-    return degree_powerlaw(_part_pairs(spark, sf_dir), k_min=2)
-
-
-def q_assortativity(spark, sf_dir):
-    """Newman degree assortativity of the co-purchase graph (graph.py
-    assortativity): Pearson r of endpoint degrees over symmetrized
-    edges — positive means hubs link hubs (salt the hubs), negative
-    means hubs link leaves (broadcast the leaf side)."""
-    from hipipe_spark.operators.graph import assortativity
-    return assortativity(_part_pairs(spark, sf_dir))
-
-
-def q_knee(spark, sf_dir):
-    """Kneedle knee detection (temporal.py knee_point) on the
-    vocabulary-coverage curve: cumulative share of token mass covered
-    by the top-k terms vs k — the operating point where growing the
-    vocab stops paying. One argmax window on the curve frame."""
-    from hipipe_spark.operators.temporal import knee_point
-    d = _docs(spark, sf_dir)
-    from hipipe_spark.functions.text import tokens as _tok
-    tf = (d.select(F.explode(_tok(F.lower(F.col("text"))))
-                   .alias("term"))
-          .groupBy("term").agg(F.count("*").alias("n")))
-    w = Window.orderBy(F.desc("n"), F.asc("term"))
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    curve = (tf.select(
-        F.row_number().over(w).cast("double").alias("k"),
-        (F.sum("n").over(wc) / F.sum("n").over(wall)).alias("cov"))
-        .where(F.col("k") <= 2000))
-    return knee_point(curve, "k", "cov")
-
-
-def q_prop_ztest(spark, sf_dir):
-    """Two-sample pooled proportion z-test per event_type (stats.py
-    prop_ztest): conversion-rate inference for the high-value flag
-    between user-parity arms — the binary-metric twin of ab_tests,
-    ONE conditional-sum aggregate."""
-    from hipipe_spark.operators.stats import prop_ztest
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("value") > 60).cast("int").alias("hi"),
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b")
-         .alias("arm"))
-    return prop_ztest(e, "event_type", "hi", "arm", "a", "b")
-
-
-def q_chi2(spark, sf_dir):
-    """Pearson χ² independence test between event_type and user
-    parity (drift.py chi2_test): contingency cells + full category
-    cross (zero cells contribute expected mass), Wilson–Hilferty p —
-    the inferential companion to cramers_v."""
-    from hipipe_spark.operators.drift import chi2_test
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("user_id") % 2 == 0).cast("int").alias("parity"))
-    return chi2_test(e, "event_type", "parity")
-
-
-def q_log_odds(spark, sf_dir):
-    """Monroe et al. "Fightin' Words" log-odds with informative
-    Dirichlet prior (retrieval.py log_odds_terms): which terms
-    distinguish even-id documents from odd-id ones — the principled
-    distinctive-vocabulary statistic (the pooled prior shrinks rare
-    terms raw log-odds overweights)."""
-    from hipipe_spark.operators.retrieval import log_odds_terms
-    d = _docs(spark, sf_dir)
-    a = d.where(F.col("doc_id") % 2 == 0)
-    b = d.where(F.col("doc_id") % 2 == 1)
-    return log_odds_terms(a, b, "text", alpha0=100.0,
-                          min_count=10, top_k=30)
-
-
-def q_lorenz(spark, sf_dir):
-    """Lorenz concentration curve of event value per event_type
-    (stats.py lorenz_curve, ≤50 points/group): the picture the gini
-    number summarizes; tie-invariant cumulative shares, deterministic
-    rank decimation — dimension-sized output whatever the input."""
-    from hipipe_spark.operators.stats import lorenz_curve
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return lorenz_curve(e, "event_type", "value", max_points=50)
-
-
-def q_kn_ppl(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram self-perplexity (retrieval.py
-    kneser_ney_perplexity, d=0.75): the KenLM smoothing — discounted
-    bigram MLE interpolated with the continuation probability
-    (distinct-context counts), one persisted count table, three
-    equi-joins. Oracle replicates the count tables and the identical
-    IEEE probability expression in DuckDB CTEs."""
-    from hipipe_spark.operators.retrieval import kneser_ney_perplexity
-    d = _docs(spark, sf_dir)
-    out = kneser_ney_perplexity(d, "doc_id", "text", discount=0.75)
-    return out.select("id", "n_events",
-                      F.round("logprob", 5).alias("logprob"),
-                      F.round("ppl", 4).alias("ppl"))
-
-
-def q_changepoint(spark, sf_dir):
-    """Single best L2 change point per event_type over the daily
-    event-count series (stats.py changepoint_l2, min_seg=3): prefix-
-    sum SSE decomposition, one ordered window + one argmin window —
-    no candidate cross join. Integer-valued series make the running
-    sums exact in doubles, so the argmin is engine-exact."""
-    from hipipe_spark.operators.stats import changepoint_l2
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    s = (e.groupBy("event_type",
-                   F.to_date("ts").cast("string").alias("day"))
-         .agg(F.count(F.lit(1)).cast("double").alias("x")))
-    return changepoint_l2(s, "event_type", "day", "x", min_seg=3)
-
-
-def q_eb_shrinkage(spark, sf_dir):
-    """Empirical-Bayes beta-binomial shrinkage of per-user error
-    rates (stats.py eb_shrinkage): method-of-moments beta prior over
-    the observed rate distribution, per-group shrinkage toward the
-    prior mean — the 1/1=100% leaderboard-noise fix. One fact-table
-    groupBy + dimension-frame moments (rounded handoffs)."""
-    from hipipe_spark.operators.stats import eb_shrinkage
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return eb_shrinkage(e, "user_id",
-                        (F.col("event_type") == "error"), min_n=5)
-
-
-def q_conformal(spark, sf_dir):
-    """Mondrian split-conformal intervals per event_type over event
-    values (evaluation.py conformal_intervals, alpha=0.1, seed=7):
-    deterministic hash split, per-group mean predictor, finite-sample
-    ⌈(n+1)(1−α)⌉ calibration quantile via rank selection, realized
-    test coverage. The rank-selected q is a data value, so residual
-    ties cannot make the result engine-dependent."""
-    from hipipe_spark.operators.evaluation import conformal_intervals
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return conformal_intervals(e, "event_type", "value", "event_id",
-                               alpha=0.1, seed=7)
-
-
-def q_compress_ratio(spark, sf_dir):
-    """zlib compression-ratio quality signal (functions/text.py
-    compression_ratio): DEFLATE is not SQL-expressible, so this is a
-    rows-only driver row (disclosed) — values are pytest-pinned
-    against direct zlib.compress in tests/test_round4_ops.py. The
-    UDF is Arrow-vectorized (one Python call per batch), scan-local,
-    shuffle-free."""
-    from hipipe_spark.functions.text import compression_ratio
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id",
-                    F.round(compression_ratio(F.col("text")), 6)
-                     .alias("compress_ratio"))
-
-
-# (doc_id, n_raw, n_comp) of every 20th of the first 500 documents at
-# sf0.01, then at sf0.1: UTF-8 byte length and zlib.compress(level 6)
-# byte length, pinned so oracle_sql() reads no data. The oracle keys
-# each row on (doc_id, n_raw), which tells the two SFs apart. Recompute
-# with [(i, len(b), len(zlib.compress(b, 6))) for i, b in rows] over
-# `SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0 AND doc_id
-# < 500`, texts UTF-8 encoded.
-_COMPRESS_PINNED = (
-    (0, 157, 99), (20, 394, 179), (40, 421, 186), (60, 493, 213),
-    (80, 172, 109), (100, 461, 208), (120, 211, 122), (140, 157, 105),
-    (160, 246, 129), (180, 185, 118), (200, 303, 151), (220, 553, 230),
-    (240, 380, 183), (260, 134, 90), (280, 470, 215), (300, 216, 123),
-    (320, 405, 188), (340, 247, 136), (360, 443, 195), (380, 443, 198),
-    (400, 134, 96), (420, 461, 197), (440, 243, 134), (460, 261, 146),
-    (480, 359, 164),
-    (0, 292, 149), (20, 372, 176), (40, 491, 212), (60, 153, 97),
-    (80, 309, 159), (100, 262, 136), (120, 423, 196), (140, 268, 146),
-    (160, 342, 170), (180, 75, 66), (200, 129, 92), (220, 410, 185),
-    (240, 501, 214), (260, 464, 200), (280, 380, 177), (300, 93, 67),
-    (320, 505, 218), (340, 509, 224), (360, 277, 147), (380, 104, 80),
-    (400, 486, 208), (420, 350, 167), (440, 179, 114), (460, 505, 212),
-    (480, 154, 102),
-)
-
-
-def q_compress_pinned(spark, sf_dir):
-    """VALUE-checked driver row for the DEFLATE path: zlib-compressed
-    byte length of the pinned documents (``_COMPRESS_PINNED``) through
-    the real Arrow-batched pandas_udf, compared against pinned
-    ``zlib.compress`` literals in the oracle (the media_decode
-    weights-as-literals pattern). Integer byte counts, so the
-    cross-engine compare is bit-exact with zero float discipline; the
-    full-corpus float-ratio query (q_compress_ratio) stays rows-only.
-    The filter is the pinned doc_id list, so the row count is the same
-    at every SF; values are pinned for sf0.01 and sf0.1."""
-    from hipipe_spark.functions.text import compressed_size
-    d = _docs(spark, sf_dir).filter(
-        F.col("doc_id").isin(sorted({i for i, _, _ in _COMPRESS_PINNED})))
-    return d.select("doc_id",
-                    F.octet_length("text").alias("n_raw"),
-                    compressed_size(F.col("text")).alias("n_comp"))
-
-
-def q_hits(spark, sf_dir):
-    """HITS hubs/authorities (graph.py hits) over the same user-journey
-    transition graph as q_pagerank: auth separates funnel-sink states
-    from the router states hub surfaces. 8 iterations, two node-keyed
-    join+agg passes each, L2 norms as 12-dp rounded handoffs so the
-    unrolled DuckDB oracle (graph.py hits_oracle_sql) is engine-exact."""
-    from pyspark.sql import Window
-    from hipipe_spark.operators.graph import hits
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (ev.select("event_type",
-                       F.lag("event_type").over(w).alias("prev"))
-               .filter(F.col("prev").isNotNull())
-               .select(F.col("prev").alias("src"),
-                       F.col("event_type").alias("dst")))
-    return hits(edges, n_iter=8, round_to=6).orderBy("node")
-
-
-def q_logrank(spark, sf_dir):
-    """Two-group log-rank test (stats.py logrank_test) over the same
-    user-lifetime frame as q_kaplan_meier, arms split by user parity:
-    one duration-grid aggregate, one descending risk-set window on the
-    duration-dimension frame, one final row; E and V are 9-dp rounded
-    handoffs so the Mantel-Cox z is engine-exact."""
-    from hipipe_spark.operators.stats import logrank_test
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sec = F.col("ts").cast("timestamp").cast("double")
-    life = e.groupBy("user_id").agg(
-        F.floor((F.max(sec) - F.min(sec)) / 3600)
-         .cast("bigint").alias("dur_h"),
-        F.max(F.when(F.col("user_id") % 4 != 0, 1).otherwise(0))
-         .cast("int").alias("ev"))
-    return logrank_test(life, "dur_h", "ev",
-                        (F.col("user_id") % 2 == 0).cast("int"))
-
-
-def q_link_features(spark, sf_dir):
-    """Link-prediction feature block (graph.py link_features) over the
-    part co-purchase graph: common neighbors, Adamic-Adar, resource
-    allocation, neighbor Jaccard for non-adjacent pairs sharing >= 2
-    neighbors. Wedge equi-join through the shared neighbor (never
-    all-pairs), hub neighbors capped at degree 20 before the join —
-    the bipartite_project guard."""
-    from hipipe_spark.operators.graph import link_features
-    li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-          .select("l_orderkey", "l_partkey")
-          # every-5th-part subgraph: the full co-purchase graph is
-          # near-complete (avg degree ~90 at sf0.01) and link
-          # prediction is vacuous on a clique; the subsample leaves a
-          # sparse graph where the hub cap actually prunes (27k -> 21k
-          # pairs at sf0.01)
-          .filter(F.col("l_partkey") % 5 == 0))
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .select(F.col("a.l_partkey").alias("src"),
-                     F.col("b.l_partkey").alias("dst")))
-    return link_features(pairs, max_degree=30, min_common=2)
-
-
-def q_kcore(spark, sf_dir):
-    """k-core peel (graph.py k_core, k=14, 12 rounds) over the sparse
-    co-purchase subgraph of q_link_features: iterative shell removal
-    until fixpoint — the converged flag is part of the output (and of
-    the oracle compare), so a truncated peel would fail loudly rather
-    than pass silently. Oracle unrolls the peel into chained
-    MATERIALIZED CTEs (monotone, so extra oracle rounds are no-ops)."""
-    from hipipe_spark.operators.graph import k_core
-    li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-          .select("l_orderkey", "l_partkey")
-          .filter(F.col("l_partkey") % 5 == 0))
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .select(F.col("a.l_partkey").alias("src"),
-                     F.col("b.l_partkey").alias("dst")))
-    return k_core(pairs, k=14, n_rounds=12)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full feature pipeline incl. as-of profile join, sf0.001."""
     sf_dir = "/root/testdata/sf0.001"
-    t = _transcripts(spark, sf_dir)
-    left, right = _asof_sides(spark, sf_dir)
+    t = read_transcripts(spark, sf_dir)
+    _, right = asof_sides(spark, sf_dir)
     prof = right.select(
         F.concat(F.lit("conv_"), F.lpad(F.col("user_id").cast("string"), 8, "0")).alias("conv_id"),
         "ts", F.col("val").alias("temperature"),
@@ -3818,6746 +47,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return featurize(t, profiles=prof)
 
 
-def q_anova(spark, sf_dir):
-    """One-way ANOVA per segment (stats.anova_oneway): does the event
-    value differ across user-id buckets within each event_type? Grand
-    means are rounded and broadcast back to center the metric before
-    the power sums (deviation-scale terms keep the 6-dp oracle
-    rounding safe); one group-key aggregate + segment reduce."""
-    from hipipe_spark.operators.stats import anova_oneway
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        (F.col("user_id") % 4).cast("int").alias("bucket"))
-    return anova_oneway(e, "event_type", "bucket", "value")
-
-
-def q_levene(spark, sf_dir):
-    """Brown-Forsythe homogeneity-of-variance test (stats.levene_bf):
-    ANOVA on |x - group median| with exact interpolated medians
-    rounded before reuse; two fact scans, zero raw-row shuffles."""
-    from hipipe_spark.operators.stats import levene_bf
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        (F.col("user_id") % 4).cast("int").alias("bucket"))
-    return levene_bf(e, "event_type", "bucket", "value")
-
-
-def q_jarque_bera(spark, sf_dir):
-    """Jarque-Bera normality screen per event_type (stats.jarque_bera):
-    central power sums over rounded-mean-centered values — the
-    centering is what keeps fourth-moment arithmetic 6-dp stable."""
-    from hipipe_spark.operators.stats import jarque_bera
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return jarque_bera(e, "event_type", "value")
-
-
-def q_kruskal_wallis(spark, sf_dir):
-    """Tie-corrected Kruskal-Wallis H across event types per user
-    cohort (stats.kruskal_wallis): midranks on the value-aggregated
-    dimension frame exactly like mann_whitney, chi-square tail via the
-    Wilson-Hilferty transform mirrored in the oracle."""
-    from hipipe_spark.operators.stats import kruskal_wallis
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        (F.col("user_id") % 3).cast("int").alias("cohort"),
-        "event_type", "value")
-    return kruskal_wallis(e, "cohort", "event_type", "value")
-
-
-def q_cmh(spark, sf_dir):
-    """Cochran-Mantel-Haenszel stratified 2x2 (stats.cmh_test): does
-    customer parity predict high-value orders pooled over priority
-    strata? One conditional-sum aggregate to the stratum cell table;
-    pooled OR + chi2 repeated per row (ad_table's contract)."""
-    from hipipe_spark.operators.stats import cmh_test
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return cmh_test(o, "o_orderpriority",
-                    F.col("o_custkey") % 2 == 0,
-                    F.col("o_totalprice") > 150000.0)
-
-
-def q_tost(spark, sf_dir):
-    """TOST equivalence test per event_type (stats.tost_equiv): the
-    inverse Welch question - is the parity-arm difference provably
-    within +/-2.0? Same one-aggregate plan as welch_ttest."""
-    from hipipe_spark.operators.stats import tost_equiv
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"))
-    return tost_equiv(e, "event_type", "value", "arm", "a", "b", 2.0)
-
-
-def q_ols2(spark, sf_dir):
-    """Closed-form two-predictor OLS per return flag
-    (regression.ols2): extendedprice on quantity + discount — the
-    2x2 normal-equation inverse written out over ONE aggregate of
-    rounded-mean-centered moments; slopes rounded at 7 dp before the
-    SSE handoff so both engines share the residual arithmetic."""
-    from hipipe_spark.operators.regression import ols2
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return ols2(li, "l_returnflag", "l_extendedprice",
-                "l_quantity", "l_discount")
-
-
-def q_durbin_watson(spark, sf_dir):
-    """Per-user Durbin-Watson serial-correlation audit
-    (regression.durbin_watson) over the event-value stream in
-    (ts, event_id) order: one broadcast mean join, one key-window
-    lag, one aggregate."""
-    from hipipe_spark.operators.regression import durbin_watson
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return durbin_watson(e, "user_id", ["ts", "event_id"], "value")
-
-
-def q_calendar(spark, sf_dir):
-    """Cyclical calendar encodings (features.calendar_features):
-    hour/dow/month/minute-of-day sin-cos pairs + weekend flag as pure
-    JVM expressions — no shuffle, no UDF; the oracle recomputes the
-    same unit-circle arithmetic with pi()."""
-    from hipipe_spark.operators.features import calendar_features
-    e = spark.read.parquet(f"{sf_dir}/events.parquet") \
-             .select("event_id", "ts")
-    return calendar_features(e, "ts").drop("ts")
-
-
-def q_ewma(spark, sf_dir):
-    """Bounded-window EWMA per user (temporal.ewma_bounded):
-    last-8-lags exponential smoothing as a fixed fan of lag
-    expressions over one key window — the scale-safe, SQL-exact
-    alternative to the sequential recursive form; alpha=0.5 keeps
-    every weight an exact binary fraction."""
-    from hipipe_spark.operators.temporal import ewma_bounded
-    e = spark.read.parquet(f"{sf_dir}/events.parquet") \
-             .select("user_id", "event_id", "ts", "value")
-    out = ewma_bounded(e, "user_id", ["ts", "event_id"], "value")
-    return out.select("user_id", "event_id", "ewma", "ewma_n")
-
-
-def q_influence(spark, sf_dir):
-    """Cook's-distance influence top-5 per event_type
-    (regression.ols2_influence): leverage and residual from the SAME
-    closed-form centered moments as the ols2 fit, broadcast back to
-    the rows; only the per-group top-k ranking shuffles raw rows."""
-    from hipipe_spark.operators.regression import ols2_influence
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.col("value").alias("y"),
-        F.hour("ts").cast("double").alias("x1"),
-        (F.dayofweek("ts") - 1).cast("double").alias("x2"))
-    return ols2_influence(e, "event_type", "y", "x1", "x2", top_k=5)
-
-
-def q_runs(spark, sf_dir):
-    """Wald-Wolfowitz runs test per user (stats.runs_test): sign
-    persistence of the median-split value sequence — the
-    counterpart of durbin_watson's magnitude correlation."""
-    from hipipe_spark.operators.stats import runs_test
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return runs_test(e, "user_id", ["ts", "event_id"], "value")
-
-
-def q_grubbs(spark, sf_dir):
-    """Grubbs single-outlier statistic per event_type
-    (stats.grubbs_stat): max |x - mean| / sd folded into the one
-    centered aggregate — max deviation recovered exactly from
-    max(d)/min(d) and the residual center."""
-    from hipipe_spark.operators.stats import grubbs_stat
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return grubbs_stat(e, "event_type", "value")
-
-
-def q_icc(spark, sf_dir):
-    """One-way random-effects ICC(1) per event_type across users
-    (stats.icc_oneway): the between-user share of value variance,
-    with the unbalanced-design n0 correction."""
-    from hipipe_spark.operators.stats import icc_oneway
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return icc_oneway(e, "event_type", "user_id", "value")
-
-
-def q_cronbach(spark, sf_dir):
-    """Cronbach's alpha over the user x event_type score grid
-    (evaluation.cronbach_alpha): internal consistency of per-type
-    value totals as five 'items' rating each user; complete
-    subjects only."""
-    from hipipe_spark.operators.evaluation import cronbach_alpha
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cronbach_alpha(e, "user_id", "event_type", "value")
-
-
-def q_partial_corr(spark, sf_dir):
-    """First-order partial correlation per return flag
-    (features.partial_corr): quantity vs revenue CONTROLLING for
-    discount — the confounder screen feature_corr cannot answer;
-    one centered aggregate of six pairwise moments."""
-    from hipipe_spark.operators.features import partial_corr
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_returnflag",
-        F.col("l_quantity").alias("x"),
-        (F.col("l_extendedprice") * (1.0 - F.col("l_discount")))
-         .alias("y"),
-        F.col("l_discount").alias("z"))
-    return partial_corr(li, "l_returnflag", "x", "y", "z")
-
-
-def q_overdispersion(spark, sf_dir):
-    """Poisson overdispersion gate per event_type over per-user
-    counts (stats.overdispersion): index-of-dispersion chi-square
-    via Wilson-Hilferty plus the negative-binomial moment fit for
-    groups that fail it."""
-    from hipipe_spark.operators.stats import overdispersion
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return overdispersion(e, "event_type", "user_id")
-
-
-def q_pacf(spark, sf_dir):
-    """Partial autocorrelation to lag 6 over the hourly event-count
-    series (temporal.pacf_table): Durbin-Levinson unrolled on the
-    one-row rounded-ACF frame, every phi a 9-dp rounded handoff so
-    the oracle replays the identical recursion bit-for-bit."""
-    from hipipe_spark.operators.temporal import pacf_table
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hours = (e.groupBy(
-        F.floor(F.col("ts").cast("timestamp").cast("double") / 3600)
-         .cast("bigint").alias("hour"))
-        .agg(F.count("*").cast("double").alias("cnt")))
-    return pacf_table(hours, "hour", "cnt", max_lag=6)
-
-
-def q_event_runs(spark, sf_dir):
-    """Run-length mining per user over the event-type sequence
-    (temporal.event_runs): retry-loop detection — longest identical
-    run, deterministic top category, share of rows inside runs of
-    three or more."""
-    from hipipe_spark.operators.temporal import event_runs
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return event_runs(e, "user_id", ["ts", "event_id"], "event_type")
-
-
-def q_unigram_roundtrip(spark, sf_dir):
-    """Unigram-LM tokenizer round-trip gate (unigram.unigram_train /
-    unigram_segment): train on a bounded hash-sample (two cluster
-    jobs at any vocab size — the bpe_merge_table_sampled policy),
-    Viterbi-segment every document with an Arrow-batched pandas_udf,
-    and emit the LOSSLESSNESS invariant the oracle can recompute
-    from raw text alone: concatenated piece characters must equal
-    the whitespace-stripped lowercased text, doc by doc. The
-    segmentation itself (an iterative EM artifact) is pytest-pinned;
-    this driver row value-checks that no character is ever dropped
-    or duplicated by the DP."""
-    from hipipe_spark.operators.unigram import (
-        unigram_segment, unigram_train,
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    vocab = unigram_train(docs.where("doc_id % 7 = 0"), "text",
-                          vocab_size=150, sample_cap=3000,
-                          max_piece_len=5, n_em=2)
-    seg = unigram_segment(docs, vocab, "text", out="pieces",
-                          max_piece_len=5)
-    stripped = F.length(F.regexp_replace(
-        F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", ""))
-    piece_chars = F.aggregate(
-        F.col("pieces"), F.lit(0),
-        lambda acc, x: acc + F.length(x))
-    return seg.select(
-        "doc_id",
-        stripped.cast("int").alias("n_chars_in"),
-        piece_chars.cast("int").alias("n_piece_chars"),
-        (piece_chars == stripped).alias("lossless"))
-
-
-def q_hurst(spark, sf_dir):
-    """Hurst exponent by rescaled-range analysis per user
-    (temporal.hurst_rs, block sizes 8/16/32): long-memory summary of
-    the event-value stream — one row_number exchange, per-size
-    (key, block) windows on a narrow projection, closed-form log-log
-    OLS on the per-key R/S curve; long format carries both the fit
-    (h, r2) and the diagnostic curve rows."""
-    from hipipe_spark.operators.temporal import hurst_rs
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return hurst_rs(e, "user_id", ["ts", "event_id"], "value",
-                    block_sizes=(8, 16, 32))
-
-
-def q_theil_u(spark, sf_dir):
-    """Theil's uncertainty coefficient both ways between event_type
-    and user cohort (drift.theil_u): the asymmetric does-X-predict-Y
-    companion of cramers_v/mutual_info, from the same one-aggregate
-    contingency cell table."""
-    from hipipe_spark.operators.drift import theil_u
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", (F.col("user_id") % 10).cast("int").alias("cohort"))
-    return theil_u(e, "event_type", "cohort")
-
-
-def q_srm(spark, sf_dir):
-    """Sample-ratio-mismatch gate per event_type (drift.srm_check):
-    parity-arm counts against the intended 50/50 split, Pearson
-    chi-square with Wilson-Hilferty tail, alpha=0.001 alarm."""
-    from hipipe_spark.operators.drift import srm_check
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.when(F.col("user_id") % 2 == 0, "a").otherwise("b").alias("arm"))
-    return srm_check(e, "event_type", "arm", {"a": 0.5, "b": 0.5})
-
-
-def q_vocab_richness(spark, sf_dir):
-    """Chao1 + Good-Turing vocabulary projection over documents
-    (retrieval.vocab_richness): frequency-of-frequencies reduce on
-    the vocab table - the asymptote bound and unseen-mass price next
-    to Heaps-law vocab_growth."""
-    from hipipe_spark.operators.retrieval import vocab_richness
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return vocab_richness(docs, "text")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict order is load-bearing: the driver records correctness rows
-    for the FIRST 50 entries only (rounds 1-4 each confirmed: the 50
-    CORRECTNESS rows are exactly the dict head).
-
-    Round-5 window (VERDICT r4 next-round #1/#3/#5): slots 1-6 re-prove
-    the round-4 exact-parity defects with their fixes landed — the four
-    array-output rows now JSON-canonicalized (embedding_pool,
-    hash_features, onehot_encode, plus the latent feature_hash) and the
-    signed-zero rows (bigram_pmi, cuped; calendar rotates in below with
-    the same fix). Slots 7-8 shrink the rows-only set: compress_pinned
-    value-checks the DEFLATE pandas_udf path against pinned
-    zlib.compress literals, and embedding_ivf_full pins the IVF
-    index/search machinery at n_probe == n_cells where it is provably
-    exact. Slots 9-50 rotate the next 42 never-driver-checked queries
-    in registry order (hits ... theil_u), including leakage_audit
-    (epoch-microsecond oracle fix) and calendar (round_norm fix).
-
-    After this round every window entry has a green row and the
-    never-checked remainder (srm, vocab_richness, cohort_retention's
-    tail onward — ~100 queries) is covered by the DRIVER-STRENGTH
-    bitwise replica (tools/check_oracles.py: IEEE-754 struct-pack
-    float comparison, signed zeros included, hard error on raw array
-    outputs — hardened per VERDICT r4 #2), run as a full 294-query
-    sweep each session. Queries with green driver rows from earlier
-    rounds (flagship, sessionize, the as-of strategy family, the dedup
-    family, ...) sit immediately after the head so their families
-    re-enter the window first if a regression ever needs re-proving;
-    ``flagship`` itself is additionally pinned by a replica pytest
-    (tests/test_driver_contract.py) so rotating it out does not lose
-    its gate.
-
-    Rows-only disclosures (no SQL-expressible oracle): bpe_merges,
-    embedding_pca, media_features, compress_ratio (float-ratio form;
-    the byte-count form compress_pinned IS value-checked),
-    embedding_ivf_topk (approximate n_probe < n_cells form; the exact
-    form embedding_ivf_full IS value-checked)."""
-    return {
-        # -- 1-50: round-5 driver window. Slots 1-6 re-prove the
-        #    r4/latent exact-parity defects (4 array-output rows via
-        #    JSON canonicalization incl. the latent feature_hash;
-        #    signed-zero cuped; bigram_pmi) -- VERDICT r4 ask #1.
-        #    Slots 7-8 convert two rows-only families to value-checked
-        #    rows (ask #5). Slots 9-50 rotate the next 42 never-
-        #    driver-checked queries in registry order (ask #3);
-        #    calendar and leakage_audit land here with their fixes.
-        "embedding_pool": q_embedding_pool,
-        "hash_features": q_hash_features,
-        "onehot_encode": q_onehot_encode,
-        "bigram_pmi": q_bigram_pmi,
-        "cuped": q_cuped,
-        "feature_hash": q_feature_hash,
-        "compress_pinned": q_compress_pinned,
-        "embedding_ivf_full": q_embedding_ivf_full,
-        "hits": q_hits,
-        "logrank": q_logrank,
-        "link_features": q_link_features,
-        "kcore": q_kcore,
-        "leakage_audit": q_leakage_audit,
-        "feature_corr": q_feature_corr,
-        "impute": q_impute,
-        "walk_forward": q_walk_forward,
-        "distinctive_terms": q_distinctive_terms,
-        "future_label": q_future_label,
-        "role_streak": q_role_streak,
-        "funnel": q_funnel,
-        "winnow_dedup": q_winnow,
-        "t_closeness": q_t_closeness,
-        "random_projection": q_random_projection,
-        "hbos": q_hbos,
-        "modularity": q_modularity,
-        "conv_winnow": q_conv_winnow,
-        "readability": q_readability,
-        "ad_test": q_ad_test,
-        "anova": q_anova,
-        "levene": q_levene,
-        "jarque_bera": q_jarque_bera,
-        "kruskal_wallis": q_kruskal_wallis,
-        "cmh": q_cmh,
-        "tost": q_tost,
-        "ols2": q_ols2,
-        "durbin_watson": q_durbin_watson,
-        "calendar": q_calendar,
-        "ewma": q_ewma,
-        "influence": q_influence,
-        "runs": q_runs,
-        "grubbs": q_grubbs,
-        "icc": q_icc,
-        "cronbach": q_cronbach,
-        "partial_corr": q_partial_corr,
-        "overdispersion": q_overdispersion,
-        "pacf": q_pacf,
-        "event_runs": q_event_runs,
-        "unigram_roundtrip": q_unigram_roundtrip,
-        "hurst": q_hurst,
-        "theil_u": q_theil_u,
-        # -- 51+: driver-green in rounds 1-4 (or rows-only/no-oracle),
-        #    re-verified every session by the DRIVER-STRENGTH bitwise
-        #    replica (tools/check_oracles.py)
-        "media_decode": q_media_decode,
-        "quality_mlp": q_quality_mlp,
-        "csv_roundtrip": q_csv_roundtrip,
-        "embedding_topk_dot": q_embedding_topk_dot,
-        "embedding_topk_l2": q_embedding_topk_l2,
-        "asof_forward": q_asof_forward,
-        "asof_nearest": q_asof_nearest,
-        "boilerplate_lines": q_boilerplate_lines,
-        "det_shuffle": q_det_shuffle,
-        "temperature_mixture": q_temperature_mixture,
-        "embedding_topk_int8": q_embedding_topk_int8,
-        "unigram_logprob": q_unigram_logprob,
-        "robust_scale": q_robust_scale,
-        "ngram_containment": q_ngram_containment,
-        "winsorize": q_winsorize,
-        "interval_join": q_interval_join,
-        "event_entropy": q_event_entropy,
-        "labels_next": q_labels_next,
-        "chunk_overlap": q_chunk_overlap,
-        "embedding_cov": q_embedding_cov,
-        "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
-        "hard_negatives": q_hard_negatives,
-        "render_convs": q_render_convs,
-        "truncate_convs": q_truncate_convs,
-        "dedup_keep_best": q_dedup_keep_best,
-        "source_report": q_source_report,
-        "source_cap": q_source_cap,
-        "sft_pipeline": q_sft_pipeline,
-        "token_truncate": q_token_truncate,
-        "hot_keys": q_hot_keys,
-        "group_stats": q_group_stats,
-        "ann_recall": q_ann_recall,
-        "freq_encode": q_freq_encode,
-        "lift_report": q_lift_report,
-        "conv_tempo": q_conv_tempo,
-        "woe_iv": q_woe_iv,
-        "woe_encode": q_woe_encode,
-        "time_split": q_time_split,
-        "bigram_ppl": q_bigram_ppl,
-        "freshness": q_freshness,
-        "group_znorm": q_group_znorm,
-        "turn_similarity": q_turn_similarity,
-        "kn_ppl": q_kn_ppl,
-        "changepoint": q_changepoint,
-        "eb_shrinkage": q_eb_shrinkage,
-        "conformal": q_conformal,
-        "srm": q_srm,
-        "vocab_richness": q_vocab_richness,
-        "flagship": q_flagship,
-        "quality_lang": q_quality_lang,
-        "asof_tolerance": q_asof_tolerance,
-        "backfill_bounded": q_backfill_bounded,
-        "rolling_range": q_rolling_range,
-        "stratified_sample": q_stratified_sample,
-        "mixture_sample": q_mixture_sample,
-        "bernoulli_sample": q_bernoulli_sample,
-        "pivot_status": q_pivot_status,
-        "distinct_count": q_distinct_count,
-        "percentiles": q_percentiles,
-        "rollup_counts": q_rollup_counts,
-        "semi_anti": q_semi_anti,
-        "set_ops": q_set_ops,
-        "approx_stats": q_approx_stats,
-        "flagship_profiles": q_flagship_profiles,
-        "ngram_jaccard_capped": q_ngram_jaccard_capped,
-        "media_meta": q_media_meta,
-        "repetition_stats": q_repetition_stats,
-        "pack_chunks": q_pack_chunks,
-        "pack_stats": q_pack_stats,
-        "contamination": q_contamination,
-        "pii_scrub": q_pii_scrub,
-        "c4_quality": q_c4_quality,
-        "vocab_topk": q_vocab_topk,
-        "training_pipeline": q_training_pipeline,
-        "bm25": q_bm25,
-        "generate_groups": q_generate_groups,
-        "generate_groups_multi": q_generate_groups_multi,
-        "ndim_ops": q_ndim_ops,
-        "tfidf": q_tfidf,
-        "decay_features": q_decay_features,
-        "cum_distinct": q_cum_distinct,
-        "rolling_median_past": q_rolling_median_past,
-        "psi_drift": q_psi_drift,
-        "ks_drift": q_ks_drift,
-        "cramers_v": q_cramers_v,
-        "mutual_info": q_mutual_info,
-        "quantile_bin": q_quantile_bin,
-        "target_encode_ordered": q_target_encode_ordered,
-        "standardize": q_standardize,
-        "asof_multi": q_asof_multi,
-        "asof_interp": q_asof_interp,
-        "prior_session": q_prior_session,
-        "transitions": q_transitions,
-        "salted_join": q_salted_join,
-        "time_grid": q_time_grid,
-        "conv_split": q_conv_split,
-        "token_budget": q_token_budget,
-        "bpe_merges": q_bpe_merges,
-        "sessionize": q_sessionize,
-        "lag_lead": q_lag_lead,
-        "asof_union": q_asof_union,
-        "filter_dim1": q_filter_dim1,
-        "transform_map": q_transform_map,
-        "index_mapper": q_index_mapper,
-        "pad_mask2": q_pad_mask2,
-        "token_stats": q_token_stats,
-        "fingerprint": q_fingerprint,
-        "exact_dedup": q_exact_dedup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_clusters": q_dedup_clusters,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash,
-        "embedding_topk": q_embedding_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "embedding_ivf_topk": q_embedding_ivf_topk,
-        "corpus_pipeline": q_corpus_pipeline,
-        "tpch_q3": q_tpch_q3,
-        "join_agg": q_join_agg,
-        "transform_cond": q_transform_cond,
-        "transform_dim2": q_transform_dim2,
-        "filter_dim2": q_filter_dim2,
-        "pad_mask": q_pad_mask,
-        "fixed_groups": q_fixed_groups,
-        "session_agg": q_session_agg,
-        "tpch_q1": q_tpch_q1,
-        "rolling": q_rolling,
-        "backfill": q_backfill,
-        "rolling_bucketed": q_rolling_bucketed,
-        "embedding_topk_numpy": q_embedding_topk_numpy,
-        "embedding_lsh_topk": q_embedding_lsh_topk,
-        "asof_broadcast": q_asof_broadcast,
-        "asof_cogroup": q_asof_cogroup,
-        "asof_bucketed": q_asof_bucketed,
-        "media_features": q_media_features,
-        "compress_ratio": q_compress_ratio,
-        "string_to_bool": q_string_to_bool,
-        "base64": q_base64,
-        "random_fill": q_random_fill,
-        "transform_prob": q_transform_prob,
-        "transform_dim3": q_transform_dim3,
-        "melt": q_melt,
-        "rank_stats": q_rank_stats,
-        "cube_counts": q_cube_counts,
-        "topk_per_group": q_topk_per_group,
-        "latest_per_key": q_latest_per_key,
-        "embedding_pca": q_embedding_pca,
-        "cohort_retention": q_cohort_retention,
-        "target_encode": q_target_encode,
-        "rolling_quantile": q_rolling_quantile,
-        "expectations": q_expectations,
-        "fk_audit": q_fk_audit,
-        "column_profile": q_column_profile,
-        "pq_adc_topk": q_pq_adc_topk,
-        "sliding_distinct": q_sliding_distinct,
-        "tool_profile": q_tool_profile,
-        "gap_autocorr": q_gap_autocorr,
-        "turn_flags": q_turn_flags,
-        "relevance_context": q_relevance_context,
-        "transcript_integrity": q_transcript_integrity,
-        "incremental_refresh": q_incremental_refresh,
-        "pit_window": q_pit_window,
-        "pit_multi": q_pit_multi,
-        "pit_extrema": q_pit_extrema,
-        "auc_score": q_auc_score,
-        "kappa": q_kappa,
-        "pref_pairs": q_pref_pairs,
-        "trend_slope": q_trend_slope,
-        "tool_cooccur": q_tool_cooccur,
-        "typo_pairs": q_typo_pairs,
-        "sb_ppl": q_sb_ppl,
-        "pagerank": q_pagerank,
-        "vocab_growth": q_vocab_growth,
-        "zorder": q_zorder,
-        "substring_dedup": q_substring_dedup,
-        "jsd_drift": q_jsd_drift,
-        "ranking_metrics": q_ranking_metrics,
-        "attribution": q_attribution,
-        "dsir": q_dsir,
-        "dsir_select": q_dsir_select,
-        "scd2": q_scd2,
-        "sample_per_key": q_sample_per_key,
-        "calibration": q_calibration,
-        "minhash_incremental": q_minhash_incremental,
-        "bootstrap_ci": q_bootstrap_ci,
-        "label_prop": q_label_prop,
-        "topic_segments": q_topic_segments,
-        "dup_weights": q_dup_weights,
-        "k_anonymity": q_k_anonymity,
-        "json_features": q_json_features,
-        "json_profile": q_json_profile,
-        "table_diff": q_table_diff,
-        "bt_ratings": q_bt_ratings,
-        "fleiss": q_fleiss,
-        "spearman": q_spearman,
-        "mad_outliers": q_mad_outliers,
-        "rrf": q_rrf,
-        "isotonic": q_isotonic,
-        "kripp": q_kripp,
-        "ab_tests": q_ab_tests,
-        "mann_whitney": q_mann_whitney,
-        "kaplan_meier": q_kaplan_meier,
-        "cusum": q_cusum,
-        "edit_pairs": q_edit_pairs,
-        "kmv_distinct": q_kmv_distinct,
-        "cms_heavy": q_cms_heavy,
-        "bloom_semi": q_bloom_semi,
-        "kendall": q_kendall,
-        "class_report": q_class_report,
-        "clf_summary": q_clf_summary,
-        "seasonal": q_seasonal,
-        "dp_counts": q_dp_counts,
-        "triangles": q_triangles,
-        "histq": q_histq,
-        "lttb": q_lttb,
-        "kmv_join": q_kmv_join,
-        "theil_sen": q_theil_sen,
-        "did": q_did,
-        "forecast_eval": q_forecast_eval,
-        "hll": q_hll,
-        "gini": q_gini,
-        "benford": q_benford,
-        "qnorm": q_qnorm,
-        "fs_link": q_fs_link,
-        "textrank": q_textrank,
-        "acf": q_acf,
-        "node_cc": q_node_cc,
-        "seasonal_anom": q_seasonal_anom,
-        "mde": q_mde,
-        "burstiness": q_burstiness,
-        "seq_patterns": q_seq_patterns,
-        "rfm": q_rfm,
-        "entropy_rate": q_entropy_rate,
-        "ccf": q_ccf,
-        "copurchase": q_copurchase,
-        "nelson_aalen": q_nelson_aalen,
-        "wasserstein": q_wasserstein,
-        "sprt": q_sprt,
-        "powerlaw": q_powerlaw,
-        "assortativity": q_assortativity,
-        "knee": q_knee,
-        "prop_ztest": q_prop_ztest,
-        "chi2": q_chi2,
-        "log_odds": q_log_odds,
-        "lorenz": q_lorenz,
-    }
-
-
-def _det_tokens_sql(text_expr: str) -> str:
-    """DuckDB twin of hipipe_spark.functions.text.tokens(lower(col))."""
-    return (f"CASE WHEN trim({text_expr}) = '' THEN CAST([] AS VARCHAR[]) "
-            f"ELSE string_split_regex(trim(lower({text_expr})), '\\s+') END")
-
-
-def _winnow_pairs_oracle_sql(src_sql: str, k: int, w: int,
-                             cap: int, threshold: float,
-                             max_df: int | None = None) -> str:
-    """DuckDB replay of winnow_fingerprints + winnow_pairs
-    (operators/dedup.py): the exact MOSS selection — poly-31 k-gram
-    fold over codepoints, LCG double-round mix, rightmost-tie window
-    min via the (h*256 + 255-pos) int64 packing — then the
-    fingerprint equi-join scored by overlap coefficient.
-    ``src_sql`` must yield columns (wid, wtext)."""
-    from hipipe_spark.functions.hashing import _A, _C, _M
-    hub = (f"hubs AS (SELECT fp FROM fp GROUP BY fp "
-           f"HAVING count(*) > {int(max_df)}),\n"
-           "      kept AS (SELECT f.wid, f.fp FROM fp f\n"
-           "               LEFT JOIN hubs h ON f.fp = h.fp "
-           "WHERE h.fp IS NULL),"
-           ) if max_df is not None else \
-          "kept AS (SELECT wid, fp FROM fp),"
-    return f"""
-      WITH d AS (SELECT wid,
-                        substring(lower(coalesce(wtext, '')), 1, {cap}) AS t
-                 FROM ({src_sql})),
-      nn AS (SELECT wid, t, length(t) - {k} + 1 AS n
-             FROM d WHERE length(t) - {k} + 1 >= {w}),
-      b AS (SELECT wid, n,
-        list_transform(range(1, n + 1), i ->
-          list_reduce(list_prepend(CAST(0 AS BIGINT),
-            list_transform(range(i, i + {k}),
-                           j -> CAST(ascii(substring(t, j, 1)) AS BIGINT))),
-            (acc, x) -> (acc * 31 + x) % {_M})) AS hs
-        FROM nn),
-      m AS (SELECT wid, n,
-        list_transform(hs,
-          x -> ((x * {_A} + {_C}) % {_M} * {_A} + {_C}) % {_M}) AS mh
-        FROM b),
-      e AS (SELECT wid, n,
-        list_transform(range(1, n + 1),
-                       i -> mh[i] * 256 + (255 - i)) AS encs FROM m),
-      mi AS (SELECT wid,
-        list_distinct(list_transform(
-          list_transform(range({w}, n + 1),
-                         p -> list_min(encs[p - {w} + 1 : p])),
-          v -> v // 256)) AS fps
-        FROM e),
-      fp AS (SELECT wid, unnest(fps) AS fp FROM mi),
-      sizes AS (SELECT wid, count(*) AS n_fp FROM fp GROUP BY wid),
-      {hub}
-      shared AS (SELECT a.wid AS id_a, b2.wid AS id_b,
-                        count(*) AS n_shared
-                 FROM kept a JOIN kept b2 ON a.fp = b2.fp
-                 WHERE a.wid < b2.wid GROUP BY 1, 2),
-      j AS (SELECT id_a, id_b, n_shared,
-                   sa.n_fp AS n_a, sb.n_fp AS n_b,
-                   round(n_shared / least(sa.n_fp, sb.n_fp), 6) AS sim
-            FROM shared
-            JOIN sizes sa ON sa.wid = id_a
-            JOIN sizes sb ON sb.wid = id_b)
-      SELECT id_a, id_b, n_shared, n_a, n_b, sim
-      FROM j WHERE sim >= {threshold}
-    """
-
-
-def _minhash_det_oracle(n_hashes: int = 32, bands: int = 16,
-                        threshold: float = 0.5) -> str:
-    """DuckDB replica of q_minhash_lsh (hash_family="det"): exact-dup
-    prepass (star edges), word-1-gram shingles, LCG minhash signatures,
-    band slices as bucket keys, candidate equi-join, exact set-Jaccard
-    verify. Every hash value is bit-identical to the Spark side
-    (functions/hashing.py det family)."""
-    from hipipe_spark.functions.hashing import (
-        det_hash_i64_sql, det_hash_str_i64_sql)
-    rpb = n_hashes // bands
-    base = det_hash_str_i64_sql("s", 0)
-    sig_items = ", ".join(
-        f"list_min(list_transform(hs, h -> {det_hash_i64_sql('h', i)}))"
-        for i in range(n_hashes))
-    banded = " UNION ALL ".join(
-        f"SELECT id, {b} AS band, sig[{b * rpb + 1}:{(b + 1) * rpb}] AS bh FROM sig"
-        for b in range(bands))
-    return f"""
-      WITH d AS (SELECT doc_id AS id, text FROM documents WHERE doc_id % 20 = 0),
-      rep AS (SELECT id, text, min(id) OVER (PARTITION BY md5(text)) AS rep FROM d),
-      star AS (SELECT rep AS id_a, id AS id_b, 1.0 AS jaccard FROM rep WHERE id <> rep),
-      sh AS (SELECT id, list_distinct({_det_tokens_sql('text')}) AS sh
-             FROM rep WHERE id = rep),
-      hs AS (SELECT id, sh, list_transform(sh, s -> {base}) AS hs FROM sh),
-      sig AS (SELECT id, [{sig_items}] AS sig FROM hs),
-      banded AS ({banded}),
-      cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-               FROM banded a JOIN banded b
-                 ON a.band = b.band AND a.bh = b.bh AND a.id < b.id),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               CASE WHEN len(list_distinct(list_concat(sa.sh, sb.sh))) > 0
-                    THEN CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                         / len(list_distinct(list_concat(sa.sh, sb.sh)))
-                    ELSE 0.0 END AS jaccard
-        FROM cand c JOIN hs sa ON sa.id = c.id_a JOIN hs sb ON sb.id = c.id_b)
-      SELECT id_a, id_b, round(jaccard, 6) AS jaccard
-      FROM verified WHERE jaccard >= {threshold}
-      UNION ALL
-      SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM star
-    """
-
-
-def _simhash_det_oracle(bits: int = 60, n_blocks: int = 4,
-                        max_hamming: int = 8) -> str:
-    """DuckDB replica of q_simhash (hash_family="det", 60-bit): per-token
-    LCG bit streams, sign-of-sum bit assembly, 4×15-bit pigeonhole
-    candidate rule (shares ≥1 block), hamming verify via bit_count(xor),
-    exact-dup prepass star edges."""
-    from hipipe_spark.functions.hashing import (
-        det_hash_i64_sql, det_hash_str_i64_sql)
-    from hipipe_spark.operators.dedup import SIMHASH_DET_SEED
-    blk_w = bits // n_blocks
-    mask = (1 << blk_w) - 1
-    base = det_hash_str_i64_sql("t", 0)
-    terms = " + ".join(
-        f"(CASE WHEN COALESCE(list_sum(list_transform(hs, h -> "
-        f"CASE WHEN (({det_hash_i64_sql('h', SIMHASH_DET_SEED + i)}) >> 15) & 1 = 1 "
-        f"THEN 1 ELSE -1 END)), 0) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(bits))
-    blocks_eq = " OR ".join(
-        f"(((a.simhash >> {b * blk_w}) & {mask}) = "
-        f"((b.simhash >> {b * blk_w}) & {mask}))"
-        for b in range(n_blocks))
-    return f"""
-      WITH d AS (SELECT doc_id AS id, text FROM documents WHERE doc_id % 20 = 0),
-      rep AS (SELECT id, text, min(id) OVER (PARTITION BY md5(text)) AS rep FROM d),
-      star AS (SELECT rep AS id_a, id AS id_b, 0 AS hamming FROM rep WHERE id <> rep),
-      tok AS (SELECT id, {_det_tokens_sql('text')} AS toks FROM rep WHERE id = rep),
-      hs AS (SELECT id, list_transform(toks, t -> {base}) AS hs FROM tok),
-      sim AS (SELECT id, CAST({terms} AS BIGINT) AS simhash FROM hs),
-      p AS (SELECT a.id AS id_a, b.id AS id_b,
-                   CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-            FROM sim a JOIN sim b ON a.id < b.id AND ({blocks_eq}))
-      SELECT id_a, id_b, hamming FROM p WHERE hamming <= {max_hamming}
-      UNION ALL
-      SELECT id_a, id_b, CAST(hamming AS INTEGER) AS hamming FROM star
-    """
-
-
-def _minhash_incremental_det_oracle(n_hashes: int = 32, bands: int = 16,
-                                    threshold: float = 0.5) -> str:
-    """DuckDB replica of q_minhash_incremental: corpus (doc_id%20==0)
-    signatures vs delta (doc_id%20==10) with delta-only exact prepass;
-    candidates = corpus x delta-rep band collisions + delta-rep
-    self-collisions; exact set-Jaccard verify; star edges at 1.0."""
-    from hipipe_spark.functions.hashing import (
-        det_hash_i64_sql, det_hash_str_i64_sql)
-    rpb = n_hashes // bands
-    base = det_hash_str_i64_sql("s", 0)
-    sig_items = ", ".join(
-        f"list_min(list_transform(hs, h -> {det_hash_i64_sql('h', i)}))"
-        for i in range(n_hashes))
-
-    def banded(src: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT id, {b} AS band, sig[{b * rpb + 1}:{(b + 1) * rpb}] AS bh"
-            f" FROM {src}" for b in range(bands))
-
-    return f"""
-      WITH corp AS (SELECT doc_id AS id, text FROM documents
-                    WHERE doc_id % 20 = 0),
-      delt AS (SELECT doc_id AS id, text FROM documents
-               WHERE doc_id % 20 = 10),
-      drep AS (SELECT id, text,
-                      min(id) OVER (PARTITION BY md5(text)) AS rep
-               FROM delt),
-      star AS (SELECT rep AS id_a, id AS id_b, 1.0 AS jaccard
-               FROM drep WHERE id <> rep),
-      csh AS (SELECT id, list_distinct({_det_tokens_sql('text')}) AS sh
-              FROM corp),
-      dsh AS (SELECT id, list_distinct({_det_tokens_sql('text')}) AS sh
-              FROM drep WHERE id = rep),
-      chs AS MATERIALIZED (
-        SELECT id, sh, list_transform(sh, s -> {base}) AS hs FROM csh),
-      dhs AS MATERIALIZED (
-        SELECT id, sh, list_transform(sh, s -> {base}) AS hs FROM dsh),
-      csig AS (SELECT id, [{sig_items}] AS sig FROM chs),
-      dsig AS (SELECT id, [{sig_items}] AS sig FROM dhs),
-      cband AS MATERIALIZED ({banded('csig')}),
-      dband AS MATERIALIZED ({banded('dsig')}),
-      cand AS (
-        SELECT least(c.id, n.id) AS id_a, greatest(c.id, n.id) AS id_b
-        FROM cband c JOIN dband n
-          ON c.band = n.band AND c.bh = n.bh AND c.id <> n.id
-        UNION
-        SELECT a.id AS id_a, b.id AS id_b
-        FROM dband a JOIN dband b
-          ON a.band = b.band AND a.bh = b.bh AND a.id < b.id),
-      shx AS (SELECT id, sh FROM chs UNION ALL SELECT id, sh FROM dhs),
-      verified AS (
-        SELECT c.id_a, c.id_b,
-               CASE WHEN len(list_distinct(list_concat(sa.sh, sb.sh))) > 0
-                    THEN CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                         / len(list_distinct(list_concat(sa.sh, sb.sh)))
-                    ELSE 0.0 END AS jaccard
-        FROM cand c
-        JOIN shx sa ON sa.id = c.id_a JOIN shx sb ON sb.id = c.id_b)
-      SELECT id_a, id_b, round(jaccard, 6) AS jaccard
-      FROM verified WHERE jaccard >= {threshold}
-      UNION ALL
-      SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM star
-    """
+def queries() -> dict[str, Query]:
+    """Every registered query: ``DRIVER_WINDOW`` first, then the rest in
+    registry order."""
+    return {**{name: QUERIES[name] for name in DRIVER_WINDOW}, **QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    lcg_ok = det_hash_i64_sql("o_orderkey", 3)
-    d = _oracle_sql_dict(lcg_ok)
-    d["rolling_bucketed"] = d["rolling"]          # identical semantics by design
-    # prefix filtering is complete: same output as the plain inverted index
-    d["ngram_jaccard_prefix"] = d["ngram_jaccard"]
-    d["embedding_topk_numpy"] = d["embedding_topk"]  # same result, BLAS impl
-    d["embedding_ivf_full"] = d["embedding_topk"]  # full probe == exact top-k
-    d["embedding_lsh_topk"] = d["embedding_topk"]  # probe_all == exact top-k
-    # n-clusterings split: initial full-ratio split (seed 3), volatile
-    # rows (init < 2) re-ranked per clustering with derived seeds —
-    # exact replica of generate_groups_multi's arithmetic
-    _mseeds = [3 + 7919 * (i + 1) for i in range(3)]
-    _ranks = "\n".join(
-        f""", r{i} AS (SELECT o_orderkey,
-               row_number() OVER (ORDER BY {det_hash_i64_sql('o_orderkey', s)},
-                                  o_orderkey) AS rn
-           FROM vol)"""
-        for i, s in enumerate(_mseeds))
-    _gcols = ",\n".join(
-        f"""CAST(CASE WHEN r{i}.rn IS NULL THEN i.g
-                  WHEN r{i}.rn <= CAST(floor(v * 1.0 / 2) AS BIGINT) THEN 0
-                  ELSE 1 END AS INTEGER) AS group_{i}"""
-        for i in range(3))
-    _joins = "\n".join(
-        f"LEFT JOIN r{i} ON i.o_orderkey = r{i}.o_orderkey" for i in range(3))
-    d["generate_groups_multi"] = f"""
-      WITH n AS (SELECT count(*) AS c FROM orders),
-      r AS (SELECT o_orderkey,
-                   row_number() OVER (ORDER BY {det_hash_i64_sql('o_orderkey', 3)},
-                                      o_orderkey) AS rn
-            FROM orders),
-      init AS (SELECT o_orderkey,
-                      CASE WHEN rn <= CAST(floor(c * 1.0 / 4) AS BIGINT) THEN 0
-                           WHEN rn <= 2 * CAST(floor(c * 1.0 / 4) AS BIGINT) THEN 1
-                           ELSE 2 END AS g
-               FROM r, n),
-      vol AS (SELECT o_orderkey FROM init WHERE g < 2),
-      vn AS (SELECT count(*) AS v FROM vol)
-      {_ranks}
-      SELECT i.o_orderkey, {_gcols}
-      FROM init i {_joins}, vn
-    """
-    d["stratified_sample"] = f"""
-      SELECT o_orderkey, o_orderstatus FROM (
-        SELECT o_orderkey, o_orderstatus,
-               row_number() OVER (PARTITION BY o_orderstatus
-                 ORDER BY {det_hash_i64_sql('o_orderkey', 11)}, o_orderkey) AS rk
-        FROM orders) WHERE rk <= 50
-    """
-    d["mixture_sample"] = f"""
-      SELECT doc_id, 0 AS source FROM documents
-      WHERE doc_id % 2 = 0 AND {det_hash01_sql('doc_id', 11)} < 0.5
-      UNION ALL
-      SELECT doc_id, 1 AS source FROM documents
-      WHERE doc_id % 2 = 1 AND {det_hash01_sql('doc_id', 12)} < 0.2
-    """
-    d["bernoulli_sample"] = f"""
-      SELECT event_id, user_id FROM events
-      WHERE {det_hash01_sql('user_id', 4)} < 0.25
-    """
-    d["minhash_lsh"] = _minhash_det_oracle()
-    d["minhash_incremental"] = _minhash_incremental_det_oracle()
-    from hipipe_spark.operators.bootstrap import bootstrap_mean_ci_oracle_sql
-    d["bootstrap_ci"] = bootstrap_mean_ci_oracle_sql(
-        value_expr="l_quantity",
-        key_expr="l_orderkey * 10 + l_linenumber",
-        table_sql=("SELECT l_orderkey, l_linenumber, l_returnflag, "
-                   "l_quantity FROM lineitem"),
-        group="l_returnflag", n_reps=50, seed=7)
-    d["simhash"] = _simhash_det_oracle()
-    # winnow: DuckDB replays the exact fingerprint selection
-    # (poly-31 k-gram fold -> LCG double-round mix -> rightmost-tie
-    # window min via the (h*256 + 255-pos) packing) then the pair join.
-    d["winnow_dedup"] = _winnow_pairs_oracle_sql(
-        src_sql=("SELECT doc_id AS wid, text AS wtext FROM documents "
-                 "WHERE doc_id % 5 = 0"),
-        k=5, w=4, cap=240, max_df=50, threshold=0.25)
-    d["ad_test"] = """
-      WITH a AS (SELECT CAST(value AS DOUBLE) AS value FROM events
-                 WHERE event_type = 'view'),
-      b AS (SELECT CAST(value AS DOUBLE) AS value FROM events
-            WHERE event_type = 'purchase'),
-      tagged AS (SELECT value, 1 AS is_a, 0 AS is_b FROM a
-                 UNION ALL SELECT value, 0, 1 FROM b),
-      counts AS (SELECT value, CAST(sum(is_a) AS BIGINT) AS n_a,
-                        CAST(sum(is_b) AS BIGINT) AS n_b
-                 FROM tagged GROUP BY value),
-      tot AS (SELECT CAST(sum(n_a) AS DOUBLE) AS na,
-                     CAST(sum(n_b) AS DOUBLE) AS nb FROM counts),
-      cum AS (SELECT value, n_a, n_b,
-                     sum(n_a + n_b) OVER w AS h,
-                     sum(n_a) OVER w AS ma
-              FROM counts
-              WINDOW w AS (ORDER BY value
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW)),
-      con AS (SELECT value, n_a, n_b,
-                round(CASE WHEN h < na + nb THEN
-                  (n_a + n_b) * pow((na + nb) * ma - na * h, 2.0)
-                    * (1.0 / na + 1.0 / nb)
-                    / (h * (na + nb - h)) / (na + nb)
-                ELSE 0.0 END, 9) AS contrib
-              FROM cum, tot)
-      SELECT value, n_a, n_b, round(contrib, 6) AS contrib,
-             round(sum(contrib) OVER (), 6) AS a2
-      FROM con
-    """
-    d["readability"] = r"""
-      WITH src AS (
-        SELECT doc_id,
-          CAST(CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-               ELSE len(string_split_regex(trim(text), '\s+'))
-               END AS DOUBLE) AS w,
-          CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-               AS DOUBLE) AS s,
-          CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-               AS DOUBLE) AS yraw,
-          CAST(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-               AS DOUBLE) AS c
-        FROM documents WHERE doc_id % 4 = 0),
-      n AS (SELECT doc_id, w, s, greatest(w, yraw) AS y, c FROM src)
-      SELECT doc_id,
-        CASE WHEN w > 0 THEN
-          round(206.835 - 1.015 * (w / s) - 84.6 * (y / w), 4)
-        END AS fre,
-        CASE WHEN w > 0 THEN
-          round(0.39 * (w / s) + 11.8 * (y / w) - 15.59, 4)
-        END AS fkgl,
-        CASE WHEN w > 0 THEN
-          round(4.71 * (c / w) + 0.5 * (w / s) - 21.43, 4)
-        END AS ari
-      FROM n
-    """
-    d["conv_winnow"] = _winnow_pairs_oracle_sql(
-        src_sql=("WITH t AS (" + _T + ") "
-                 "SELECT conv_id AS wid, "
-                 "string_agg(role || ': ' || text, chr(10) "
-                 "ORDER BY turn_idx, role, text) AS wtext "
-                 "FROM t GROUP BY conv_id"),
-        k=5, w=4, cap=240, max_df=60, threshold=0.2)
-    # NB: DuckDB's list_resize miscopies non-trivial default values when
-    # used inside a lambda — pad via list_concat + a generated fill list
-    def _fill(n_expr: str, v_expr: str) -> str:
-        return (f"list_transform(range(0, greatest(CAST({n_expr} AS BIGINT), 0)), "
-                f"_f -> {v_expr})")
-    d["pad_mask2"] = f"""
-      WITH d AS (SELECT doc_id, {_det_tokens_sql('text')} AS toks
-                 FROM documents WHERE doc_id % 10 = 0),
-      c AS (SELECT doc_id,
-                   list_transform(range(0, CAST(ceil(len(toks) / 7.0) AS INT)),
-                                  i -> toks[i*7+1 : i*7+7]) AS chunks
-            FROM d),
-      mx AS (SELECT max(len(chunks)) AS l1,
-                    max(coalesce(list_max(list_transform(chunks, s -> len(s))), 0)) AS l2
-             FROM c)
-      SELECT doc_id,
-             CAST(to_json(list_transform(
-               list_concat(chunks, {_fill('l1 - len(chunks)', 'CAST([] AS VARCHAR[])')}),
-               s -> list_concat(s, {_fill('l2 - len(s)', "'<pad>'")}))) AS VARCHAR) AS chunks,
-             CAST(to_json(list_transform(
-               list_concat(list_transform(chunks, s -> {_fill('len(s)', 'true')}),
-                           {_fill('l1 - len(chunks)', 'CAST([] AS BOOLEAN[])')}),
-               m -> list_concat(m, {_fill('l2 - len(m)', 'false')}))) AS VARCHAR) AS chunks_mask
-      FROM c, mx
-    """
-    d["ndim_ops"] = f"""
-      WITH d AS (SELECT doc_id, {_det_tokens_sql('text')} AS toks
-                 FROM documents WHERE doc_id % 10 = 0),
-      c AS (SELECT doc_id,
-                   list_transform(range(0, CAST(ceil(len(toks) / 7.0) AS INT)),
-                                  i -> toks[i*7+1 : i*7+7]) AS chunks
-            FROM d)
-      SELECT doc_id,
-             CAST(len(chunks) AS INTEGER) AS n_chunks,
-             CAST(to_json(list_transform(chunks, s -> CAST(len(s) AS INTEGER)))
-                  AS VARCHAR) AS chunk_lens,
-             CAST(to_json([CAST(len(chunks) AS BIGINT),
-                           CAST(coalesce(len(chunks[1]), 0) AS BIGINT)])
-                  AS VARCHAR) AS shp,
-             CAST(len(flatten(chunks)) AS INTEGER) AS n_flat,
-             CAST(to_json(list_transform(chunks,
-                    (s, i) -> list_transform(s, _x -> CAST(i - 1 AS BIGINT))))
-                  AS VARCHAR) AS gf1,
-             CAST(to_json(list_transform(chunks,
-                    (s, i) -> list_transform(s,
-                      (_x, j) -> CAST(coalesce(list_sum(
-                                   list_transform(chunks[1:i-1], q -> len(q))), 0)
-                                 + j - 1 AS BIGINT))))
-                  AS VARCHAR) AS gf2,
-             CAST(to_json(list_slice(
-                    list_concat(flatten(chunks), {_fill('5', "'<pad>'")}),
-                    1, 5)) AS VARCHAR) AS rz1,
-             CAST(to_json(list_transform(range(0, 3),
-                    i -> list_slice(
-                      list_concat(coalesce(chunks[i + 1], CAST([] AS VARCHAR[])),
-                                  {_fill('2', "'<pad>'")}),
-                      1, 2))) AS VARCHAR) AS rz2
-      FROM c
-    """
-    d["ngram_jaccard_capped"] = r"""
-      WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-      toks AS (
-        SELECT doc_id,
-               unnest(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS g
-        FROM d WHERE trim(text) <> ''),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-      hubs AS (SELECT g FROM toks GROUP BY g HAVING count(*) > 20),
-      ct AS (SELECT doc_id, g FROM toks WHERE g NOT IN (SELECT g FROM hubs)),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM ct a JOIN ct b ON a.g = b.g AND a.doc_id < b.doc_id),
-      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                FROM toks a JOIN toks b ON a.g = b.g AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
-      SELECT c.id_a, c.id_b,
-             round(CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter), 6) AS jaccard
-      FROM cand c
-      JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-      JOIN sizes sa ON sa.doc_id = c.id_a
-      JOIN sizes sb ON sb.doc_id = c.id_b
-      WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.5
-    """
-    d["ngram_containment"] = r"""
-      WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-      toks AS (
-        SELECT doc_id,
-               unnest(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS g
-        FROM d WHERE trim(text) <> ''),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-      hubs AS (SELECT g FROM toks GROUP BY g HAVING count(*) > 20),
-      ct AS (SELECT doc_id, g FROM toks WHERE g NOT IN (SELECT g FROM hubs)),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM ct a JOIN ct b ON a.g = b.g AND a.doc_id < b.doc_id),
-      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                FROM toks a JOIN toks b ON a.g = b.g AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
-      SELECT c.id_a, c.id_b,
-             round(CAST(i.inter AS DOUBLE) / sa.sz, 6) AS c_a_in_b,
-             round(CAST(i.inter AS DOUBLE) / sb.sz, 6) AS c_b_in_a
-      FROM cand c
-      JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-      JOIN sizes sa ON sa.doc_id = c.id_a
-      JOIN sizes sb ON sb.doc_id = c.id_b
-      WHERE CAST(i.inter AS DOUBLE) / sa.sz >= 0.6
-         OR CAST(i.inter AS DOUBLE) / sb.sz >= 0.6
-    """
-    # fake-media arithmetic replica (sources/multimodal.py gen_fake_media
-    # + extract_features): content = 32-byte sha256 digest repeated
-    # (1 + i%7) times then truncated to 32 + i%97 bytes; thumbs clamp to
-    # (32, 32); frames only for videos. crc32 has no DuckDB builtin and
-    # stays in the rows-only media_features twin.
-    # csv round-trip: the oracle recomputes the pre-roundtrip rows; the
-    # Spark side must recover them bit-for-bit through write_csv ->
-    # read_csv -> typed (DuckDB standard strings keep backslash literal;
-    # chr(10) is the embedded newline).
-    d["csv_roundtrip"] = r"""
-      SELECT o_orderkey AS okey, round(o_totalprice, 4) AS total,
-             ' pad,' || o_orderstatus || ',x"y\z' || chr(10) || 'end'
-               || CAST(o_orderkey % 7 AS VARCHAR) AS tricky
-      FROM orders WHERE o_orderkey % 100 = 0
-    """
-    # vendored-MLP replica (operators/mlp.py): the forward pass with the
-    # deterministic dyadic weights folded in as literals, term order
-    # pinned to mlp_predict — features are quality_lang's oracled
-    # DuckDB idioms, so the whole score is bit-identical.
-    from hipipe_spark.operators.mlp import mlp_oracle_expr
-    d["quality_mlp"] = rf"""
-      WITH t AS (
-        SELECT doc_id, text,
-          CASE WHEN trim(text) = '' THEN []
-               ELSE string_split_regex(trim(text), '\s+') END AS toks,
-          CASE WHEN trim(lower(text)) = '' THEN []
-               ELSE string_split_regex(trim(lower(text)), '\s+') END AS ltoks
-        FROM documents),
-      m AS (
-        SELECT doc_id,
-          CAST(len(toks) AS DOUBLE) AS f_ntok,
-          CASE WHEN length(text) > 0
-               THEN length(regexp_replace(text, '[\p{{L}}\p{{N}}\s]', '', 'g')) / length(text)
-               ELSE 0.0 END AS f_punct,
-          CASE WHEN len(ltoks) > 0
-               THEN len(list_filter(ltoks, x -> list_contains(
-                    ['the','and','of','to','is','in','that','it',
-                     'a','an','as','at','by','for','on','with'], x))) / len(ltoks)
-               ELSE 0.0 END AS f_stop,
-          CASE WHEN len(toks) > 0
-               THEN list_sum(list_transform(toks, x -> length(x))) / len(toks)
-               ELSE 0.0 END AS f_mwl
-        FROM t)
-      SELECT doc_id, round({mlp_oracle_expr()}, 6) AS mlp_score FROM m
-    """
-    # DEFLATE pinned-literal oracle: zlib.compress(level 6) byte
-    # counts of the pinned documents, recorded once as literals
-    # (_COMPRESS_PINNED) — verifies the Arrow pandas_udf plumbing
-    # end-to-end with integer byte counts. Same pattern as
-    # quality_mlp's weights-as-literals and media_decode's replica.
-    # Joining on (doc_id, byte length) picks the rows pinned for the
-    # SF being checked; a text that changed fails on row count (new
-    # length) or on n_comp.
-    _cp_vals = ", ".join(f"({i}, {r}, {c})" for i, r, c in _COMPRESS_PINNED)
-    d["compress_pinned"] = f"""
-      SELECT CAST(p.doc_id AS BIGINT) AS doc_id,
-             CAST(p.n_raw AS INTEGER) AS n_raw,
-             CAST(p.n_comp AS BIGINT) AS n_comp
-      FROM (VALUES {_cp_vals}) AS p(doc_id, n_raw, n_comp)
-      JOIN documents d ON d.doc_id = p.doc_id AND strlen(d.text) = p.n_raw
-    """
-    # real-codec arithmetic replica (sources/multimodal.py gen_real_media
-    # + decode_features): every PNG/WAV generation parameter is pure
-    # arithmetic in the id, so the oracle recomputes what a CORRECT
-    # decode must recover — pixel mean over (i*7+3j)%256, WAV RMS over
-    # (i*31+17t)%2048-1024, floor duration, aspect-preserving thumbs.
-    d["media_decode"] = """
-      WITH img AS (
-        SELECT i, 8 + i % 13 AS w, 8 + (3*i) % 11 AS h,
-               CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END AS ch
-        FROM range(0, 128) t(i) WHERE i % 3 = 0),
-      imean AS (
-        SELECT img.i, w, h, ch,
-               round(AVG(CAST((img.i*7 + 3*j.j) % 256 AS DOUBLE)), 4) AS mean_val,
-               CAST(GREATEST(1, FLOOR(w * LEAST(8.0/w, 8.0/h, 1.0))) AS INTEGER) AS tw,
-               CAST(GREATEST(1, FLOOR(h * LEAST(8.0/w, 8.0/h, 1.0))) AS INTEGER) AS th
-        FROM img CROSS JOIN range(0, 1100) j(j)
-        WHERE j.j < w*h*ch
-        GROUP BY img.i, w, h, ch),
-      aud AS (SELECT i, 200 + (i*13) % 57 AS ns
-              FROM range(0, 128) t(i) WHERE i % 3 = 1),
-      arms AS (
-        SELECT aud.i, ns,
-               round(sqrt(AVG(CAST(((aud.i*31 + 17*t.t) % 2048 - 1024) AS DOUBLE) ** 2)), 4) AS rms
-        FROM aud CROSS JOIN range(0, 257) t(t) WHERE t.t < ns
-        GROUP BY aud.i, ns),
-      vid AS (SELECT i, 6 + i % 7 AS w, 6 + (2*i) % 5 AS h,
-                     2 + i % 4 AS nf
-              FROM range(0, 128) t(i) WHERE i % 3 = 2),
-      vmean AS (
-        SELECT vid.i, w, h, nf,
-               round(AVG(CAST((vid.i*7 + 11*f.f + 3*j.j) % 256 AS DOUBLE)), 4) AS mean_val,
-               CAST(GREATEST(1, FLOOR(w * LEAST(8.0/w, 8.0/h, 1.0))) AS INTEGER) AS tw,
-               CAST(GREATEST(1, FLOOR(h * LEAST(8.0/w, 8.0/h, 1.0))) AS INTEGER) AS th
-        FROM vid CROSS JOIN range(0, 6) f(f) CROSS JOIN range(0, 160) j(j)
-        WHERE f.f < nf AND f.f % 2 = 0 AND j.j < w*h
-        GROUP BY vid.i, w, h, nf)
-      SELECT i AS media_id, 'image' AS kind,
-             CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-             CAST(ch AS INTEGER) AS channels,
-             CAST(NULL AS INTEGER) AS sample_rate,
-             CAST(NULL AS INTEGER) AS duration_ms,
-             CAST(NULL AS INTEGER) AS n_frames,
-             mean_val, tw AS thumb_w, th AS thumb_h
-      FROM imean
-      UNION ALL
-      SELECT i, 'audio', NULL, NULL, 1, 8000,
-             CAST((1000*ns)//8000 AS INTEGER), NULL, rms, NULL, NULL
-      FROM arms
-      UNION ALL
-      SELECT i, 'video', CAST(w AS INTEGER), CAST(h AS INTEGER), 1, NULL,
-             CAST(nf * 100 AS INTEGER), CAST(nf AS INTEGER),
-             mean_val, tw, th
-      FROM vmean
-    """
-    d["media_meta"] = """
-      SELECT i AS media_id,
-             CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS kind,
-             CAST(least(32 * (1 + i % 7), 32 + i % 97) AS INTEGER) AS n_bytes,
-             CAST(least(64 + i % 512, 32) AS INTEGER) AS thumb_w,
-             CAST(least(64 + (i * 3) % 512, 32) AS INTEGER) AS thumb_h,
-             CAST(CASE WHEN i % 3 = 2 THEN (1000 + i % 60000) // 5000
-                       ELSE 0 END AS INTEGER) AS n_frames
-      FROM range(0, 128) t(i)
-    """
-    d["flagship_profiles"] = f"""
-      WITH t AS ({_T}),
-      b AS (SELECT conv_id, turn_idx, ts, role, tool,
-                   lag(ts) OVER w AS prev_ts,
-                   lag(role, 1) OVER w AS role_lag_1,
-                   CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-                     OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS BIGINT) AS assistant_turns_10,
-                   round(avg(length(text))
-                     OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING), 4) AS mean_text_len_10,
-                   last_value(CASE WHEN tool <> '' THEN tool END IGNORE NULLS)
-                     OVER (w ROWS UNBOUNDED PRECEDING) AS tool_filled
-            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)),
-      feat AS (
-        SELECT conv_id, turn_idx, ts,
-               CAST(sum(CASE WHEN prev_ts IS NULL
-                             OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                        THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                          ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS session_seq,
-               round(epoch(ts) - epoch(prev_ts), 6) AS secs_since_prev,
-               role_lag_1, assistant_turns_10, mean_text_len_10, tool_filled
-        FROM b),
-      p AS (SELECT 'conv_' || lpad(CAST(user_id AS VARCHAR), 8, '0') AS conv_id,
-                   ts, round(value, 4) AS temperature
-            FROM events WHERE event_id % 2 = 0)
-      SELECT f.conv_id, f.turn_idx, f.ts, f.session_seq, f.secs_since_prev,
-             f.role_lag_1, f.assistant_turns_10, f.mean_text_len_10,
-             f.tool_filled, p.temperature AS temp_asof
-      FROM feat f ASOF LEFT JOIN p
-        ON f.conv_id = p.conv_id AND f.ts >= p.ts
-    """
-    d["boilerplate_lines"] = f"""
-      WITH tok AS (SELECT doc_id, {_det_tokens_sql('text')} AS lt
-                   FROM documents),
-      c AS (SELECT doc_id,
-                   list_transform(range(0, CAST(ceil(len(lt) / 2.0) AS INT)),
-                                  i -> array_to_string(lt[i*2+1 : i*2+2], ' '))
-                     AS lines
-            FROM tok),
-      ex AS (SELECT DISTINCT doc_id, unnest(lines) AS line FROM c),
-      f AS (SELECT line FROM ex GROUP BY line HAVING count(*) >= 25),
-      fl AS (SELECT coalesce(list(line), CAST([] AS VARCHAR[])) AS freq
-             FROM f)
-      SELECT doc_id,
-             coalesce(array_to_string(list_filter(lines,
-                               x -> NOT list_contains(freq, x)), chr(10)), '')
-               AS clean_text,
-             CAST(len(lines) AS INTEGER) AS n_lines,
-             CAST(len(lines) - len(list_filter(lines,
-                               x -> NOT list_contains(freq, x))) AS INTEGER)
-               AS n_removed
-      FROM c, fl
-    """
-    d["tfidf"] = r"""
-      WITH base AS (
-        SELECT doc_id,
-               CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(lower(text)), '\s+')
-               END AS lt
-        FROM documents),
-      tf AS (
-        SELECT doc_id,
-               CAST(len(list_filter(lt, x -> x = 'join')) AS DOUBLE) AS tf0,
-               CAST(len(list_filter(lt, x -> x = 'dup')) AS DOUBLE) AS tf1,
-               CAST(len(list_filter(lt, x -> x = 'vector')) AS DOUBLE) AS tf2
-        FROM base),
-      st AS (
-        SELECT count(*) AS n,
-               sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-               sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-               sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-        FROM tf)
-      SELECT doc_id,
-             round(0.0
-                   + tf0 * (ln((n + 1.0) / (df0 + 1.0)) + 1.0)
-                   + tf1 * (ln((n + 1.0) / (df1 + 1.0)) + 1.0)
-                   + tf2 * (ln((n + 1.0) / (df2 + 1.0)) + 1.0),
-                   6) AS tfidf
-      FROM tf, st
-      WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0
-    """
-    d["det_shuffle"] = f"""
-      SELECT doc_id,
-             CAST(row_number() OVER (
-               ORDER BY {det_hash_i64_sql('doc_id', 7)}, doc_id) - 1
-               AS BIGINT) AS shuffle_rank
-      FROM documents
-    """
-    d["temperature_mixture"] = f"""
-      WITH n AS (SELECT lang, count(*) AS nd FROM documents GROUP BY lang),
-      z AS (SELECT sum(pow(CAST(nd AS DOUBLE), 0.5)) AS z FROM n),
-      r AS (SELECT lang,
-                   least(1.0, pow(CAST(nd AS DOUBLE), 0.5) / z * 250.0
-                              / CAST(nd AS DOUBLE)) AS rate
-            FROM n, z)
-      SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-      WHERE {det_hash01_sql('d.doc_id', 3)} < rate
-    """
-    # decay: identical left-associated sums (j=1..8) — same evaluation
-    # order as DecayAgg's explicit fold, so values match to libm ulp
-    _wterms = " + ".join(
-        f"COALESCE(exp(-(epoch(ts) - epoch(lag(ts, {j}) OVER w)) / 600.0), 0)"
-        for j in range(1, 9))
-    _sterms = " + ".join(
-        f"COALESCE(exp(-(epoch(ts) - epoch(lag(ts, {j}) OVER w)) / 600.0)"
-        f" * CAST(lag(length(text), {j}) OVER w AS DOUBLE), 0)"
-        for j in range(1, 9))
-    d["decay_features"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-                   {_wterms} AS wsum,
-                   {_sterms} AS dsum
-            FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx))
-      SELECT conv_id, turn_idx,
-             round(wsum, 4) AS decay_wsum,
-             round(dsum, 4) AS decay_sum,
-             round(CASE WHEN wsum > 0 THEN dsum / wsum END, 4) AS decay_mean
-      FROM s
-    """
-    d["cum_distinct"] = f"""
-      WITH t AS ({_T}),
-      v AS (SELECT conv_id, turn_idx, ts,
-                   CASE WHEN tool <> '' THEN tool END AS tool_v FROM t),
-      f AS (SELECT conv_id, turn_idx, ts,
-                   CASE WHEN tool_v IS NOT NULL AND row_number() OVER
-                        (PARTITION BY conv_id, tool_v ORDER BY ts, turn_idx) = 1
-                   THEN 1 ELSE 0 END AS flag FROM v)
-      SELECT conv_id, turn_idx,
-             CAST(COALESCE(sum(flag) OVER
-               (PARTITION BY conv_id ORDER BY ts, turn_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS INTEGER) AS tools_sofar
-      FROM f
-    """
-    from hipipe_spark.functions.hashing import det_hash_str_i64_sql as _dhs
-    d["target_encode_ordered"] = f"""
-      WITH t AS ({_T})
-      SELECT conv_id, turn_idx,
-             round((COALESCE(sum(CAST(length(text) AS DOUBLE)) OVER w, 0)
-                    + 10.0 * 25.0)
-                   / (CAST(COALESCE(count(*) OVER w, 0) AS DOUBLE) + 10.0),
-                   4) AS role_te
-      FROM t WINDOW w AS (PARTITION BY conv_id, role ORDER BY ts, turn_idx
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    """
-    d["quantile_bin"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-                   CAST(length(text) AS DOUBLE) AS x FROM t),
-      st AS (SELECT quantile_cont(x, [0.25, 0.5, 0.75]) AS bs FROM s)
-      SELECT conv_id, turn_idx,
-             CAST(len(list_filter(st.bs, b -> b <= x)) AS BIGINT)
-               AS text_len_bin
-      FROM s, st
-    """
-    d["winsorize"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-                   CAST(length(text) AS DOUBLE) AS x FROM t),
-      st AS (SELECT quantile_cont(x, 0.05) AS lo,
-                    quantile_cont(x, 0.95) AS hi FROM s)
-      SELECT conv_id, turn_idx,
-             round(least(greatest(x, lo), hi), 6) AS text_len_clip
-      FROM s, st
-    """
-    d["robust_scale"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-                   CAST(length(text) AS DOUBLE) AS x FROM t),
-      st AS (SELECT quantile_cont(x, 0.5) AS med,
-                    quantile_cont(x, 0.75) - quantile_cont(x, 0.25) AS iqr
-             FROM s)
-      SELECT conv_id, turn_idx,
-             round(CASE WHEN iqr > 0 THEN (x - med) / iqr END, 6)
-               AS text_len_r
-      FROM s, st
-    """
-    d["standardize"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-                   CAST(length(text) AS DOUBLE) AS x,
-                   CAST({_dhs('conv_id', 5)} AS DOUBLE) / 2147483648.0 AS u
-            FROM t),
-      st AS (SELECT avg(x) AS m, stddev_samp(x) AS sd FROM s WHERE u < 0.9)
-      SELECT conv_id, turn_idx,
-             round(CASE WHEN sd > 0 THEN (x - m) / sd END, 4) AS text_len_z
-      FROM s, st
-    """
-    d["conv_split"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT role, conv_id,
-                   CASE WHEN CAST({_dhs('conv_id', 5)} AS DOUBLE)
-                             / 2147483648.0 < 0.9 THEN 'train'
-                        WHEN CAST({_dhs('conv_id', 5)} AS DOUBLE)
-                             / 2147483648.0 < 0.9500000000000001 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM t)
-      SELECT split, role, CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-      FROM s GROUP BY split, role
-    """
-    from hipipe_spark.functions.hashing import det_hash_str_i64_sql as _dhs2
-    d["bigram_pmi"] = f"""
-      WITH t AS (SELECT {_det_tokens_sql('text')} AS toks FROM documents),
-      t2 AS (SELECT toks FROM t WHERE len(toks) >= 1),
-      uc AS (SELECT tok, count(*) AS n_tok
-             FROM (SELECT unnest(toks) AS tok FROM t2) GROUP BY tok),
-      pairs AS (SELECT unnest(list_transform(range(1, len(toks)),
-                       i -> toks[i] || ' ' || toks[i + 1])) AS bg
-                FROM t2 WHERE len(toks) >= 2),
-      bc AS (SELECT split_part(bg, ' ', 1) AS tok_a,
-                    split_part(bg, ' ', 2) AS tok_b,
-                    count(*) AS n_ab
-             FROM pairs GROUP BY 1, 2),
-      tot AS (SELECT (SELECT CAST(sum(n_tok) AS DOUBLE) FROM uc) AS tu,
-                     (SELECT CAST(count(*) AS DOUBLE) FROM pairs) AS tb)
-      SELECT tok_a, tok_b, CAST(n_ab AS BIGINT) AS n_ab,
-             round(ln((CAST(n_ab AS DOUBLE) / tb)
-                      / ((CAST(a.n_tok AS DOUBLE) / tu)
-                         * (CAST(b.n_tok AS DOUBLE) / tu))), 5) + 0.0 AS pmi
-      FROM bc JOIN uc a ON bc.tok_a = a.tok
-              JOIN uc b ON bc.tok_b = b.tok
-              CROSS JOIN tot
-      WHERE n_ab >= 5
-    """
-    d["hash_features"] = f"""
-      WITH d AS (SELECT doc_id, {_det_tokens_sql('text')} AS toks
-                 FROM documents WHERE doc_id % 10 = 0),
-      b AS (SELECT doc_id,
-                   list_transform(toks,
-                     t -> CAST(({_dhs2('t', 0)}) % 16 AS INTEGER)) AS bk
-            FROM d)
-      SELECT doc_id,
-             to_json(list_transform(range(0, 16),
-               bb -> CAST(len(list_filter(bk, x -> x = bb)) AS INTEGER)))
-               AS fv
-      FROM b
-    """
-    d["unigram_logprob"] = f"""
-      WITH d AS (SELECT doc_id AS id, {_det_tokens_sql('text')} AS toks
-                 FROM documents),
-      tok AS (SELECT id, unnest(toks) AS tok FROM d),
-      c AS (SELECT tok, count(*) AS cnt FROM tok GROUP BY tok),
-      st AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total,
-                    CAST(count(*) AS DOUBLE) AS vocab FROM c),
-      lp AS (SELECT tok, ln((cnt + 0.5) / (total + 0.5 * vocab)) AS lnp
-             FROM c, st),
-      agg AS (SELECT t.id, CAST(count(*) AS BIGINT) AS n_tokens,
-                     sum(l.lnp) / count(*) AS logprob
-              FROM tok t JOIN lp l USING (tok) GROUP BY t.id)
-      SELECT d.id, COALESCE(agg.n_tokens, 0) AS n_tokens,
-             round(agg.logprob, 5) AS logprob
-      FROM d LEFT JOIN agg USING (id)
-    """
-    d["embedding_pool"] = """
-      WITH e AS (SELECT vec_id % 50 AS g, CAST(embedding AS DOUBLE[]) AS v
-                 FROM embeddings),
-      x AS (SELECT g, unnest(v) AS x, generate_subscripts(v, 1) AS pos FROM e),
-      m AS (SELECT g, pos, avg(x) AS m, count(*) AS n FROM x GROUP BY g, pos)
-      SELECT CAST(g AS BIGINT) AS g,
-             to_json(list(CAST(round(m * 1000000.0, 0) AS BIGINT)
-                          ORDER BY pos)) AS pooled,
-             CAST(max(n) AS BIGINT) AS n_vecs
-      FROM m GROUP BY g
-    """
-    d["asof_multi"] = """
-      WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-      ra AS (SELECT user_id, ts, round(value, 4) AS val FROM events
-             WHERE event_id % 4 = 0),
-      rb AS (SELECT user_id, ts, round(value, 4) AS val FROM events
-             WHERE event_id % 4 = 2)
-      SELECT l.event_id, l.user_id, l.ts, ra.val AS val_a, rb.val AS val_b
-      FROM l
-      ASOF LEFT JOIN ra ON l.user_id = ra.user_id AND l.ts >= ra.ts
-      ASOF LEFT JOIN rb ON l.user_id = rb.user_id AND l.ts >= rb.ts
-    """
-    d["embedding_topk_int8"] = """
-      WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      s AS (SELECT max(list_max(list_transform(v, x -> abs(x)))) AS sc FROM c),
-      cq AS (SELECT vec_id,
-                    list_transform(v, x -> CAST(least(127, greatest(-127,
-                      CAST(round(x * (127.0 / sc)) AS INTEGER))) AS BIGINT)) AS q
-             FROM c, s),
-      qq AS (SELECT vec_id, q FROM cq WHERE vec_id < 5),
-      scored AS (
-        SELECT qq.vec_id AS query_id, cq.vec_id AS neighbor_id,
-               CAST(list_dot_product(qq.q, cq.q) AS BIGINT) AS dot_q
-        FROM cq, qq WHERE cq.vec_id <> qq.vec_id)
-      SELECT query_id, neighbor_id, dot_q, CAST(rank AS INTEGER) AS rank
-      FROM (SELECT *, row_number() OVER
-              (PARTITION BY query_id ORDER BY dot_q DESC, neighbor_id) AS rank
-            FROM scored)
-      WHERE rank <= 5
-    """
-    d["ann_recall"] = """
-      WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
-      ex_scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               CASE WHEN list_sum(list_transform(q.v, x -> x * x)) > 0
-                     AND list_sum(list_transform(c.v, x -> x * x)) > 0
-               THEN list_dot_product(q.v, c.v) /
-                    (sqrt(list_sum(list_transform(q.v, x -> x * x))) *
-                     sqrt(list_sum(list_transform(c.v, x -> x * x))))
-               ELSE 0.0 END AS cos_raw
-        FROM c, q WHERE c.vec_id <> q.vec_id),
-      ex AS (SELECT query_id, neighbor_id
-             FROM (SELECT *, row_number() OVER
-                     (PARTITION BY query_id
-                      ORDER BY cos_raw DESC, neighbor_id) AS rank
-                   FROM ex_scored)
-             WHERE rank <= 5),
-      s AS (SELECT max(list_max(list_transform(v, x -> abs(x)))) AS sc FROM c),
-      cq AS (SELECT vec_id,
-                    list_transform(v, x -> CAST(least(127, greatest(-127,
-                      CAST(round(x * (127.0 / sc)) AS INTEGER))) AS BIGINT)) AS q
-             FROM c, s),
-      qq AS (SELECT vec_id, q FROM cq WHERE vec_id < 5),
-      ap_scored AS (
-        SELECT qq.vec_id AS query_id, cq.vec_id AS neighbor_id,
-               CAST(list_dot_product(qq.q, cq.q) AS BIGINT) AS dot_q
-        FROM cq, qq WHERE cq.vec_id <> qq.vec_id),
-      ap AS (SELECT query_id, neighbor_id
-             FROM (SELECT *, row_number() OVER
-                     (PARTITION BY query_id
-                      ORDER BY dot_q DESC, neighbor_id) AS rank
-                   FROM ap_scored)
-             WHERE rank <= 5),
-      base AS (SELECT query_id, COUNT(*) AS n_exact FROM ex GROUP BY query_id),
-      h AS (SELECT ex.query_id, COUNT(*) AS n_hit
-            FROM ex JOIN ap USING (query_id, neighbor_id)
-            GROUP BY ex.query_id)
-      SELECT b.query_id,
-             CAST(n_exact AS INT) AS n_exact,
-             CAST(COALESCE(n_hit, 0) AS INT) AS n_hit,
-             round(CAST(COALESCE(n_hit, 0) AS DOUBLE) / n_exact, 6) AS recall
-      FROM base b LEFT JOIN h USING (query_id)
-    """
-    d["freq_encode"] = """
-      WITH fit AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-      tot AS (SELECT COUNT(*) AS n FROM fit WHERE lang IS NOT NULL),
-      f AS (SELECT lang, COUNT(*) AS cnt FROM fit
-            WHERE lang IS NOT NULL GROUP BY lang),
-      v AS (SELECT lang FROM fit WHERE lang IS NOT NULL
-            GROUP BY lang HAVING COUNT(*) >= 50)
-      SELECT d.doc_id, d.lang,
-             round(COALESCE(CAST(f.cnt AS DOUBLE), 0.0) / tot.n, 6)
-               AS lang_freq,
-             CASE WHEN v.lang IS NOT NULL THEN d.lang
-                  ELSE '__other__' END AS lang_c
-      FROM documents d
-      LEFT JOIN f USING (lang)
-      LEFT JOIN v USING (lang)
-      CROSS JOIN tot
-    """
-    d["onehot_encode"] = """
-      WITH fit AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-      f AS (SELECT lang, COUNT(*) AS cnt FROM fit
-            WHERE lang IS NOT NULL GROUP BY lang HAVING COUNT(*) >= 50),
-      v AS (SELECT lang,
-                   CAST(row_number() OVER (ORDER BY cnt DESC, lang) - 1
-                        AS INTEGER) AS pos
-            FROM f),
-      n AS (SELECT COUNT(*) AS dim FROM v)
-      SELECT d.doc_id, d.lang,
-             CAST(COALESCE(v.pos, -1) AS INTEGER) AS lang_idx,
-             to_json(list_transform(range(0, n.dim),
-               i -> CASE WHEN i = v.pos THEN 1 ELSE 0 END)) AS lang_vec
-      FROM documents d LEFT JOIN v USING (lang) CROSS JOIN n
-    """
-    d["lift_report"] = """
-      WITH s AS (SELECT CAST(length(text) AS DOUBLE) AS x,
-                        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                 FROM documents),
-      st AS (SELECT quantile_cont(x,
-               [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-             FROM s),
-      b AS (SELECT CAST(len(list_filter(st.bs, e -> e <= x)) AS INTEGER)
-              AS bin, y FROM s, st),
-      p AS (SELECT bin, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS n_pos
-            FROM b GROUP BY bin),
-      tot AS (SELECT CAST(SUM(n_pos) AS DOUBLE) / CAST(SUM(n) AS DOUBLE)
-                AS ov FROM p)
-      SELECT bin, n, n_pos,
-             round(CAST(n_pos AS DOUBLE) / n, 6) AS rate,
-             CASE WHEN ov > 0
-                  THEN round((CAST(n_pos AS DOUBLE) / n) / ov, 6)
-             END AS lift,
-             CAST(SUM(n) OVER w AS BIGINT) AS cum_n,
-             round(CAST(SUM(n_pos) OVER w AS DOUBLE)
-                   / CAST(SUM(n) OVER w AS DOUBLE), 6) AS cum_rate,
-             CASE WHEN ov > 0
-                  THEN round((CAST(SUM(n_pos) OVER w AS DOUBLE)
-                              / CAST(SUM(n) OVER w AS DOUBLE)) / ov, 6)
-             END AS cum_lift
-      FROM p, tot
-      WINDOW w AS (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING)
-      ORDER BY bin DESC
-    """
-    d["conv_tempo"] = f"""
-      WITH t AS ({_T}),
-      g AS (SELECT conv_id, epoch(ts) AS es,
-                   epoch(ts) - lag(epoch(ts)) OVER
-                     (PARTITION BY conv_id ORDER BY ts, turn_idx) AS gap
-            FROM t)
-      SELECT conv_id,
-             CAST(COUNT(*) AS INTEGER) AS n_turns,
-             round(MAX(es) - MIN(es), 6) AS duration_s,
-             round(AVG(gap), 6) AS mean_gap,
-             round(stddev_samp(gap), 6) AS std_gap,
-             round(MAX(gap), 6) AS max_gap,
-             CASE WHEN (AVG(gap) + stddev_samp(gap)) > 0
-                  THEN round((stddev_samp(gap) - AVG(gap))
-                             / (stddev_samp(gap) + AVG(gap)), 6)
-             END AS burstiness
-      FROM g GROUP BY conv_id
-    """
-    _WOE_CTES = """
-      fit AS (SELECT *, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-              FROM documents WHERE doc_id % 3 > 0),
-      c AS (SELECT source, COUNT(*) AS n, SUM(y) AS pos
-            FROM fit WHERE source IS NOT NULL GROUP BY source),
-      t AS (SELECT CAST(SUM(pos) AS DOUBLE) AS pt,
-                   CAST(SUM(n - pos) AS DOUBLE) AS nt FROM c),
-      w AS (SELECT source,
-                   CAST(n AS BIGINT) AS n, CAST(pos AS BIGINT) AS pos,
-                   (pos + 0.5) / (pt + 1.0) AS pp,
-                   (n - pos + 0.5) / (nt + 1.0) AS pn
-            FROM c, t)
-    """
-    d["woe_iv"] = f"""
-      WITH {_WOE_CTES}
-      SELECT source, n AS source__n, pos AS source__pos,
-             round(ln(pp / pn), 6) AS source__woe,
-             round((pp - pn) * ln(pp / pn), 6) AS source__iv
-      FROM w
-    """
-    d["woe_encode"] = f"""
-      WITH {_WOE_CTES}
-      SELECT d.doc_id, d.source,
-             COALESCE(round(ln(w.pp / w.pn), 6), 0.0) AS source_woe
-      FROM documents d LEFT JOIN w USING (source)
-    """
-    d["time_split"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id,
-                   CASE WHEN epoch(ts) <
-                          epoch(TIMESTAMP '2024-01-20 00:00:00') - 86400.0
-                        THEN 'train'
-                        WHEN epoch(ts) >=
-                          epoch(TIMESTAMP '2024-01-20 00:00:00')
-                        THEN 'test'
-                        ELSE 'purged' END AS split
-            FROM t)
-      SELECT split, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs
-      FROM s GROUP BY split
-    """
-    d["bigram_ppl"] = f"""
-      WITH d AS (SELECT doc_id AS id, {_det_tokens_sql('text')} AS toks
-                 FROM documents),
-      ev AS (SELECT id,
-                    unnest(list_prepend(chr(2), toks)) AS ctx,
-                    unnest(list_append(toks, chr(3))) AS nxt
-             FROM d),
-      big AS (SELECT ctx, nxt, COUNT(*) AS cb FROM ev GROUP BY ctx, nxt),
-      cx AS (SELECT ctx, CAST(SUM(cb) AS DOUBLE) AS cc FROM big GROUP BY ctx),
-      v AS (SELECT CAST(COUNT(DISTINCT nxt) AS DOUBLE) AS vv FROM ev),
-      sc AS (SELECT e.id,
-                    ln((COALESCE(b.cb, 0) + 0.5)
-                       / (COALESCE(c.cc, 0) + 0.5 * v.vv)) AS lnp
-             FROM ev e
-             LEFT JOIN big b ON e.ctx = b.ctx AND e.nxt = b.nxt
-             LEFT JOIN cx c ON e.ctx = c.ctx
-             CROSS JOIN v)
-      SELECT id, CAST(COUNT(*) AS BIGINT) AS n_events,
-             round(AVG(lnp), 5) AS logprob,
-             round(exp(-AVG(lnp)), 4) AS ppl
-      FROM sc GROUP BY id
-    """
-    d["kn_ppl"] = f"""
-      WITH d AS (SELECT doc_id AS id, {_det_tokens_sql('text')} AS toks
-                 FROM documents),
-      ev AS (SELECT id,
-                    unnest(list_prepend(chr(2), toks)) AS ctx,
-                    unnest(list_append(toks, chr(3))) AS nxt
-             FROM d),
-      big AS (SELECT ctx, nxt, COUNT(*) AS cb FROM ev GROUP BY ctx, nxt),
-      cx AS (SELECT ctx, CAST(SUM(cb) AS DOUBLE) AS cc,
-                    CAST(COUNT(*) AS DOUBLE) AS n1c
-             FROM big GROUP BY ctx),
-      co AS (SELECT nxt, CAST(COUNT(*) AS DOUBLE) AS n1l
-             FROM big GROUP BY nxt),
-      bt AS (SELECT CAST(COUNT(*) AS DOUBLE) AS bb FROM big),
-      sc AS (SELECT e.id,
-                    ln((greatest(CAST(b.cb AS DOUBLE) - 0.75, 0.0)
-                        + 0.75 * c.n1c * (o.n1l / bt.bb)) / c.cc) AS lnp
-             FROM ev e
-             JOIN big b ON e.ctx = b.ctx AND e.nxt = b.nxt
-             JOIN cx c ON e.ctx = c.ctx
-             JOIN co o ON e.nxt = o.nxt
-             CROSS JOIN bt)
-      SELECT id, CAST(COUNT(*) AS BIGINT) AS n_events,
-             round(AVG(lnp), 5) AS logprob,
-             round(exp(-AVG(lnp)), 4) AS ppl
-      FROM sc GROUP BY id
-    """
-    d["changepoint"] = """
-      WITH s AS (SELECT event_type,
-                        CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                        CAST(COUNT(*) AS DOUBLE) AS x
-                 FROM events GROUP BY event_type,
-                                      CAST(CAST(ts AS DATE) AS VARCHAR)),
-      w AS (SELECT event_type, day, x,
-              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
-                AS i,
-              SUM(x) OVER (PARTITION BY event_type ORDER BY day
-                           ROWS UNBOUNDED PRECEDING) AS s,
-              SUM(x*x) OVER (PARTITION BY event_type ORDER BY day
-                             ROWS UNBOUNDED PRECEDING) AS s2,
-              COUNT(*) OVER (PARTITION BY event_type) AS n,
-              SUM(x) OVER (PARTITION BY event_type) AS st,
-              SUM(x*x) OVER (PARTITION BY event_type) AS s2t
-            FROM s),
-      c AS (SELECT *,
-              (s2 - s*s/CAST(i AS DOUBLE))
-              + ((s2t - s2) - (st - s)*(st - s)
-                 / (CAST(n AS DOUBLE) - CAST(i AS DOUBLE))) AS sse
-            FROM w WHERE i >= 3 AND i <= n - 3),
-      b AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-                        ORDER BY sse ASC, i ASC) AS r FROM c)
-      SELECT event_type, CAST(n AS BIGINT) AS n,
-             CAST(i AS BIGINT) AS cp_idx, day AS cp_order,
-             round(s2t - st*st/CAST(n AS DOUBLE), 6) AS sse_total,
-             round(sse, 6) AS sse_split,
-             round(s2t - st*st/CAST(n AS DOUBLE) - sse, 6) AS gain
-      FROM b WHERE r = 1
-      UNION ALL
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(NULL AS BIGINT) AS cp_idx, CAST(NULL AS VARCHAR) AS cp_order,
-             CAST(NULL AS DOUBLE) AS sse_total,
-             CAST(NULL AS DOUBLE) AS sse_split,
-             CAST(NULL AS DOUBLE) AS gain
-      FROM s GROUP BY event_type HAVING COUNT(*) < 6
-    """
-    d["eb_shrinkage"] = """
-      WITH g AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
-                        CAST(SUM(CASE WHEN event_type = 'error'
-                                      THEN 1 ELSE 0 END) AS BIGINT) AS k
-                 FROM events GROUP BY user_id),
-      r AS (SELECT *, CAST(k AS DOUBLE) / n AS rate FROM g),
-      p AS (SELECT *,
-              round(AVG(CASE WHEN n >= 5 THEN rate END) OVER (), 9) AS m,
-              round(VAR_SAMP(CASE WHEN n >= 5 THEN rate END) OVER (), 9)
-                AS v
-            FROM r),
-      q AS (SELECT *, round(greatest(m * (1 - m) / v - 1, 0), 9) AS kp
-            FROM p)
-      SELECT user_id, n, k, round(rate, 6) AS rate, m AS prior_m,
-             CASE WHEN v IS NOT NULL AND v > 0 THEN kp END AS prior_k,
-             round(CASE WHEN v IS NOT NULL AND v > 0
-                        THEN (k + m * kp) / (n + kp)
-                        ELSE rate END, 6) AS shrunk
-      FROM q
-    """
-    _ch7 = det_hash01_sql('event_id', 7)
-    d["conformal"] = f"""
-      WITH b AS (SELECT event_type, CAST(value AS DOUBLE) AS y,
-                   CASE WHEN {_ch7} < 0.5 THEN 'train'
-                        WHEN {_ch7} < 0.75 THEN 'cal'
-                        ELSE 'test' END AS split
-                 FROM events),
-      f AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_train,
-                   round(AVG(y), 6) AS yhat
-            FROM b WHERE split = 'train' GROUP BY event_type),
-      c AS (SELECT b.event_type, round(abs(b.y - f.yhat), 9) AS r
-            FROM b JOIN f USING (event_type) WHERE split = 'cal'),
-      cr AS (SELECT event_type, r,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY r ASC) AS rn,
-               COUNT(*) OVER (PARTITION BY event_type) AS ncal
-             FROM c),
-      q AS (SELECT event_type, r AS q_conf FROM cr
-            WHERE rn = CAST(ceil((ncal + 1) * 0.9) AS BIGINT)),
-      na AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_cal
-             FROM c GROUP BY event_type),
-      t AS (SELECT b.event_type, b.y, f.yhat
-            FROM b JOIN f USING (event_type) WHERE split = 'test'),
-      cov AS (SELECT t.event_type, CAST(COUNT(*) AS BIGINT) AS n_test,
-                round(AVG(CASE WHEN q.q_conf IS NOT NULL THEN
-                  CASE WHEN round(abs(t.y - t.yhat), 9) <= q.q_conf
-                       THEN 1.0 ELSE 0.0 END END), 6) AS coverage
-              FROM t LEFT JOIN q ON t.event_type = q.event_type
-              GROUP BY t.event_type)
-      SELECT f.event_type, f.n_train,
-             COALESCE(na.n_cal, 0) AS n_cal,
-             COALESCE(cov.n_test, 0) AS n_test,
-             f.yhat, q.q_conf, cov.coverage
-      FROM f LEFT JOIN na USING (event_type)
-             LEFT JOIN q ON f.event_type = q.event_type
-             LEFT JOIN cov ON f.event_type = cov.event_type
-    """
-    d["freshness"] = """
-      WITH l AS (SELECT event_id, user_id, ts FROM events
-                 WHERE event_id % 2 = 1),
-      r AS (SELECT user_id, ts FROM events WHERE event_id % 2 = 0),
-      j AS (SELECT l.ts AS lts, r.ts AS rts
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND l.ts >= r.ts),
-      s AS (SELECT CASE WHEN rts IS NOT NULL THEN 1 ELSE 0 END AS m,
-                   epoch(lts) - epoch(rts) AS st
-            FROM j)
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_left,
-             CAST(SUM(m) AS BIGINT) AS n_matched,
-             round(CAST(SUM(m) AS DOUBLE) / COUNT(*), 6) AS match_rate,
-             round(AVG(st), 6) AS mean_staleness,
-             round(quantile_cont(st, 0.5), 6) AS p50_staleness,
-             round(quantile_cont(st, 0.9), 6) AS p90_staleness,
-             round(quantile_cont(st, 0.99), 6) AS p99_staleness,
-             round(MAX(st), 6) AS max_staleness
-      FROM s
-    """
-    d["psi_drift"] = """
-      WITH t AS (
-        SELECT CAST(least(7, greatest(0,
-                 CAST(floor(CAST(length(text) AS DOUBLE) / 250.0) AS BIGINT)))
-               AS INTEGER) AS bucket,
-               CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS is_b
-        FROM documents),
-      c AS (SELECT bucket, CAST(sum(is_a) AS BIGINT) AS n_a,
-                   CAST(sum(is_b) AS BIGINT) AS n_b
-            FROM t GROUP BY bucket),
-      b AS (SELECT CAST(range AS INTEGER) AS bucket FROM range(8)),
-      f AS (SELECT b.bucket, COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b
-            FROM b LEFT JOIN c USING (bucket)),
-      tot AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM f),
-      p AS (SELECT bucket, n_a, n_b,
-                   (n_a + 0.5) / (ta + 0.5 * 8) AS p_a,
-                   (n_b + 0.5) / (tb + 0.5 * 8) AS p_b
-            FROM f, tot)
-      SELECT bucket, n_a, n_b,
-             round((p_a - p_b) * ln(p_a / p_b), 6) AS psi_term,
-             round(sum((p_a - p_b) * ln(p_a / p_b)) OVER (), 6) AS psi
-      FROM p
-    """
-    d["ks_drift"] = """
-      WITH t AS (
-        SELECT CAST(length(text) AS DOUBLE) AS value,
-               CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS is_b
-        FROM documents),
-      c AS (SELECT value, CAST(sum(is_a) AS BIGINT) AS n_a,
-                   CAST(sum(is_b) AS BIGINT) AS n_b
-            FROM t GROUP BY value),
-      tot AS (SELECT CAST(sum(n_a) AS DOUBLE) AS ta,
-                     CAST(sum(n_b) AS DOUBLE) AS tb FROM c),
-      g AS (SELECT value, n_a, n_b,
-                   abs(CAST(sum(n_a) OVER w AS DOUBLE) / ta
-                       - CAST(sum(n_b) OVER w AS DOUBLE) / tb) AS dd
-            FROM c, tot
-            WINDOW w AS (ORDER BY value
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-      SELECT value, n_a, n_b, round(dd, 6) AS d,
-             round(max(dd) OVER (), 6) AS ks
-      FROM g
-    """
-    d["cramers_v"] = f"""
-      WITH t AS ({_T}),
-      o AS (SELECT role AS a, length(text) % 3 AS b,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM t GROUP BY 1, 2),
-      rm AS (SELECT a, CAST(sum(n) AS BIGINT) AS n_row FROM o GROUP BY a),
-      cm AS (SELECT b, CAST(sum(n) AS BIGINT) AS n_col FROM o GROUP BY b),
-      gl AS (SELECT CAST(sum(n) AS BIGINT) AS n_tot,
-                    count(DISTINCT a) AS card_a,
-                    count(DISTINCT b) AS card_b FROM o),
-      cells AS (SELECT rm.a, cm.b, COALESCE(o.n, 0) AS n,
-                       rm.n_row, cm.n_col
-                FROM rm CROSS JOIN cm
-                LEFT JOIN o ON o.a = rm.a AND o.b = cm.b),
-      e AS (SELECT a, b, n,
-                   CAST(n_row * n_col AS DOUBLE) / n_tot AS e,
-                   power(n - CAST(n_row * n_col AS DOUBLE) / n_tot, 2)
-                     / (CAST(n_row * n_col AS DOUBLE) / n_tot) AS term,
-                   n_tot, least(card_a, card_b) - 1 AS dof
-            FROM cells, gl)
-      SELECT a, b, n, round(e, 4) AS e, round(term, 6) AS chi2_term,
-             round(sum(term) OVER (), 4) AS chi2,
-             round(CASE WHEN dof > 0 THEN
-                     sqrt(sum(term) OVER () / (n_tot * dof)) END, 6)
-               AS cramers_v
-      FROM e
-    """
-    from hipipe_spark.functions.hashing import det_hash_i64_sql as _dhi
-    d["token_budget"] = rf"""
-      WITH d AS (
-        SELECT doc_id,
-               CAST(CASE WHEN trim(text) = '' THEN 0
-                    ELSE len(string_split_regex(trim(text), '\s+'))
-                    END AS BIGINT) AS n_tok
-        FROM documents),
-      o AS (SELECT doc_id, n_tok,
-                   CAST({_dhi('doc_id', 3)} AS BIGINT) * 2147483648
-                     + ((doc_id % 2147483648 + 2147483648) % 2147483648)
-                     AS ord
-            FROM d),
-      c AS (SELECT doc_id, n_tok,
-                   CAST(sum(n_tok) OVER (ORDER BY ord
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS tok_cum
-            FROM o)
-      SELECT doc_id, n_tok, tok_cum FROM c WHERE tok_cum <= 15000
-    """
-    d["mutual_info"] = f"""
-      WITH t AS ({_T}),
-      o AS (SELECT role AS a, length(text) % 3 AS b,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM t GROUP BY 1, 2),
-      rm AS (SELECT a, CAST(sum(n) AS BIGINT) AS n_row FROM o GROUP BY a),
-      cm AS (SELECT b, CAST(sum(n) AS BIGINT) AS n_col FROM o GROUP BY b),
-      ha AS (SELECT sum(-(n_row / tot) * ln(n_row / tot)) AS h_a
-             FROM (SELECT n_row,
-                          CAST(sum(n_row) OVER () AS DOUBLE) AS tot FROM rm)),
-      hb AS (SELECT sum(-(n_col / tot) * ln(n_col / tot)) AS h_b
-             FROM (SELECT n_col,
-                          CAST(sum(n_col) OVER () AS DOUBLE) AS tot FROM cm)),
-      m AS (SELECT o.a, o.b, o.n, rm.n_row, cm.n_col,
-                   CAST(sum(o.n) OVER () AS DOUBLE) AS n_tot
-            FROM o JOIN rm USING (a) JOIN cm USING (b)),
-      f AS (SELECT a, b, n,
-                   (n / n_tot)
-                     * ln(CAST(n AS DOUBLE) * n_tot / (n_row * n_col))
-                     AS mi_term
-            FROM m)
-      SELECT a, b, n, round(mi_term, 6) AS mi_term,
-             round(sum(mi_term) OVER (), 6) AS mi,
-             round(h_a, 6) AS h_a, round(h_b, 6) AS h_b,
-             round(CASE WHEN h_a * h_b > 0 THEN
-                     sum(mi_term) OVER () / sqrt(h_a * h_b) END, 6) AS nmi
-      FROM f, ha, hb
-    """
-    d["rolling_median_past"] = f"""
-      WITH t AS ({_T}),
-      l AS (SELECT conv_id, turn_idx,
-                   list(length(text)) OVER
-                     (PARTITION BY conv_id ORDER BY ts, turn_idx
-                      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS vals
-            FROM t)
-      SELECT conv_id, turn_idx,
-             CASE WHEN len(vals) > 0
-                  THEN CAST(list_sort(vals)[CAST(ceil(0.5 * len(vals)) AS INTEGER)]
-                            AS INTEGER)
-             END AS med_len_7
-      FROM l
-    """
-    d["asof_interp"] = """
-      WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-           r AS (SELECT user_id, ts, round(value, 4) AS val FROM events WHERE event_id % 2 = 0),
-      b AS (SELECT l.event_id, l.user_id, l.ts, r.ts AS bts, r.val AS bval
-            FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts),
-      f AS (SELECT l.event_id, r.ts AS fts, r.val AS fval
-            FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts)
-      SELECT b.event_id, b.user_id, b.ts,
-             round(CASE WHEN b.bts IS NOT NULL AND f.fts IS NOT NULL
-                         AND f.fts > b.bts
-                        THEN b.bval + (f.fval - b.bval)
-                             * (epoch(b.ts) - epoch(b.bts))
-                             / (epoch(f.fts) - epoch(b.bts))
-                        WHEN b.bts IS NOT NULL THEN b.bval
-                        ELSE f.fval END, 6) AS val_interp
-      FROM b JOIN f USING (event_id)
-    """
-    d["prior_session"] = f"""
-      WITH t AS ({_T}),
-      g AS (SELECT conv_id, turn_idx, ts,
-                   CAST(length(text) AS INTEGER) AS text_len,
-                   lag(ts) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS prev_ts
-            FROM t),
-      s AS (SELECT conv_id, turn_idx, ts, text_len,
-                   CAST(sum(CASE WHEN prev_ts IS NULL
-                                 OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                            THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                              ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS session_seq
-            FROM g)
-      SELECT conv_id, turn_idx,
-             CASE WHEN session_seq > 0
-                  THEN CAST(count(*) OVER w AS INTEGER) END AS prev_session_n_turns,
-             CASE WHEN session_seq > 0
-                  THEN round(avg(CAST(text_len AS DOUBLE)) OVER w, 6)
-             END AS prev_session_mean_text_len,
-             CASE WHEN session_seq > 0
-                  THEN round(epoch(ts) - epoch(max(ts) OVER w), 6)
-             END AS secs_since_prev_session_end
-      FROM s
-      WINDOW w AS (PARTITION BY conv_id ORDER BY session_seq
-                   RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING)
-    """
-    d["transitions"] = f"""
-      WITH t AS ({_T}),
-      p AS (SELECT lag(role) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx)
-                     AS from_role,
-                   role AS to_role
-            FROM t),
-      c AS (SELECT from_role, to_role, CAST(count(*) AS BIGINT) AS n
-            FROM p WHERE from_role IS NOT NULL GROUP BY from_role, to_role)
-      SELECT from_role, to_role, n,
-             round(n / sum(n) OVER (PARTITION BY from_role), 6) AS p
-      FROM c
-    """
-    d["salted_join"] = """
-      SELECT l.l_orderkey, l.l_linenumber, l.l_quantity, o.o_orderpriority
-      FROM lineitem l
-      LEFT JOIN (SELECT o_orderkey, o_orderpriority FROM orders
-                 WHERE o_orderkey % 2 = 0) o
-        ON l.l_orderkey = o.o_orderkey
-    """
-    d["time_grid"] = """
-      WITH e AS (SELECT user_id, ts, round(value, 4) AS val FROM events),
-      s AS (SELECT user_id, min(ts) AS t0, max(ts) AS t1 FROM e GROUP BY user_id),
-      g AS (SELECT user_id,
-                   unnest(generate_series(t0, t1, INTERVAL 6 HOUR)) AS ts
-            FROM s)
-      SELECT g.user_id, g.ts, e.val
-      FROM g ASOF LEFT JOIN e ON g.user_id = e.user_id AND g.ts >= e.ts
-    """
-    d["group_znorm"] = f"""
-      WITH t AS ({_T}),
-      g AS (SELECT conv_id, turn_idx,
-                   CAST(length(text) AS DOUBLE) AS text_len,
-                   AVG(CAST(length(text) AS DOUBLE))
-                     OVER (PARTITION BY conv_id) AS m,
-                   stddev_samp(CAST(length(text) AS DOUBLE))
-                     OVER (PARTITION BY conv_id) AS sd
-            FROM t)
-      SELECT conv_id, turn_idx, text_len,
-             CASE WHEN sd > 0 THEN round((text_len - m) / sd, 6)
-                  ELSE 0.0 END AS text_len_z
-      FROM g
-    """
-    d["turn_similarity"] = f"""
-      WITH t AS ({_T}),
-      c AS (SELECT conv_id, turn_idx, role, ts,
-                   substr(text, 1, 64) AS tx
-            FROM t),
-      p AS (SELECT conv_id, turn_idx, tx,
-                   lag(tx) OVER (PARTITION BY conv_id
-                                 ORDER BY ts, turn_idx) AS pv,
-                   lag(tx) OVER (PARTITION BY conv_id, role
-                                 ORDER BY ts, turn_idx) AS pvr
-            FROM c)
-      SELECT conv_id, turn_idx,
-             CAST(levenshtein(tx, pv) AS INTEGER) AS lev_prev,
-             round(1.0 - levenshtein(tx, pv)
-                   / greatest(length(tx), length(pv), 1), 6) AS sim_prev,
-             CAST(levenshtein(tx, pvr) AS INTEGER) AS lev_prev_role,
-             round(1.0 - levenshtein(tx, pvr)
-                   / greatest(length(tx), length(pvr), 1), 6)
-               AS sim_prev_role
-      FROM p
-    """
-    d["feature_corr"] = """
-      WITH f AS (SELECT CAST(length(text) AS DOUBLE) AS a,
-                        CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                             AS DOUBLE) AS b,
-                        CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                             AS DOUBLE) AS c
-                 FROM documents)
-      SELECT 'len_chars' AS col_a, 'n_upper' AS col_b,
-             CAST(count(*) AS BIGINT) AS n_pairs,
-             round(corr(a, b), 6) AS corr FROM f
-      UNION ALL
-      SELECT 'len_chars', 'n_digits', CAST(count(*) AS BIGINT),
-             round(corr(a, c), 6) FROM f
-      UNION ALL
-      SELECT 'n_upper', 'n_digits', CAST(count(*) AS BIGINT),
-             round(corr(b, c), 6) FROM f
-    """
-    d["impute"] = """
-      WITH d AS (SELECT doc_id,
-                        CASE WHEN doc_id % 7 <> 0
-                             THEN CAST(n_chars AS DOUBLE) END AS x
-                 FROM documents),
-      f AS (SELECT quantile_cont(x, 0.5) AS fill
-            FROM d WHERE doc_id % 3 > 0)
-      SELECT doc_id, x,
-             CASE WHEN x IS NULL THEN 1 ELSE 0 END AS x__was_null,
-             round(COALESCE(x, fill), 6) AS x_f
-      FROM d, f
-    """
-    d["walk_forward"] = f"""
-      WITH t AS ({_T}),
-      span AS (SELECT CAST(floor(min(epoch(ts))) AS BIGINT) AS t0,
-                      CAST(ceil(max(epoch(ts))) AS BIGINT) AS t1 FROM t),
-      d AS (SELECT epoch(ts) AS es FROM t),
-      c AS (SELECT CASE WHEN t1 > t0
-                        THEN least(4, ((CAST(floor(es) AS BIGINT) - t0 + 1) * 5
-                                       - 1) // (t1 - t0))
-                        ELSE 0 END AS s,
-                   es FROM d, span),
-      e AS (SELECT s,
-                   CASE WHEN es >= CAST(t0 + (s + 1) * (t1 - t0) // 5 AS DOUBLE)
-                                   - 86400.0
-                        THEN 1 ELSE 0 END AS emb
-            FROM c, span),
-      h AS (SELECT s, emb, count(*) AS n FROM e GROUP BY s, emb),
-      folds AS (SELECT CAST(range AS INTEGER) AS fold FROM range(1, 5)),
-      agg AS (SELECT fold,
-                     CAST(sum(CASE WHEN s < fold - 1
-                                     OR (s = fold - 1 AND emb = 0)
-                                   THEN n ELSE 0 END) AS BIGINT) AS n_train,
-                     CAST(sum(CASE WHEN s = fold - 1 AND emb = 1
-                                   THEN n ELSE 0 END) AS BIGINT) AS n_purged,
-                     CAST(sum(CASE WHEN s = fold THEN n ELSE 0 END)
-                          AS BIGINT) AS n_test
-              FROM folds CROSS JOIN h GROUP BY fold)
-      SELECT fold,
-             CAST(t0 + fold * (t1 - t0) // 5 AS DOUBLE) - 86400.0 AS train_end_s,
-             CAST(t0 + fold * (t1 - t0) // 5 AS DOUBLE) AS test_start_s,
-             CAST(t0 + (fold + 1) * (t1 - t0) // 5 AS DOUBLE) AS test_end_s,
-             n_train, n_purged, n_test
-      FROM agg CROSS JOIN span
-    """
-    d["distinctive_terms"] = f"""
-      WITH d AS (SELECT doc_id AS id, {_det_tokens_sql('text')} AS toks
-                 FROM documents),
-      nn AS (SELECT CAST(count(*) AS DOUBLE) AS nd FROM d),
-      p AS (SELECT id, unnest(toks) AS term FROM d),
-      tf AS (SELECT id, term, CAST(count(*) AS BIGINT) AS tf
-             FROM p GROUP BY id, term),
-      dfr AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-              FROM tf GROUP BY term HAVING count(*) >= 2),
-      s AS (SELECT tf.id, tf.term, tf.tf, dfr.df,
-                   round(tf.tf * (ln((nd + 1.0) / (dfr.df + 1.0)) + 1.0), 6)
-                     AS score
-            FROM tf JOIN dfr USING (term) CROSS JOIN nn),
-      r AS (SELECT *, row_number() OVER
-              (PARTITION BY id ORDER BY score DESC, term ASC) AS rk
-            FROM s)
-      SELECT id, term, tf, df, score, CAST(rk AS INTEGER) AS "rank"
-      FROM r WHERE rk <= 3
-    """
-    d["future_label"] = f"""
-      WITH t AS ({_T}),
-      g AS (SELECT conv_id, turn_idx, epoch(ts) AS es,
-                   CAST(length(text) AS DOUBLE) AS v
-            FROM t),
-      w AS (SELECT conv_id, turn_idx,
-                   (count(*) OVER wh - count(*) OVER w0) AS fc,
-                   (COALESCE(sum(v) OVER wh, 0)
-                    - COALESCE(sum(v) OVER w0, 0)) AS fs
-            FROM g
-            WINDOW wh AS (PARTITION BY conv_id ORDER BY es
-                          RANGE BETWEEN CURRENT ROW AND 600 FOLLOWING),
-                   w0 AS (PARTITION BY conv_id ORDER BY es
-                          RANGE BETWEEN CURRENT ROW AND CURRENT ROW))
-      SELECT conv_id, turn_idx,
-             CAST(fc AS BIGINT) AS label_future_count,
-             CASE WHEN fc > 0 THEN round(fs, 6) ELSE 0.0 END
-               AS label_future_sum
-      FROM w
-    """
-    d["role_streak"] = f"""
-      WITH t AS ({_T}),
-      m AS (SELECT conv_id, turn_idx, role, ts,
-                   row_number() OVER
-                     (PARTITION BY conv_id ORDER BY ts, turn_idx)
-                 - row_number() OVER
-                     (PARTITION BY conv_id, role ORDER BY ts, turn_idx)
-                   AS mk
-            FROM t),
-      s AS (SELECT conv_id, turn_idx, role, ts,
-                   CAST(row_number() OVER
-                     (PARTITION BY conv_id, role, mk
-                      ORDER BY ts, turn_idx) AS INTEGER) AS role_streak
-            FROM m)
-      SELECT conv_id, turn_idx, role, role_streak,
-             CAST(sum(CASE WHEN role_streak = 1 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                        ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER)
-               AS role_island
-      FROM s
-    """
-    d["funnel"] = """
-      WITH e AS (SELECT user_id AS k, epoch(ts) AS ets, event_type AS et
-                 FROM events),
-      s1 AS (SELECT k, min(ets) AS t, min(ets) AS t0
-             FROM e WHERE et = 'view' GROUP BY k),
-      s2 AS (SELECT e.k, s1.t0, min(e.ets) AS t
-             FROM e JOIN s1 ON e.k = s1.k AND e.ets >= s1.t
-             WHERE e.et = 'click' GROUP BY e.k, s1.t0
-             HAVING min(e.ets) - s1.t0 <= 604800.0),
-      s3 AS (SELECT e.k, s2.t0, min(e.ets) AS t
-             FROM e JOIN s2 ON e.k = s2.k AND e.ets >= s2.t
-             WHERE e.et = 'purchase' GROUP BY e.k, s2.t0
-             HAVING min(e.ets) - s2.t0 <= 604800.0),
-      u AS (SELECT 1 AS step, 'view' AS name,
-                   CAST(count(*) AS BIGINT) AS n_users FROM s1
-            UNION ALL SELECT 2, 'click', CAST(count(*) AS BIGINT) FROM s2
-            UNION ALL SELECT 3, 'purchase', CAST(count(*) AS BIGINT) FROM s3)
-      SELECT step, name, n_users,
-             CASE WHEN max(CASE WHEN step = 1 THEN n_users END) OVER () > 0
-                  THEN round(CAST(n_users AS DOUBLE)
-                             / max(CASE WHEN step = 1 THEN n_users END)
-                               OVER (), 6)
-             END AS conv_rate
-      FROM u
-    """
-    d["cohort_retention"] = """
-      WITH a AS (SELECT DISTINCT user_id AS k,
-                        CAST(floor(epoch(ts) / 86400.0) AS BIGINT) AS p
-                 FROM events),
-      f AS (SELECT k, min(p) AS cohort FROM a GROUP BY k),
-      j AS (SELECT a.k, f.cohort, a.p - f.cohort AS age
-            FROM a JOIN f USING (k)),
-      c AS (SELECT cohort, age, CAST(count(DISTINCT k) AS BIGINT)
-                     AS n_active
-            FROM j GROUP BY cohort, age),
-      sz AS (SELECT cohort, n_active AS csize FROM c WHERE age = 0)
-      SELECT c.cohort, c.age, c.n_active,
-             round(CAST(c.n_active AS DOUBLE) / sz.csize, 6) AS retention
-      FROM c JOIN sz USING (cohort)
-    """
-    d["target_encode"] = f"""
-      WITH b AS (SELECT doc_id, source,
-                        CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END
-                             AS DOUBLE) AS y,
-                        CAST(({det_hash_i64_sql('doc_id', 3)}) % 4
-                             AS INTEGER) AS fold
-                 FROM documents),
-      cell AS (SELECT source, fold, sum(y) AS s,
-                      CAST(count(y) AS BIGINT) AS n
-               FROM b GROUP BY source, fold),
-      cw AS (SELECT *, sum(s) OVER (PARTITION BY source) AS cs,
-                    sum(n) OVER (PARTITION BY source) AS cn
-             FROM cell),
-      ft AS (SELECT fold, sum(s) AS fs, sum(n) AS fn
-             FROM cell GROUP BY fold),
-      tot AS (SELECT sum(s) AS ts_, sum(n) AS tn FROM cell),
-      enc AS (SELECT cw.source, cw.fold,
-                     round((cw.cs - cw.s
-                            + 20.0 * ((tot.ts_ - ft.fs)
-                                      / (tot.tn - ft.fn)))
-                           / (cw.cn - cw.n + 20.0), 6) AS te
-              FROM cw JOIN ft USING (fold) CROSS JOIN tot)
-      SELECT b.doc_id, b.source, b.fold AS source__fold,
-             enc.te AS source__te
-      FROM b LEFT JOIN enc
-        ON b.source IS NOT DISTINCT FROM enc.source
-       AND b.fold = enc.fold
-    """
-    _fh = {}
-    for name, val in [
-        ("lang", "COALESCE(CAST(lang AS VARCHAR), '<NULL>')"),
-        ("source", "COALESCE(CAST(source AS VARCHAR), '<NULL>')"),
-        ("langxsource", "COALESCE(CAST(lang AS VARCHAR), '<NULL>') || chr(31)"
-                        " || COALESCE(CAST(source AS VARCHAR), '<NULL>')"),
-    ]:
-        _fh[name] = det_hash_str_i64_sql(f"'{name}=' || ({val})", 7)
-    d["feature_hash"] = f"""
-      WITH h AS (SELECT doc_id,
-                        CAST(({_fh['lang']}) AS BIGINT) AS h1,
-                        CAST(({_fh['source']}) AS BIGINT) AS h2,
-                        CAST(({_fh['langxsource']}) AS BIGINT) AS h3
-                 FROM documents),
-      e AS (SELECT doc_id,
-                   [struct_pack(b := CAST(h1 % 64 AS INTEGER),
-                                s := 1.0 - 2.0 * CAST((h1 // 64) % 2
-                                                      AS DOUBLE)),
-                    struct_pack(b := CAST(h2 % 64 AS INTEGER),
-                                s := 1.0 - 2.0 * CAST((h2 // 64) % 2
-                                                      AS DOUBLE)),
-                    struct_pack(b := CAST(h3 % 64 AS INTEGER),
-                                s := 1.0 - 2.0 * CAST((h3 // 64) % 2
-                                                      AS DOUBLE))] AS es
-            FROM h),
-      i AS (SELECT doc_id, es,
-                   list_sort(list_distinct(
-                     list_transform(es, x -> x.b))) AS fh_idx
-            FROM e)
-      SELECT doc_id, to_json(fh_idx) AS fh_idx,
-             to_json(list_transform(fh_idx,
-               bb -> CAST(list_sum(list_transform(es,
-                 x -> CASE WHEN x.b = bb THEN x.s ELSE 0.0 END))
-                 AS BIGINT))) AS fh_val
-      FROM i
-    """
-    d["rolling_quantile"] = f"""
-      WITH t AS ({_T})
-      SELECT conv_id, turn_idx,
-             round(quantile_cont(CAST(length(text) AS DOUBLE), 0.5)
-                     OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                           ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6)
-               AS roll_q
-      FROM t
-    """
-    d["expectations"] = """
-      WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CASE WHEN NOT (n_chars > 0) THEN 1 ELSE 0 END)
-             AS BIGINT) AS f0,
-        CAST(sum(CASE WHEN NOT (length(text) = n_chars) THEN 1 ELSE 0 END)
-             AS BIGINT) AS f1,
-        CAST(sum(CASE WHEN NOT (lang IS NOT NULL) THEN 1 ELSE 0 END)
-             AS BIGINT) AS f2,
-        CAST(sum(CASE WHEN NOT (length(text) >= 10) THEN 1 ELSE 0 END)
-             AS BIGINT) AS f3
-        FROM documents)
-      SELECT 1 AS rule_no, 'n_chars_positive' AS rule, n AS n_rows,
-             f0 AS n_fail, round(CAST(f0 AS DOUBLE) / n, 6) AS fail_rate
-        FROM a
-      UNION ALL SELECT 2, 'len_matches_n_chars', n, f1,
-             round(CAST(f1 AS DOUBLE) / n, 6) FROM a
-      UNION ALL SELECT 3, 'lang_present', n, f2,
-             round(CAST(f2 AS DOUBLE) / n, 6) FROM a
-      UNION ALL SELECT 4, 'text_min_len', n, f3,
-             round(CAST(f3 AS DOUBLE) / n, 6) FROM a
-    """
-    d["fk_audit"] = """
-      WITH k AS (SELECT DISTINCT c_custkey AS pk FROM customer
-                 WHERE c_custkey % 3 <> 0),
-      j AS (SELECT o.o_custkey AS ck, k.pk
-            FROM orders o LEFT JOIN k ON o.o_custkey = k.pk),
-      a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(sum(CASE WHEN ck IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_null_key,
-                   CAST(sum(CASE WHEN ck IS NOT NULL AND pk IS NULL
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan
-            FROM j)
-      SELECT n_rows, n_null_key, n_orphan,
-             round(CAST(n_orphan AS DOUBLE) / n_rows, 6) AS orphan_rate,
-             round(CAST(n_rows - n_orphan - n_null_key AS DOUBLE)
-                   / n_rows, 6) AS match_rate
-      FROM a
-    """
-    d["column_profile"] = """
-      WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          AS null0,
-        CAST(count(DISTINCT lang) AS BIGINT) AS nd0,
-        CAST(min(lang) AS VARCHAR) AS min0,
-        CAST(max(lang) AS VARCHAR) AS max0,
-        avg(TRY_CAST(lang AS DOUBLE)) AS mean0,
-        CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          AS null1,
-        CAST(count(DISTINCT source) AS BIGINT) AS nd1,
-        CAST(min(source) AS VARCHAR) AS min1,
-        CAST(max(source) AS VARCHAR) AS max1,
-        avg(TRY_CAST(source AS DOUBLE)) AS mean1,
-        CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          AS null2,
-        CAST(count(DISTINCT n_chars) AS BIGINT) AS nd2,
-        CAST(min(n_chars) AS VARCHAR) AS min2,
-        CAST(max(n_chars) AS VARCHAR) AS max2,
-        avg(CAST(n_chars AS DOUBLE)) AS mean2
-        FROM documents)
-      SELECT 'lang' AS "column", n AS n_rows, null0 AS n_null,
-             round(CAST(null0 AS DOUBLE) / n, 6) AS null_rate,
-             nd0 AS n_distinct, min0 AS min_s, max0 AS max_s,
-             round(mean0, 6) AS mean FROM a
-      UNION ALL SELECT 'source', n, null1,
-             round(CAST(null1 AS DOUBLE) / n, 6), nd1, min1, max1,
-             round(mean1, 6) FROM a
-      UNION ALL SELECT 'n_chars', n, null2,
-             round(CAST(null2 AS DOUBLE) / n, 6), nd2, min2, max2,
-             round(mean2, 6) FROM a
-    """
-    # PQ-ADC oracle: regenerate the formula codebooks inline and mirror
-    # every left-fold (t-ascending dist/LUT sums, s-ascending dot/xsq)
-    # so each double matches the Spark expression bit-for-bit.
-    _pq_m, _pq_k, _pq_ds = 4, 16, 16
-
-    def _pq_c(s, j, t):
-        return (31 * j + 17 * t + 13 * s) % 23 - 11
-
-    def _fold(terms):
-        return (f"list_reduce(list_prepend(0.0, {terms}), "
-                f"(a, b) -> a + b)")
-
-    _dist, _lut, _sqlit = [], [], []
-    for s in range(_pq_m):
-        t_dist = (f"list_transform(range(0, {_pq_ds}), t -> "
-                  f"(cv[{s * _pq_ds} + t + 1] - CAST((31*j + 17*t "
-                  f"+ {13 * s}) % 23 - 11 AS DOUBLE)) "
-                  f"* (cv[{s * _pq_ds} + t + 1] - CAST((31*j + 17*t "
-                  f"+ {13 * s}) % 23 - 11 AS DOUBLE)))")
-        _dist.append(f"list_transform(range(0, {_pq_k}), "
-                     f"j -> {_fold(t_dist)})")
-        t_lut = (f"list_transform(range(0, {_pq_ds}), t -> "
-                 f"qv[{s * _pq_ds} + t + 1] * CAST((31*j + 17*t "
-                 f"+ {13 * s}) % 23 - 11 AS DOUBLE))")
-        _lut.append(f"list_transform(range(0, {_pq_k}), "
-                    f"j -> {_fold(t_lut)})")
-        _sqlit.append("[" + ", ".join(
-            f"{float(sum(_pq_c(s, j, t) ** 2 for t in range(_pq_ds)))}"
-            for j in range(_pq_k)) + "]")
-    _codes = ", ".join(
-        f"CAST(list_position(d{s}, list_min(d{s})) - 1 AS INTEGER)"
-        for s in range(_pq_m))
-    _xsq = " + ".join(f"({_sqlit[s]})[codes[{s + 1}] + 1]"
-                      for s in range(_pq_m))
-    _qn = _fold("list_transform(range(0, 64), i -> qv[i+1] * qv[i+1])")
-    _dot = _fold(f"list_transform(range(0, {_pq_m}), "
-                 f"s -> list_extract(list_extract(lut, s + 1), "
-                 f"list_extract(codes, s + 1) + 1))")
-    d["pq_adc_topk"] = f"""
-      WITH c0 AS (SELECT vec_id AS neighbor_id,
-                         CAST(embedding AS DOUBLE[]) AS cv
-                  FROM embeddings),
-      cd AS (SELECT neighbor_id,
-                    {', '.join(f'{_dist[s]} AS d{s}'
-                               for s in range(_pq_m))}
-             FROM c0),
-      enc AS (SELECT neighbor_id, [{_codes}] AS codes FROM cd),
-      enc2 AS (SELECT neighbor_id, codes, {_xsq} AS xsq FROM enc),
-      q0 AS (SELECT vec_id AS query_id,
-                    CAST(embedding AS DOUBLE[]) AS qv
-             FROM embeddings WHERE vec_id < 5),
-      ql AS (SELECT query_id,
-                    [{', '.join(_lut)}] AS lut,
-                    sqrt({_qn}) AS qnorm
-             FROM q0),
-      sc AS (SELECT ql.query_id, enc2.neighbor_id,
-                    CASE WHEN enc2.xsq > 0 AND ql.qnorm > 0
-                         THEN ({_dot}) / (ql.qnorm * sqrt(enc2.xsq))
-                         ELSE 0.0 END AS score
-             FROM enc2 CROSS JOIN ql
-             WHERE enc2.neighbor_id <> ql.query_id),
-      r AS (SELECT query_id, neighbor_id, score,
-                   CAST(row_number() OVER
-                     (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS INTEGER)
-                     AS rank
-            FROM sc)
-      SELECT query_id, neighbor_id, round(score, 6) AS score, rank
-      FROM r WHERE rank <= 5
-    """
-    d["sliding_distinct"] = """
-      WITH e AS (SELECT user_id AS k, epoch(ts) AS es FROM events),
-      x AS (SELECT k, unnest(range(
-                CAST(floor((es - 259200.0) / 86400.0) + 1 AS BIGINT),
-                CAST(floor(es / 86400.0) AS BIGINT) + 1)) AS w
-            FROM e),
-      u AS (SELECT DISTINCT k, w FROM x)
-      SELECT round(w * 86400.0, 6) AS window_start_s,
-             round(w * 86400.0 + 259200.0, 6) AS window_end_s,
-             CAST(count(*) AS BIGINT) AS n_active
-      FROM u GROUP BY w
-    """
-    d["tool_profile"] = f"""
-      WITH t AS ({_T}),
-      c AS (SELECT conv_id, tool, CAST(count(*) AS BIGINT) AS cc
-            FROM t GROUP BY conv_id, tool),
-      ent AS (SELECT conv_id,
-                     CAST(sum(cc) AS BIGINT) AS tool_n,
-                     CAST(count(*) AS INTEGER) AS tool_n_cats,
-                     round(ln(sum(cc)) - sum(cc * ln(cc)) / sum(cc), 6)
-                       AS tool_entropy,
-                     CASE WHEN count(*) > 1
-                          THEN round((ln(sum(cc))
-                                      - sum(cc * ln(cc)) / sum(cc))
-                                     / ln(CAST(count(*) AS DOUBLE)), 6)
-                          ELSE 0.0 END AS tool_norm_entropy
-              FROM c GROUP BY conv_id),
-      top AS (SELECT conv_id, tool AS top_tool FROM
-                (SELECT conv_id, tool, row_number() OVER
-                   (PARTITION BY conv_id ORDER BY cc DESC, tool) AS rn
-                 FROM c) WHERE rn = 1)
-      SELECT ent.conv_id, tool_n, tool_n_cats, tool_entropy,
-             tool_norm_entropy, top_tool
-      FROM ent JOIN top USING (conv_id)
-    """
-    d["gap_autocorr"] = f"""
-      WITH t AS ({_T}),
-      g AS (SELECT conv_id, turn_idx,
-                   epoch(ts) - lag(epoch(ts)) OVER
-                     (PARTITION BY conv_id ORDER BY ts, turn_idx)
-                     AS gap
-            FROM t),
-      p AS (SELECT conv_id, gap,
-                   lag(gap) OVER
-                     (PARTITION BY conv_id ORDER BY turn_idx) AS gl
-            FROM g)
-      SELECT conv_id,
-             CAST(sum(CASE WHEN gap IS NOT NULL AND gl IS NOT NULL
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
-             round(corr(gap, gl), 6) AS autocorr
-      FROM p GROUP BY conv_id
-    """
-    d["turn_flags"] = f"""
-      WITH t AS ({_T})
-      SELECT conv_id, turn_idx,
-             CAST(CASE WHEN trim(text) LIKE '%?' THEN 1 ELSE 0 END
-                  AS INTEGER) AS is_question,
-             CAST(CASE WHEN position('```' IN text) > 0 THEN 1 ELSE 0
-                  END AS INTEGER) AS has_code,
-             CAST(CASE WHEN position('http://' IN text) > 0
-                         OR position('https://' IN text) > 0
-                  THEN 1 ELSE 0 END AS INTEGER) AS has_url,
-             CAST(len(string_split(text, chr(10))) AS INTEGER)
-               AS n_lines,
-             CAST(CASE WHEN trim(text) LIKE '%.'
-                         OR trim(text) LIKE '%!'
-                         OR trim(text) LIKE '%?'
-                  THEN 1 ELSE 0 END AS INTEGER) AS ends_clean
-      FROM t
-    """
-    d["relevance_context"] = rf"""
-      WITH t AS ({_T}),
-      r AS (SELECT conv_id, turn_idx,
-              CAST(length(text) AS DOUBLE) AS score,
-              CAST(CASE WHEN trim(text) = '' THEN 0
-                   ELSE len(string_split_regex(trim(text), '\s+'))
-                   END AS INT) AS turn_tokens
-            FROM t),
-      s AS (SELECT conv_id, turn_idx, turn_tokens,
-              CAST(SUM(turn_tokens) OVER
-                (PARTITION BY conv_id
-                 ORDER BY score DESC, turn_idx DESC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS sel_tokens
-            FROM r)
-      SELECT conv_id, turn_idx, turn_tokens, sel_tokens,
-             CAST(CASE WHEN sel_tokens <= 40 THEN 1 ELSE 0 END
-                  AS INTEGER) AS kept
-      FROM s
-    """
-    d["transcript_integrity"] = f"""
-      WITH t AS ({_T}),
-      f AS (SELECT conv_id, turn_idx, ts, role,
-              CASE WHEN ts < lag(ts) OVER w THEN 1 ELSE 0 END AS inv,
-              CASE WHEN CAST(turn_idx AS BIGINT)
-                        - lag(CAST(turn_idx AS BIGINT)) OVER w > 1
-                   THEN 1 ELSE 0 END AS gap,
-              CASE WHEN role = lag(role) OVER w THEN 1 ELSE 0 END
-                AS rep
-            FROM t
-            WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx, ts)),
-      a AS (SELECT conv_id,
-              CAST(count(*) AS BIGINT) AS n_turns,
-              CAST(count(*) - count(DISTINCT turn_idx) AS BIGINT)
-                AS n_dup_idx,
-              CAST(sum(inv) AS BIGINT) AS n_ts_inversions,
-              CAST(sum(gap) AS BIGINT) AS n_idx_gaps,
-              CAST(sum(rep) AS BIGINT) AS n_role_repeats,
-              CAST(min(turn_idx) AS BIGINT) AS first_idx
-            FROM f GROUP BY conv_id)
-      SELECT *,
-             CAST(CASE WHEN n_dup_idx = 0 AND n_ts_inversions = 0
-                        AND n_idx_gaps = 0 AND first_idx = 0
-                  THEN 1 ELSE 0 END AS INTEGER) AS is_clean
-      FROM a
-    """
-    # incremental refresh's oracle IS the full recompute: the driver
-    # thereby verifies carry-forward + delta-slice union ≡ recompute.
-    d["incremental_refresh"] = f"""
-      WITH t AS ({_T})
-      SELECT conv_id,
-             CAST(count(*) AS BIGINT) AS n_turns,
-             CAST(sum(length(text)) AS BIGINT) AS chars,
-             CAST(min(turn_idx) AS BIGINT) AS first_idx
-      FROM t GROUP BY conv_id
-    """
-    # naive range self-join — the O(S x density) plan pit_window_agg's
-    # delta encoding exists to avoid; small-SF it is the exact oracle
-    d["pit_window"] = """
-      SELECT s.event_id, s.user_id,
-             CAST(count(e.event_id) AS BIGINT) AS pit_count,
-             round(COALESCE(sum(round(e.value * 100)), 0), 6) AS pit_sum
-      FROM events s LEFT JOIN events e
-        ON e.user_id = s.user_id
-       AND epoch(e.ts) < epoch(s.ts)
-       AND epoch(e.ts) >= epoch(s.ts) - 3600
-      GROUP BY s.event_id, s.user_id
-    """
-    d["pit_multi"] = """
-      SELECT s.event_id, s.user_id,
-             CAST(count(CASE WHEN epoch(e.ts) >= epoch(s.ts) - 1800
-                             THEN 1 END) AS BIGINT) AS pit_count_1800s,
-             round(COALESCE(sum(CASE WHEN epoch(e.ts) >= epoch(s.ts) - 1800
-                                     THEN round(e.value * 100) END), 0), 6)
-               AS pit_sum_1800s,
-             CAST(count(e.event_id) AS BIGINT) AS pit_count_7200s,
-             round(COALESCE(sum(round(e.value * 100)), 0), 6)
-               AS pit_sum_7200s
-      FROM events s LEFT JOIN events e
-        ON e.user_id = s.user_id
-       AND epoch(e.ts) < epoch(s.ts)
-       AND epoch(e.ts) >= epoch(s.ts) - 7200
-      GROUP BY s.event_id, s.user_id
-    """
-    d["pit_extrema"] = """
-      SELECT s.event_id, s.user_id,
-             round(max(e.value), 6) AS pit_max,
-             round(min(e.value), 6) AS pit_min
-      FROM events s LEFT JOIN events e
-        ON e.user_id = s.user_id
-       AND epoch(e.ts) < epoch(s.ts)
-       AND epoch(e.ts) >= epoch(s.ts) - 3600
-      GROUP BY s.event_id, s.user_id
-    """
-    d["auc_score"] = """
-      WITH s AS (
-        SELECT CAST(n_chars AS DOUBLE) AS sc,
-               CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS DOUBLE) AS pos,
-               CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS DOUBLE) AS neg
-        FROM documents GROUP BY n_chars),
-      c AS (
-        SELECT pos, neg,
-               COALESCE(sum(neg) OVER (ORDER BY sc
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS neg_below
-        FROM s),
-      a AS (
-        SELECT CAST(sum(pos) + sum(neg) AS BIGINT) AS n,
-               CAST(sum(pos) AS BIGINT) AS npos,
-               CAST(sum(neg) AS BIGINT) AS nneg,
-               sum(pos * (neg_below + neg / 2)) AS u
-        FROM c)
-      SELECT n, npos, nneg,
-             CASE WHEN npos * nneg > 0
-                  THEN round(u / (npos * nneg), 6) END AS auc,
-             CASE WHEN npos * nneg > 0
-                  THEN round(2 * u / (npos * nneg) - 1, 6) END AS gini
-      FROM a
-    """
-    d["kappa"] = """
-      WITH r AS (
-        SELECT CASE WHEN n_chars < 200 THEN 'short'
-                    WHEN n_chars < 350 THEN 'medium'
-                    ELSE 'long' END AS a,
-               CASE WHEN length(text) < 250 THEN 'short'
-                    WHEN length(text) < 400 THEN 'medium'
-                    ELSE 'long' END AS b
-        FROM documents),
-      cells AS (SELECT a, b, count(*) AS c FROM r GROUP BY a, b),
-      tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                     CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT)
-                       AS agree
-              FROM cells),
-      ma AS (SELECT a AS k, sum(c) AS ca FROM cells GROUP BY a),
-      mb AS (SELECT b AS k, sum(c) AS cb FROM cells GROUP BY b),
-      pe AS (SELECT sum(CAST(ca AS DOUBLE) * cb) AS pe_num
-             FROM ma JOIN mb USING (k))
-      SELECT n,
-             round(agree / n, 6) AS po,
-             round(COALESCE(pe_num, 0) / (CAST(n AS DOUBLE) * n), 6) AS pe,
-             CASE WHEN COALESCE(pe_num, 0) / (CAST(n AS DOUBLE) * n) < 1.0
-                  THEN round((agree / n
-                              - COALESCE(pe_num, 0) / (CAST(n AS DOUBLE) * n))
-                             / (1.0 - COALESCE(pe_num, 0)
-                                      / (CAST(n AS DOUBLE) * n)), 6)
-             END AS kappa
-      FROM tot, pe
-    """
-    d["pref_pairs"] = """
-      WITH c AS (SELECT doc_id % 50 AS prompt_id, doc_id AS cid,
-                        CAST(n_chars AS DOUBLE) AS sc
-                 FROM documents),
-      r AS (SELECT prompt_id, cid, sc,
-              row_number() OVER (PARTITION BY prompt_id
-                                 ORDER BY sc DESC, cid ASC) AS rb,
-              row_number() OVER (PARTITION BY prompt_id
-                                 ORDER BY sc ASC, cid DESC) AS rw,
-              count(*) OVER (PARTITION BY prompt_id) AS gn
-            FROM c)
-      SELECT a.prompt_id, CAST(a.rb AS INTEGER) AS pair_rank,
-             a.cid AS chosen_id, b.cid AS rejected_id,
-             round(a.sc, 6) AS chosen_score,
-             round(b.sc, 6) AS rejected_score,
-             round(a.sc - b.sc, 6) AS margin
-      FROM r a JOIN r b ON a.prompt_id = b.prompt_id AND b.rw = a.rb
-      WHERE a.rb <= 2 AND b.rw <= 2 AND 2 * a.rb <= a.gn
-        AND a.cid <> b.cid AND a.sc - b.sc >= 0
-    """
-    d["trend_slope"] = f"""
-      WITH t AS ({_T}),
-      s AS (SELECT conv_id, turn_idx,
-              CAST(count(*) OVER w AS DOUBLE) AS m,
-              sum(CAST(turn_idx AS DOUBLE)) OVER w AS sx,
-              sum(CAST(length(text) AS DOUBLE)) OVER w AS sy,
-              sum(CAST(turn_idx AS DOUBLE) * turn_idx) OVER w AS sxx,
-              sum(CAST(turn_idx AS DOUBLE) * length(text)) OVER w AS sxy
-            FROM t
-            WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx
-                         ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-      SELECT conv_id, turn_idx,
-             CASE WHEN m >= 2 AND (m * sxx - sx * sx) <> 0
-                  THEN round((m * sxy - sx * sy) / (m * sxx - sx * sx), 6)
-             END AS roll_slope
-      FROM s
-    """
-    d["tool_cooccur"] = f"""
-      WITH t AS ({_T}),
-      gi AS (SELECT DISTINCT conv_id AS g, tool AS i FROM t
-             WHERE tool IS NOT NULL AND tool <> ''),
-      marg AS (SELECT i, count(*) AS n FROM gi GROUP BY i),
-      tot AS (SELECT CAST(count(DISTINCT g) AS DOUBLE) AS n_total FROM gi),
-      pairs AS (SELECT a.i AS item_a, b.i AS item_b, count(*) AS n_ab
-                FROM gi a JOIN gi b ON a.g = b.g AND a.i < b.i
-                GROUP BY a.i, b.i)
-      SELECT item_a, item_b,
-             CAST(ma.n AS BIGINT) AS n_a,
-             CAST(mb.n AS BIGINT) AS n_b,
-             CAST(n_ab AS BIGINT) AS n_ab,
-             round(n_ab / n_total, 6) AS support,
-             round(CAST(n_ab AS DOUBLE) / ma.n, 6) AS conf_a_b,
-             round(CAST(n_ab AS DOUBLE) / mb.n, 6) AS conf_b_a,
-             round(n_ab * n_total / (CAST(ma.n AS DOUBLE) * mb.n), 6) AS lift
-      FROM pairs
-      JOIN marg ma ON ma.i = item_a
-      JOIN marg mb ON mb.i = item_b, tot
-    """
-    d["typo_pairs"] = f"""
-      WITH aug AS (
-        SELECT substr(ft, 1, 1) || substr(ft, 3) AS text
-        FROM (SELECT list_filter({_det_tokens_sql('text')},
-                                 t -> length(t) >= 5)[1] AS ft
-              FROM documents WHERE doc_id % 7 = 0)
-        WHERE ft IS NOT NULL),
-      corpus AS (SELECT text FROM documents
-                 UNION ALL SELECT text FROM aug),
-      wds AS (SELECT unnest({_det_tokens_sql('text')}) AS w
-              FROM corpus),
-      v AS (SELECT w, count(*) AS n FROM wds
-            WHERE length(w) >= 4 GROUP BY w),
-      k AS (SELECT w, n,
-                   unnest(list_distinct(list_concat([w],
-                     list_transform(range(1, length(w) + 1),
-                       i -> substr(w, 1, i - 1) || substr(w, i + 1)))))
-                     AS kk
-            FROM v),
-      cand AS (SELECT DISTINCT a.w AS word_a, b.w AS word_b,
-                      a.n AS n_a, b.n AS n_b
-               FROM k a JOIN k b ON a.kk = b.kk AND a.w < b.w)
-      SELECT word_a, word_b,
-             CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-             CAST(levenshtein(word_a, word_b) AS INTEGER) AS dist,
-             round(CAST(greatest(n_a, n_b) AS DOUBLE) / least(n_a, n_b), 6)
-               AS freq_ratio
-      FROM cand WHERE levenshtein(word_a, word_b) <= 1
-    """
-    d["sb_ppl"] = f"""
-      WITH d AS (SELECT doc_id AS id, {_det_tokens_sql('text')} AS toks
-                 FROM documents),
-      pp AS (SELECT id,
-                    list_concat(list_concat([chr(2), chr(2)], toks),
-                                [chr(3)]) AS p
-             FROM d),
-      ev AS (SELECT id,
-                    unnest(p[1:len(p) - 2]) AS u,
-                    unnest(p[2:len(p) - 1]) AS v,
-                    unnest(p[3:len(p)]) AS w
-             FROM pp),
-      tri AS (SELECT u, v, w, count(*) AS c3 FROM ev GROUP BY u, v, w),
-      ctx3 AS (SELECT u, v, CAST(sum(c3) AS DOUBLE) AS cc3
-               FROM tri GROUP BY u, v),
-      bi AS (SELECT v, w, CAST(sum(c3) AS BIGINT) AS c2
-             FROM tri GROUP BY v, w),
-      ctx1 AS (SELECT v, CAST(sum(c2) AS DOUBLE) AS cc1
-               FROM bi GROUP BY v),
-      uni AS (SELECT w, CAST(sum(c2) AS BIGINT) AS cu FROM bi GROUP BY w),
-      nv AS (SELECT CAST(sum(cu) AS DOUBLE) AS nn,
-                    CAST(count(*) AS DOUBLE) AS vv
-             FROM uni),
-      sc AS (SELECT e.id,
-               ln(CASE WHEN COALESCE(t.c3, 0) > 0 THEN t.c3 / x3.cc3
-                       WHEN COALESCE(b.c2, 0) > 0
-                         THEN 0.4 * b.c2 / x1.cc1
-                       ELSE 0.4 * 0.4 * (COALESCE(un.cu, 0) + 0.5)
-                            / (nv.nn + 0.5 * nv.vv) END) AS lns
-             FROM ev e
-             LEFT JOIN tri t USING (u, v, w)
-             LEFT JOIN ctx3 x3 USING (u, v)
-             LEFT JOIN bi b USING (v, w)
-             LEFT JOIN ctx1 x1 USING (v)
-             LEFT JOIN uni un USING (w)
-             CROSS JOIN nv)
-      SELECT id, CAST(count(*) AS BIGINT) AS n_events,
-             round(avg(lns), 5) AS sb_logscore,
-             round(exp(-avg(lns)), 4) AS sb_ppl
-      FROM sc GROUP BY id
-    """
-    from hipipe_spark.operators.graph import pagerank_oracle_sql
-    from hipipe_spark.operators.graph import hits_oracle_sql
-    d["hits"] = hits_oracle_sql(
-        """SELECT prev AS src, event_type AS dst FROM (
-             SELECT event_type,
-                    lag(event_type) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS prev
-             FROM events) WHERE prev IS NOT NULL""",
-        n_iter=8, round_to=6) + " ORDER BY node"
-    d["logrank"] = """
-      WITH life AS (
-        SELECT user_id,
-               CAST(floor((epoch(MAX(ts)) - epoch(MIN(ts))) / 3600)
-                    AS BIGINT) AS dur_h,
-               MAX(CASE WHEN user_id % 4 != 0 THEN 1 ELSE 0 END) AS ev,
-               CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS is_a
-        FROM events GROUP BY user_id),
-      per_t AS (
-        SELECT dur_h, CAST(COUNT(*) AS BIGINT) AS n_all,
-               CAST(SUM(is_a) AS BIGINT) AS n_a,
-               CAST(SUM(ev) AS BIGINT) AS d_all,
-               CAST(SUM(ev * is_a) AS BIGINT) AS d_a
-        FROM life GROUP BY dur_h),
-      cum AS (
-        SELECT *,
-               SUM(n_all) OVER (ORDER BY dur_h DESC
-                 ROWS UNBOUNDED PRECEDING) AS r_all,
-               SUM(n_a) OVER (ORDER BY dur_h DESC
-                 ROWS UNBOUNDED PRECEDING) AS r_a
-        FROM per_t),
-      terms AS (
-        SELECT *,
-               CAST(r_a AS DOUBLE) / r_all AS frac,
-               CASE WHEN d_all > 0
-                    THEN d_all * (CAST(r_a AS DOUBLE) / r_all)
-                    ELSE 0.0 END AS e_term,
-               CASE WHEN d_all > 0 AND r_all > 1
-                    THEN d_all * (CAST(r_a AS DOUBLE) / r_all)
-                         * (1.0 - (CAST(r_a AS DOUBLE) / r_all))
-                         * (r_all - d_all) / (r_all - 1)
-                    ELSE 0.0 END AS v_term
-        FROM cum),
-      tot AS (
-        SELECT CAST(SUM(n_a) AS BIGINT) AS n_a,
-               CAST(SUM(n_all - n_a) AS BIGINT) AS n_b,
-               CAST(SUM(d_all) AS BIGINT) AS n_events,
-               CAST(SUM(d_a) AS BIGINT) AS observed_a,
-               round(SUM(e_term), 9) AS expected_a,
-               round(SUM(v_term), 9) AS var_a
-        FROM terms),
-      zt AS (
-        SELECT *,
-               CASE WHEN var_a > 0
-                    THEN (observed_a - expected_a) / sqrt(var_a)
-                    END AS z
-        FROM tot)
-      SELECT n_a, n_b, n_events, observed_a,
-             round(expected_a, 6) AS expected_a,
-             round(var_a, 6) AS var_a,
-             round(z, 6) AS z,
-             round(2.0 / (1.0 + exp(0.07056 * abs(z) * abs(z) * abs(z)
-                                    + 1.5976 * abs(z))), 6) AS p_value
-      FROM zt
-    """
-    d["link_features"] = """
-      WITH e0 AS (SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-                  FROM lineitem a JOIN lineitem b
-                    ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey
-                  WHERE a.l_partkey % 5 = 0 AND b.l_partkey % 5 = 0),
-      deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg
-              FROM (SELECT a AS node FROM e0
-                    UNION ALL SELECT b FROM e0)
-              GROUP BY 1),
-      keep AS (SELECT node AS w FROM deg WHERE deg <= 30),
-      adj AS (SELECT x.w, x.n FROM (
-                SELECT a AS w, b AS n FROM e0
-                UNION ALL SELECT b AS w, a AS n FROM e0) x
-              JOIN keep USING (w)),
-      wed AS (SELECT l.n AS na, r.n AS nb, d.deg AS wdeg
-              FROM adj l JOIN adj r ON l.w = r.w AND l.n < r.n
-              JOIN deg d ON d.node = l.w),
-      p AS (SELECT na AS node_a, nb AS node_b,
-                   CAST(COUNT(*) AS BIGINT) AS common,
-                   SUM(CASE WHEN wdeg > 1 THEN 1.0 / ln(wdeg)
-                            ELSE 0.0 END) AS aa,
-                   SUM(1.0 / wdeg) AS ra
-            FROM wed GROUP BY na, nb
-            HAVING COUNT(*) >= 2),
-      pne AS (SELECT p.* FROM p
-              LEFT JOIN e0 ON e0.a = p.node_a AND e0.b = p.node_b
-              WHERE e0.a IS NULL)
-      SELECT node_a, node_b, common,
-             round(aa, 6) AS adamic_adar,
-             round(ra, 6) AS resource_alloc,
-             round(CAST(common AS DOUBLE)
-                   / (da.deg + db.deg - common), 6) AS jaccard
-      FROM pne
-      JOIN deg da ON da.node = pne.node_a
-      JOIN deg db ON db.node = pne.node_b
-    """
-    from hipipe_spark.operators.graph import k_core_oracle_sql
-    d["kcore"] = k_core_oracle_sql(
-        """SELECT a.l_partkey AS src, b.l_partkey AS dst
-           FROM lineitem a JOIN lineitem b
-             ON a.l_orderkey = b.l_orderkey
-            AND a.l_partkey < b.l_partkey
-           WHERE a.l_partkey % 5 = 0 AND b.l_partkey % 5 = 0""",
-        k=14, n_rounds=12)
-    d["leakage_audit"] = """
-      WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-           r AS (SELECT user_id, ts FROM events WHERE event_id % 2 = 0),
-           b AS (SELECT l.event_id, l.ts, r.ts AS src_b
-                 FROM l ASOF LEFT JOIN r
-                   ON l.user_id = r.user_id AND l.ts >= r.ts),
-           f AS (SELECT l.event_id, r.ts AS src_f
-                 FROM l ASOF LEFT JOIN r
-                   ON l.user_id = r.user_id AND l.ts <= r.ts),
-           j AS (SELECT b.event_id, b.ts, b.src_b, f.src_f
-                 FROM b JOIN f USING (event_id)),
-           agg AS (SELECT
-             count(*) AS n,
-             sum(CASE WHEN src_b IS NOT NULL THEN 1 ELSE 0 END) AS m1,
-             sum(CASE WHEN (epoch_us(src_b) - epoch_us(ts)) / 1000000.0 > 0
-                      THEN 1 ELSE 0 END) AS l1,
-             max(CASE WHEN (epoch_us(src_b) - epoch_us(ts)) / 1000000.0 > 0
-                      THEN (epoch_us(src_b) - epoch_us(ts)) / 1000000.0 END) AS x1,
-             sum(CASE WHEN src_f IS NOT NULL THEN 1 ELSE 0 END) AS m2,
-             sum(CASE WHEN (epoch_us(src_f) - epoch_us(ts)) / 1000000.0 > 0
-                      THEN 1 ELSE 0 END) AS l2,
-             max(CASE WHEN (epoch_us(src_f) - epoch_us(ts)) / 1000000.0 > 0
-                      THEN (epoch_us(src_f) - epoch_us(ts)) / 1000000.0 END) AS x2
-             FROM j)
-      SELECT 1 AS src_no, 'src_ts_feature' AS source,
-             n AS n_rows, CAST(m1 AS BIGINT) AS n_matched,
-             CAST(l1 AS BIGINT) AS n_leaks,
-             round(x1, 6) AS max_lead_s,
-             round(l1 * 1.0 / n, 6) AS leak_rate, l1 = 0 AS ok FROM agg
-      UNION ALL
-      SELECT 2, 'src_ts_label', n, CAST(m2 AS BIGINT), CAST(l2 AS BIGINT),
-             round(x2, 6), round(l2 * 1.0 / n, 6), l2 = 0 FROM agg
-    """
-    d["pagerank"] = pagerank_oracle_sql(
-        """SELECT prev AS src, event_type AS dst, 1.0 AS w FROM (
-             SELECT event_type,
-                    lag(event_type) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS prev
-             FROM events) WHERE prev IS NOT NULL""",
-        damping=0.85, n_iter=10, round_to=6) + " ORDER BY node"
-    from hipipe_spark.operators.spans import substring_dedup_oracle_sql
-    d["substring_dedup"] = substring_dedup_oracle_sql(window=8)
-    d["scd2"] = """
-      WITH dedup AS (
-        SELECT user_id, ts, event_id, event_type FROM (
-          SELECT user_id, ts, event_id, event_type,
-                 row_number() OVER (PARTITION BY user_id, ts
-                                    ORDER BY event_id DESC) AS rk
-          FROM events) WHERE rk = 1),
-      chg AS (
-        SELECT user_id, ts, event_id, event_type,
-               (lag(ts) OVER w IS NULL
-                OR NOT (event_type IS NOT DISTINCT FROM
-                        lag(event_type) OVER w)) AS keep
-        FROM dedup
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      ret AS (SELECT * FROM chg WHERE keep)
-      SELECT user_id, event_type,
-             epoch(ts) AS valid_from,
-             epoch(lead(ts) OVER w2) AS valid_to,
-             lead(ts) OVER w2 IS NULL AS is_current,
-             CAST(row_number() OVER w2 AS INTEGER) AS version
-      FROM ret
-      WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """
-    d["sample_per_key"] = f"""
-      SELECT event_id, event_type, user_id FROM (
-        SELECT event_id, event_type, user_id,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY {det_hash_i64_sql('event_id', 5)}, event_id) AS rk
-        FROM events) WHERE rk <= 20
-    """
-    d["calibration"] = f"""
-      WITH src AS (
-        SELECT {det_hash01_sql('event_id', 9)} AS p,
-               CAST(user_id % 2 AS DOUBLE) AS y
-        FROM events),
-      agg AS (
-        SELECT CAST(least(9, CAST(floor(p * 10) AS BIGINT)) AS INTEGER) AS bin,
-               count(*) AS n, avg(p) AS avg_prob, avg(y) AS frac_pos,
-               sum((p - y) * (p - y)) AS sq_sum
-        FROM src GROUP BY 1),
-      grid AS (SELECT CAST(range AS INTEGER) AS bin FROM range(10)),
-      full_t AS (
-        SELECT grid.bin, COALESCE(n, 0) AS n, avg_prob, frac_pos,
-               COALESCE(sq_sum, 0.0) AS sq_sum
-        FROM grid LEFT JOIN agg ON agg.bin = grid.bin)
-      SELECT bin, CAST(n AS BIGINT) AS n,
-             round(avg_prob, 6) AS avg_prob,
-             round(frac_pos, 6) AS frac_pos,
-             round(sum(CASE WHEN n > 0
-                       THEN abs(avg_prob - frac_pos) * n
-                       ELSE 0.0 END) OVER ()
-                   / sum(n) OVER (), 6) AS ece,
-             round(sum(sq_sum) OVER () / sum(n) OVER (), 6) AS brier
-      FROM full_t
-    """
-    from hipipe_spark.operators.graph import label_propagation_oracle_sql
-    d["label_prop"] = label_propagation_oracle_sql(
-        """SELECT prev AS src, event_type AS dst FROM (
-             SELECT event_type,
-                    lag(event_type) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS prev
-             FROM events) WHERE prev IS NOT NULL""",
-        [("view", "content"), ("error", "bad")], n_iter=3)
-    d["topic_segments"] = f"""
-      WITH t AS ({_T}),
-      tok AS (
-        SELECT conv_id, turn_idx, ts,
-               list_distinct({_det_tokens_sql('text')}) AS s
-        FROM t),
-      lagd AS (
-        SELECT conv_id, turn_idx, ts, s,
-               lag(s) OVER (PARTITION BY conv_id
-                            ORDER BY ts, turn_idx) AS prev_s
-        FROM tok),
-      jac AS (
-        SELECT conv_id, turn_idx, ts,
-               CASE WHEN prev_s IS NULL THEN NULL
-                    WHEN len(list_distinct(list_concat(s, prev_s))) > 0
-                    THEN round(CAST(len(list_intersect(s, prev_s)) AS DOUBLE)
-                         / len(list_distinct(list_concat(s, prev_s))), 6)
-                    ELSE 0.0 END AS prev_jaccard
-        FROM lagd),
-      seg AS (
-        SELECT conv_id, turn_idx, prev_jaccard,
-               CAST(sum(CASE WHEN prev_jaccard IS NULL
-                             OR prev_jaccard < 0.2 THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                          ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER)
-                 AS segment_seq
-        FROM jac)
-      SELECT conv_id, turn_idx, prev_jaccard, segment_seq,
-             conv_id || '#' || CAST(segment_seq AS VARCHAR) AS segment_id
-      FROM seg
-    """
-    d["dup_weights"] = """
-      SELECT doc_id,
-             CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT)
-               AS cluster_size,
-             round(1.0 / count(*) OVER (PARTITION BY md5(text)), 6)
-               AS weight
-      FROM documents
-    """
-    d["table_diff"] = """
-      WITH old_t AS (
-        SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0),
-      new_t AS (
-        SELECT o_orderkey,
-               CASE WHEN o_orderkey % 10 = 1
-                    THEN round(o_totalprice * 1.1, 2)
-                    ELSE o_totalprice END AS o_totalprice
-        FROM orders),
-      j AS (
-        SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-               o.o_totalprice AS o_totalprice_old,
-               n.o_totalprice AS o_totalprice_new,
-               CASE WHEN o.o_orderkey IS NULL THEN 'inserted'
-                    WHEN n.o_orderkey IS NULL THEN 'deleted'
-                    WHEN o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-                      THEN 'unchanged'
-                    ELSE 'changed' END AS change
-        FROM old_t o FULL OUTER JOIN new_t n ON o.o_orderkey = n.o_orderkey)
-      SELECT * FROM j WHERE change <> 'unchanged'
-    """
-    d["json_features"] = """
-      SELECT event_id,
-             CAST(json_extract(props, '$.k') AS INTEGER) AS k
-      FROM events
-    """
-    d["json_profile"] = """
-      WITH n AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM events),
-      k AS (SELECT unnest(json_keys(props)) AS key FROM events
-            WHERE json_valid(props))
-      SELECT key, CAST(count(*) AS BIGINT) AS n_docs,
-             round(count(*) / (SELECT total FROM n), 6) AS doc_share
-      FROM k GROUP BY key
-    """
-    d["k_anonymity"] = """
-      WITH src AS (
-        SELECT event_type, user_id % 50 AS user_bucket,
-               CAST(floor(value / 25) AS INTEGER) AS val_band
-        FROM events),
-      g AS (
-        SELECT event_type, user_bucket,
-               CAST(count(*) AS BIGINT) AS class_size,
-               CAST(count(DISTINCT val_band) AS BIGINT)
-                 AS distinct_sensitive
-        FROM src GROUP BY 1, 2)
-      SELECT event_type, user_bucket, class_size, distinct_sensitive,
-             CASE WHEN class_size < 35 AND distinct_sensitive < 2 THEN 'k+l'
-                  WHEN class_size < 35 THEN 'k'
-                  WHEN distinct_sensitive < 2 THEN 'l' END AS violation
-      FROM g WHERE class_size < 35 OR distinct_sensitive < 2
-    """
-    d["t_closeness"] = """
-      WITH src AS (
-        SELECT c_nationkey, c_mktsegment,
-               CAST(floor(c_acctbal / 2000) AS BIGINT) AS bal_band
-        FROM customer),
-      cv AS (
-        SELECT c_nationkey, c_mktsegment, bal_band,
-               CAST(count(*) AS BIGINT) AS n
-        FROM src GROUP BY 1, 2, 3),
-      gdist AS (
-        SELECT bal_band,
-               sum(n) / (SELECT CAST(sum(n) AS DOUBLE) FROM cv) AS p_g
-        FROM cv GROUP BY 1),
-      cs AS (
-        SELECT c_nationkey, c_mktsegment,
-               CAST(sum(n) AS BIGINT) AS class_size
-        FROM cv GROUP BY 1, 2),
-      agg AS (
-        SELECT cv.c_nationkey, cv.c_mktsegment,
-               max(cs.class_size) AS class_size,
-               CAST(count(*) AS BIGINT) AS distinct_sensitive,
-               sum(cv.n * ln(cv.n)) AS nlnn,
-               sum(abs(cv.n / CAST(cs.class_size AS DOUBLE) - g.p_g))
-                 AS absdiff,
-               sum(g.p_g) AS pg
-        FROM cv
-        JOIN cs ON cs.c_nationkey = cv.c_nationkey
-               AND cs.c_mktsegment = cv.c_mktsegment
-        JOIN gdist g ON g.bal_band IS NOT DISTINCT FROM cv.bal_band
-        GROUP BY 1, 2)
-      SELECT c_nationkey, c_mktsegment, class_size, distinct_sensitive,
-             round(ln(class_size) - nlnn / class_size, 6) AS entropy,
-             round(0.5 * (absdiff + (1.0 - pg)), 6) AS tvd,
-             CASE WHEN distinct_sensitive < 3
-                    AND round(0.5 * (absdiff + (1.0 - pg)), 6) > 0.25
-                  THEN 'l+t'
-                  WHEN distinct_sensitive < 3 THEN 'l'
-                  WHEN round(0.5 * (absdiff + (1.0 - pg)), 6) > 0.25
-                  THEN 't' END AS violation
-      FROM agg
-    """
-    d["modularity"] = """
-      WITH pr AS (SELECT DISTINCT l_partkey AS l, l_orderkey AS r
-                  FROM lineitem),
-      keep AS (SELECT r FROM pr GROUP BY r HAVING count(*) <= 8),
-      pin AS (SELECT pr.l, pr.r FROM pr JOIN keep USING (r)),
-      ew AS (SELECT a.l AS src, b.l AS dst, count(*) AS weight
-             FROM pin a JOIN pin b ON a.r = b.r AND a.l < b.l
-             GROUP BY 1, 2),
-      e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-            FROM ew WHERE weight >= 2 AND src <> dst),
-      m AS (SELECT CAST(count(*) AS DOUBLE) AS m FROM e),
-      asg AS (SELECT p_partkey AS node, p_brand AS c FROM part),
-      deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-                (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-              GROUP BY 1),
-      intra AS (SELECT ca.c, CAST(count(*) AS BIGINT) AS internal_edges
-                FROM e
-                JOIN asg ca ON ca.node = e.a
-                JOIN asg cb ON cb.node = e.b
-                WHERE ca.c = cb.c GROUP BY 1),
-      comm AS (SELECT asg.c, CAST(count(*) AS BIGINT) AS n_nodes,
-                      CAST(coalesce(sum(deg.deg), 0) AS BIGINT)
-                        AS degree_sum
-               FROM asg LEFT JOIN deg ON deg.node = asg.node
-               GROUP BY 1)
-      SELECT comm.c AS community, comm.n_nodes,
-             CAST(coalesce(intra.internal_edges, 0) AS BIGINT)
-               AS internal_edges,
-             comm.degree_sum,
-             round(coalesce(intra.internal_edges, 0) / (SELECT m FROM m)
-                   - pow(comm.degree_sum / (2.0 * (SELECT m FROM m)), 2.0),
-                   6) AS q_contrib
-      FROM comm LEFT JOIN intra ON intra.c = comm.c
-    """
-    d["hbos"] = """
-      WITH src AS (
-        SELECT l_orderkey, l_linenumber,
-               CAST(l_quantity AS DOUBLE) AS f1,
-               CAST(l_extendedprice AS DOUBLE) AS f2,
-               CAST(l_discount AS DOUBLE) AS f3
-        FROM lineitem),
-      mm AS (SELECT min(f1) mn1, max(f1) mx1, min(f2) mn2, max(f2) mx2,
-                    min(f3) mn3, max(f3) mx3 FROM src),
-      b AS (SELECT l_orderkey, l_linenumber,
-              least(11, greatest(0, CAST(floor((f1 - mn1) / ((mx1 - mn1) / 12)) AS INT))) AS b1,
-              least(11, greatest(0, CAST(floor((f2 - mn2) / ((mx2 - mn2) / 12)) AS INT))) AS b2,
-              least(11, greatest(0, CAST(floor((f3 - mn3) / ((mx3 - mn3) / 12)) AS INT))) AS b3
-            FROM src, mm),
-      h1 AS (SELECT b1, count(*) AS n FROM b GROUP BY 1),
-      h2 AS (SELECT b2, count(*) AS n FROM b GROUP BY 1),
-      h3 AS (SELECT b3, count(*) AS n FROM b GROUP BY 1),
-      p1 AS (SELECT b1, ln((SELECT max(n) FROM h1)) - ln(n) AS lp FROM h1),
-      p2 AS (SELECT b2, ln((SELECT max(n) FROM h2)) - ln(n) AS lp FROM h2),
-      p3 AS (SELECT b3, ln((SELECT max(n) FROM h3)) - ln(n) AS lp FROM h3)
-      SELECT b.l_orderkey, b.l_linenumber,
-             round(0.0 + p1.lp + p2.lp + p3.lp, 6) AS hbos
-      FROM b JOIN p1 USING (b1) JOIN p2 USING (b2) JOIN p3 USING (b3)
-    """
-    from hipipe_spark.operators.decomposition import (
-        random_projection_oracle_sql,
-    )
-    d["random_projection"] = random_projection_oracle_sql(
-        table="embeddings", id_cols=["vec_id", "label"],
-        vec_expr="embedding", dims=64, k=8, seed=0, round_to=6)
-    from hipipe_spark.operators.selection import dsir_weights_oracle_sql
-    d["dsir"] = dsir_weights_oracle_sql(n_buckets=1024)
-    _g = (f"-ln(-ln(greatest({det_hash01_sql('doc_id', 3)}, 1e-12)))")
-    d["dsir_select"] = f"""
-      WITH w AS ({dsir_weights_oracle_sql(n_buckets=1024)})
-      SELECT doc_id, n_features, dsir_logweight,
-             round(dsir_logweight / 1.0 + {_g}, 6) AS gumbel_score
-      FROM w
-      ORDER BY gumbel_score DESC, doc_id ASC
-      LIMIT 50
-    """
-    d["jsd_drift"] = """
-      WITH t AS (
-        SELECT CAST(least(7, greatest(0,
-                 CAST(floor(CAST(length(text) AS DOUBLE) / 250.0) AS BIGINT)))
-               AS INTEGER) AS bucket,
-               CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS is_b
-        FROM documents),
-      c AS (SELECT bucket, CAST(sum(is_a) AS BIGINT) AS n_a,
-                   CAST(sum(is_b) AS BIGINT) AS n_b
-            FROM t GROUP BY bucket),
-      b AS (SELECT CAST(range AS INTEGER) AS bucket FROM range(8)),
-      f AS (SELECT b.bucket, COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b
-            FROM b LEFT JOIN c USING (bucket)),
-      tot AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM f),
-      p AS (SELECT bucket, n_a, n_b,
-                   (n_a + 0.5) / (ta + 0.5 * 8) AS p_a,
-                   (n_b + 0.5) / (tb + 0.5 * 8) AS p_b
-            FROM f, tot),
-      j AS (SELECT bucket, n_a, n_b,
-                   (p_a * ln(p_a / ((p_a + p_b) / 2))
-                    + p_b * ln(p_b / ((p_a + p_b) / 2))) / 2 AS jterm
-            FROM p)
-      SELECT bucket, n_a, n_b, round(jterm, 6) AS jsd_term,
-             round(sum(jterm) OVER (), 6) AS jsd
-      FROM j
-    """
-    d["ranking_metrics"] = """
-      WITH c AS (
-        SELECT l_suppkey % 20 AS grp,
-               l_orderkey * 10 + l_linenumber AS cid,
-               l_extendedprice AS score,
-               CASE WHEN l_quantity >= 48 THEN 2
-                    WHEN l_quantity >= 45 THEN 1 ELSE 0 END AS rel
-        FROM lineitem),
-      r AS (
-        SELECT grp, CAST(rel AS DOUBLE) AS rel,
-               row_number() OVER (PARTITION BY grp
-                                  ORDER BY score DESC, cid ASC) AS sys_rank,
-               row_number() OVER (PARTITION BY grp
-                                  ORDER BY rel DESC, cid ASC) AS ideal_rank,
-               pow(2.0, rel) - 1 AS gain
-        FROM c),
-      a AS (
-        SELECT grp,
-               sum(CASE WHEN sys_rank <= 10
-                        THEN gain / log2(sys_rank + 1) ELSE 0 END) AS dcg,
-               sum(CASE WHEN ideal_rank <= 10
-                        THEN gain / log2(ideal_rank + 1) ELSE 0 END) AS idcg,
-               min(CASE WHEN rel > 0 THEN sys_rank END) AS first_rel,
-               sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS n_rel,
-               sum(CASE WHEN sys_rank <= 10 AND rel > 0
-                        THEN 1 ELSE 0 END) AS n_rel_k
-        FROM r GROUP BY grp)
-      SELECT grp AS "group",
-             round(CASE WHEN idcg > 0 THEN dcg / idcg ELSE 0 END, 6)
-               AS ndcg_at_10,
-             round(CASE WHEN first_rel IS NOT NULL
-                   THEN 1.0 / first_rel ELSE 0 END, 6) AS mrr,
-             round(n_rel_k / 10.0, 6) AS precision_at_10,
-             round(CASE WHEN n_rel > 0
-                   THEN n_rel_k / CAST(n_rel AS DOUBLE) ELSE 0 END, 6)
-               AS recall_at_10
-      FROM a
-    """
-    d["attribution"] = """
-      WITH base AS (
-        SELECT user_id, ts, event_id, event_type,
-               CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_conv
-        FROM events
-        WHERE event_type IN ('view', 'click', 'signup', 'purchase')),
-      tagged AS (
-        SELECT *, sum(is_conv) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
-                  + (1 - is_conv) AS conv_id
-        FROM base),
-      nc AS (
-        SELECT *, max(CASE WHEN is_conv = 1 THEN conv_id ELSE 0 END)
-                    OVER (PARTITION BY user_id) AS n_convs
-        FROM tagged),
-      touches AS (
-        SELECT * FROM nc WHERE is_conv = 0 AND conv_id <= n_convs),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY user_id, conv_id
-                                     ORDER BY ts, event_id) AS rk,
-                  count(*) OVER (PARTITION BY user_id, conv_id) AS n
-        FROM touches)
-      SELECT event_type AS channel, count(*) AS n_touches,
-             round(sum(CASE WHEN n = 1 THEN 1.0
-                            WHEN n = 2 THEN 0.5
-                            WHEN rk = 1 THEN 0.4
-                            WHEN rk = n THEN 0.4
-                            ELSE 0.2 / (n - 2) END), 6) AS credit
-      FROM ranked GROUP BY event_type
-    """
-    from hipipe_spark.operators.layout import zorder_oracle_sql
-    d["zorder"] = zorder_oracle_sql(
-        "SELECT * FROM orders", ["o_custkey", "o_totalprice"],
-        bits=16, extra_cols="o_orderkey")
-    d["vocab_growth"] = f"""
-      WITH m AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      base AS (SELECT CAST(least(9, floor((doc_id - m.lo) * 10.0
-                                          / (m.hi - m.lo + 1))) AS INT) AS bin,
-                      {_det_tokens_sql('text')} AS toks
-               FROM documents, m),
-      per_bin AS (SELECT bin, count(*) AS n_docs,
-                         sum(len(toks)) AS n_toks
-                  FROM base GROUP BY bin),
-      fb AS (SELECT token, min(bin) AS fbin
-             FROM (SELECT bin, unnest(toks) AS token FROM base)
-             GROUP BY token),
-      nn AS (SELECT fbin, count(*) AS n_new FROM fb GROUP BY fbin),
-      grid AS (SELECT CAST(range AS INT) AS bin FROM range(10))
-      SELECT grid.bin,
-             CAST(sum(COALESCE(n_docs, 0)) OVER (ORDER BY grid.bin)
-                  AS BIGINT) AS docs_cum,
-             CAST(sum(COALESCE(n_toks, 0)) OVER (ORDER BY grid.bin)
-                  AS BIGINT) AS tokens_cum,
-             CAST(sum(COALESCE(n_new, 0)) OVER (ORDER BY grid.bin)
-                  AS BIGINT) AS vocab_cum,
-             round(CASE WHEN sum(COALESCE(n_toks, 0)) OVER (ORDER BY grid.bin) > 0
-                   THEN sum(COALESCE(n_new, 0)) OVER (ORDER BY grid.bin)
-                        / CAST(sum(COALESCE(n_toks, 0)) OVER (ORDER BY grid.bin)
-                               AS DOUBLE) END, 6) AS ttr
-      FROM grid
-      LEFT JOIN per_bin ON per_bin.bin = grid.bin
-      LEFT JOIN nn ON nn.fbin = grid.bin
-    """
-    from hipipe_spark.operators.evaluation import bradley_terry_oracle_sql
-    d["bt_ratings"] = bradley_terry_oracle_sql(
-        """SELECT 'm' || CAST(doc_id % 7 AS VARCHAR) AS i,
-                  'm' || CAST((doc_id * 3 + 1) % 7 AS VARCHAR) AS j
-           FROM documents
-           WHERE doc_id % 7 <> (doc_id * 3 + 1) % 7""",
-        n_iter=12, round_to=6)
-    d["fleiss"] = """
-      WITH cells AS (
-        SELECT doc_id % 200 AS i,
-               'c' || CAST(length(text) % 4 AS VARCHAR) AS r,
-               CAST(count(*) AS DOUBLE) AS c
-        FROM documents GROUP BY 1, 2),
-      per_item AS (
-        SELECT i, sum(c) AS ni, sum(c * c) AS si
-        FROM cells GROUP BY i HAVING sum(c) >= 2),
-      pbar AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_items,
-               CAST(sum(ni) AS BIGINT) AS n_ratings,
-               avg((si - ni) / (ni * (ni - 1))) AS pb
-        FROM per_item),
-      marg AS (
-        SELECT r, sum(c.c) AS cj
-        FROM cells c JOIN per_item p ON p.i = c.i GROUP BY r),
-      pe AS (SELECT sum(cj * cj) AS pen FROM marg)
-      SELECT n_items, n_ratings, round(pb, 6) AS p_bar,
-             round(COALESCE(pen / (n_ratings * 1.0 * n_ratings), 0), 6)
-               AS p_e,
-             CASE WHEN COALESCE(pen / (n_ratings * 1.0 * n_ratings), 0) < 1
-                  THEN round((pb - pen / (n_ratings * 1.0 * n_ratings))
-                             / (1 - pen / (n_ratings * 1.0 * n_ratings)), 6)
-             END AS kappa
-      FROM pbar, pe
-    """
-    _sp_rank = ("rank() OVER (ORDER BY {c}) "
-                "+ (count(*) OVER (PARTITION BY {c}) - 1) / 2.0")
-    _sp_pairs = [("qty", "price"), ("qty", "disc"), ("price", "disc")]
-    d["spearman"] = """
-      WITH b AS (
-        SELECT CAST(l_quantity AS DOUBLE) AS qty,
-               CAST(l_extendedprice AS DOUBLE) AS price,
-               CAST(l_discount AS DOUBLE) AS disc
-        FROM lineitem
-        WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-          AND l_discount IS NOT NULL),
-      r AS (SELECT """ + ", ".join(
-        _sp_rank.format(c=c) + f" AS r_{c}"
-        for c in ("qty", "price", "disc")) + """ FROM b)
-      """ + " UNION ALL ".join(f"""
-      SELECT '{a}' AS col_a, '{b}' AS col_b,
-             CAST(count(*) AS BIGINT) AS n_pairs,
-             round(corr(r_{a}, r_{b}), 6) AS rho FROM r"""
-                               for a, b in _sp_pairs)
-    d["mad_outliers"] = """
-      WITH b AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-                        CAST(l_extendedprice AS DOUBLE) AS v
-                 FROM lineitem),
-      med AS (SELECT l_returnflag, quantile_cont(v, 0.5) AS med
-              FROM b GROUP BY l_returnflag),
-      mad AS (SELECT b.l_returnflag, quantile_cont(abs(v - med), 0.5) AS mad
-              FROM b JOIN med USING (l_returnflag) GROUP BY b.l_returnflag),
-      z AS (SELECT l_orderkey, l_linenumber, b.l_returnflag,
-                   v AS l_extendedprice,
-                   round(CASE WHEN mad > 0
-                              THEN 0.6745 * (v - med) / mad END, 6) AS rz
-            FROM b JOIN med USING (l_returnflag)
-                   JOIN mad USING (l_returnflag))
-      SELECT *, COALESCE(abs(rz) > 3.5, FALSE) AS is_outlier FROM z
-    """
-    d["rrf"] = """
-      WITH d AS (SELECT doc_id % 25 AS q, doc_id, n_chars AS len_key,
-                        (doc_id * 37) % 1000 AS hash_key
-                 FROM documents),
-      ra AS (SELECT q, doc_id,
-                    row_number() OVER (PARTITION BY q
-                      ORDER BY len_key DESC, doc_id) AS rank
-             FROM d),
-      rb AS (SELECT q, doc_id,
-                    row_number() OVER (PARTITION BY q
-                      ORDER BY hash_key ASC, doc_id) AS rank
-             FROM d),
-      runs AS (SELECT * FROM ra WHERE rank <= 10
-               UNION ALL SELECT * FROM rb WHERE rank <= 10),
-      s AS (SELECT q AS query_id, doc_id,
-                   sum(1.0 / (60 + rank)) AS sc,
-                   CAST(count(*) AS BIGINT) AS n_sources
-            FROM runs GROUP BY q, doc_id)
-      SELECT query_id, doc_id, round(sc, 6) AS rrf_score, n_sources,
-             CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY sc DESC, doc_id ASC) AS INTEGER) AS fused_rank
-      FROM s
-    """
-    d["isotonic"] = """
-      WITH src AS (SELECT (o_orderkey * 2654435761) % 1000000 AS pr,
-                          (o_orderkey * 7919) % 1000 AS u
-                   FROM orders),
-      b AS (SELECT least(19, CAST(floor(pr / 1000000.0 * 20) AS INT)) AS bin,
-                   pr / 1000000.0 AS p,
-                   CASE WHEN u < 200 + CAST(floor(pr / 2000.0) AS BIGINT)
-                        THEN 1.0 ELSE 0.0 END AS y
-            FROM src),
-      g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-                   avg(p) AS avg_prob, sum(y) AS sy
-            FROM b GROUP BY bin),
-      r AS (SELECT i.bin AS i, j.bin AS j,
-                   (SELECT sum(sy) / sum(n) FROM g k
-                    WHERE k.bin BETWEEN i.bin AND j.bin) AS a
-            FROM g i JOIN g j ON i.bin <= j.bin),
-      mins AS (SELECT gb.bin, r.i, min(r.a) AS m
-               FROM g gb JOIN r ON r.i <= gb.bin AND r.j >= gb.bin
-               GROUP BY gb.bin, r.i),
-      cal AS (SELECT bin, max(m) AS calibrated FROM mins GROUP BY bin)
-      SELECT g.bin, g.n, round(g.avg_prob, 6) AS avg_prob,
-             round(g.sy / g.n, 6) AS frac_pos,
-             round(cal.calibrated, 6) AS calibrated
-      FROM g JOIN cal USING (bin)
-    """
-    d["kripp"] = """
-      WITH cells AS (
-        SELECT doc_id % 200 AS i,
-               'c' || CAST(length(text) % 4 AS VARCHAR) AS r,
-               CAST(count(*) AS DOUBLE) AS c
-        FROM documents GROUP BY 1, 2),
-      per_item AS (
-        SELECT i, sum(c) AS ni FROM cells GROUP BY i
-        HAVING sum(c) >= 2),
-      paired AS (
-        SELECT cells.i, cells.r, cells.c, per_item.ni
-        FROM cells JOIN per_item ON per_item.i = cells.i),
-      do_tab AS (
-        SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_items,
-               sum(c * (ni - c) / (ni - 1)) AS do_num
-        FROM paired),
-      marg AS (SELECT r, sum(c) AS nc FROM paired GROUP BY r),
-      n_tab AS (SELECT CAST(sum(nc) AS BIGINT) AS n_ratings,
-                       sum(nc * nc) AS sq
-                FROM marg)
-      SELECT n_items, n_ratings,
-             round(do_num / n_ratings, 6) AS d_o,
-             round((n_ratings * 1.0 * n_ratings - sq)
-                   / (n_ratings * 1.0 * (n_ratings - 1)), 6) AS d_e,
-             CASE WHEN (n_ratings * 1.0 * n_ratings - sq) > 0
-                  THEN round(1.0 - (do_num / n_ratings)
-                             / ((n_ratings * 1.0 * n_ratings - sq)
-                                / (n_ratings * 1.0 * (n_ratings - 1))), 6)
-             END AS alpha
-      FROM do_tab, n_tab
-    """
-    d["ab_tests"] = """
-      WITH e AS (SELECT event_type, CAST(value AS DOUBLE) AS v,
-                        CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm
-                 FROM events),
-      agg AS (SELECT event_type,
-                     sum(CASE WHEN arm='a' THEN 1 ELSE 0 END) AS n_a,
-                     sum(CASE WHEN arm='a' THEN v ELSE 0.0 END) AS s_a,
-                     sum(CASE WHEN arm='a' THEN v*v ELSE 0.0 END) AS q_a,
-                     sum(CASE WHEN arm='b' THEN 1 ELSE 0 END) AS n_b,
-                     sum(CASE WHEN arm='b' THEN v ELSE 0.0 END) AS s_b,
-                     sum(CASE WHEN arm='b' THEN v*v ELSE 0.0 END) AS q_b
-              FROM e GROUP BY event_type),
-      st AS (SELECT event_type, CAST(n_a AS BIGINT) AS n_a,
-                    CAST(n_b AS BIGINT) AS n_b,
-                    s_a/n_a AS m_a, s_b/n_b AS m_b,
-                    (q_a - s_a*s_a/n_a)/(n_a-1)/n_a AS sa,
-                    (q_b - s_b*s_b/n_b)/(n_b-1)/n_b AS sb
-             FROM agg),
-      tt AS (SELECT event_type, n_a, n_b,
-                    round(m_a, 6) AS mean_a, round(m_b, 6) AS mean_b,
-                    CASE WHEN n_a>=2 AND n_b>=2 AND sa+sb>0
-                         THEN (m_a-m_b)/sqrt(sa+sb) END AS t_raw,
-                    CASE WHEN n_a>=2 AND n_b>=2 AND sa+sb>0
-                         THEN round((sa+sb)*(sa+sb)
-                              / (sa*sa/(n_a-1) + sb*sb/(n_b-1)), 2)
-                    END AS dof
-             FROM st),
-      tp AS (SELECT event_type, n_a, n_b, mean_a, mean_b,
-                    round(t_raw, 6) AS t_stat, dof,
-                    round(2.0 / (1.0 + exp(0.07056*pow(abs(t_raw), 3)
-                                           + 1.5976*abs(t_raw))), 6)
-                      AS p_value
-             FROM tt),
-      fam AS (SELECT *, count(*) OVER () AS m,
-                     row_number() OVER (ORDER BY p_value ASC, event_type)
-                       AS rk
-              FROM tp WHERE p_value IS NOT NULL),
-      bh AS (SELECT *, round(least(
-                      min(p_value * m / rk) OVER (
-                        ORDER BY p_value ASC, event_type
-                        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING),
-                      1.0), 6) AS q_value
-             FROM fam)
-      SELECT event_type, n_a, n_b, mean_a, mean_b, t_stat, dof, p_value,
-             q_value, q_value <= 0.2 AS reject FROM bh
-      UNION ALL
-      SELECT event_type, n_a, n_b, mean_a, mean_b, t_stat, dof, p_value,
-             CAST(NULL AS DOUBLE), FALSE FROM tp WHERE p_value IS NULL
-    """
-    d["mann_whitney"] = """
-      WITH e AS (SELECT event_type, CAST(value AS DOUBLE) AS v,
-                        CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm
-                 FROM events),
-      vc AS (SELECT event_type, v, CAST(count(*) AS DOUBLE) AS t,
-                    CAST(sum(CASE WHEN arm='a' THEN 1 ELSE 0 END) AS DOUBLE)
-                      AS ta
-             FROM e GROUP BY event_type, v),
-      rk AS (SELECT *, sum(t) OVER (PARTITION BY event_type ORDER BY v
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       - t + (t+1)/2 AS r
-             FROM vc),
-      ag AS (SELECT event_type, sum(ta) AS na, sum(t - ta) AS nb,
-                    sum(ta * r) AS ra, sum(t*t*t - t) AS tie
-             FROM rk GROUP BY event_type),
-      z AS (SELECT event_type, na, nb, ra - na*(na+1)/2 AS u,
-                   CASE WHEN na>=1 AND nb>=1
-                         AND na*nb/12*((na+nb+1)
-                             - tie/((na+nb)*(na+nb-1))) > 0
-                        THEN (ra - na*(na+1)/2 - na*nb/2)
-                             / sqrt(na*nb/12*((na+nb+1)
-                                    - tie/((na+nb)*(na+nb-1))))
-                   END AS z_raw
-            FROM ag)
-      SELECT event_type, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-             round(u, 1) AS u_a, round(z_raw, 6) AS z_stat,
-             round(2.0 / (1.0 + exp(0.07056*pow(abs(z_raw), 3)
-                                    + 1.5976*abs(z_raw))), 6) AS p_value
-      FROM z
-    """
-    d["kaplan_meier"] = """
-      WITH life AS (SELECT user_id,
-                      CAST(floor((epoch(max(ts)) - epoch(min(ts))) / 3600)
-                           AS BIGINT) AS dur_h,
-                      max(CASE WHEN user_id % 4 <> 0 THEN 1 ELSE 0 END) AS ev
-                    FROM events GROUP BY user_id),
-      agg AS (SELECT dur_h,
-                     CAST(sum(ev) AS BIGINT) AS n_event,
-                     CAST(sum(1 - ev) AS BIGINT) AS n_censored
-              FROM life GROUP BY dur_h),
-      st AS (SELECT *, sum(n_event + n_censored) OVER () AS total,
-                    sum(n_event + n_censored) OVER (ORDER BY dur_h
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS thru
-             FROM agg),
-      km AS (SELECT dur_h, n_event, n_censored,
-                    CAST(total - thru + n_event + n_censored AS BIGINT)
-                      AS n_risk,
-                    max(CASE WHEN 1.0 - CAST(n_event AS DOUBLE)
-                              / (total - thru + n_event + n_censored) <= 0
-                             THEN 1 ELSE 0 END) OVER (ORDER BY dur_h
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS dead,
-                    sum(CASE WHEN 1.0 - CAST(n_event AS DOUBLE)
-                              / (total - thru + n_event + n_censored) > 0
-                             THEN ln(1.0 - CAST(n_event AS DOUBLE)
-                                  / (total - thru + n_event + n_censored))
-                             ELSE 0.0 END) OVER (ORDER BY dur_h
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS logs
-             FROM st)
-      SELECT dur_h, n_risk, n_event, n_censored,
-             round(CASE WHEN dead = 1 THEN 0.0 ELSE exp(logs) END, 6)
-               AS survival
-      FROM km
-    """
-    d["cuped"] = """
-      WITH li AS (SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS y,
-                         CAST(l_quantity AS DOUBLE) AS x
-                  FROM lineitem),
-      g AS (SELECT round((sum(x*y) - sum(x)*sum(y)/count(*))
-                         / (sum(x*x) - sum(x)*sum(x)/count(*)), 4) AS theta,
-                   round(sum(x)/count(*), 4) AS xbar
-            FROM li),
-      adj AS (SELECT l_returnflag, theta, y,
-                     y - theta*(x - xbar) AS ya
-              FROM li, g),
-      o AS (SELECT l_returnflag, theta, CAST(count(*) AS BIGINT) AS n,
-                   round(avg(y), 6) AS mean_raw,
-                   round(avg(ya), 6) AS mean_cuped,
-                   (sum(y*y) - sum(y)*sum(y)/count(*))/(count(*)-1) AS vr,
-                   (sum(ya*ya) - sum(ya)*sum(ya)/count(*))/(count(*)-1) AS va
-            FROM adj GROUP BY 1, 2)
-      SELECT l_returnflag, n, mean_raw, mean_cuped, theta,
-             round(vr, 2) AS var_raw, round(va, 2) AS var_cuped,
-             round(100*(1 - va/vr), 2) + 0.0 AS var_reduction_pct
-      FROM o
-    """
-    d["cusum"] = """
-      WITH s AS (SELECT event_id, user_id, value,
-                        sum(CAST(value AS DOUBLE) - 60.0) OVER (
-                          PARTITION BY user_id ORDER BY event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS S
-                 FROM events),
-      c AS (SELECT event_id, user_id, value,
-                   S - least(0.0, min(S) OVER (
-                     PARTITION BY user_id ORDER BY event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-                     AS cs
-            FROM s)
-      SELECT event_id, user_id, value, round(cs, 6) AS cusum,
-             round(cs, 6) > 300.0 AS changed
-      FROM c
-    """
-    d["edit_pairs"] = """
-      WITH t AS (SELECT doc_id, substr(text, 1, 30) AS s FROM documents)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(levenshtein(a.s, b.s) AS INT) AS dist
-      FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE abs(length(a.s) - length(b.s)) <= 8
-        AND levenshtein(a.s, b.s) <= 8
-    """
-    d["kmv_distinct"] = f"""
-      WITH hh AS (SELECT l_returnflag AS g,
-                         CAST({det_hash_i64_sql('l_orderkey', 7)} AS DOUBLE)
-                           / 2147483648.0 AS h01
-                  FROM lineitem),
-      kept AS (SELECT DISTINCT g, h01 FROM hh WHERE h01 <= 0.05),
-      rk AS (SELECT g, h01,
-                    row_number() OVER (PARTITION BY g ORDER BY h01) AS rk
-             FROM kept),
-      agg AS (SELECT g, count(*) AS n_kept,
-                     max(CASE WHEN rk = 64 THEN h01 END) AS h_k
-              FROM rk WHERE rk <= 64 GROUP BY g),
-      ex AS (SELECT l_returnflag AS g,
-                    count(DISTINCT l_orderkey) AS ed
-             FROM lineitem GROUP BY 1)
-      SELECT ex.g AS l_returnflag,
-             CASE WHEN h_k IS NOT NULL THEN round(63 / h_k, 2)
-                  ELSE round(coalesce(n_kept, 0) / 0.05, 2) END
-               AS kmv_estimate,
-             CAST(coalesce(n_kept, 0) AS BIGINT) AS n_kept,
-             h_k IS NOT NULL AS saturated,
-             CAST(ed AS BIGINT) AS exact_distinct
-      FROM ex LEFT JOIN agg ON ex.g = agg.g
-    """
-    d["cms_heavy"] = f"""
-      WITH ds AS (SELECT UNNEST([0, 1, 2, 3]) AS d),
-      sk AS (SELECT d, ({det_hash_i64_sql('user_id + 100 + d', 0)}) % 32
-                      AS bucket,
-                    count(*) AS cnt
-             FROM events, ds GROUP BY 1, 2),
-      top AS (SELECT CAST(user_id AS BIGINT) AS item,
-                     count(*) AS true_cnt
-              FROM events GROUP BY 1
-              ORDER BY true_cnt DESC, item ASC LIMIT 10),
-      probe AS (SELECT item, true_cnt, d,
-                       ({det_hash_i64_sql('item + 100 + d', 0)}) % 32
-                         AS bucket
-                FROM top, ds),
-      est AS (SELECT item, true_cnt, min(cnt) AS cms_estimate
-              FROM probe JOIN sk USING (d, bucket) GROUP BY 1, 2)
-      SELECT item, CAST(true_cnt AS BIGINT) AS true_cnt,
-             CAST(cms_estimate AS BIGINT) AS cms_estimate,
-             CAST(cms_estimate - true_cnt AS BIGINT) AS overestimate
-      FROM est
-    """
-    d["bloom_semi"] = f"""
-      WITH hs AS (SELECT UNNEST([0, 1, 2]) AS i),
-      dim AS (SELECT DISTINCT c_custkey AS k FROM customer
-              WHERE c_acctbal > 5000),
-      bits AS (SELECT DISTINCT
-                 ({det_hash_i64_sql('dim.k + 200 + i', 0)}) % 4096 AS bit
-               FROM dim, hs),
-      fk AS (SELECT DISTINCT o_custkey AS k FROM orders),
-      ps AS (SELECT DISTINCT k,
-                    ({det_hash_i64_sql('fk.k + 200 + i', 0)}) % 4096 AS bit
-             FROM fk, hs),
-      need AS (SELECT k, count(*) AS n_pos FROM ps GROUP BY 1),
-      hits AS (SELECT p.k FROM ps p JOIN bits USING (bit)
-               JOIN need n ON n.k = p.k
-               GROUP BY p.k, n.n_pos HAVING count(*) = n.n_pos),
-      cand AS (SELECT h.k,
-                      CASE WHEN d2.k IS NOT NULL THEN 1 ELSE 0 END
-                        AS is_true
-               FROM hits h LEFT JOIN dim d2 ON d2.k = h.k),
-      nk AS (SELECT count(*) AS n_fact_keys FROM fk)
-      SELECT CAST(n_fact_keys AS BIGINT) AS n_fact_keys,
-             CAST(count(*) AS BIGINT) AS n_candidates,
-             CAST(sum(is_true) AS BIGINT) AS n_true,
-             CAST(count(*) - sum(is_true) AS BIGINT) AS n_false_positive,
-             round((count(*) - sum(is_true))
-                   / CAST(n_fact_keys AS DOUBLE), 6) AS fp_rate
-      FROM cand, nk GROUP BY n_fact_keys
-    """
-    d["kendall"] = """
-      WITH e AS (SELECT event_id, event_type AS g,
-                        CAST(floor(value) AS DOUBLE) AS x,
-                        epoch(ts) AS y
-                 FROM events),
-      p AS (SELECT a.g,
-                   sum(CASE WHEN (a.x - b.x) * (a.y - b.y) > 0
-                            THEN 1 ELSE 0 END) AS nc,
-                   sum(CASE WHEN (a.x - b.x) * (a.y - b.y) < 0
-                            THEN 1 ELSE 0 END) AS nd,
-                   sum(CASE WHEN a.x = b.x THEN 1 ELSE 0 END) AS n1,
-                   sum(CASE WHEN a.y = b.y THEN 1 ELSE 0 END) AS n2,
-                   count(*) AS n0
-            FROM e a JOIN e b ON a.g = b.g AND a.event_id < b.event_id
-            GROUP BY a.g),
-      nn AS (SELECT g, count(*) AS n FROM e GROUP BY g)
-      SELECT nn.g AS event_type, CAST(nn.n AS BIGINT) AS n,
-             CAST(nc AS BIGINT) AS nc, CAST(nd AS BIGINT) AS nd,
-             CASE WHEN (n0 - n1) > 0 AND (n0 - n2) > 0
-                  THEN round((nc - nd)
-                       / sqrt(CAST(n0 - n1 AS DOUBLE)
-                              * CAST(n0 - n2 AS DOUBLE)), 6)
-             END AS tau_b
-      FROM nn LEFT JOIN p ON p.g = nn.g
-    """
-    _clf_cells = f"""
-      f AS (SELECT event_type AS label,
-                   CASE WHEN ({det_hash01_sql('event_id', 11)}) < 0.3
-                        THEN 'view' ELSE event_type END AS pred
-            FROM events),
-      cells AS (SELECT label AS lab, pred AS prd, count(*) AS n
-                FROM f GROUP BY 1, 2),
-      classes AS (SELECT DISTINCT lab AS cls FROM cells
-                  UNION SELECT DISTINCT prd FROM cells),
-      bl AS (SELECT lab AS cls,
-                    sum(CASE WHEN lab = prd THEN n ELSE 0 END) AS tp_l,
-                    sum(n) AS support
-             FROM cells GROUP BY 1),
-      bp AS (SELECT prd AS cls,
-                    sum(CASE WHEN lab = prd THEN n ELSE 0 END) AS tp_p,
-                    sum(n) AS n_pred
-             FROM cells GROUP BY 1),
-      j AS (SELECT c.cls, coalesce(tp_l, 0) AS tp,
-                   coalesce(n_pred, 0) AS n_pred,
-                   coalesce(support, 0) AS support
-            FROM classes c LEFT JOIN bl ON bl.cls = c.cls
-                           LEFT JOIN bp ON bp.cls = c.cls)"""
-    d["class_report"] = f"""
-      WITH {_clf_cells}
-      SELECT cls AS class, CAST(tp AS BIGINT) AS tp,
-             CAST(n_pred - tp AS BIGINT) AS fp,
-             CAST(support - tp AS BIGINT) AS fn,
-             CAST(support AS BIGINT) AS support,
-             CASE WHEN n_pred > 0
-                  THEN round(CAST(tp AS DOUBLE) / n_pred, 6)
-             END AS "precision",
-             CASE WHEN support > 0
-                  THEN round(CAST(tp AS DOUBLE) / support, 6)
-             END AS recall,
-             CASE WHEN n_pred > 0 AND support > 0
-                  THEN round(2.0 * tp / (n_pred + support), 6)
-             END AS f1
-      FROM j
-    """
-    d["clf_summary"] = f"""
-      WITH {_clf_cells},
-      per AS (SELECT support, tp, n_pred,
-                     CASE WHEN n_pred > 0 AND support > 0
-                          THEN round(2.0 * tp / (n_pred + support), 6)
-                          ELSE 0.0 END AS f1z
-              FROM j),
-      ag AS (SELECT CAST(sum(support) AS DOUBLE) AS s,
-                    CAST(sum(tp) AS DOUBLE) AS c,
-                    avg(f1z) AS macro_raw,
-                    sum(f1z * support) / CAST(sum(support) AS DOUBLE)
-                      AS weighted_raw,
-                    CAST(sum(n_pred * support) AS DOUBLE) AS sum_pt,
-                    CAST(sum(n_pred * n_pred) AS DOUBLE) AS sum_p2,
-                    CAST(sum(support * support) AS DOUBLE) AS sum_t2
-             FROM per)
-      SELECT CAST(s AS BIGINT) AS n,
-             round(c / s, 6) AS accuracy,
-             round(macro_raw, 6) AS macro_f1,
-             round(weighted_raw, 6) AS weighted_f1,
-             CASE WHEN (s * s - sum_p2) * (s * s - sum_t2) > 0
-                  THEN round((c * s - sum_pt)
-                       / sqrt((s * s - sum_p2) * (s * s - sum_t2)), 6)
-             END AS mcc
-      FROM ag
-    """
-    _seasonal_q = """
-      WITH hrs AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                            AS hour,
-                          count(*) AS cnt
-                   FROM events GROUP BY 1),
-      w AS (SELECT hour, CAST(cnt AS DOUBLE) AS v,
-                   sum(CAST(cnt AS DOUBLE)) OVER win AS s_full,
-                   first_value(CAST(cnt AS DOUBLE)) OVER win AS lo,
-                   last_value(CAST(cnt AS DOUBLE)) OVER win AS hi,
-                   count(*) OVER win AS cwin
-            FROM hrs
-            WINDOW win AS (ORDER BY hour
-                           ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-      b AS (SELECT hour, v,
-                   CASE WHEN cwin = 25
-                        THEN (s_full - 0.5 * lo - 0.5 * hi) / 24.0
-                   END AS trend,
-                   hour % 24 AS phase
-            FROM w),
-      ph AS (SELECT phase, avg(v - trend) AS phm FROM b GROUP BY 1),
-      ctr AS (SELECT avg(phm) AS cc FROM ph),
-      se AS (SELECT phase, phm - cc AS seasonal FROM ph, ctr)
-      SELECT b.hour, round(v, 6) AS cnt, round(trend, 6) AS trend,
-             round(seasonal, 6) AS seasonal,
-             round(v - trend - seasonal, 6) AS resid
-      FROM b JOIN se USING (phase)
-    """
-    d["seasonal"] = _seasonal_q
-    d["dp_counts"] = f"""
-      WITH g AS (SELECT event_type, count(*) AS true_cnt
-                 FROM events GROUP BY 1),
-      h AS (SELECT event_type, true_cnt,
-                   (CAST({det_hash_str_i64_sql('event_type', 42)}
-                         AS DOUBLE) + 0.5) / 2147483648.0 AS u
-            FROM g),
-      nz AS (SELECT event_type, true_cnt,
-                    round(-2.0 * sign(u - 0.5)
-                          * ln(greatest(1.0 - 2.0 * abs(u - 0.5),
-                                        1e-12)), 4) AS noise
-             FROM h)
-      SELECT event_type, CAST(true_cnt AS BIGINT) AS true_cnt, noise,
-             round(greatest(true_cnt + noise, 0.0), 4) AS dp_cnt
-      FROM nz
-    """
-    d["triangles"] = """
-      WITH e0 AS (SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-                  FROM lineitem a JOIN lineitem b
-                    ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey),
-      deg AS (SELECT node, count(*) AS deg
-              FROM (SELECT a AS node FROM e0
-                    UNION ALL SELECT b FROM e0)
-              GROUP BY 1),
-      base AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-                      CAST(sum(deg) / 2 AS BIGINT) AS n_edges,
-                      CAST(sum(deg * (deg - 1) / 2) AS BIGINT)
-                        AS n_wedges
-               FROM deg),
-      tri AS (SELECT count(*) AS n_triangles
-              FROM e0 e1 JOIN e0 e2 ON e1.b = e2.a
-                         JOIN e0 e3 ON e3.a = e1.a AND e3.b = e2.b)
-      SELECT n_nodes, n_edges, n_wedges,
-             CAST(n_triangles AS BIGINT) AS n_triangles,
-             CASE WHEN n_wedges > 0
-                  THEN round(3.0 * n_triangles / n_wedges, 6)
-             END AS global_cc
-      FROM base, tri
-    """
-    d["histq"] = """
-      WITH li AS (SELECT l_returnflag AS g,
-                         CAST(l_extendedprice AS DOUBLE) AS v
-                  FROM lineitem),
-      rng AS (SELECT g, round(min(v), 6) AS lo, round(max(v), 6) AS hi,
-                     count(*) AS n,
-                     quantile_cont(v, 0.25) AS ex0,
-                     quantile_cont(v, 0.50) AS ex1,
-                     quantile_cont(v, 0.75) AS ex2,
-                     quantile_cont(v, 0.90) AS ex3
-              FROM li GROUP BY g),
-      b AS (SELECT li.g, lo, hi, n,
-                   CASE WHEN hi > lo
-                        THEN least(63, greatest(0,
-                             CAST(floor((v - lo) / (hi - lo) * 64)
-                                  AS INT)))
-                        ELSE 0 END AS bin
-            FROM li JOIN rng ON rng.g = li.g),
-      bins AS (SELECT g, lo, hi, n, bin, count(*) AS cnt
-               FROM b GROUP BY 1, 2, 3, 4, 5),
-      cum AS (SELECT *, sum(cnt) OVER (PARTITION BY g ORDER BY bin)
-                        AS cum
-              FROM bins),
-      qs AS (SELECT UNNEST([0.25, 0.50, 0.75, 0.90]) AS q,
-                    UNNEST([0, 1, 2, 3]) AS qi),
-      hit AS (SELECT c.*, q, qi,
-                     row_number() OVER (PARTITION BY c.g, q
-                                        ORDER BY bin) AS rk
-              FROM cum c, qs
-              WHERE cum >= q * n),
-      fin AS (SELECT h.g, q, qi,
-                     h.lo + (bin + (q * h.n - (cum - cnt)) / cnt)
-                        * ((h.hi - h.lo) / 64.0) AS est,
-                     CASE qi WHEN 0 THEN ex0 WHEN 1 THEN ex1
-                             WHEN 2 THEN ex2 ELSE ex3 END AS exact
-              FROM hit h JOIN rng r2 ON r2.g = h.g
-              WHERE rk = 1)
-      SELECT g AS l_returnflag, q, round(est, 4) AS est,
-             round(exact, 4) AS exact,
-             round(abs(est - exact), 4) AS err
-      FROM fin
-    """
-    d["lttb"] = """
-      WITH hrs AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                            AS hour,
-                          count(*) AS cnt
-                   FROM events GROUP BY 1),
-      nn AS (SELECT count(*) AS n FROM hrs),
-      ix AS (SELECT hour, CAST(cnt AS DOUBLE) AS v,
-                    row_number() OVER (ORDER BY hour) AS i
-             FROM hrs),
-      pts AS (SELECT hour, v, i,
-                     CASE WHEN i = 1 THEN 0
-                          WHEN i = n THEN 47
-                          ELSE 1 + CAST(floor((i - 2) * 46 / (n - 2))
-                                        AS INT)
-                     END AS b
-              FROM ix, nn),
-      means AS (SELECT b, avg(CAST(hour AS DOUBLE)) AS mt,
-                       avg(v) AS mv
-                FROM pts GROUP BY b),
-      cand AS (SELECT p.*, pm.mt AS pt, pm.mv AS pv,
-                      nm.mt AS nt, nm.mv AS nv
-               FROM pts p LEFT JOIN means pm ON pm.b = p.b - 1
-                          LEFT JOIN means nm ON nm.b = p.b + 1),
-      sc AS (SELECT *, round(
-                 CASE WHEN pt IS NULL OR nt IS NULL THEN 0.0
-                      ELSE abs((pt - nt) * (v - pv)
-                               - (pt - CAST(hour AS DOUBLE))
-                                 * (nv - pv))
-                 END, 6) AS s
-             FROM cand),
-      pick AS (SELECT *, row_number() OVER (PARTITION BY b
-                                            ORDER BY s DESC, hour)
-                           AS rk
-               FROM sc)
-      SELECT hour, round(v, 6) AS cnt, CAST(b AS INT) AS bucket
-      FROM pick WHERE rk = 1
-    """
-    d["kmv_join"] = f"""
-      WITH ha AS (SELECT DISTINCT h01, 1 AS in_a
-                  FROM (SELECT CAST({det_hash_i64_sql('o_custkey', 7)}
-                               AS DOUBLE) / 2147483648.0 AS h01
-                        FROM orders)
-                  WHERE h01 <= 0.2),
-      hb AS (SELECT DISTINCT h01, 1 AS in_b
-             FROM (SELECT CAST({det_hash_i64_sql('c_custkey', 7)}
-                          AS DOUBLE) / 2147483648.0 AS h01
-                   FROM customer WHERE c_acctbal > 2500)
-             WHERE h01 <= 0.2),
-      u AS (SELECT coalesce(ha.h01, hb.h01) AS h01,
-                   coalesce(in_a, 0) AS in_a,
-                   coalesce(in_b, 0) AS in_b
-            FROM ha FULL JOIN hb ON ha.h01 = hb.h01),
-      tk AS (SELECT *, row_number() OVER (ORDER BY h01) AS rk FROM u),
-      ag AS (SELECT count(*) AS k_used,
-                    max(CASE WHEN rk = 128 THEN h01 END) AS h_k,
-                    sum(in_a * in_b) AS nboth
-             FROM tk WHERE rk <= 128),
-      ex AS (SELECT count(*) AS exact_inter
-             FROM (SELECT DISTINCT o_custkey FROM orders) a
-             JOIN (SELECT DISTINCT c_custkey FROM customer
-                   WHERE c_acctbal > 2500) b
-               ON a.o_custkey = b.c_custkey)
-      SELECT CAST(k_used AS BIGINT) AS k_used,
-             CASE WHEN h_k IS NOT NULL THEN round(127 / h_k, 2)
-                  ELSE round(k_used / 0.2, 2) END AS union_est,
-             round(nboth / CAST(k_used AS DOUBLE), 6) AS jaccard_est,
-             round(round(nboth / CAST(k_used AS DOUBLE), 6)
-                   * (CASE WHEN h_k IS NOT NULL
-                           THEN round(127 / h_k, 2)
-                           ELSE round(k_used / 0.2, 2) END), 2)
-               AS inter_est,
-             CAST(exact_inter AS BIGINT) AS exact_inter
-      FROM ag, ex
-    """
-    d["theil_sen"] = """
-      WITH s AS (SELECT event_type AS g,
-                        CAST(floor(epoch(ts) / 3600) AS BIGINT) AS t,
-                        count(*) AS c
-                 FROM events GROUP BY 1, 2),
-      e AS (SELECT g, CAST(t AS DOUBLE) AS t, CAST(c AS DOUBLE) AS v
-            FROM s),
-      sl AS (SELECT a.g, (b.v - a.v) / (b.t - a.t) AS sp
-             FROM e a JOIN e b ON a.g = b.g AND a.t < b.t),
-      m AS (SELECT g, round(quantile_cont(sp, 0.5), 6) AS slope
-            FROM sl GROUP BY g),
-      ic AS (SELECT e.g, m.slope,
-                    round(quantile_cont(v - m.slope * t, 0.5), 6)
-                      AS intercept
-             FROM e JOIN m ON m.g = e.g
-             GROUP BY e.g, m.slope),
-      nn AS (SELECT g, count(*) AS n FROM e GROUP BY g)
-      SELECT nn.g AS event_type, CAST(nn.n AS BIGINT) AS n,
-             slope, intercept
-      FROM nn LEFT JOIN ic ON ic.g = nn.g
-    """
-    d["did"] = """
-      WITH e AS (SELECT event_type AS seg, CAST(value AS DOUBLE) AS v,
-                        CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END
-                          AS t,
-                        CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                             THEN 1 ELSE 0 END AS p
-                 FROM events),
-      a AS (SELECT seg,
-              sum(CASE WHEN t=1 AND p=0 THEN 1 ELSE 0 END) AS n1,
-              sum(CASE WHEN t=1 AND p=0 THEN v ELSE 0.0 END) AS s1,
-              sum(CASE WHEN t=1 AND p=0 THEN v*v ELSE 0.0 END) AS q1,
-              sum(CASE WHEN t=1 AND p=1 THEN 1 ELSE 0 END) AS n2,
-              sum(CASE WHEN t=1 AND p=1 THEN v ELSE 0.0 END) AS s2,
-              sum(CASE WHEN t=1 AND p=1 THEN v*v ELSE 0.0 END) AS q2,
-              sum(CASE WHEN t=0 AND p=0 THEN 1 ELSE 0 END) AS n3,
-              sum(CASE WHEN t=0 AND p=0 THEN v ELSE 0.0 END) AS s3,
-              sum(CASE WHEN t=0 AND p=0 THEN v*v ELSE 0.0 END) AS q3,
-              sum(CASE WHEN t=0 AND p=1 THEN 1 ELSE 0 END) AS n4,
-              sum(CASE WHEN t=0 AND p=1 THEN v ELSE 0.0 END) AS s4,
-              sum(CASE WHEN t=0 AND p=1 THEN v*v ELSE 0.0 END) AS q4
-            FROM e GROUP BY seg),
-      b AS (SELECT seg, n1, n2, n3, n4,
-                   s1/n1 AS m1, s2/n2 AS m2, s3/n3 AS m3, s4/n4 AS m4,
-                   ((0.0 + (q1 - s1*s1/n1)/(n1-1)/n1)
-                        + (q2 - s2*s2/n2)/(n2-1)/n2)
-                        + (q3 - s3*s3/n3)/(n3-1)/n3
-                        + (q4 - s4*s4/n4)/(n4-1)/n4 AS var,
-                   (s2/n2 - s1/n1) - (s4/n4 - s3/n3) AS did,
-                   n1 >= 2 AND n2 >= 2 AND n3 >= 2 AND n4 >= 2 AS okn
-            FROM a),
-      c AS (SELECT *, okn AND var > 0 AS ok,
-                   did / sqrt(var) AS z
-            FROM b)
-      SELECT seg AS event_type,
-             CAST(n1 + n2 + n3 + n4 AS BIGINT) AS n,
-             round(m1, 6) AS mean_t_pre, round(m2, 6) AS mean_t_post,
-             round(m3, 6) AS mean_c_pre, round(m4, 6) AS mean_c_post,
-             round(did, 6) AS did,
-             round(CASE WHEN ok THEN sqrt(var) END, 6) AS se,
-             round(CASE WHEN ok THEN z END, 6) AS z_stat,
-             round(CASE WHEN ok THEN
-               2.0 / (1.0 + exp(0.07056*pow(abs(z), 3)
-                                + 1.5976*abs(z))) END, 6) AS p_value
-      FROM c
-    """
-    d["forecast_eval"] = """
-      WITH hrs AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                            AS hour,
-                          count(*) AS cnt
-                   FROM events GROUP BY 1),
-      l AS (SELECT hour, CAST(cnt AS DOUBLE) AS v,
-                   lag(CAST(cnt AS DOUBLE), 1)
-                     OVER (ORDER BY hour) AS f1,
-                   lag(CAST(cnt AS DOUBLE), 24)
-                     OVER (ORDER BY hour) AS fs
-            FROM hrs),
-      b AS (SELECT * FROM l
-            WHERE fs IS NOT NULL AND f1 IS NOT NULL),
-      a AS (SELECT count(*) AS n,
-                   sum(abs(v - f1)) AS ae1,
-                   sum((v - f1) * (v - f1)) AS se1,
-                   sum(CASE WHEN abs(v) + abs(f1) > 0
-                            THEN 2.0 * abs(v - f1)
-                                 / (abs(v) + abs(f1))
-                            ELSE 0.0 END) AS sm1,
-                   sum(abs(v - fs)) AS ae2,
-                   sum((v - fs) * (v - fs)) AS se2,
-                   sum(CASE WHEN abs(v) + abs(fs) > 0
-                            THEN 2.0 * abs(v - fs)
-                                 / (abs(v) + abs(fs))
-                            ELSE 0.0 END) AS sm2
-            FROM b)
-      SELECT 'naive' AS method, CAST(n AS BIGINT) AS n,
-             round(ae1 / n, 6) AS mae, round(sqrt(se1 / n), 6) AS rmse,
-             round(sm1 / n, 6) AS smape,
-             round((ae1 / n) / (ae1 / n), 6) AS mase
-      FROM a
-      UNION ALL
-      SELECT 'seasonal_naive', CAST(n AS BIGINT),
-             round(ae2 / n, 6), round(sqrt(se2 / n), 6),
-             round(sm2 / n, 6), round((ae2 / n) / (ae1 / n), 6)
-      FROM a
-    """
-    _hll_bits = 21                      # 31-bit hash, p = 10
-    _hll_rank = ("CASE " + " ".join(
-        f"WHEN w >= {1 << (_hll_bits - r)} THEN {r}"
-        for r in range(1, _hll_bits + 1)) + f" ELSE {_hll_bits + 1} END")
-    _hll_am2 = 0.7213 / (1.0 + 1.079 / 1024) * 1024 * 1024
-    d["hll"] = f"""
-      WITH h AS (SELECT l_returnflag AS g,
-                        {det_hash_mix_i64_sql('l_orderkey', 13)} AS h
-                 FROM lineitem),
-      base AS (SELECT g, h % 1024 AS b,
-                      CAST(floor(h / 1024) AS BIGINT) AS w
-               FROM h),
-      r AS (SELECT g, b, {_hll_rank} AS rk FROM base),
-      regs AS (SELECT g, b, max(rk) AS mr FROM r GROUP BY 1, 2),
-      agg AS (SELECT g, sum(pow(2.0, -mr)) AS s, count(*) AS v
-              FROM regs GROUP BY g),
-      ex AS (SELECT l_returnflag AS g,
-                    count(DISTINCT l_orderkey) AS ed
-             FROM lineitem GROUP BY 1)
-      SELECT ex.g AS l_returnflag,
-             round(CASE WHEN ({_hll_am2!r} / (s + (1024 - v))
-                             <= 2560.0)
-                         AND (1024 - v) > 0
-                        THEN 1024.0 * ln(1024.0 / (1024 - v))
-                        ELSE {_hll_am2!r} / (s + (1024 - v)) END, 2)
-               AS hll_estimate,
-             CAST(1024 AS BIGINT) AS n_registers,
-             CAST(ed AS BIGINT) AS exact_distinct
-      FROM ex LEFT JOIN agg ON agg.g = ex.g
-    """
-    d["gini"] = """
-      WITH e AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-                 FROM events),
-      r AS (SELECT g, v,
-                   row_number() OVER (PARTITION BY g ORDER BY v) AS i
-            FROM e),
-      a AS (SELECT g, count(*) AS n, sum(v) AS tot, sum(i * v) AS iw
-            FROM r GROUP BY g)
-      SELECT g AS event_type, CAST(n AS BIGINT) AS n,
-             round(tot, 4) AS total,
-             CASE WHEN tot > 0
-                  THEN round(2.0 * iw / (CAST(n AS DOUBLE) * tot)
-                             - (CAST(n AS DOUBLE) + 1)
-                               / CAST(n AS DOUBLE), 6)
-             END AS gini
-      FROM a
-    """
-    from hipipe_spark.operators.validate import BENFORD_P
-    _bexp = ("CASE digit " + " ".join(
-        f"WHEN {dd} THEN {pp!r}" for dd, pp in BENFORD_P.items())
-        + " END")
-    d["benford"] = f"""
-      WITH li AS (SELECT l_returnflag AS g,
-                         abs(CAST(l_extendedprice AS DOUBLE)) AS v
-                  FROM lineitem),
-      o AS (SELECT g,
-                   CAST(substring(CAST(CAST(floor(v) AS BIGINT)
-                                       AS VARCHAR), 1, 1) AS INT)
-                     AS digit,
-                   count(*) AS n_obs
-            FROM li WHERE v >= 1 GROUP BY 1, 2),
-      gs AS (SELECT DISTINCT g FROM o),
-      ds AS (SELECT UNNEST([1,2,3,4,5,6,7,8,9]) AS digit),
-      f AS (SELECT gs.g, ds.digit, coalesce(n_obs, 0) AS n_obs
-            FROM gs CROSS JOIN ds
-            LEFT JOIN o ON o.g = gs.g AND o.digit = ds.digit),
-      s AS (SELECT g, digit, n_obs,
-                   CAST(n_obs AS DOUBLE)
-                     / sum(n_obs) OVER (PARTITION BY g) AS share,
-                   {_bexp} AS expv
-            FROM f)
-      SELECT g AS l_returnflag, digit,
-             CAST(n_obs AS BIGINT) AS n_obs,
-             round(share, 6) AS share,
-             round(expv, 6) AS expected,
-             round(abs(share - expv), 6) AS deviation,
-             round(avg(abs(share - expv)) OVER (PARTITION BY g), 6)
-               AS mad
-      FROM s
-    """
-    d["qnorm"] = """
-      WITH cap AS (SELECT LEAST(1500, MIN(cnt)) AS cap
-                   FROM (SELECT count(*) AS cnt FROM events
-                         GROUP BY event_type)),
-      capped AS (SELECT event_id, event_type,
-                        CAST(value AS DOUBLE) AS value
-                 FROM (SELECT event_id, event_type, value,
-                              row_number() OVER (
-                                PARTITION BY event_type
-                                ORDER BY event_id) AS rn
-                       FROM events)
-                 WHERE rn <= (SELECT cap FROM cap)),
-      r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-                                         ORDER BY value, event_id)
-                        AS rk
-            FROM capped),
-      ref AS (SELECT rk, avg(value) AS refv FROM r GROUP BY rk)
-      SELECT event_id, event_type, round(value, 6) AS value,
-             round(refv, 6) AS qn_value
-      FROM r JOIN ref USING (rk)
-    """
-    import math as _math
-    _fsw = []
-    for _m, _u in ((0.9, 0.2), (0.8, 0.18), (0.7, 0.1)):
-        _fsw.append((round(_math.log2(_m / _u), 6),
-                     round(_math.log2((1 - _m) / (1 - _u)), 6)))
-    d["fs_link"] = f"""
-      WITH p AS (SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-                        a.c_mktsegment = b.c_mktsegment AS seg_agree,
-                        abs(a.c_acctbal - b.c_acctbal) < 1000
-                          AS bal_agree,
-                        a.c_custkey % 10 = b.c_custkey % 10
-                          AS key_agree
-                 FROM customer a JOIN customer b
-                   ON a.c_nationkey = b.c_nationkey
-                  AND a.c_custkey < b.c_custkey),
-      s AS (SELECT *, round(
-              ((0.0 + CASE WHEN seg_agree THEN {_fsw[0][0]!r}
-                           ELSE {_fsw[0][1]!r} END)
-                    + CASE WHEN bal_agree THEN {_fsw[1][0]!r}
-                           ELSE {_fsw[1][1]!r} END)
-                    + CASE WHEN key_agree THEN {_fsw[2][0]!r}
-                           ELSE {_fsw[2][1]!r} END, 4) AS weight
-            FROM p)
-      SELECT id_a, id_b, seg_agree, bal_agree, key_agree, weight,
-             CASE WHEN weight >= 4.0 THEN 'link'
-                  WHEN weight <= -2.0 THEN 'non_link'
-                  ELSE 'possible' END AS decision
-      FROM s
-    """
-    _tr_edges = f"""
-      SELECT src, dst, 1.0 AS w FROM (
-        WITH tok AS (SELECT doc_id AS id, {_det_tokens_sql('text')}
-                       AS toks
-                     FROM documents),
-        p AS (SELECT id, unnest(toks) AS w,
-                     unnest(range(1, len(toks) + 1)) AS pos
-              FROM tok),
-        pr AS (SELECT a.w AS src, b.w AS dst
-               FROM p a JOIN p b
-                 ON a.id = b.id AND b.pos > a.pos
-                AND b.pos <= a.pos + 2)
-        SELECT src, dst FROM pr
-        UNION ALL SELECT dst AS src, src AS dst FROM pr)"""
-    d["textrank"] = ("SELECT * FROM ("
-                     + pagerank_oracle_sql(_tr_edges, damping=0.85,
-                                           n_iter=6, round_to=6)
-                     + ") ORDER BY rank DESC, node LIMIT 20")
-    _K = 12
-    _lags = ", ".join(f"lag(d, {k}) OVER win AS l{k}"
-                      for k in range(1, _K + 1))
-    _nums = ", ".join(f"sum(d * l{k}) AS num{k}"
-                      for k in range(1, _K + 1))
-    _lag_arr = "[" + ", ".join(str(k) for k in range(1, _K + 1)) + "]"
-    _r_arr = "[" + ", ".join(f"round(num{k} / den, 6)"
-                             for k in range(1, _K + 1)) + "]"
-    d["acf"] = f"""
-      WITH hrs AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                            AS hour,
-                          CAST(count(*) AS DOUBLE) AS cnt
-                   FROM events GROUP BY 1),
-      mu AS (SELECT round(avg(cnt), 6) AS mu FROM hrs),
-      b AS (SELECT hour, cnt - mu AS d FROM hrs, mu),
-      l AS (SELECT d, {_lags}
-            FROM b WINDOW win AS (ORDER BY hour)),
-      a AS (SELECT count(*) AS n, sum(d * d) AS den, {_nums} FROM l),
-      per AS (SELECT CAST(n AS DOUBLE) AS n,
-                     UNNEST({_lag_arr}) AS lag,
-                     UNNEST({_r_arr}) AS r
-              FROM a),
-      q AS (SELECT CAST(lag AS INT) AS lag, r,
-                   round(n * (n + 2)
-                         * sum(r * r / (n - lag)) OVER (ORDER BY lag),
-                         6) AS q_stat
-            FROM per),
-      zt AS (SELECT lag, r, q_stat,
-                    (pow(q_stat / CAST(lag AS DOUBLE),
-                         {1.0 / 3.0!r})
-                     - (1.0 - 2.0 / (9.0 * CAST(lag AS DOUBLE))))
-                    / sqrt(2.0 / (9.0 * CAST(lag AS DOUBLE))) AS z
-             FROM q)
-      SELECT lag, r, q_stat,
-             round(1.0 / (1.0 + exp(0.07056 * z * z * z
-                                    + 1.5976 * z)), 6) AS p_value
-      FROM zt
-    """
-    d["node_cc"] = """
-      WITH e0 AS (SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-                  FROM lineitem a JOIN lineitem b
-                    ON a.l_orderkey = b.l_orderkey
-                   AND a.l_partkey < b.l_partkey),
-      deg AS (SELECT node, count(*) AS deg
-              FROM (SELECT a AS node FROM e0
-                    UNION ALL SELECT b FROM e0)
-              GROUP BY 1),
-      tri AS (SELECT node, count(*) AS triangles
-              FROM (SELECT UNNEST([e1.a, e1.b, e2.b]) AS node
-                    FROM e0 e1 JOIN e0 e2 ON e1.b = e2.a
-                               JOIN e0 e3 ON e3.a = e1.a
-                                         AND e3.b = e2.b)
-              GROUP BY 1)
-      SELECT d.node, CAST(d.deg AS BIGINT) AS deg,
-             CAST(coalesce(t.triangles, 0) AS BIGINT) AS triangles,
-             CASE WHEN d.deg >= 2
-                  THEN round(2.0 * coalesce(t.triangles, 0)
-                             / (d.deg * (d.deg - 1)), 6)
-             END AS local_cc
-      FROM deg d LEFT JOIN tri t ON t.node = d.node
-      ORDER BY triangles DESC, d.node ASC LIMIT 20
-    """
-    d["seasonal_anom"] = f"""
-      WITH dec AS ({_seasonal_q}),
-      base AS (SELECT * FROM dec WHERE resid IS NOT NULL),
-      med AS (SELECT round(quantile_cont(resid, 0.5), 6) AS med
-              FROM base),
-      mad AS (SELECT round(quantile_cont(abs(resid - med), 0.5), 6)
-                       AS mad,
-                     any_value(med) AS med2
-              FROM base, med)
-      SELECT hour, cnt, resid,
-             abs(resid - med2) > 3.5 * 1.4826 * mad AS anomaly
-      FROM base, mad
-      ORDER BY hour
-    """
-    d["mde"] = f"""
-      WITH a AS (SELECT event_type, count(*) AS n,
-                        sum(CAST(value AS DOUBLE)) AS s,
-                        sum(CAST(value AS DOUBLE)
-                            * CAST(value AS DOUBLE)) AS q
-                 FROM events GROUP BY 1),
-      b AS (SELECT event_type, n, s / CAST(n AS DOUBLE) AS mean,
-                   CASE WHEN n >= 2
-                        THEN sqrt((q - s * s / CAST(n AS DOUBLE))
-                                  / (CAST(n AS DOUBLE) - 1)) END AS sd
-            FROM a),
-      c AS (SELECT *, CASE WHEN n >= 2
-                           THEN {(1.959964 + 0.841621)!r} * sd
-                                * sqrt(4.0 / CAST(n AS DOUBLE)) END
-                        AS mde
-            FROM b)
-      SELECT event_type, CAST(n AS BIGINT) AS n,
-             round(mean, 6) AS mean, round(sd, 6) AS sd,
-             round(mde, 6) AS mde_abs,
-             round(CASE WHEN n >= 2 AND mean <> 0
-                        THEN mde / mean END, 6) AS mde_rel
-      FROM c
-    """
-    d["burstiness"] = """
-      WITH g AS (SELECT user_id,
-                        epoch(ts) - lag(epoch(ts)) OVER (
-                          PARTITION BY user_id ORDER BY ts, event_id)
-                          AS gap
-                 FROM events),
-      a AS (SELECT user_id, count(*) AS n, sum(gap) AS s,
-                   sum(gap * gap) AS q
-            FROM g WHERE gap IS NOT NULL GROUP BY 1),
-      b AS (SELECT user_id, n, s / CAST(n AS DOUBLE) AS mu,
-                   CASE WHEN n >= 2
-                        THEN sqrt((q - s * s / CAST(n AS DOUBLE))
-                                  / (CAST(n AS DOUBLE) - 1)) END AS sd
-            FROM a)
-      SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
-             round(mu, 6) AS mean_gap,
-             round(CASE WHEN n >= 2 AND mu > 0 THEN sd / mu END, 6)
-               AS cv,
-             round(CASE WHEN n >= 2 AND mu > 0
-                        THEN (sd - mu) / (sd + mu) END, 6) AS b
-      FROM b
-    """
-    d["seq_patterns"] = """
-      WITH g AS (SELECT user_id AS k,
-                        row_number() OVER win AS rn,
-                        lag(event_type, 2) OVER win AS t1,
-                        lag(event_type, 1) OVER win AS t2,
-                        event_type AS t3
-                 FROM events
-                 WINDOW win AS (PARTITION BY user_id
-                                ORDER BY ts, event_id)),
-      a AS (SELECT t1, t2, t3, count(*) AS occurrences,
-                   count(DISTINCT k) AS support
-            FROM g WHERE rn >= 3 GROUP BY 1, 2, 3
-            HAVING count(DISTINCT k) >= 2)
-      SELECT t1, t2, t3, CAST(occurrences AS BIGINT) AS occurrences,
-             CAST(support AS BIGINT) AS support
-      FROM a
-      ORDER BY support DESC, occurrences DESC, t1, t2, t3 LIMIT 25
-    """
-    d["rfm"] = """
-      WITH per AS (SELECT user_id, max(epoch(ts)) AS last,
-                          count(*) AS frequency,
-                          round(sum(CAST(value AS DOUBLE)), 4)
-                            AS monetary
-                   FROM events GROUP BY 1),
-      an AS (SELECT max(last) AS now FROM per),
-      p2 AS (SELECT *, round(now - last, 6) AS recency_s
-             FROM per, an),
-      t AS (SELECT *,
-                   ntile(5) OVER (ORDER BY recency_s ASC, user_id)
-                     AS r,
-                   ntile(5) OVER (ORDER BY frequency DESC, user_id)
-                     AS f,
-                   ntile(5) OVER (ORDER BY monetary DESC, user_id)
-                     AS m
-            FROM p2)
-      SELECT user_id, recency_s,
-             CAST(frequency AS BIGINT) AS frequency, monetary,
-             CAST(r AS INT) AS r, CAST(f AS INT) AS f,
-             CAST(m AS INT) AS m,
-             CAST(r AS VARCHAR) || CAST(f AS VARCHAR)
-               || CAST(m AS VARCHAR) AS rfm
-      FROM t
-    """
-    d["entropy_rate"] = """
-      WITH big AS (SELECT user_id AS k,
-                          lag(event_type) OVER (
-                            PARTITION BY user_id
-                            ORDER BY ts, event_id) AS a,
-                          event_type AS b
-                   FROM events),
-      cells AS (SELECT a, b, count(*) AS n FROM big
-                WHERE a IS NOT NULL GROUP BY 1, 2),
-      rt AS (SELECT n, CAST(n AS DOUBLE)
-                       / CAST(sum(n) OVER (PARTITION BY a) AS DOUBLE)
-                         AS p
-             FROM cells),
-      hr AS (SELECT sum(n) AS nt2, sum(n * -log2(p)) AS hr_num
-             FROM rt),
-      na AS (SELECT a, sum(n) AS na FROM cells GROUP BY a),
-      nt AS (SELECT sum(n) AS nt FROM cells),
-      mg AS (SELECT sum(na * -log2(CAST(na AS DOUBLE)
-                                   / CAST(nt AS DOUBLE))) AS hm_num,
-                    any_value(nt) AS nt3
-             FROM na, nt)
-      SELECT CAST(nt2 AS BIGINT) AS n_transitions,
-             round(hm_num / nt3, 6) AS h_marginal,
-             round(hr_num / nt2, 6) AS h_rate,
-             round(CASE WHEN hm_num / nt3 > 0
-                        THEN 1.0 - (hr_num / nt2) / (hm_num / nt3)
-                   END, 6) AS predictability
-      FROM hr, mg
-    """
-    _ccf_ks = list(range(-6, 7))
-    _shifts = ", ".join(
-        (f"lag(db, {k}) OVER win AS s{i}" if k >= 0
-         else f"lead(db, {-k}) OVER win AS s{i}")
-        for i, k in enumerate(_ccf_ks))
-    _csums = ", ".join(f"sum(da * s{i}) AS c{i}, count(da * s{i}) AS n{i}"
-                       for i in range(len(_ccf_ks)))
-    _sel = " UNION ALL ".join(
-        f"SELECT {k} AS lag, CAST(n{i} AS BIGINT) AS n_pairs, "
-        f"round(c{i} / sqrt(va * vb), 6) AS r FROM agg"
-        for i, k in enumerate(_ccf_ks))
-    d["ccf"] = f"""
-      WITH h AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                          AS hour,
-                        sum(CASE WHEN event_type = 'purchase'
-                                 THEN CAST(value AS DOUBLE)
-                                 ELSE 0.0 END) AS a,
-                        sum(CASE WHEN event_type = 'view'
-                                 THEN 1 ELSE 0 END) AS b
-                 FROM events GROUP BY 1),
-      mu AS (SELECT round(avg(a), 6) AS ma,
-                    round(avg(CAST(b AS DOUBLE)), 6) AS mb
-             FROM h),
-      base AS (SELECT hour, a - ma AS da,
-                      CAST(b AS DOUBLE) - mb AS db
-               FROM h, mu),
-      sh AS (SELECT da, db, {_shifts}
-             FROM base WINDOW win AS (ORDER BY hour)),
-      agg AS (SELECT sum(da * da) AS va, sum(db * db) AS vb,
-                     {_csums}
-              FROM sh)
-      {_sel}
-    """
-    d["copurchase"] = """
-      WITH pr AS (SELECT DISTINCT l_partkey AS l, l_orderkey AS r
-                  FROM lineitem),
-      keep AS (SELECT r FROM pr GROUP BY r HAVING count(*) <= 8),
-      pin AS (SELECT pr.l, pr.r FROM pr JOIN keep USING (r)),
-      e AS (SELECT a.l AS src, b.l AS dst, count(*) AS weight
-            FROM pin a JOIN pin b ON a.r = b.r AND a.l < b.l
-            GROUP BY 1, 2)
-      SELECT src, dst, CAST(weight AS BIGINT) AS weight
-      FROM e WHERE weight >= 2
-    """
-    d["nelson_aalen"] = """
-      WITH life AS (SELECT user_id,
-                      CAST(floor((epoch(max(ts)) - epoch(min(ts)))
-                                 / 3600) AS BIGINT) AS dur_h,
-                      max(CASE WHEN user_id % 4 <> 0 THEN 1 ELSE 0 END)
-                        AS ev
-                    FROM events GROUP BY user_id),
-      agg AS (SELECT dur_h, sum(ev) AS n_event,
-                     sum(1 - ev) AS n_censored
-              FROM life GROUP BY dur_h),
-      st AS (SELECT *, sum(n_event + n_censored) OVER () AS total,
-                    sum(n_event + n_censored) OVER (ORDER BY dur_h
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      AS thru
-             FROM agg),
-      rk AS (SELECT dur_h, n_event, n_censored,
-                    total - thru + n_event + n_censored AS n_risk
-             FROM st),
-      hz AS (SELECT *, sum(CAST(n_event AS DOUBLE)
-                           / CAST(n_risk AS DOUBLE)) OVER (
-                         ORDER BY dur_h
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) AS haz
-             FROM rk)
-      SELECT dur_h, CAST(n_risk AS BIGINT) AS n_risk,
-             CAST(n_event AS BIGINT) AS n_event,
-             CAST(n_censored AS BIGINT) AS n_censored,
-             round(haz, 6) AS cum_hazard,
-             round(exp(-haz), 6) AS surv_breslow
-      FROM hz
-    """
-    d["wasserstein"] = """
-      WITH t AS (SELECT CAST(value AS DOUBLE) AS value,
-                        1 AS ia, 0 AS ib
-                 FROM events WHERE event_type = 'view'
-                 UNION ALL
-                 SELECT CAST(value AS DOUBLE), 0, 1
-                 FROM events WHERE event_type = 'purchase'),
-      c AS (SELECT value, sum(ia) AS n_a, sum(ib) AS n_b
-            FROM t GROUP BY 1),
-      s AS (SELECT *,
-                   sum(n_a) OVER (ORDER BY value
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     / CAST(sum(n_a) OVER () AS DOUBLE) AS cdf_a,
-                   sum(n_b) OVER (ORDER BY value
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     / CAST(sum(n_b) OVER () AS DOUBLE) AS cdf_b,
-                   lead(value) OVER (ORDER BY value) - value AS gap
-            FROM c)
-      SELECT CAST(sum(n_a) AS BIGINT) AS n_a,
-             CAST(sum(n_b) AS BIGINT) AS n_b,
-             CAST(count(*) AS BIGINT) AS n_support,
-             round(sum(abs(cdf_a - cdf_b) * gap), 6) AS w1
-      FROM s
-    """
-    import math as _m
-    _sc = 1_000_000
-    _i1 = round(_m.log(0.5 / 0.3) * _sc)
-    _i0 = round(_m.log(0.5 / 0.7) * _sc)
-    _upt = round(_m.log(0.95 / 0.05) * _sc)
-    _dnt = round(_m.log(0.05 / 0.95) * _sc)
-    _big = 2 ** 62
-    d["sprt"] = f"""
-      WITH b AS (SELECT user_id,
-                        row_number() OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id)
-                          AS step,
-                        sum(CASE WHEN CAST(value AS DOUBLE) > 60
-                                 THEN {_i1} ELSE {_i0} END)
-                          OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND CURRENT ROW) AS llr
-                 FROM events),
-      a AS (SELECT user_id, count(*) AS n,
-                   min(CASE WHEN llr >= {_upt} THEN step END) AS u,
-                   min(CASE WHEN llr <= {_dnt} THEN step END) AS dd,
-                   max_by(llr, step) AS fin
-            FROM b GROUP BY 1),
-      s AS (SELECT *, least(coalesce(u, {_big}),
-                            coalesce(dd, {_big})) AS stp
-            FROM a)
-      SELECT user_id, CAST(n AS BIGINT) AS n,
-             CAST(CASE WHEN stp < {_big} THEN stp END AS BIGINT)
-               AS stop_step,
-             CASE WHEN stp = {_big} THEN 'continue'
-                  WHEN coalesce(u, {_big}) <= stp THEN 'accept_h1'
-                  ELSE 'accept_h0' END AS decision,
-             round(fin / {float(_sc)!r}, 6) AS llr_final
-      FROM s
-    """
-    _pp_edges = """SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-                   FROM lineitem a JOIN lineitem b
-                     ON a.l_orderkey = b.l_orderkey
-                    AND a.l_partkey < b.l_partkey"""
-    d["powerlaw"] = f"""
-      WITH e0 AS ({_pp_edges}),
-      deg AS (SELECT node, count(*) AS deg
-              FROM (SELECT a AS node FROM e0
-                    UNION ALL SELECT b FROM e0)
-              GROUP BY 1),
-      agg AS (SELECT count(*) AS n_nodes,
-                     sum(CASE WHEN deg >= 2 THEN 1 ELSE 0 END)
-                       AS n_tail,
-                     avg(deg) AS mean_deg,
-                     max(deg) AS max_deg,
-                     sum(CASE WHEN deg >= 2
-                              THEN ln(deg / 1.5) END) AS lsum
-              FROM deg)
-      SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-             CAST(n_tail AS BIGINT) AS n_tail,
-             round(mean_deg, 6) AS mean_deg,
-             CAST(max_deg AS DOUBLE) AS max_deg,
-             round(CASE WHEN n_tail > 0 AND lsum > 0
-                        THEN 1.0 + n_tail / lsum END, 6) AS alpha
-      FROM agg
-    """
-    d["assortativity"] = f"""
-      WITH e0 AS ({_pp_edges}),
-      deg AS (SELECT node, count(*) AS deg
-              FROM (SELECT a AS node FROM e0
-                    UNION ALL SELECT b FROM e0)
-              GROUP BY 1),
-      bo AS (SELECT CAST(da.deg AS DOUBLE) AS dx,
-                    CAST(db.deg AS DOUBLE) AS dy
-             FROM e0 JOIN deg da ON da.node = e0.a
-                     JOIN deg db ON db.node = e0.b),
-      sym AS (SELECT dx, dy FROM bo
-              UNION ALL SELECT dy AS dx, dx AS dy FROM bo),
-      a AS (SELECT count(*) AS m, sum(dx) AS sx, sum(dy) AS sy,
-                   sum(dx * dy) AS sxy, sum(dx * dx) AS sxx,
-                   sum(dy * dy) AS syy
-            FROM sym)
-      SELECT CAST(m / 2 AS BIGINT) AS n_edges,
-             round(CASE WHEN (sxx - sx * sx / CAST(m AS DOUBLE)) > 0
-                         AND (syy - sy * sy / CAST(m AS DOUBLE)) > 0
-                        THEN (sxy - sx * sy / CAST(m AS DOUBLE))
-                             / sqrt((sxx - sx * sx
-                                     / CAST(m AS DOUBLE))
-                                    * (syy - sy * sy
-                                       / CAST(m AS DOUBLE)))
-                   END, 6) AS r
-      FROM a
-    """
-    d["knee"] = f"""
-      WITH tf AS (SELECT term, count(*) AS n
-                  FROM (SELECT unnest({_det_tokens_sql('text')})
-                          AS term
-                        FROM documents)
-                  GROUP BY 1),
-      c AS (SELECT CAST(row_number() OVER (ORDER BY n DESC, term)
-                        AS DOUBLE) AS k,
-                   sum(n) OVER (ORDER BY n DESC, term
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     / CAST(sum(n) OVER () AS DOUBLE) AS cov
-            FROM tf),
-      cur AS (SELECT k, cov FROM c WHERE k <= 2000),
-      rng AS (SELECT round(min(k), 6) AS x0, round(max(k), 6) AS x1,
-                     round(min(cov), 6) AS y0, round(max(cov), 6) AS y1
-              FROM cur),
-      st AS (SELECT k AS x, cov AS y,
-                    round((cov - y0) / (y1 - y0)
-                          - (k - x0) / (x1 - x0), 6) AS score
-             FROM cur, rng WHERE x1 > x0 AND y1 > y0)
-      SELECT x, y, score FROM st ORDER BY score DESC, x ASC LIMIT 1
-    """
-    d["prop_ztest"] = """
-      WITH e AS (SELECT event_type,
-                        CASE WHEN CAST(value AS DOUBLE) > 60
-                             THEN 1.0 ELSE 0.0 END AS x,
-                        CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END
-                          AS arm
-                 FROM events),
-      a AS (SELECT event_type,
-                   sum(CASE WHEN arm='a' THEN 1 ELSE 0 END) AS n_a,
-                   sum(CASE WHEN arm='a' THEN x ELSE 0.0 END) AS s_a,
-                   sum(CASE WHEN arm='b' THEN 1 ELSE 0 END) AS n_b,
-                   sum(CASE WHEN arm='b' THEN x ELSE 0.0 END) AS s_b
-            FROM e GROUP BY 1),
-      b AS (SELECT event_type, n_a, n_b,
-                   s_a / CAST(n_a AS DOUBLE) AS pa,
-                   s_b / CAST(n_b AS DOUBLE) AS pb,
-                   (s_a + s_b) / (CAST(n_a AS DOUBLE)
-                                  + CAST(n_b AS DOUBLE)) AS pool
-            FROM a),
-      c AS (SELECT *, pool * (1.0 - pool)
-                      * (1.0 / CAST(n_a AS DOUBLE)
-                         + 1.0 / CAST(n_b AS DOUBLE)) AS v
-            FROM b),
-      zt AS (SELECT *, CASE WHEN n_a >= 1 AND n_b >= 1 AND v > 0
-                            THEN (pa - pb) / sqrt(v) END AS z
-             FROM c)
-      SELECT event_type, CAST(n_a AS BIGINT) AS n_a,
-             CAST(n_b AS BIGINT) AS n_b,
-             round(pa, 6) AS rate_a, round(pb, 6) AS rate_b,
-             round(pa - pb, 6) AS diff,
-             round(z, 6) AS z_stat,
-             round(2.0 / (1.0 + exp(0.07056 * abs(z) * abs(z) * abs(z)
-                                    + 1.5976 * abs(z))), 6) AS p_value
-      FROM zt
-    """
-    d["chi2"] = """
-      WITH e AS (SELECT event_type AS a,
-                        CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END
-                          AS b
-                 FROM events),
-      cells AS (SELECT a, b, count(*) AS n FROM e GROUP BY 1, 2),
-      ma AS (SELECT a, sum(n) AS na FROM cells GROUP BY 1),
-      mb AS (SELECT b, sum(n) AS nb FROM cells GROUP BY 1),
-      tt AS (SELECT sum(n) AS nt, count(DISTINCT a) AS ka,
-                    count(DISTINCT b) AS kb
-             FROM cells),
-      grid AS (SELECT ma.a, mb.b, na, nb,
-                      coalesce(cells.n, 0) AS n, nt, ka, kb
-               FROM ma CROSS JOIN mb CROSS JOIN tt
-               LEFT JOIN cells ON cells.a = ma.a AND cells.b = mb.b),
-      t2 AS (SELECT sum((n - na * nb / CAST(nt AS DOUBLE))
-                        * (n - na * nb / CAST(nt AS DOUBLE))
-                        / (na * nb / CAST(nt AS DOUBLE))) AS chi2,
-                    any_value(nt) AS nt, any_value(ka) AS ka,
-                    any_value(kb) AS kb
-             FROM t2src),
-      zt AS (SELECT nt, chi2, (ka - 1) * (kb - 1) AS dof,
-                    (pow(chi2 / CAST((ka - 1) * (kb - 1) AS DOUBLE),
-                         0.3333333333333333)
-                     - (1.0 - 2.0 / (9.0 * CAST((ka - 1) * (kb - 1)
-                                                AS DOUBLE))))
-                    / sqrt(2.0 / (9.0 * CAST((ka - 1) * (kb - 1)
-                                             AS DOUBLE))) AS z
-             FROM t2)
-      SELECT CAST(nt AS BIGINT) AS n, round(chi2, 6) AS chi2,
-             CAST(dof AS BIGINT) AS dof,
-             round(CASE WHEN dof >= 1
-                        THEN 1.0 / (1.0 + exp(0.07056 * z * z * z
-                                              + 1.5976 * z)) END, 6)
-               AS p_value
-      FROM zt
-    """.replace("t2src", "grid")
-    d["log_odds"] = f"""
-      WITH ta AS (SELECT unnest({_det_tokens_sql('text')}) AS term,
-                         1 AS ia, 0 AS ib
-                  FROM documents WHERE doc_id % 2 = 0
-                  UNION ALL
-                  SELECT unnest({_det_tokens_sql('text')}), 0, 1
-                  FROM documents WHERE doc_id % 2 = 1),
-      c AS (SELECT term, sum(ia) AS ya, sum(ib) AS yb
-            FROM ta GROUP BY 1),
-      s AS (SELECT *, sum(ya) OVER () AS na, sum(yb) OVER () AS nb
-            FROM c),
-      f AS (SELECT *, 100.0 * (ya + yb) / (na + nb) AS aw
-            FROM s WHERE ya + yb >= 10),
-      sc AS (SELECT term, CAST(ya AS BIGINT) AS y_a,
-                    CAST(yb AS BIGINT) AS y_b,
-                    round((ln((ya + aw) / (na + 100.0 - ya - aw))
-                           - ln((yb + aw) / (nb + 100.0 - yb - aw)))
-                          / sqrt(1.0 / (ya + aw) + 1.0 / (yb + aw)),
-                          6) AS z
-             FROM f),
-      ra AS (SELECT *, row_number() OVER (ORDER BY z DESC, term) AS r
-             FROM sc),
-      rb AS (SELECT *, row_number() OVER (ORDER BY z ASC, term) AS r
-             FROM sc)
-      SELECT term, y_a, y_b, z, 'a' AS side FROM ra WHERE r <= 30
-      UNION ALL
-      SELECT term, y_a, y_b, z, 'b' FROM rb WHERE r <= 30
-    """
-    d["lorenz"] = """
-      WITH e AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-                 FROM events),
-      b AS (SELECT g, v,
-                   row_number() OVER (PARTITION BY g ORDER BY v) AS i,
-                   sum(v) OVER (PARTITION BY g ORDER BY v
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS cum,
-                   count(*) OVER (PARTITION BY g) AS n,
-                   sum(v) OVER (PARTITION BY g) AS tot
-            FROM e),
-      k AS (SELECT *, greatest(1, CAST(floor(n / 50) AS INT)) AS step
-            FROM b)
-      SELECT g AS event_type,
-             round(CAST(i AS DOUBLE) / n, 6) AS pop_share,
-             round(cum / tot, 6) AS mass_share
-      FROM k
-      WHERE (i % step = 0 OR i = n) AND tot > 0
-    """
-    d["anova"] = """
-      WITH e AS (SELECT event_type, CAST(user_id % 4 AS INT) AS bucket,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      gm AS (SELECT event_type, round(avg(v), 6) AS gmu
-             FROM e GROUP BY event_type),
-      c AS (SELECT e.event_type, bucket, v - gmu AS d
-            FROM e JOIN gm USING (event_type)),
-      g AS (SELECT event_type, bucket, CAST(count(*) AS DOUBLE) AS ng,
-                   sum(d) AS sg, sum(d*d) AS qg
-            FROM c GROUP BY event_type, bucket),
-      a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS k,
-                   sum(ng) AS n, sum(sg) AS s,
-                   sum(sg*sg/ng) AS sb_raw,
-                   sum(qg - sg*sg/ng) AS ssw
-            FROM g GROUP BY event_type),
-      f AS (SELECT event_type, k, n,
-                   sb_raw - s*s/n AS ssb, ssw,
-                   CASE WHEN n - k > 0 THEN ssw / (n - k) END AS msw
-            FROM a)
-      SELECT event_type, k, CAST(n AS BIGINT) AS n,
-             round(ssb, 6) AS ss_between,
-             round(ssw, 6) AS ss_within,
-             round(CASE WHEN k > 1 AND n - k > 0 AND ssw > 0
-                   THEN (ssb / (k - 1)) / msw END, 6) AS f_stat,
-             round(CASE WHEN ssb + ssw > 0 THEN ssb / (ssb + ssw) END, 6)
-               AS eta2,
-             round(CASE WHEN ssb + ssw > 0 AND n - k > 0
-                   THEN (ssb - (k - 1) * msw) / (ssb + ssw + msw) END, 6)
-               AS omega2
-      FROM f
-    """
-    d["levene"] = """
-      WITH e AS (SELECT event_type, CAST(user_id % 4 AS INT) AS bucket,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      med AS (SELECT event_type, bucket,
-                     round(quantile_cont(v, 0.5), 6) AS m
-              FROM e GROUP BY event_type, bucket),
-      z AS (SELECT e.event_type, e.bucket, abs(v - m) AS zv
-            FROM e JOIN med USING (event_type, bucket)),
-      gm AS (SELECT event_type, round(avg(zv), 6) AS gmu
-             FROM z GROUP BY event_type),
-      c AS (SELECT z.event_type, bucket, zv - gmu AS d
-            FROM z JOIN gm USING (event_type)),
-      g AS (SELECT event_type, bucket, CAST(count(*) AS DOUBLE) AS ng,
-                   sum(d) AS sg, sum(d*d) AS qg
-            FROM c GROUP BY event_type, bucket),
-      a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS k,
-                   sum(ng) AS n, sum(sg) AS s,
-                   sum(sg*sg/ng) AS sb_raw,
-                   sum(qg - sg*sg/ng) AS ssw
-            FROM g GROUP BY event_type),
-      f AS (SELECT event_type, k, n,
-                   sb_raw - s*s/n AS ssb, ssw,
-                   CASE WHEN n - k > 0 THEN ssw / (n - k) END AS msw
-            FROM a)
-      SELECT event_type, k, CAST(n AS BIGINT) AS n,
-             round(CASE WHEN k > 1 AND n - k > 0 AND ssw > 0
-                   THEN (ssb / (k - 1)) / msw END, 6) AS w_stat,
-             round(ssb, 6) AS ss_between,
-             round(ssw, 6) AS ss_within
-      FROM f
-    """
-    d["jarque_bera"] = """
-      WITH e AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events),
-      mu AS (SELECT event_type, round(avg(v), 6) AS m
-             FROM e GROUP BY event_type),
-      c AS (SELECT e.event_type, v - m AS d, m
-            FROM e JOIN mu USING (event_type)),
-      a AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-                   min(m) AS mean,
-                   sum(d*d) AS c2, sum(d*d*d) AS c3,
-                   sum(d*d*d*d) AS c4
-            FROM c GROUP BY event_type),
-      s AS (SELECT event_type, n, mean,
-                   c2/n AS m2, c3/n AS m3, c4/n AS m4
-            FROM a),
-      t AS (SELECT event_type, n, mean,
-                   CASE WHEN n >= 4 AND m2 > 0
-                        THEN m3 / pow(m2, 1.5) END AS skew,
-                   CASE WHEN n >= 4 AND m2 > 0
-                        THEN m4 / (m2*m2) - 3.0 END AS exk
-            FROM s)
-      SELECT event_type, CAST(n AS BIGINT) AS n,
-             round(mean, 6) AS mean,
-             round(skew, 6) AS skew,
-             round(exk, 6) AS ex_kurt,
-             round(n / 6.0 * (skew*skew + exk*exk/4.0), 6) AS jb
-      FROM t
-    """
-    d["kruskal_wallis"] = """
-      WITH e AS (SELECT CAST(user_id % 3 AS INT) AS cohort, event_type,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      gv AS (SELECT cohort, event_type, v, CAST(count(*) AS DOUBLE) AS c
-             FROM e GROUP BY cohort, event_type, v),
-      vt AS (SELECT cohort, v, sum(c) AS t FROM gv GROUP BY cohort, v),
-      vr AS (SELECT cohort, v, t,
-                    sum(t) OVER (PARTITION BY cohort ORDER BY v
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) - t + (t + 1)/2 AS r
-             FROM vt),
-      pg AS (SELECT g.cohort, g.event_type, sum(g.c) AS ng,
-                    sum(g.c * vr.r) AS rg
-             FROM gv g JOIN vr ON g.cohort = vr.cohort AND g.v = vr.v
-             GROUP BY g.cohort, g.event_type),
-      tie AS (SELECT cohort, sum(t*t*t - t) AS tie FROM vt
-              GROUP BY cohort),
-      ag AS (SELECT cohort, CAST(count(*) AS BIGINT) AS k,
-                    sum(ng) AS n, sum(rg*rg/ng) AS r2
-             FROM pg GROUP BY cohort),
-      j AS (SELECT ag.cohort, k, n, r2, tie.tie
-            FROM ag JOIN tie ON ag.cohort = tie.cohort),
-      h0 AS (SELECT cohort, k, n,
-                    CASE WHEN k > 1 AND n > k
-                         THEN 12.0/(n*(n+1))*r2 - 3.0*(n+1) END AS h,
-                    1.0 - tie/(n*n*n - n) AS corr
-             FROM j),
-      h1 AS (SELECT cohort, k, n, h,
-                    CASE WHEN corr > 0 THEN h / corr END AS h_tied
-             FROM h0),
-      z AS (SELECT cohort, k, n, h, h_tied,
-                   CASE WHEN h_tied >= 0 THEN
-                     (pow(h_tied / (k - 1.0), 1.0/3.0)
-                      - (1.0 - 2.0/(9.0*(k - 1.0))))
-                     / sqrt(2.0/(9.0*(k - 1.0))) END AS zwh
-            FROM h1)
-      SELECT cohort, k, CAST(n AS BIGINT) AS n,
-             round(h, 6) AS h_stat,
-             round(h_tied, 6) AS h_tied,
-             round(CASE WHEN zwh IS NOT NULL THEN
-                   1.0 / (1.0 + exp(0.07056*zwh*zwh*zwh + 1.5976*zwh))
-                   END, 6) AS p_value
-      FROM z
-    """
-    d["cmh"] = """
-      WITH cell AS (SELECT o_orderpriority,
-          CAST(sum(CASE WHEN o_custkey % 2 = 0 AND o_totalprice > 150000.0
-                        THEN 1 ELSE 0 END) AS DOUBLE) AS a,
-          CAST(sum(CASE WHEN o_custkey % 2 = 0 AND NOT o_totalprice > 150000.0
-                        THEN 1 ELSE 0 END) AS DOUBLE) AS b,
-          CAST(sum(CASE WHEN o_custkey % 2 <> 0 AND o_totalprice > 150000.0
-                        THEN 1 ELSE 0 END) AS DOUBLE) AS c,
-          CAST(sum(CASE WHEN o_custkey % 2 <> 0 AND NOT o_totalprice > 150000.0
-                        THEN 1 ELSE 0 END) AS DOUBLE) AS d
-          FROM orders GROUP BY o_orderpriority),
-      per AS (SELECT o_orderpriority,
-                     CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-                     CAST(c AS BIGINT) AS c, CAST(d AS BIGINT) AS d,
-                     round(CASE WHEN a+b+c+d > 0
-                           THEN (a+b)*(a+c)/(a+b+c+d) ELSE 0.0 END, 9) AS ea,
-                     round(CASE WHEN a+b+c+d > 1
-                           THEN (a+b)*(c+d)*(a+c)*(b+d)
-                                / ((a+b+c+d)*(a+b+c+d)*(a+b+c+d-1))
-                           ELSE 0.0 END, 9) AS va,
-                     round(CASE WHEN a+b+c+d > 0
-                           THEN a*d/(a+b+c+d) ELSE 0.0 END, 9) AS no,
-                     round(CASE WHEN a+b+c+d > 0
-                           THEN b*c/(a+b+c+d) ELSE 0.0 END, 9) AS do_
-              FROM cell),
-      tot AS (SELECT o_orderpriority, a, b, c, d,
-                     sum(CAST(a AS DOUBLE)) OVER () AS sa,
-                     sum(ea) OVER () AS sea, sum(va) OVER () AS sva,
-                     sum(no) OVER () AS sno, sum(do_) OVER () AS sdo
-              FROM per)
-      SELECT o_orderpriority, a, b, c, d,
-             round(CASE WHEN sva > 0
-                   THEN pow(sa - sea, 2.0) / sva END, 6) AS cmh_chi2,
-             round(CASE WHEN sdo > 0 THEN sno / sdo END, 6) AS or_mh
-      FROM tot
-    """
-    d["tost"] = """
-      WITH e AS (SELECT event_type, CAST(value AS DOUBLE) AS v,
-                        CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS arm
-                 FROM events),
-      agg AS (SELECT event_type,
-                     CAST(sum(CASE WHEN arm='a' THEN 1 ELSE 0 END)
-                          AS DOUBLE) AS na,
-                     sum(CASE WHEN arm='a' THEN v ELSE 0.0 END) AS sa,
-                     sum(CASE WHEN arm='a' THEN v*v ELSE 0.0 END) AS qa,
-                     CAST(sum(CASE WHEN arm='b' THEN 1 ELSE 0 END)
-                          AS DOUBLE) AS nb,
-                     sum(CASE WHEN arm='b' THEN v ELSE 0.0 END) AS sb,
-                     sum(CASE WHEN arm='b' THEN v*v ELSE 0.0 END) AS qb
-              FROM e GROUP BY event_type),
-      st AS (SELECT event_type, na, nb,
-                    sa/na - sb/nb AS diff,
-                    CASE WHEN na >= 2 AND nb >= 2 THEN
-                      sqrt(((qa - sa*sa/na)/(na-1))/na
-                           + ((qb - sb*sb/nb)/(nb-1))/nb) END AS se
-             FROM agg),
-      z AS (SELECT event_type, na, nb, diff, se,
-                   CASE WHEN se > 0 THEN (diff + 2.0) / se END AS zl,
-                   CASE WHEN se > 0 THEN (diff - 2.0) / se END AS zu
-            FROM st),
-      p AS (SELECT event_type, na, nb, diff, se, zl, zu,
-                   1.0 - 1.0/(1.0 + exp(-(0.07056*zl*zl*zl + 1.5976*zl)))
-                     AS pl,
-                   1.0/(1.0 + exp(-(0.07056*zu*zu*zu + 1.5976*zu))) AS pu
-            FROM z)
-      SELECT event_type,
-             CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-             round(diff, 6) AS diff, round(se, 6) AS se,
-             round(zl, 6) AS z_lower, round(zu, 6) AS z_upper,
-             round(greatest(pl, pu), 6) AS p_tost,
-             CASE WHEN zl IS NOT NULL AND zu IS NOT NULL
-                  THEN zl >= 1.6448536269514722
-                       AND zu <= -1.6448536269514722 END AS equivalent
-      FROM p
-    """
-
-    d["ols2"] = """
-      WITH li AS (SELECT l_returnflag AS g,
-                         CAST(l_extendedprice AS DOUBLE) AS y,
-                         CAST(l_quantity AS DOUBLE) AS x1,
-                         CAST(l_discount AS DOUBLE) AS x2
-                  FROM lineitem),
-      mu AS (SELECT g, round(avg(y), 6) AS my, round(avg(x1), 6) AS m1,
-                    round(avg(x2), 6) AS m2
-             FROM li GROUP BY g),
-      c AS (SELECT li.g, y - my AS dy, x1 - m1 AS d1, x2 - m2 AS d2,
-                   my, m1, m2
-            FROM li JOIN mu ON li.g = mu.g),
-      a AS (SELECT g, CAST(count(*) AS DOUBLE) AS n,
-                   min(my) AS my, min(m1) AS m1, min(m2) AS m2,
-                   sum(d1) AS u1, sum(d2) AS u2, sum(dy) AS uy,
-                   sum(d1*d1) AS p11, sum(d2*d2) AS p22,
-                   sum(d1*d2) AS p12,
-                   sum(d1*dy) AS p1y, sum(d2*dy) AS p2y,
-                   sum(dy*dy) AS pyy
-            FROM c GROUP BY g),
-      s AS (SELECT g, n, my, m1, m2, u1, u2, uy,
-                   p11 - u1*u1/n AS s11, p22 - u2*u2/n AS s22,
-                   p12 - u1*u2/n AS s12,
-                   p1y - u1*uy/n AS s1y, p2y - u2*uy/n AS s2y,
-                   pyy - uy*uy/n AS syy
-            FROM a),
-      k AS (SELECT *, s11*s22 - s12*s12 AS det,
-                   n >= 4 AND s11*s22 - s12*s12 > 0 AS ok
-            FROM s),
-      b AS (SELECT *,
-                   round(CASE WHEN ok THEN (s22*s1y - s12*s2y)/det END, 7)
-                     AS b1,
-                   round(CASE WHEN ok THEN (s11*s2y - s12*s1y)/det END, 7)
-                     AS b2
-            FROM k),
-      e AS (SELECT *, syy - b1*s1y - b2*s2y AS sse,
-                   CASE WHEN ok THEN (syy - b1*s1y - b2*s2y)/(n - 3) END
-                     AS sig2
-            FROM b),
-      f AS (SELECT *,
-                   CASE WHEN ok THEN my - b1*m1 - b2*m2
-                        + (uy - b1*u1 - b2*u2)/n END AS b0,
-                   CASE WHEN ok THEN sqrt(sig2*s22/det) END AS se1,
-                   CASE WHEN ok THEN sqrt(sig2*s11/det) END AS se2
-            FROM e)
-      SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
-             round(b0, 6) AS b0, round(b1, 6) AS b1, round(b2, 6) AS b2,
-             round(se1, 6) AS se1, round(se2, 6) AS se2,
-             round(CASE WHEN se1 > 0 THEN b1/se1 END, 6) AS t1,
-             round(CASE WHEN se2 > 0 THEN b2/se2 END, 6) AS t2,
-             round(CASE WHEN ok AND syy > 0 THEN 1.0 - sse/syy END, 6)
-               AS r2,
-             round(CASE WHEN ok AND syy > 0
-                   THEN 1.0 - (sse/syy)*(n-1)/(n-3) END, 6) AS adj_r2
-      FROM f
-    """
-    d["durbin_watson"] = """
-      WITH e AS (SELECT user_id, ts, event_id,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      mu AS (SELECT user_id, round(avg(v), 6) AS m
-             FROM e GROUP BY user_id),
-      c AS (SELECT e.user_id, ts, event_id, v - m AS d
-            FROM e JOIN mu ON e.user_id = mu.user_id),
-      l AS (SELECT user_id, d,
-                   lag(d) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS p
-            FROM c),
-      a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-                   sum(d*d) AS ss,
-                   sum(CASE WHEN p IS NOT NULL
-                       THEN (d - p)*(d - p) ELSE 0.0 END) AS sd
-            FROM l GROUP BY user_id),
-      w AS (SELECT user_id, n,
-                   CASE WHEN n >= 8 AND ss > 0 THEN sd/ss END AS dw
-            FROM a)
-      SELECT user_id, n, round(dw, 6) AS dw,
-             round(CASE WHEN dw IS NOT NULL THEN 1.0 - dw/2.0 END, 6)
-               AS rho1
-      FROM w
-    """
-    d["calendar"] = """
-      WITH e AS (SELECT event_id,
-                        CAST(hour(ts) AS DOUBLE) AS h,
-                        CAST(dayofweek(ts) AS DOUBLE) AS dw,
-                        CAST(month(ts) - 1 AS DOUBLE) AS mo,
-                        CAST(hour(ts)*60 + minute(ts) AS DOUBLE) AS md
-                 FROM events)
-      SELECT event_id,
-             round(sin(h/24.0*2.0*pi()), 6) + 0.0 AS hour_sin,
-             round(cos(h/24.0*2.0*pi()), 6) + 0.0 AS hour_cos,
-             round(sin(dw/7.0*2.0*pi()), 6) + 0.0 AS dow_sin,
-             round(cos(dw/7.0*2.0*pi()), 6) + 0.0 AS dow_cos,
-             round(sin(mo/12.0*2.0*pi()), 6) + 0.0 AS month_sin,
-             round(cos(mo/12.0*2.0*pi()), 6) + 0.0 AS month_cos,
-             round(sin(md/1440.0*2.0*pi()), 6) + 0.0 AS mod_sin,
-             round(cos(md/1440.0*2.0*pi()), 6) + 0.0 AS mod_cos,
-             dw = 0.0 OR dw = 6.0 AS is_weekend
-      FROM e
-    """
-    d["ewma"] = """
-      WITH e AS (SELECT user_id, event_id, ts,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      l AS (SELECT user_id, event_id, v,
-                   lag(v, 1) OVER w AS l1, lag(v, 2) OVER w AS l2,
-                   lag(v, 3) OVER w AS l3, lag(v, 4) OVER w AS l4,
-                   lag(v, 5) OVER w AS l5, lag(v, 6) OVER w AS l6,
-                   lag(v, 7) OVER w AS l7
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-      SELECT user_id, event_id,
-             round((v
-                    + CASE WHEN l1 IS NOT NULL THEN l1*0.5 ELSE 0.0 END
-                    + CASE WHEN l2 IS NOT NULL THEN l2*0.25 ELSE 0.0 END
-                    + CASE WHEN l3 IS NOT NULL THEN l3*0.125 ELSE 0.0 END
-                    + CASE WHEN l4 IS NOT NULL THEN l4*0.0625 ELSE 0.0 END
-                    + CASE WHEN l5 IS NOT NULL THEN l5*0.03125 ELSE 0.0 END
-                    + CASE WHEN l6 IS NOT NULL THEN l6*0.015625 ELSE 0.0 END
-                    + CASE WHEN l7 IS NOT NULL THEN l7*0.0078125 ELSE 0.0 END)
-                   /
-                   (1.0
-                    + CASE WHEN l1 IS NOT NULL THEN 0.5 ELSE 0.0 END
-                    + CASE WHEN l2 IS NOT NULL THEN 0.25 ELSE 0.0 END
-                    + CASE WHEN l3 IS NOT NULL THEN 0.125 ELSE 0.0 END
-                    + CASE WHEN l4 IS NOT NULL THEN 0.0625 ELSE 0.0 END
-                    + CASE WHEN l5 IS NOT NULL THEN 0.03125 ELSE 0.0 END
-                    + CASE WHEN l6 IS NOT NULL THEN 0.015625 ELSE 0.0 END
-                    + CASE WHEN l7 IS NOT NULL THEN 0.0078125 ELSE 0.0 END),
-                   6) AS ewma,
-             CAST(1 + (l1 IS NOT NULL)::INT + (l2 IS NOT NULL)::INT
-                  + (l3 IS NOT NULL)::INT + (l4 IS NOT NULL)::INT
-                  + (l5 IS NOT NULL)::INT + (l6 IS NOT NULL)::INT
-                  + (l7 IS NOT NULL)::INT AS INT) AS ewma_n
-      FROM l
-    """
-
-    d["influence"] = """
-      WITH e AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS y,
-                        CAST(hour(ts) AS DOUBLE) AS x1,
-                        CAST(dayofweek(ts) AS DOUBLE) AS x2
-                 FROM events),
-      mu AS (SELECT g, round(avg(y), 6) AS my, round(avg(x1), 6) AS m1,
-                    round(avg(x2), 6) AS m2
-             FROM e GROUP BY g),
-      c AS (SELECT e.g, y - my AS dy, x1 - m1 AS d1, x2 - m2 AS d2
-            FROM e JOIN mu ON e.g = mu.g),
-      a AS (SELECT g, CAST(count(*) AS DOUBLE) AS n,
-                   sum(d1) AS u1, sum(d2) AS u2, sum(dy) AS uy,
-                   sum(d1*d1) AS p11, sum(d2*d2) AS p22,
-                   sum(d1*d2) AS p12,
-                   sum(d1*dy) AS p1y, sum(d2*dy) AS p2y,
-                   sum(dy*dy) AS pyy
-            FROM c GROUP BY g),
-      s AS (SELECT g, n, u1, u2, uy,
-                   p11 - u1*u1/n AS s11, p22 - u2*u2/n AS s22,
-                   p12 - u1*u2/n AS s12,
-                   p1y - u1*uy/n AS s1y, p2y - u2*uy/n AS s2y,
-                   pyy - uy*uy/n AS syy
-            FROM a),
-      k AS (SELECT *, s11*s22 - s12*s12 AS det FROM s
-            WHERE n >= 5 AND s11*s22 - s12*s12 > 0),
-      b AS (SELECT *, round((s22*s1y - s12*s2y)/det, 7) AS b1,
-                   round((s11*s2y - s12*s1y)/det, 7) AS b2
-            FROM k),
-      fit AS (SELECT g, n AS fn, b1, b2,
-                     uy/n AS cy0, u1/n AS c10, u2/n AS c20,
-                     round(s11, 6) AS fs11, round(s22, 6) AS fs22,
-                     round(s12, 6) AS fs12, round(det, 6) AS fdet,
-                     round((syy - b1*s1y - b2*s2y)/(n - 3), 9) AS sig2
-              FROM b),
-      rows_ AS (SELECT c.g,
-                       dy - cy0 - b1*(d1 - c10) - b2*(d2 - c20) AS e,
-                       1.0/fn + (fs22*(d1-c10)*(d1-c10)
-                                 - 2.0*fs12*(d1-c10)*(d2-c20)
-                                 + fs11*(d2-c20)*(d2-c20))/fdet AS h,
-                       sig2
-                FROM c JOIN fit ON c.g = fit.g),
-      scored AS (SELECT g, round(e, 6) AS resid, round(h, 6) AS leverage,
-                        round(e*e*h/(3.0*sig2*(1.0-h)*(1.0-h)), 9)
-                          AS cooks9
-                 FROM rows_),
-      rk AS (SELECT *, row_number() OVER (
-                 PARTITION BY g ORDER BY cooks9 DESC, resid DESC) AS rn
-             FROM scored)
-      SELECT g AS event_type, CAST(rn AS INT) AS rn, resid, leverage,
-             round(cooks9, 6) AS cooks_d
-      FROM rk WHERE rn <= 5
-    """
-    d["runs"] = """
-      WITH e AS (SELECT user_id, ts, event_id,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      med AS (SELECT user_id, round(quantile_cont(v, 0.5), 6) AS m
-              FROM e GROUP BY user_id),
-      d AS (SELECT e.user_id, ts, event_id, v > m AS up
-            FROM e JOIN med ON e.user_id = med.user_id
-            WHERE v <> m),
-      l AS (SELECT user_id, up,
-                   lag(up) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS pu
-            FROM d),
-      a AS (SELECT user_id,
-                   CAST(sum(CASE WHEN up THEN 1 ELSE 0 END) AS DOUBLE)
-                     AS n1,
-                   CAST(sum(CASE WHEN up THEN 0 ELSE 1 END) AS DOUBLE)
-                     AS n2,
-                   CAST(sum(CASE WHEN pu IS NULL OR pu <> up
-                            THEN 1 ELSE 0 END) AS BIGINT) AS runs
-            FROM l GROUP BY user_id),
-      z AS (SELECT user_id, n1, n2, runs,
-                   CASE WHEN n1 + n2 >= 10 AND n1 > 0 AND n2 > 0
-                        AND 2.0*n1*n2*(2.0*n1*n2 - n1 - n2)
-                            / ((n1+n2)*(n1+n2)*(n1+n2-1.0)) > 0
-                   THEN (runs - (2.0*n1*n2/(n1+n2) + 1.0))
-                        / sqrt(2.0*n1*n2*(2.0*n1*n2 - n1 - n2)
-                               / ((n1+n2)*(n1+n2)*(n1+n2-1.0))) END AS z
-            FROM a)
-      SELECT user_id, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-             runs, round(z, 6) AS z,
-             round(2.0/(1.0 + exp(0.07056*pow(abs(z), 3)
-                                  + 1.5976*abs(z))), 6) AS p_value
-      FROM z
-    """
-    d["grubbs"] = """
-      WITH e AS (SELECT event_type, CAST(value AS DOUBLE) AS v
-                 FROM events),
-      mu AS (SELECT event_type, round(avg(v), 6) AS m
-             FROM e GROUP BY event_type),
-      c AS (SELECT e.event_type, v - m AS d, m
-            FROM e JOIN mu USING (event_type)),
-      a AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-                   min(m) AS mean, sum(d) AS u, sum(d*d) AS q,
-                   max(d) AS dmax, min(d) AS dmin
-            FROM c GROUP BY event_type),
-      s AS (SELECT event_type, n, mean, u/n AS ctr,
-                   CASE WHEN n >= 3 AND (q - u*u/n)/(n-1) > 0
-                        THEN sqrt((q - u*u/n)/(n-1)) END AS sd,
-                   dmax, dmin
-            FROM a)
-      SELECT event_type, CAST(n AS BIGINT) AS n,
-             round(mean, 6) AS mean, round(sd, 6) AS sd,
-             round(greatest(dmax - ctr, ctr - dmin) / sd, 6) AS g_stat
-      FROM s
-    """
-    d["icc"] = """
-      WITH e AS (SELECT event_type, user_id,
-                        CAST(value AS DOUBLE) AS v FROM events),
-      gm AS (SELECT event_type, round(avg(v), 6) AS gmu
-             FROM e GROUP BY event_type),
-      c AS (SELECT e.event_type, user_id, v - gmu AS d
-            FROM e JOIN gm USING (event_type)),
-      g AS (SELECT event_type, user_id, CAST(count(*) AS DOUBLE) AS ng,
-                   sum(d) AS sg, sum(d*d) AS qg
-            FROM c GROUP BY event_type, user_id),
-      a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS k,
-                   sum(ng) AS n, sum(ng*ng) AS n2, sum(sg) AS s,
-                   sum(sg*sg/ng) AS sb_raw,
-                   sum(qg - sg*sg/ng) AS ssw
-            FROM g GROUP BY event_type),
-      m AS (SELECT event_type, k, n,
-                   CASE WHEN k > 1 AND n - k > 0
-                        THEN (sb_raw - s*s/n)/(k - 1) END AS msb,
-                   CASE WHEN k > 1 AND n - k > 0
-                        THEN ssw/(n - k) END AS msw,
-                   CASE WHEN k > 1
-                        THEN (n - n2/n)/(k - 1) END AS n0
-            FROM a)
-      SELECT event_type, k, CAST(n AS BIGINT) AS n,
-             round(n0, 6) AS n0, round(msb, 6) AS msb,
-             round(msw, 6) AS msw,
-             round(CASE WHEN msb IS NOT NULL AND msw IS NOT NULL
-                        AND msb + (n0 - 1.0)*msw > 0
-                   THEN (msb - msw)/(msb + (n0 - 1.0)*msw) END, 6)
-               AS icc1
-      FROM m
-    """
-    d["cronbach"] = """
-      WITH grid AS (SELECT user_id AS s, event_type AS i,
-                           sum(CAST(value AS DOUBLE)) AS score
-                    FROM events GROUP BY user_id, event_type),
-      kk AS (SELECT count(DISTINCT i) AS k FROM grid),
-      cnt AS (SELECT s, count(*) AS c FROM grid GROUP BY s),
-      comp AS (SELECT s FROM cnt, kk WHERE c = k),
-      g2 AS (SELECT grid.s, grid.i, grid.score
-             FROM grid JOIN comp ON grid.s = comp.s),
-      imu AS (SELECT i, round(avg(score), 6) AS im FROM g2 GROUP BY i),
-      ic AS (SELECT g2.i, score - im AS d
-             FROM g2 JOIN imu ON g2.i = imu.i),
-      ia AS (SELECT i, CAST(count(*) AS DOUBLE) AS ni,
-                    sum(d) AS u, sum(d*d) AS q
-             FROM ic GROUP BY i),
-      siv AS (SELECT sum((q - u*u/ni)/(ni - 1)) AS sum_item_var
-              FROM ia),
-      tot AS (SELECT s, sum(score) AS tot FROM g2 GROUP BY s),
-      tmu AS (SELECT round(avg(tot), 6) AS tm FROM tot),
-      tc AS (SELECT tot - tm AS d FROM tot, tmu),
-      tv AS (SELECT CAST(count(*) AS DOUBLE) AS ns, sum(d) AS u,
-                    sum(d*d) AS q
-             FROM tc),
-      fin AS (SELECT kk.k, tv.ns, siv.sum_item_var,
-                     (tv.q - tv.u*tv.u/tv.ns)/(tv.ns - 1) AS tvv
-              FROM kk, tv, siv)
-      SELECT CAST(k AS BIGINT) AS k, CAST(ns AS BIGINT) AS n_subjects,
-             round(sum_item_var, 6) AS sum_item_var,
-             round(tvv, 6) AS total_var,
-             round(CASE WHEN k > 1 AND ns > 1 AND tvv > 0
-                   THEN k/(k - 1.0)*(1.0 - sum_item_var/tvv) END, 6)
-               AS alpha
-      FROM fin
-    """
-
-    d["partial_corr"] = """
-      WITH li AS (SELECT l_returnflag AS g,
-                         CAST(l_quantity AS DOUBLE) AS x,
-                         CAST(l_extendedprice AS DOUBLE)
-                           * (1.0 - CAST(l_discount AS DOUBLE)) AS y,
-                         CAST(l_discount AS DOUBLE) AS z
-                  FROM lineitem),
-      mu AS (SELECT g, round(avg(x), 6) AS mx, round(avg(y), 6) AS my,
-                    round(avg(z), 6) AS mz
-             FROM li GROUP BY g),
-      c AS (SELECT li.g, x - mx AS dx, y - my AS dy, z - mz AS dz
-            FROM li JOIN mu ON li.g = mu.g),
-      a AS (SELECT g, CAST(count(*) AS DOUBLE) AS n,
-                   sum(dx) AS ux, sum(dy) AS uy, sum(dz) AS uz,
-                   sum(dx*dx) AS pxx, sum(dy*dy) AS pyy,
-                   sum(dz*dz) AS pzz,
-                   sum(dx*dy) AS pxy, sum(dx*dz) AS pxz,
-                   sum(dy*dz) AS pyz
-            FROM c GROUP BY g),
-      s AS (SELECT g, n,
-                   pxx - ux*ux/n AS sxx, pyy - uy*uy/n AS syy,
-                   pzz - uz*uz/n AS szz,
-                   pxy - ux*uy/n AS sxy, pxz - ux*uz/n AS sxz,
-                   pyz - uy*uz/n AS syz
-            FROM a),
-      r AS (SELECT g, n,
-                   round(CASE WHEN n >= 3 AND sxx > 0 AND syy > 0
-                         AND szz > 0 THEN sxy/sqrt(sxx*syy) END, 9)
-                     AS rxy,
-                   round(CASE WHEN n >= 3 AND sxx > 0 AND syy > 0
-                         AND szz > 0 THEN sxz/sqrt(sxx*szz) END, 9)
-                     AS rxz,
-                   round(CASE WHEN n >= 3 AND sxx > 0 AND syy > 0
-                         AND szz > 0 THEN syz/sqrt(syy*szz) END, 9)
-                     AS ryz
-            FROM s)
-      SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
-             round(rxy, 6) AS r_xy, round(rxz, 6) AS r_xz,
-             round(ryz, 6) AS r_yz,
-             round(CASE WHEN (1.0 - rxz*rxz)*(1.0 - ryz*ryz) > 0
-                   THEN (rxy - rxz*ryz)
-                        / sqrt((1.0 - rxz*rxz)*(1.0 - ryz*ryz)) END, 6)
-               AS r_xy_z
-      FROM r
-    """
-    d["overdispersion"] = """
-      WITH grid AS (SELECT event_type, user_id,
-                           CAST(count(*) AS DOUBLE) AS c
-                    FROM events GROUP BY event_type, user_id),
-      mu AS (SELECT event_type, round(avg(c), 6) AS m
-             FROM grid GROUP BY event_type),
-      d AS (SELECT grid.event_type, c - m AS d, m
-            FROM grid JOIN mu USING (event_type)),
-      a AS (SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-                   min(m) AS m0, sum(d) AS u, sum(d*d) AS q
-            FROM d GROUP BY event_type),
-      s AS (SELECT event_type, n, m0 + u/n AS mean,
-                   (q - u*u/n)/(n - 1) AS var
-            FROM a),
-      t AS (SELECT event_type, n, mean, var,
-                   CASE WHEN n >= 2 AND mean > 0
-                        THEN var/mean END AS disp,
-                   CASE WHEN n >= 2 AND mean > 0
-                        THEN (n - 1)*var/mean END AS dstat
-            FROM s),
-      z AS (SELECT *, CASE WHEN dstat >= 0 THEN
-                   (pow(dstat/(n - 1.0), 1.0/3.0)
-                    - (1.0 - 2.0/(9.0*(n - 1.0))))
-                   / sqrt(2.0/(9.0*(n - 1.0))) END AS zz
-            FROM t)
-      SELECT event_type, CAST(n AS BIGINT) AS n_entities,
-             round(mean, 6) AS mean, round(var, 6) AS var,
-             round(disp, 6) AS dispersion,
-             round(zz, 6) AS z,
-             round(CASE WHEN zz IS NOT NULL THEN
-                   1.0/(1.0 + exp(0.07056*zz*zz*zz + 1.5976*zz)) END, 6)
-               AS p_value,
-             round(CASE WHEN n >= 2 AND mean > 0 AND var > mean
-                   THEN mean*mean/(var - mean) END, 6) AS nb_r,
-             round(CASE WHEN n >= 2 AND mean > 0 AND var > mean
-                   THEN mean/var END, 6) AS nb_p
-      FROM z
-    """
-    d["event_runs"] = """
-      WITH e AS (SELECT user_id, ts, event_id, event_type FROM events),
-      f AS (SELECT user_id, event_type,
-                   CASE WHEN lag(event_type) OVER w IS NULL
-                        OR lag(event_type) OVER w <> event_type
-                   THEN 1 ELSE 0 END AS nw,
-                   ts, event_id
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      rid AS (SELECT user_id, event_type,
-                     sum(nw) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS rid
-              FROM f),
-      runs AS (SELECT user_id, rid, event_type,
-                      CAST(count(*) AS BIGINT) AS len
-               FROM rid GROUP BY user_id, rid, event_type),
-      mx AS (SELECT *, max(len) OVER (PARTITION BY user_id) AS m
-             FROM runs)
-      SELECT user_id,
-             CAST(sum(len) AS BIGINT) AS n_rows,
-             CAST(count(*) AS BIGINT) AS n_runs,
-             max(len) AS max_run,
-             min(CASE WHEN len = m THEN event_type END) AS top_cat,
-             CAST(sum(CASE WHEN len >= 3 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_loops,
-             round(CAST(sum(CASE WHEN len >= 3 THEN len ELSE 0 END)
-                        AS DOUBLE) / sum(len), 6) AS loop_frac
-      FROM mx GROUP BY user_id
-    """
-    d["pacf"] = """
-      WITH hrs AS (SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT)
-                            AS hour,
-                          CAST(count(*) AS DOUBLE) AS cnt
-                   FROM events GROUP BY 1),
-      mu AS (SELECT round(avg(cnt), 6) AS mu FROM hrs),
-      b AS (SELECT hour, cnt - mu AS d FROM hrs, mu),
-      l AS (SELECT d, lag(d, 1) OVER win AS l1, lag(d, 2) OVER win AS l2, lag(d, 3) OVER win AS l3, lag(d, 4) OVER win AS l4, lag(d, 5) OVER win AS l5, lag(d, 6) OVER win AS l6
-            FROM b WINDOW win AS (ORDER BY hour)),
-      a AS (SELECT sum(d * d) AS den, sum(d * l1) AS num1, sum(d * l2) AS num2, sum(d * l3) AS num3, sum(d * l4) AS num4, sum(d * l5) AS num5, sum(d * l6) AS num6 FROM l),
-      base AS (SELECT round(num1 / den, 6) AS r1, round(num2 / den, 6) AS r2, round(num3 / den, 6) AS r3, round(num4 / den, 6) AS r4, round(num5 / den, 6) AS r5, round(num6 / den, 6) AS r6 FROM a),
-      s1 AS (SELECT *, round(r1, 9) AS phi_1_1 FROM base),
-      s2 AS (SELECT *, round(CASE WHEN (1.0 - phi_1_1*r1) <> 0 THEN (r2 - phi_1_1*r1) / (1.0 - phi_1_1*r1) END, 9) AS phi_2_2 FROM s1),
-      s2b AS (SELECT *, round(phi_1_1 - phi_2_2*phi_1_1, 9) AS phi_2_1 FROM s2),
-      s3 AS (SELECT *, round(CASE WHEN (1.0 - phi_2_1*r1 - phi_2_2*r2) <> 0 THEN (r3 - phi_2_1*r2 - phi_2_2*r1) / (1.0 - phi_2_1*r1 - phi_2_2*r2) END, 9) AS phi_3_3 FROM s2b),
-      s3b AS (SELECT *, round(phi_2_1 - phi_3_3*phi_2_2, 9) AS phi_3_1, round(phi_2_2 - phi_3_3*phi_2_1, 9) AS phi_3_2 FROM s3),
-      s4 AS (SELECT *, round(CASE WHEN (1.0 - phi_3_1*r1 - phi_3_2*r2 - phi_3_3*r3) <> 0 THEN (r4 - phi_3_1*r3 - phi_3_2*r2 - phi_3_3*r1) / (1.0 - phi_3_1*r1 - phi_3_2*r2 - phi_3_3*r3) END, 9) AS phi_4_4 FROM s3b),
-      s4b AS (SELECT *, round(phi_3_1 - phi_4_4*phi_3_3, 9) AS phi_4_1, round(phi_3_2 - phi_4_4*phi_3_2, 9) AS phi_4_2, round(phi_3_3 - phi_4_4*phi_3_1, 9) AS phi_4_3 FROM s4),
-      s5 AS (SELECT *, round(CASE WHEN (1.0 - phi_4_1*r1 - phi_4_2*r2 - phi_4_3*r3 - phi_4_4*r4) <> 0 THEN (r5 - phi_4_1*r4 - phi_4_2*r3 - phi_4_3*r2 - phi_4_4*r1) / (1.0 - phi_4_1*r1 - phi_4_2*r2 - phi_4_3*r3 - phi_4_4*r4) END, 9) AS phi_5_5 FROM s4b),
-      s5b AS (SELECT *, round(phi_4_1 - phi_5_5*phi_4_4, 9) AS phi_5_1, round(phi_4_2 - phi_5_5*phi_4_3, 9) AS phi_5_2, round(phi_4_3 - phi_5_5*phi_4_2, 9) AS phi_5_3, round(phi_4_4 - phi_5_5*phi_4_1, 9) AS phi_5_4 FROM s5),
-      s6 AS (SELECT *, round(CASE WHEN (1.0 - phi_5_1*r1 - phi_5_2*r2 - phi_5_3*r3 - phi_5_4*r4 - phi_5_5*r5) <> 0 THEN (r6 - phi_5_1*r5 - phi_5_2*r4 - phi_5_3*r3 - phi_5_4*r2 - phi_5_5*r1) / (1.0 - phi_5_1*r1 - phi_5_2*r2 - phi_5_3*r3 - phi_5_4*r4 - phi_5_5*r5) END, 9) AS phi_6_6 FROM s5b)
-      SELECT CAST(1 AS INT) AS lag, r1 AS r, round(phi_1_1, 6) AS pacf FROM s6
-      UNION ALL SELECT CAST(2 AS INT) AS lag, r2 AS r, round(phi_2_2, 6) AS pacf FROM s6
-      UNION ALL SELECT CAST(3 AS INT) AS lag, r3 AS r, round(phi_3_3, 6) AS pacf FROM s6
-      UNION ALL SELECT CAST(4 AS INT) AS lag, r4 AS r, round(phi_4_4, 6) AS pacf FROM s6
-      UNION ALL SELECT CAST(5 AS INT) AS lag, r5 AS r, round(phi_5_5, 6) AS pacf FROM s6
-      UNION ALL SELECT CAST(6 AS INT) AS lag, r6 AS r, round(phi_6_6, 6) AS pacf FROM s6
-    """
-
-    d["unigram_roundtrip"] = r"""
-      SELECT doc_id,
-             CAST(length(regexp_replace(lower(coalesce(text, '')),
-                                        '\s+', '', 'g')) AS INT)
-               AS n_chars_in,
-             CAST(length(regexp_replace(lower(coalesce(text, '')),
-                                        '\s+', '', 'g')) AS INT)
-               AS n_piece_chars,
-             TRUE AS lossless
-      FROM documents
-    """
-
-    d["hurst"] = """
-      WITH base AS (
-        SELECT user_id, CAST(value AS DOUBLE) AS x,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-        FROM events),
-      rs8 AS (
-        SELECT user_id, round(avg(r/s), 9) AS rs,
-               CAST(count(*) AS BIGINT) AS n_blocks,
-               CAST(8 AS INT) AS m
-        FROM (
-          SELECT user_id, bid,
-                 count(*) AS cnt,
-                 max(cum) - min(cum) AS r,
-                 stddev_pop(x) AS s
-          FROM (
-            SELECT user_id, bid, x,
-                   sum(x - bm) OVER (PARTITION BY user_id, bid
-                                     ORDER BY rn
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cum
-            FROM (
-              SELECT user_id, x, rn,
-                     CAST(floor((rn - 1) / 8) AS BIGINT) AS bid,
-                     avg(x) OVER (PARTITION BY user_id,
-                                  CAST(floor((rn - 1) / 8) AS BIGINT))
-                       AS bm
-              FROM base))
-          GROUP BY user_id, bid)
-        WHERE cnt = 8 AND s > 0
-        GROUP BY user_id),
-      rs16 AS (
-        SELECT user_id, round(avg(r/s), 9) AS rs,
-               CAST(count(*) AS BIGINT) AS n_blocks,
-               CAST(16 AS INT) AS m
-        FROM (
-          SELECT user_id, bid,
-                 count(*) AS cnt,
-                 max(cum) - min(cum) AS r,
-                 stddev_pop(x) AS s
-          FROM (
-            SELECT user_id, bid, x,
-                   sum(x - bm) OVER (PARTITION BY user_id, bid
-                                     ORDER BY rn
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cum
-            FROM (
-              SELECT user_id, x, rn,
-                     CAST(floor((rn - 1) / 16) AS BIGINT) AS bid,
-                     avg(x) OVER (PARTITION BY user_id,
-                                  CAST(floor((rn - 1) / 16) AS BIGINT))
-                       AS bm
-              FROM base))
-          GROUP BY user_id, bid)
-        WHERE cnt = 16 AND s > 0
-        GROUP BY user_id),
-      rs32 AS (
-        SELECT user_id, round(avg(r/s), 9) AS rs,
-               CAST(count(*) AS BIGINT) AS n_blocks,
-               CAST(32 AS INT) AS m
-        FROM (
-          SELECT user_id, bid,
-                 count(*) AS cnt,
-                 max(cum) - min(cum) AS r,
-                 stddev_pop(x) AS s
-          FROM (
-            SELECT user_id, bid, x,
-                   sum(x - bm) OVER (PARTITION BY user_id, bid
-                                     ORDER BY rn
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cum
-            FROM (
-              SELECT user_id, x, rn,
-                     CAST(floor((rn - 1) / 32) AS BIGINT) AS bid,
-                     avg(x) OVER (PARTITION BY user_id,
-                                  CAST(floor((rn - 1) / 32) AS BIGINT))
-                       AS bm
-              FROM base))
-          GROUP BY user_id, bid)
-        WHERE cnt = 32 AND s > 0
-        GROUP BY user_id),
-      curve AS (SELECT * FROM rs8
-      UNION ALL SELECT * FROM rs16
-      UNION ALL SELECT * FROM rs32),
-      pts AS (SELECT user_id, m, rs, n_blocks,
-                     log2(CAST(m AS DOUBLE)) AS lx, log2(rs) AS ly
-              FROM curve WHERE rs > 0),
-      fit AS (SELECT user_id, CAST(count(*) AS DOUBLE) AS k,
-                     sum(lx) AS sx, sum(ly) AS sy,
-                     sum(lx*lx) AS sxx, sum(lx*ly) AS sxy,
-                     sum(ly*ly) AS syy
-              FROM pts GROUP BY user_id),
-      f2 AS (SELECT user_id, k,
-                    sxx - sx*sx/k AS vxx, sxy - sx*sy/k AS vxy,
-                    syy - sy*sy/k AS vyy
-             FROM fit)
-      SELECT user_id, 'fit' AS kind, CAST(NULL AS INT) AS m,
-             CAST(NULL AS DOUBLE) AS rs, CAST(NULL AS BIGINT) AS n_blocks,
-             round(CASE WHEN k >= 2 AND vxx > 0 THEN vxy/vxx END, 6)
-               AS h,
-             round(CASE WHEN k >= 2 AND vxx > 0 AND vyy > 0
-                   THEN vxy*vxy/(vxx*vyy) END, 6) AS r2
-      FROM f2
-      UNION ALL
-      SELECT user_id, 'block' AS kind, m, round(rs, 6) AS rs, n_blocks,
-             CAST(NULL AS DOUBLE) AS h, CAST(NULL AS DOUBLE) AS r2
-      FROM pts
-    """
-
-    d["theil_u"] = """
-      WITH e AS (SELECT event_type AS x,
-                        CAST(user_id % 10 AS INT) AS y FROM events),
-      cells AS (SELECT x, y, CAST(count(*) AS DOUBLE) AS c
-                FROM e GROUP BY x, y),
-      n AS (SELECT sum(c) AS n FROM cells),
-      hx AS (SELECT ln(min(n.n)) - sum(cx * ln(cx)) / min(n.n) AS h_x
-             FROM (SELECT x, sum(c) AS cx FROM cells GROUP BY x), n),
-      hy AS (SELECT ln(min(n.n)) - sum(cy * ln(cy)) / min(n.n) AS h_y
-             FROM (SELECT y, sum(c) AS cy FROM cells GROUP BY y), n),
-      hxy AS (SELECT min(n.n) AS nn,
-                     ln(min(n.n)) - sum(c * ln(c)) / min(n.n) AS h_xy
-              FROM cells, n)
-      SELECT CAST(nn AS BIGINT) AS n,
-             round(h_x, 6) AS h_x, round(h_y, 6) AS h_y,
-             round(h_x + h_y - h_xy, 6) AS mi,
-             round(CASE WHEN h_y > 0
-                   THEN (h_x + h_y - h_xy) / h_y END, 6)
-               AS u_y_given_x,
-             round(CASE WHEN h_x > 0
-                   THEN (h_x + h_y - h_xy) / h_x END, 6)
-               AS u_x_given_y
-      FROM hxy, hx, hy
-    """
-    d["srm"] = """
-      WITH e AS (SELECT event_type,
-                        CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END
-                          AS arm
-                 FROM events),
-      a AS (SELECT event_type,
-                   CAST(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END)
-                        AS DOUBLE) AS o0,
-                   CAST(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END)
-                        AS DOUBLE) AS o1
-            FROM e GROUP BY event_type),
-      c AS (SELECT event_type, o0 + o1 AS n,
-                   (o0 - (o0 + o1) * 0.5) * (o0 - (o0 + o1) * 0.5)
-                     / ((o0 + o1) * 0.5)
-                   + (o1 - (o0 + o1) * 0.5) * (o1 - (o0 + o1) * 0.5)
-                     / ((o0 + o1) * 0.5) AS chi2
-            FROM a),
-      z AS (SELECT event_type, n, chi2,
-                   CASE WHEN n > 0 THEN
-                     (pow(chi2 / 1.0, 1.0/3.0) - (1.0 - 2.0/9.0))
-                     / sqrt(2.0/9.0) END AS zz
-            FROM c)
-      SELECT event_type, CAST(n AS BIGINT) AS n,
-             round(chi2, 6) AS chi2, CAST(1 AS INT) AS dof,
-             round(CASE WHEN zz IS NOT NULL THEN
-                   1.0/(1.0 + exp(0.07056*zz*zz*zz + 1.5976*zz)) END, 6)
-               AS p_value,
-             CASE WHEN zz IS NOT NULL THEN
-               1.0/(1.0 + exp(0.07056*zz*zz*zz + 1.5976*zz)) < 0.001
-             END AS srm
-      FROM z
-    """
-    d["vocab_richness"] = """
-      WITH w AS (SELECT unnest(string_split_regex(trim(lower(text)),
-                                                  '\\s+')) AS w
-                 FROM documents WHERE trim(text) <> ''),
-      wc AS (SELECT w, count(*) AS c FROM w WHERE w <> '' GROUP BY w),
-      a AS (SELECT CAST(sum(c) AS DOUBLE) AS n_tokens,
-                   CAST(count(*) AS DOUBLE) AS n_types,
-                   CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)
-                        AS DOUBLE) AS f1,
-                   CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END)
-                        AS DOUBLE) AS f2
-            FROM wc)
-      SELECT CAST(n_tokens AS BIGINT) AS n_tokens,
-             CAST(n_types AS BIGINT) AS n_types,
-             CAST(f1 AS BIGINT) AS f1, CAST(f2 AS BIGINT) AS f2,
-             round(CASE WHEN f2 > 0 THEN n_types + f1*f1/(2.0*f2)
-                   ELSE n_types + f1*(f1 - 1.0)/(2.0*(f2 + 1.0)) END, 6)
-               AS chao1,
-             round(CASE WHEN n_tokens > 0 THEN f1/n_tokens END, 6)
-               AS gt_unseen,
-             round(1.0 - CASE WHEN n_tokens > 0
-                         THEN f1/n_tokens END, 6) AS coverage
-      FROM a
-    """
-
-    return d
-
-
-def _oracle_sql_dict(lcg_ok: str) -> dict[str, str]:
-    return {
-        "sessionize": f"""
-          WITH t AS ({_T}),
-          g AS (SELECT conv_id, turn_idx, ts,
-                       lag(ts) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS prev_ts
-                FROM t)
-          SELECT conv_id, turn_idx, ts,
-                 CAST(sum(CASE WHEN prev_ts IS NULL
-                               OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                          THEN 1 ELSE 0 END)
-                      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                            ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS session_seq,
-                 conv_id || '#' ||
-                 CAST(CAST(sum(CASE WHEN prev_ts IS NULL
-                               OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                          THEN 1 ELSE 0 END)
-                      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                            ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS VARCHAR) AS session_id
-          FROM g
-        """,
-        "lag_lead": f"""
-          WITH t AS ({_T})
-          SELECT conv_id, turn_idx,
-                 round(epoch(ts) - epoch(lag(ts) OVER w), 6) AS secs_since_prev,
-                 lag(role) OVER w AS role_lag_1,
-                 lead(role) OVER w AS role_lead_1
-          FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-        """,
-        "backfill": f"""
-          WITH t AS ({_T})
-          SELECT conv_id, turn_idx,
-                 last_value(CASE WHEN tool <> '' THEN tool END IGNORE NULLS)
-                   OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                         ROWS UNBOUNDED PRECEDING) AS tool_filled
-          FROM t
-        """,
-        "rolling": f"""
-          WITH t AS ({_T})
-          SELECT conv_id, turn_idx,
-                 CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                         ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS BIGINT) AS assistant_turns_10,
-                 round(avg(length(text))
-                   OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                         ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING), 4) AS mean_text_len_10
-          FROM t
-        """,
-        "session_agg": f"""
-          WITH t AS ({_T}),
-          g AS (SELECT conv_id, turn_idx, ts,
-                       lag(ts) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS prev_ts
-                FROM t),
-          s AS (SELECT conv_id, ts,
-                       CAST(sum(CASE WHEN prev_ts IS NULL
-                                     OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                                THEN 1 ELSE 0 END)
-                            OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                                  ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS session_seq
-                FROM g)
-          SELECT conv_id, session_seq, count(*) AS n_turns,
-                 round(max(epoch(ts)) - min(epoch(ts)), 6) AS span_sec
-          FROM s GROUP BY conv_id, session_seq
-        """,
-        "asof_union": _ASOF_ORACLE,
-        "asof_broadcast": _ASOF_ORACLE,
-        "asof_cogroup": _ASOF_ORACLE,
-        "asof_bucketed": _ASOF_ORACLE,
-        "asof_forward": """
-          WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-               r AS (SELECT user_id, ts, round(value, 4) AS val FROM events WHERE event_id % 2 = 0)
-          SELECT l.event_id, l.user_id, l.ts, r.val
-          FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-        """,
-        "asof_nearest": """
-          WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-               r AS (SELECT user_id, ts, round(value, 4) AS val FROM events WHERE event_id % 2 = 0),
-          b AS (SELECT l.event_id, l.user_id, l.ts, r.ts AS bts, r.val AS bval
-                FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts),
-          f AS (SELECT l.event_id, r.ts AS fts, r.val AS fval
-                FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts)
-          SELECT b.event_id, b.user_id, b.ts,
-                 CASE WHEN b.bts IS NOT NULL
-                       AND (f.fts IS NULL
-                            OR epoch(b.ts) - epoch(b.bts) <= epoch(f.fts) - epoch(b.ts))
-                      THEN b.bval ELSE f.fval END AS val
-          FROM b JOIN f USING (event_id)
-        """,
-        "filter_dim1": """
-          SELECT l_orderkey, l_linenumber, l_quantity, l_discount
-          FROM lineitem WHERE l_quantity > 30 AND l_discount < 0.05
-        """,
-        "filter_dim2": """
-          SELECT vec_id,
-                 CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos
-          FROM embeddings
-        """,
-        "transform_map": """
-          SELECT l_orderkey, l_linenumber,
-                 CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                      (1 - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-                 CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                      (1 - CAST(l_discount AS DECIMAL(18,2))) *
-                      (1 + CAST(l_tax AS DECIMAL(18,2))), 4) AS DOUBLE) AS charged
-          FROM lineitem
-        """,
-        "transform_dim2": """
-          SELECT vec_id,
-                 round(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
-                                               x -> x * x)), 6) AS sq_norm
-          FROM embeddings
-        """,
-        "transform_cond": """
-          SELECT o_orderkey,
-                 CASE WHEN o_orderstatus = 'F' THEN upper(reverse(o_orderpriority))
-                      ELSE o_orderpriority END AS prio_u
-          FROM orders
-        """,
-        "transform_prob": f"""
-          SELECT o_orderkey,
-                 CASE WHEN {det_hash01_sql('o_orderkey', 11)} < 0.3
-                      THEN lower(o_orderstatus) ELSE o_orderstatus END AS status2
-          FROM orders
-        """,
-        "random_fill": f"""
-          SELECT o_orderkey, round({det_hash01_sql('o_orderkey', 5)}, 9) AS u
-          FROM orders
-        """,
-        "string_to_bool": """
-          SELECT CASE WHEN lower(l_returnflag) IN ('true','1','y','yes','on') THEN 'true'
-                      WHEN lower(l_returnflag) IN ('false','0','n','no','off') THEN 'false'
-                      ELSE 'unparsed' END AS flag,
-                 count(*) AS n
-          FROM lineitem GROUP BY 1
-        """,
-        "base64": """
-          SELECT doc_id,
-                 CAST(length(base64(CAST(text AS BLOB))) AS INTEGER) AS b64_len,
-                 substring(base64(CAST(text AS BLOB)), 1, 16) AS b64_prefix
-          FROM documents
-        """,
-        "index_mapper": """
-          WITH m AS (
-            SELECT o_orderpriority,
-                   row_number() OVER (ORDER BY o_orderpriority) - 1 AS prio_idx
-            FROM (SELECT DISTINCT o_orderpriority FROM orders)
-          )
-          SELECT o.o_orderkey, m.prio_idx
-          FROM orders o JOIN m USING (o_orderpriority)
-        """,
-        "generate_groups": f"""
-          WITH n AS (SELECT count(*) AS c FROM orders),
-          r AS (SELECT o_orderkey,
-                       row_number() OVER (ORDER BY {lcg_ok}, o_orderkey) AS rn
-                FROM orders)
-          SELECT CAST(CASE WHEN rn <= floor(c * 0.2) THEN 0
-                      WHEN rn <= 2 * floor(c * 0.2) THEN 1
-                      ELSE 2 END AS INTEGER) AS "group",
-                 count(*) AS n
-          FROM r, n GROUP BY 1
-        """,
-        "fixed_groups": f"""
-          SELECT CAST(({det_hash_i64_sql('o_orderkey', 3)}) % 5 AS INTEGER) AS "group",
-                 count(*) AS n
-          FROM orders GROUP BY 1
-        """,
-        "pad_mask": r"""
-          WITH d AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tok
-            FROM documents),
-          m AS (SELECT max(n_tok) AS mx FROM d)
-          SELECT doc_id, CAST(mx AS INTEGER) AS padded_len,
-                 CAST(n_tok AS INTEGER) AS n_real
-          FROM d, m
-        """,
-        "token_stats": r"""
-          SELECT doc_id,
-                 CAST(CASE WHEN trim(text) = '' THEN 0
-                      ELSE len(string_split_regex(trim(text), '\s+')) END AS INTEGER) AS n_tokens,
-                 CAST(len(list_filter(
-                   string_split_regex(trim(regexp_replace(
-                     text, '([^\p{L}\p{N}\s])', ' \1 ', 'g')), '\s+'),
-                   x -> x <> '')) AS INTEGER) AS n_bpe,
-                 CAST(length(text) AS INTEGER) AS n_chars_calc,
-                 round(CASE WHEN length(text) > 0 THEN
-                   CAST(length(regexp_replace(text, '[\p{L}\p{N}\s]', '', 'g')) AS DOUBLE)
-                     / length(text) ELSE 0.0 END, 6) AS punct_ratio
-          FROM documents
-        """,
-        "repetition_stats": r"""
-          WITH base AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(lower(text)), '\s+')
-                   END AS lt,
-                   list_filter(string_split(text, chr(10)),
-                               l -> trim(l) <> '') AS lines
-            FROM documents),
-          g AS (
-            SELECT doc_id, lines,
-                   CASE WHEN len(lt) >= 2 THEN
-                     list_transform(range(1, len(lt)),
-                                    i -> array_to_string(lt[i:i+1], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS g2,
-                   CASE WHEN len(lt) >= 3 THEN
-                     list_transform(range(1, len(lt) - 1),
-                                    i -> array_to_string(lt[i:i+2], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS g3
-            FROM base)
-          SELECT doc_id,
-                 round(CASE WHEN len(g2) > 0 THEN
-                   1.0 - len(list_distinct(g2)) / len(g2)
-                   ELSE 0.0 END, 6) AS dup_2gram_frac,
-                 round(CASE WHEN len(g3) > 0 THEN
-                   1.0 - len(list_distinct(g3)) / len(g3)
-                   ELSE 0.0 END, 6) AS dup_3gram_frac,
-                 round(CASE WHEN len(g2) > 0 THEN
-                   list_max(list_transform(list_distinct(g2),
-                     gg -> len(list_filter(g2, x -> x = gg)))) / len(g2)
-                   ELSE 0.0 END, 6) AS top_2gram_frac,
-                 round(CASE WHEN len(lines) > 0 THEN
-                   1.0 - len(list_distinct(lines)) / len(lines)
-                   ELSE 0.0 END, 6) AS dup_line_frac,
-                 round(CASE WHEN COALESCE(list_aggregate(
-                     list_transform(lines, l -> length(l)), 'sum'), 0) > 0
-                   THEN COALESCE(list_aggregate(list_transform(
-                          list_filter(lines, l ->
-                            len(list_filter(lines, x -> x = l)) > 1),
-                          l -> length(l)), 'sum'), 0)
-                        / list_aggregate(
-                            list_transform(lines, l -> length(l)), 'sum')
-                   ELSE 0.0 END, 6) AS dup_line_char_frac
-          FROM g
-        """,
-        "contamination": r"""
-          WITH base AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(lower(text)), '\s+')
-                   END AS lt
-            FROM documents),
-          g AS (
-            SELECT doc_id,
-                   CASE WHEN len(lt) >= 3 THEN
-                     list_transform(range(1, len(lt) - 1),
-                                    i -> array_to_string(lt[i:i+2], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS gr
-            FROM base),
-          tr AS (SELECT doc_id AS train_id,
-                        unnest(list_distinct(gr)) AS gram
-                 FROM g WHERE doc_id % 25 <> 0),
-          te AS (SELECT doc_id AS test_id,
-                        unnest(list_distinct(gr)) AS gram
-                 FROM g WHERE doc_id % 25 = 0)
-          SELECT train_id, test_id,
-                 CAST(count(*) AS INTEGER) AS n_shared_grams
-          FROM tr JOIN te USING (gram)
-          GROUP BY 1, 2 HAVING count(*) >= 2
-        """,
-        "pack_chunks": r"""
-          WITH t AS (
-            SELECT doc_id,
-                   CAST(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\s+'))
-                        END AS INTEGER) AS n_tok
-            FROM documents),
-          c AS (
-            SELECT doc_id, n_tok,
-                   CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS BIGINT) AS tok_offset
-            FROM t)
-          SELECT doc_id, n_tok, tok_offset,
-                 CAST(tok_offset // 512 AS BIGINT) AS chunk_first,
-                 CAST((tok_offset + GREATEST(n_tok, 1) - 1) // 512
-                      AS BIGINT) AS chunk_last,
-                 CAST((tok_offset + GREATEST(n_tok, 1) - 1) // 512
-                      - tok_offset // 512 + 1 AS INTEGER) AS n_chunks
-          FROM c
-        """,
-        "pack_stats": r"""
-          WITH t AS (
-            SELECT doc_id,
-                   CAST(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text), '\s+'))
-                        END AS INTEGER) AS n_tok
-            FROM documents),
-          c AS (
-            SELECT doc_id, n_tok,
-                   CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS BIGINT) AS tok_offset
-            FROM t)
-          SELECT CAST(tok_offset // 512 AS BIGINT) AS chunk_id,
-                 CAST(count(*) AS BIGINT) AS docs_started,
-                 CAST(SUM(LEAST(512 - tok_offset % 512,
-                                CAST(n_tok AS BIGINT)))
-                      AS BIGINT) AS tokens_in_chunk
-          FROM c GROUP BY 1
-        """,
-        "pii_scrub": r"""
-          SELECT doc_id,
-                 regexp_replace(
-                   regexp_replace(text,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                     '<EMAIL>', 'g'),
-                   '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g')
-                   AS scrubbed,
-                 CAST(len(regexp_extract_all(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                   AS INTEGER) AS n_email,
-                 CAST(len(regexp_extract_all(text,
-                   '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b'))
-                   AS INTEGER) AS n_ipv4
-          FROM documents
-        """,
-        "c4_quality": r"""
-          WITH l AS (
-            SELECT doc_id, text,
-                   list_filter(string_split(text, chr(10)),
-                               x -> trim(x) <> '') AS lines
-            FROM documents)
-          SELECT doc_id,
-                 round(CASE WHEN len(lines) > 0 THEN
-                   len(list_filter(lines,
-                       x -> regexp_matches(trim(x), '[.!?"]$')))
-                   / len(lines) ELSE 0.0 END, 6) AS terminal_line_frac,
-                 round(CASE WHEN len(lines) > 0 THEN
-                   list_aggregate(list_transform(lines,
-                       x -> len(string_split_regex(trim(x), '\s+'))),
-                     'sum') / len(lines)
-                   ELSE 0.0 END, 6) AS mean_words_per_line,
-                 contains(text, '{') AS has_brace,
-                 contains(lower(text), 'lorem ipsum') AS has_lorem,
-                 contains(lower(text), 'javascript') AS has_javascript
-          FROM l
-        """,
-        "vocab_topk": r"""
-          SELECT word, CAST(count(*) AS BIGINT) AS n
-          FROM (SELECT unnest(string_split_regex(trim(lower(text)),
-                                                 '\s+')) AS word
-                FROM documents WHERE trim(text) <> '')
-          GROUP BY word ORDER BY n DESC, word LIMIT 100
-        """,
-        "bm25": r"""
-          WITH base AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(lower(text)), '\s+')
-                   END AS lt
-            FROM documents),
-          tf AS (
-            SELECT doc_id,
-                   CAST(len(lt) AS DOUBLE) AS dl,
-                   CAST(len(list_filter(lt, x -> x = 'join'))
-                        AS DOUBLE) AS tf0,
-                   CAST(len(list_filter(lt, x -> x = 'dup'))
-                        AS DOUBLE) AS tf1,
-                   CAST(len(list_filter(lt, x -> x = 'vector'))
-                        AS DOUBLE) AS tf2
-            FROM base),
-          st AS (
-            SELECT count(*) AS n, avg(dl) AS avgdl,
-                   sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-                   sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-                   sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-            FROM tf)
-          SELECT doc_id,
-                 round(
-                   0.0
-                   + ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0
-                     * (1.2 + 1.0)
-                     / (tf0 + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-                   + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1
-                     * (1.2 + 1.0)
-                     / (tf1 + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))
-                   + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * tf2
-                     * (1.2 + 1.0)
-                     / (tf2 + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl)),
-                 6) AS bm25
-          FROM tf, st
-          WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0
-        """,
-        "training_pipeline": r"""
-          WITH base AS (
-            SELECT doc_id, text,
-                   CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(lower(text)), '\s+')
-                   END AS lt,
-                   list_filter(string_split(text, chr(10)),
-                               l -> trim(l) <> '') AS lines
-            FROM documents WHERE doc_id % 25 <> 0),
-          sig AS (
-            SELECT doc_id, text, lt, CAST(len(lt) AS INTEGER) AS n_tok,
-                   CASE WHEN len(lt) >= 2 THEN
-                     list_transform(range(1, len(lt)),
-                                    i -> array_to_string(lt[i:i+1], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS g2,
-                   CASE WHEN len(lines) > 0 THEN
-                     len(list_filter(lines,
-                         x -> regexp_matches(trim(x), '[.!?"]$')))
-                     / len(lines) ELSE 0.0 END AS term_frac
-            FROM base),
-          kept AS (
-            SELECT doc_id, text, lt, n_tok FROM sig
-            WHERE n_tok >= 10
-              AND (CASE WHEN len(g2) > 0 THEN
-                     1.0 - len(list_distinct(g2)) / len(g2)
-                   ELSE 0.0 END) <= 0.3
-              AND term_frac >= 0.0),
-          dedup AS (
-            SELECT doc_id, lt, n_tok FROM kept
-            QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                       ORDER BY doc_id) = 1),
-          tg AS (
-            SELECT doc_id,
-                   CASE WHEN len(lt) >= 3 THEN
-                     list_transform(range(1, len(lt) - 1),
-                                    i -> array_to_string(lt[i:i+2], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS gr
-            FROM dedup),
-          base0 AS (
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                        ELSE string_split_regex(trim(lower(text)), '\s+')
-                   END AS lt
-            FROM documents WHERE doc_id % 25 = 0),
-          eg AS (
-            SELECT doc_id,
-                   CASE WHEN len(lt) >= 3 THEN
-                     list_transform(range(1, len(lt) - 1),
-                                    i -> array_to_string(lt[i:i+2], ' '))
-                   ELSE CAST([] AS VARCHAR[]) END AS gr
-            FROM base0),
-          contam AS (
-            SELECT DISTINCT train_id FROM (
-              SELECT t.train_id, e.test_id
-              FROM (SELECT doc_id AS train_id,
-                           unnest(list_distinct(gr)) AS gram FROM tg) t
-              JOIN (SELECT doc_id AS test_id,
-                           unnest(list_distinct(gr)) AS gram FROM eg) e
-              USING (gram)
-              GROUP BY 1, 2 HAVING count(*) >= 2)),
-          clean AS (
-            SELECT doc_id, n_tok FROM dedup
-            WHERE doc_id NOT IN (SELECT train_id FROM contam)),
-          c AS (
-            SELECT doc_id, n_tok,
-                   CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0) AS BIGINT) AS tok_offset
-            FROM clean)
-          SELECT doc_id, n_tok, tok_offset,
-                 CAST(tok_offset // 512 AS BIGINT) AS chunk_first,
-                 CAST((tok_offset + GREATEST(n_tok, 1) - 1) // 512
-                      AS BIGINT) AS chunk_last,
-                 CAST((tok_offset + GREATEST(n_tok, 1) - 1) // 512
-                      - tok_offset // 512 + 1 AS INTEGER) AS n_chunks
-          FROM c
-        """,
-        "fingerprint": f"""
-          SELECT doc_id,
-                 md5(text) AS fp_exact,
-                 md5(array_to_string(list_sort(list_distinct(
-                   string_split_regex(trim(lower(text)), '\\s+'))), ' ')) AS fp_bag,
-                 CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform({_det_tokens_sql('text')},
-                          t -> {det_hash_str_i64_sql('t')})),
-                        (acc, h) -> (acc * 131 + h) % 2147483648)
-                      AS BIGINT) AS fp_roll
-          FROM documents
-        """,
-        "exact_dedup": """
-          SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-        """,
-        "ngram_jaccard": r"""
-          WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-          toks AS (
-            SELECT doc_id,
-                   unnest(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS g
-            FROM d WHERE trim(text) <> ''),
-          sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-          shared AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM toks a JOIN toks b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-          SELECT id_a, id_b,
-                 round(CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter), 6) AS jaccard
-          FROM shared
-          JOIN sizes sa ON sa.doc_id = id_a
-          JOIN sizes sb ON sb.doc_id = id_b
-          WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
-        """,
-        "dedup_clusters": r"""
-          WITH RECURSIVE d AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-          toks AS (
-            SELECT doc_id,
-                   unnest(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS g
-            FROM d WHERE trim(text) <> ''),
-          sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-          shared AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM toks a JOIN toks b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          pr AS (
-            SELECT id_a, id_b FROM shared
-            JOIN sizes sa ON sa.doc_id = id_a
-            JOIN sizes sb ON sb.doc_id = id_b
-            WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5),
-          e AS (SELECT id_a AS a, id_b AS b FROM pr
-                UNION SELECT id_b, id_a FROM pr),
-          reach(a, b) AS (
-            SELECT a, b FROM e
-            UNION
-            SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
-          SELECT d.doc_id,
-                 least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component,
-                 d.doc_id = least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS keep
-          FROM d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id
-        """,
-        "embedding_topk": """
-          WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
-          scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   CASE WHEN list_sum(list_transform(q.v, x -> x * x)) > 0
-                         AND list_sum(list_transform(c.v, x -> x * x)) > 0
-                   THEN list_dot_product(q.v, c.v) /
-                        (sqrt(list_sum(list_transform(q.v, x -> x * x))) *
-                         sqrt(list_sum(list_transform(c.v, x -> x * x))))
-                   ELSE 0.0 END AS cos_raw
-            FROM c, q WHERE c.vec_id <> q.vec_id)
-          SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
-                 CAST(rank AS INTEGER) AS rank
-          FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rank
-                FROM scored)
-          WHERE rank <= 5
-        """,
-        "embedding_topk_dot": """
-          WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
-          scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   list_dot_product(q.v, c.v) AS s_raw
-            FROM c, q WHERE c.vec_id <> q.vec_id)
-          SELECT query_id, neighbor_id, round(s_raw, 6) AS score,
-                 CAST(rank AS INTEGER) AS rank
-          FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY s_raw DESC, neighbor_id) AS rank
-                FROM scored)
-          WHERE rank <= 5
-        """,
-        "embedding_topk_l2": """
-          WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          q AS (SELECT vec_id, v FROM c WHERE vec_id < 5),
-          scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   sqrt(list_sum(list_transform(range(1, len(q.v) + 1),
-                        i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i])))) AS s_raw
-            FROM c, q WHERE c.vec_id <> q.vec_id)
-          SELECT query_id, neighbor_id, round(s_raw, 6) AS score,
-                 CAST(rank AS INTEGER) AS rank
-          FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY s_raw ASC, neighbor_id) AS rank
-                FROM scored)
-          WHERE rank <= 5
-        """,
-        "embedding_near_dup": """
-          WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          scored AS (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   CASE WHEN list_sum(list_transform(a.v, x -> x * x)) > 0
-                         AND list_sum(list_transform(b.v, x -> x * x)) > 0
-                   THEN list_dot_product(a.v, b.v) /
-                        (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
-                         sqrt(list_sum(list_transform(b.v, x -> x * x))))
-                   ELSE 0.0 END AS cos_raw
-            FROM c a JOIN c b ON a.vec_id < b.vec_id)
-          SELECT id_a, id_b, round(cos_raw, 6) AS cosine
-          FROM scored WHERE cos_raw >= 0.3
-        """,
-        # approx_stats: sketch values have no SQL twin, but the plan
-        # emits deterministic accuracy gates next to the exact distinct
-        # count, all three oracle-checkable (VERDICT r3 #7).
-        "approx_stats": """
-          SELECT l_returnflag,
-                 CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-                 TRUE AS parts_ok, TRUE AS p50_ok
-          FROM lineitem GROUP BY l_returnflag
-        """,
-        # minhash_lsh / simhash / embedding_lsh_topk use xxhash64 (not
-        # reproducible in DuckDB) -> rows-only checks.
-        # embedding_ivf_topk: approximate (n_probe < n_cells) -> rows-only;
-        # exactness at n_probe == n_cells is pinned by test_similarity_ivf.
-        "corpus_pipeline": r"""
-          WITH t AS (
-            SELECT doc_id, text,
-              CASE WHEN trim(text) = '' THEN [] ELSE string_split_regex(trim(text), '\s+') END AS toks,
-              CASE WHEN trim(lower(text)) = '' THEN [] ELSE string_split_regex(trim(lower(text)), '\s+') END AS ltoks
-            FROM documents
-          ), m AS (
-            SELECT doc_id, text,
-              len(toks) AS n,
-              CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[\p{L}\p{N}\s]', '', 'g')) / length(text) ELSE 0.0 END AS punct,
-              CASE WHEN len(ltoks) > 0 THEN len(list_filter(ltoks, x -> list_contains(['the','and','of','to','is','in','that','it','a','an','as','at','by','for','on','with'], x))) / len(ltoks) ELSE 0.0 END AS stopr,
-              CASE WHEN len(toks) > 0 THEN list_sum(list_transform(toks, x -> length(x))) / len(toks) ELSE 0.0 END AS mwl,
-              len(list_filter(ltoks, x -> list_contains(['der','die','und','das','ist','nicht','ein','mit'], x))) AS s_de,
-              len(list_filter(ltoks, x -> list_contains(['the','and','of','to','is','in','that','it'], x))) AS s_en,
-              len(list_filter(ltoks, x -> list_contains(['el','la','de','que','y','los','una','por'], x))) AS s_es,
-              len(list_filter(ltoks, x -> list_contains(['le','la','les','des','est','une','dans','que'], x))) AS s_fr
-            FROM t
-          ), scored AS (
-            SELECT doc_id,
-              CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de'
-                   WHEN s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en'
-                   WHEN s_es >= s_fr AND s_es > 0 THEN 'es'
-                   WHEN s_fr > 0 THEN 'fr'
-                   ELSE 'und' END AS lang_pred,
-              round((least(n / 20.0, 1.0)
-                   + greatest(0.0, 1.0 - punct * 4.0)
-                   + least(stopr * 4.0, 1.0)
-                   + (CASE WHEN mwl >= 2.0 AND mwl <= 12.0 THEN 1.0 ELSE 0.0 END)) / 4.0, 4) AS quality,
-              CAST(n AS INTEGER) AS n_tokens,
-              md5(text) AS fp
-            FROM m
-          )
-          SELECT doc_id, lang_pred, quality, n_tokens, fp
-          FROM (SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-                FROM scored WHERE quality >= 0.5)
-          WHERE rn = 1
-        """,
-        "transform_dim3": r"""
-          SELECT doc_id,
-                 array_to_string(
-                   flatten(list_transform(string_split_regex(text, '\. '),
-                           s -> list_transform(string_split(s, ' '),
-                                w -> upper(w)))), ' ') AS upper_text
-          FROM documents
-        """,
-        "tpch_q3": """
-          SELECT l_orderkey, o_orderdate, o_orderpriority,
-                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                          (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          WHERE c_mktsegment = 'BUILDING'
-            AND o_orderdate < '1995-03-15' AND l_shipdate > '1995-03-15'
-          GROUP BY 1, 2, 3
-          ORDER BY revenue DESC, o_orderdate, l_orderkey
-          LIMIT 10
-        """,
-        "rank_stats": """
-          SELECT o_orderkey, o_orderstatus,
-                 CAST(rank() OVER w AS INTEGER) AS rnk,
-                 CAST(dense_rank() OVER w AS INTEGER) AS drnk,
-                 round(percent_rank() OVER w, 6) AS prnk,
-                 round(cume_dist() OVER w, 6) AS cd,
-                 CAST(ntile(4) OVER w AS INTEGER) AS quartile
-          FROM orders WHERE o_orderkey <= 2000
-          WINDOW w AS (PARTITION BY o_orderstatus
-                       ORDER BY o_totalprice, o_orderkey)
-        """,
-        "melt": """
-          SELECT l_orderkey, l_linenumber, metric, round(CAST(val AS DOUBLE), 4) AS value
-          FROM (
-            SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS val
-            FROM lineitem WHERE l_orderkey <= 100
-            UNION ALL
-            SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-            FROM lineitem WHERE l_orderkey <= 100
-            UNION ALL
-            SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-            FROM lineitem WHERE l_orderkey <= 100)
-        """,
-        "cube_counts": """
-          SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-                 round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total
-          FROM orders
-          GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        """,
-        "latest_per_key": """
-          SELECT user_id, event_type, event_id, round(value, 4) AS value
-          FROM (SELECT user_id, event_type, event_id, value,
-                       row_number() OVER (PARTITION BY user_id, event_type
-                                          ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events)
-          WHERE rn = 1
-        """,
-        "quality_lang": r"""
-          WITH t AS (
-            SELECT doc_id, text,
-              CASE WHEN trim(text) = '' THEN [] ELSE string_split_regex(trim(text), '\s+') END AS toks,
-              CASE WHEN trim(lower(text)) = '' THEN [] ELSE string_split_regex(trim(lower(text)), '\s+') END AS ltoks
-            FROM documents
-          ), m AS (
-            SELECT doc_id,
-              len(toks) AS n,
-              CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[\p{L}\p{N}\s]', '', 'g')) / length(text) ELSE 0.0 END AS punct,
-              CASE WHEN len(ltoks) > 0 THEN len(list_filter(ltoks, x -> list_contains(['the','and','of','to','is','in','that','it','a','an','as','at','by','for','on','with'], x))) / len(ltoks) ELSE 0.0 END AS stopr,
-              CASE WHEN len(toks) > 0 THEN list_sum(list_transform(toks, x -> length(x))) / len(toks) ELSE 0.0 END AS mwl,
-              len(list_filter(ltoks, x -> list_contains(['der','die','und','das','ist','nicht','ein','mit'], x))) AS s_de,
-              len(list_filter(ltoks, x -> list_contains(['the','and','of','to','is','in','that','it'], x))) AS s_en,
-              len(list_filter(ltoks, x -> list_contains(['el','la','de','que','y','los','una','por'], x))) AS s_es,
-              len(list_filter(ltoks, x -> list_contains(['le','la','les','des','est','une','dans','que'], x))) AS s_fr
-            FROM t
-          )
-          SELECT doc_id,
-            CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de'
-                 WHEN s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en'
-                 WHEN s_es >= s_fr AND s_es > 0 THEN 'es'
-                 WHEN s_fr > 0 THEN 'fr'
-                 ELSE 'und' END AS lang_pred,
-            round((least(n / 20.0, 1.0)
-                 + greatest(0.0, 1.0 - punct * 4.0)
-                 + least(stopr * 4.0, 1.0)
-                 + (CASE WHEN mwl >= 2.0 AND mwl <= 12.0 THEN 1.0 ELSE 0.0 END)) / 4.0, 4) AS quality
-          FROM m
-        """,
-        # media_features is generated data -> rows-only check.
-        # quality_lang: heuristic scoring, rows-only.
-        "tpch_q1": """
-          SELECT l_returnflag, l_linestatus,
-                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                          (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-                 count(*) AS count_order
-          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-          GROUP BY l_returnflag, l_linestatus
-        """,
-        "join_agg": """
-          SELECT n_name, count(*) AS n_orders,
-                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          FROM orders
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          GROUP BY n_name
-        """,
-        "topk_per_group": """
-          SELECT o_orderpriority, o_orderkey, o_totalprice, CAST(rk AS INTEGER) AS rk
-          FROM (SELECT o_orderpriority, o_orderkey, o_totalprice,
-                       row_number() OVER (PARTITION BY o_orderpriority
-                                          ORDER BY o_totalprice DESC, o_orderkey) AS rk
-                FROM orders)
-          WHERE rk <= 3
-        """,
-        "pivot_status": """
-          SELECT l_returnflag,
-                 CAST(sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
-                 CAST(sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_filled
-          FROM lineitem GROUP BY l_returnflag
-        """,
-        "asof_tolerance": """
-          WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_id % 2 = 1),
-               r AS (SELECT user_id, ts, round(value, 4) AS val FROM events WHERE event_id % 2 = 0)
-          SELECT l.event_id, l.user_id, l.ts,
-                 CASE WHEN r.ts IS NOT NULL
-                       AND epoch(l.ts) - epoch(r.ts) <= 600 THEN r.val END AS val
-          FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "backfill_bounded": f"""
-          WITH t AS ({_T})
-          SELECT conv_id, turn_idx,
-                 last_value(CASE WHEN tool <> '' THEN tool END IGNORE NULLS)
-                   OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                         ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS tool_filled
-          FROM t
-        """,
-        "rolling_range": """
-          SELECT event_id, user_id,
-                 count(*) OVER w AS n_10min,
-                 round(sum(value) OVER w, 4) AS sum_10min
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
-                       RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)
-        """,
-        "distinct_count": """
-          SELECT l_returnflag,
-                 count(DISTINCT l_partkey) AS n_parts,
-                 count(DISTINCT l_suppkey) AS n_supps
-          FROM lineitem GROUP BY l_returnflag
-        """,
-        "percentiles": """
-          SELECT l_returnflag,
-                 round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-                 round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
-          FROM lineitem GROUP BY l_returnflag
-        """,
-        "rollup_counts": """
-          SELECT COALESCE(l_returnflag, '<ALL>') AS rf,
-                 COALESCE(l_linestatus, '<ALL>') AS ls,
-                 count(*) AS n
-          FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        """,
-        "semi_anti": """
-          SELECT o_orderkey,
-                 CASE WHEN EXISTS (SELECT 1 FROM lineitem
-                                   WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-                      THEN 'has_big_line' ELSE 'no_big_line' END AS tag
-          FROM orders
-        """,
-        "set_ops": """
-          WITH ordering AS (SELECT DISTINCT o_custkey AS k FROM orders),
-               known AS (SELECT DISTINCT c_custkey AS k FROM customer)
-          SELECT k, 'never_ordered' AS tag FROM known
-          WHERE k NOT IN (SELECT k FROM ordering)
-          UNION ALL
-          SELECT k, 'ordered' AS tag FROM known
-          WHERE k IN (SELECT k FROM ordering)
-        """,
-        "flagship": f"""
-          WITH t AS ({_T}),
-          b AS (SELECT conv_id, turn_idx, ts, role, tool,
-                       length(text) AS text_len,
-                       lag(ts) OVER w AS prev_ts,
-                       lag(role, 1) OVER w AS role_lag_1,
-                       CAST(lag(length(text), 1) OVER w AS INTEGER) AS text_len_lag_1,
-                       CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-                         OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS BIGINT) AS assistant_turns_10,
-                       round(avg(length(text))
-                         OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING), 4) AS mean_text_len_10,
-                       last_value(CASE WHEN tool <> '' THEN tool END IGNORE NULLS)
-                         OVER (w ROWS UNBOUNDED PRECEDING) AS tool_filled
-                FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx))
-          SELECT conv_id, turn_idx, ts,
-                 CAST(sum(CASE WHEN prev_ts IS NULL
-                               OR epoch(ts) - epoch(prev_ts) > {GAP_SEC}
-                          THEN 1 ELSE 0 END)
-                      OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
-                            ROWS UNBOUNDED PRECEDING) - 1 AS INTEGER) AS session_seq,
-                 round(epoch(ts) - epoch(prev_ts), 6) AS secs_since_prev,
-                 role_lag_1, text_len_lag_1, assistant_turns_10,
-                 mean_text_len_10, tool_filled
-          FROM b
-        """,
-        "interval_join": """
-          WITH iv AS (SELECT user_id, MIN(ts) AS ws FROM events
-                      WHERE event_type = 'purchase' GROUP BY user_id)
-          SELECT e.event_id, e.user_id, round(epoch(iv.ws), 6) AS win_start_s
-          FROM events e JOIN iv ON e.user_id = iv.user_id
-          WHERE e.ts >= iv.ws AND e.ts < iv.ws + INTERVAL 2 HOUR
-        """,
-        "event_entropy": f"""
-          WITH t AS ({_T}),
-          c AS (SELECT conv_id, role, COUNT(*) AS c
-                FROM t GROUP BY conv_id, role)
-          SELECT conv_id,
-                 CAST(SUM(c) AS BIGINT) AS role_n,
-                 CAST(COUNT(*) AS INT) AS role_n_cats,
-                 round(ln(CAST(SUM(c) AS DOUBLE))
-                       - SUM(c * ln(CAST(c AS DOUBLE))) / SUM(c), 6)
-                   AS role_entropy,
-                 CASE WHEN COUNT(*) > 1 THEN
-                   round((ln(CAST(SUM(c) AS DOUBLE))
-                          - SUM(c * ln(CAST(c AS DOUBLE))) / SUM(c))
-                         / ln(CAST(COUNT(*) AS DOUBLE)), 6)
-                 ELSE 0.0 END AS role_norm_entropy
-          FROM c GROUP BY conv_id
-        """,
-        "labels_next": f"""
-          WITH t AS ({_T})
-          SELECT conv_id, turn_idx,
-                 round(epoch(lead(ts) OVER w) - epoch(ts), 6)
-                   AS label_next_gap,
-                 (lead(ts) OVER w) IS NULL AS label_is_last,
-                 ((lead(ts) OVER w) IS NULL
-                  OR epoch(lead(ts) OVER w) - epoch(ts) > 1800.0)
-                   AS label_session_end
-          FROM t WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx)
-        """,
-        "chunk_overlap": r"""
-          WITH d AS (SELECT doc_id,
-                 CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                      ELSE string_split_regex(trim(lower(text)), '\s+')
-                 END AS toks
-               FROM documents),
-          s AS (SELECT doc_id, toks, len(toks) AS n
-                FROM d WHERE len(toks) > 0),
-          c AS (SELECT doc_id, toks, n,
-                 UNNEST(range(0, CAST(ceil(greatest(0, n - 50) / 30.0)
-                                      AS BIGINT) + 1)) AS ci
-                FROM s)
-          SELECT doc_id, CAST(ci AS INT) AS chunk_idx,
-                 CAST(ci * 30 AS INT) AS chunk_start,
-                 CAST(least(50, n - ci * 30) AS INT) AS chunk_len,
-                 array_to_string(
-                   toks[CAST(ci * 30 + 1 AS BIGINT)
-                        : CAST(least(ci * 30 + 50, n) AS BIGINT)], ' ')
-                   AS chunk_text
-          FROM c
-        """,
-        "embedding_cov": """
-          WITH idx AS (SELECT i.range AS i, j.range AS j
-                       FROM range(8) AS i, range(8) AS j
-                       WHERE j.range >= i.range),
-          e AS (SELECT embedding FROM embeddings)
-          SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-                 round((SUM(CAST(embedding[i+1] AS DOUBLE)
-                            * CAST(embedding[j+1] AS DOUBLE))
-                        - SUM(CAST(embedding[i+1] AS DOUBLE))
-                          * SUM(CAST(embedding[j+1] AS DOUBLE)) / COUNT(*))
-                       / (COUNT(*) - 1), 6) AS cov
-          FROM e CROSS JOIN idx GROUP BY i, j
-        """,
-        # embedding_pca: rows-only by construction (driver-side eigh is
-        # not SQL-expressible); anchored by embedding_cov + pytest
-        # allclose vs numpy PCA.
-        "hot_keys": f"""
-          WITH t AS ({_T}),
-          c AS (SELECT conv_id, COUNT(*) AS n_rows FROM t GROUP BY conv_id),
-          s AS (SELECT conv_id, CAST(n_rows AS BIGINT) AS n_rows,
-                       round(CAST(n_rows AS DOUBLE)
-                             / SUM(n_rows) OVER (), 6) AS share,
-                       CAST(row_number() OVER
-                         (ORDER BY n_rows DESC, conv_id) AS INT) AS rank
-                FROM c)
-          SELECT conv_id, n_rows, share, rank,
-                 round(SUM(share) OVER
-                   (ORDER BY rank ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND CURRENT ROW), 6) AS cum_share
-          FROM s WHERE rank <= 10
-        """,
-        "group_stats": f"""
-          WITH t AS ({_T}),
-          c AS (SELECT conv_id, COUNT(*) AS n FROM t GROUP BY conv_id)
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-                 CAST(SUM(n) AS BIGINT) AS n_rows,
-                 round(CAST(SUM(n) AS DOUBLE) / COUNT(*), 6) AS mean_size,
-                 CAST(quantile_cont(n, 0.5) AS DOUBLE) AS p50_size,
-                 CAST(quantile_cont(n, 0.9) AS DOUBLE) AS p90_size,
-                 CAST(quantile_cont(n, 0.99) AS DOUBLE) AS p99_size,
-                 CAST(MAX(n) AS BIGINT) AS max_size,
-                 round(MAX(n) / (CAST(SUM(n) AS DOUBLE) / COUNT(*)), 6)
-                   AS skew_factor
-          FROM c
-        """,
-        "token_truncate": rf"""
-          WITH t AS ({_T}),
-          r AS (SELECT conv_id, turn_idx,
-                  CAST(CASE WHEN trim(text) = '' THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                       END AS INT) AS turn_tokens
-                FROM t),
-          s AS (SELECT conv_id, turn_idx, turn_tokens,
-                  CAST(SUM(turn_tokens) OVER
-                    (PARTITION BY conv_id ORDER BY turn_idx DESC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS suffix_tokens
-                FROM r)
-          SELECT conv_id, turn_idx, turn_tokens, suffix_tokens
-          FROM s WHERE suffix_tokens <= 40
-        """,
-        "sft_pipeline": f"""
-          WITH t AS ({_T}),
-          r AS (SELECT conv_id,
-                 CAST(COUNT(*) AS INT) AS n_turns,
-                 string_agg(role || ': ' || text, chr(10)
-                            ORDER BY turn_idx, role, text) AS rendered,
-                 CAST(SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-                      AS INT) AS assistant_turns,
-                 CASE WHEN SUM(length(text)) > 0 THEN
-                   round(CAST(SUM(CASE WHEN role = 'assistant'
-                                       THEN length(text) ELSE 0 END)
-                              AS DOUBLE) / SUM(length(text)), 6)
-                 ELSE 0.0 END AS assistant_char_frac
-                FROM t GROUP BY conv_id),
-          f AS (SELECT * FROM r
-                WHERE n_turns >= 2 AND assistant_turns >= 1),
-          d AS (SELECT *, row_number() OVER
-                  (PARTITION BY md5(rendered) ORDER BY conv_id) AS rn
-                FROM f)
-          SELECT conv_id, n_turns, rendered, assistant_turns,
-                 assistant_char_frac
-          FROM d WHERE rn = 1
-        """,
-        "source_report": r"""
-          WITH a AS (
-            SELECT source, lang, COUNT(*) AS n_docs,
-                   SUM(length(text)) AS n_chars,
-                   SUM(CASE WHEN trim(text) = '' THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+'))
-                       END) AS n_tokens,
-                   round(AVG(length(text)), 6) AS mean_chars
-            FROM documents GROUP BY source, lang)
-          SELECT source, lang,
-                 CAST(n_docs AS BIGINT) AS n_docs,
-                 CAST(n_chars AS BIGINT) AS n_chars,
-                 CAST(n_tokens AS BIGINT) AS n_tokens,
-                 mean_chars,
-                 round(CAST(n_docs AS DOUBLE) / SUM(n_docs) OVER (), 6)
-                   AS doc_share,
-                 round(CAST(n_tokens AS DOUBLE) / SUM(n_tokens) OVER (), 6)
-                   AS token_share
-          FROM a
-        """,
-        "source_cap": """
-          SELECT doc_id, source, n_chars
-          FROM (SELECT doc_id, source, n_chars,
-                       row_number() OVER (PARTITION BY source
-                                          ORDER BY n_chars DESC, doc_id)
-                         AS rk
-                FROM documents)
-          WHERE rk <= 30
-        """,
-        "dedup_keep_best": r"""
-          WITH RECURSIVE d AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-          toks AS (
-            SELECT doc_id,
-                   unnest(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS g
-            FROM d WHERE trim(text) <> ''),
-          sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-          shared AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM toks a JOIN toks b ON a.g = b.g AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          pr AS (
-            SELECT id_a, id_b FROM shared
-            JOIN sizes sa ON sa.doc_id = id_a
-            JOIN sizes sb ON sb.doc_id = id_b
-            WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5),
-          e AS (SELECT id_a AS a, id_b AS b FROM pr
-                UNION SELECT id_b, id_a FROM pr),
-          reach(a, b) AS (
-            SELECT a, b FROM e
-            UNION
-            SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-          comp AS (
-            SELECT d.doc_id,
-                   least(d.doc_id, coalesce(min(r.b), d.doc_id)) AS component
-            FROM d LEFT JOIN reach r ON r.a = d.doc_id
-            GROUP BY d.doc_id)
-          SELECT c.doc_id, c.component,
-                 row_number() OVER (PARTITION BY c.component
-                                    ORDER BY length(d2.text) DESC, c.doc_id)
-                   = 1 AS keep
-          FROM comp c JOIN d d2 ON d2.doc_id = c.doc_id
-        """,
-        "render_convs": f"""
-          WITH t AS ({_T})
-          SELECT conv_id,
-                 CAST(COUNT(*) AS INT) AS n_turns,
-                 string_agg(role || ': ' || text, chr(10)
-                            ORDER BY turn_idx, role, text) AS rendered,
-                 CAST(SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-                      AS INT) AS assistant_turns,
-                 CASE WHEN SUM(length(text)) > 0 THEN
-                   round(CAST(SUM(CASE WHEN role = 'assistant'
-                                       THEN length(text) ELSE 0 END)
-                              AS DOUBLE) / SUM(length(text)), 6)
-                 ELSE 0.0 END AS assistant_char_frac
-          FROM t GROUP BY conv_id
-        """,
-        "truncate_convs": f"""
-          WITH t AS ({_T}),
-          r AS (SELECT conv_id, turn_idx, role,
-                       row_number() OVER
-                         (PARTITION BY conv_id ORDER BY turn_idx)
-                         AS kept_rank,
-                       COUNT(*) OVER (PARTITION BY conv_id) AS conv_turns
-                FROM t)
-          SELECT conv_id, turn_idx, role,
-                 CAST(kept_rank AS INT) AS kept_rank,
-                 CAST(conv_turns AS INT) AS conv_turns
-          FROM r WHERE kept_rank <= 1 OR kept_rank > conv_turns - 3
-        """,
-        "hard_negatives": """
-          WITH c AS (SELECT vec_id, label,
-                            CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-          q AS (SELECT vec_id, label, v FROM c WHERE vec_id < 5),
-          scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   CASE WHEN list_sum(list_transform(q.v, x -> x * x)) > 0
-                         AND list_sum(list_transform(c.v, x -> x * x)) > 0
-                   THEN list_dot_product(q.v, c.v) /
-                        (sqrt(list_sum(list_transform(q.v, x -> x * x))) *
-                         sqrt(list_sum(list_transform(c.v, x -> x * x))))
-                   ELSE 0.0 END AS cos_raw
-            FROM c, q
-            WHERE c.vec_id <> q.vec_id
-              AND c.label IS DISTINCT FROM q.label)
-          SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
-                 CAST(rank AS INTEGER) AS rank
-          FROM (SELECT *, row_number() OVER
-                  (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id)
-                  AS rank
-                FROM scored WHERE cos_raw >= 0.1)
-          WHERE rank <= 5
-        """,
-    }
+    return dict(ORACLES)

@@ -1,11 +1,12 @@
-"""Scalar cast functions — `string_to<T>` / base64 parity.
+"""Scalar cast functions — `string_to<T>` parity.
 
 Reference: ``include/hipipe/core/utility/string.hpp:32-125`` (lexical
 casts), tolerant bool sets at ``string.hpp:60-66``
 (``true|True|TRUE|1|y|Y|yes|Yes|YES|on|On|ON`` and the false mirror —
 the reference's set literals carry stray padding spaces, an artifact of
-the aligned code block; matching is on the trimmed token), and
-``include/hipipe/core/base64.hpp:22-26``.
+the aligned code block; matching is on the trimmed token). The
+reference's base64 helpers (``include/hipipe/core/base64.hpp:22-26``)
+are Spark's ``F.base64`` / ``F.unbase64``.
 """
 
 from __future__ import annotations
@@ -33,13 +34,3 @@ def string_to(col: Column, dtype: str) -> Column:
     if dtype in ("bool", "boolean"):
         return string_to_bool(col)
     return col.cast(dtype)
-
-
-def base64_encode(col: Column) -> Column:
-    """bytes → base64 (reference ``base64.hpp:26``)."""
-    return F.base64(col)
-
-
-def base64_decode(col: Column) -> Column:
-    """base64 → bytes (reference ``base64.hpp:22``)."""
-    return F.unbase64(col)

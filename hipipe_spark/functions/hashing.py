@@ -41,21 +41,10 @@ def det_hash01(key: Column, seed: int = 0) -> Column:
     return det_hash_i64(key, seed) / F.lit(float(_M))
 
 
-def det_hash_i64_py(key: int, seed: int = 0) -> int:
-    """Plan-time Python twin of :func:`det_hash_i64` (same constants,
-    same rounds) — for baking hash-derived literals into BOTH a Spark
-    plan and its oracle SQL (e.g. deterministic random-projection
-    signs), so the two sides share one bit-exact source."""
-    x = (int(key) + int(seed)) % _M
-    x = (x * _A + _C) % _M
-    x = (x * _A + _C) % _M
-    return x
-
-
 def det_hash_mix_i64_py(key: int, seed: int = 0) -> int:
     """Plan-time Python twin of :func:`det_hash_mix_i64` (same
     rounds). Use when the consumer needs uniform BITS — the LCG
-    twin's top bit ALTERNATES on consecutive keys (affine bijection),
+    family's top bit ALTERNATES on consecutive keys (affine bijection),
     which would make e.g. Rademacher sign rows perfectly correlated."""
     h0 = (int(key) + int(seed)) % _M
     h1 = h0 ^ 61 ^ (h0 >> 16)
@@ -107,13 +96,6 @@ def det_hash_str_i64_sql(s_expr: str, seed: int = 0) -> str:
     base = (f"list_reduce(list_prepend(CAST({int(seed) % _M} AS BIGINT), {codes}), "
             f"(acc, x) -> (acc * 31 + x) % {_M})")
     return det_hash_i64_sql(base, 0)
-
-
-def salt_col(key: Column, n_salts: int, extra: Column | None = None) -> Column:
-    """Salt bucket in [0, n_salts) for skew mitigation (xxhash64-based;
-    no oracle needs to reproduce salts — they never change results)."""
-    cols = [key] if extra is None else [key, extra]
-    return F.pmod(F.xxhash64(*cols), F.lit(n_salts)).cast("int")
 
 
 def det_hash_mix_i64(key: Column, seed: int = 0) -> Column:

@@ -46,10 +46,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.filter(F.split(F.trim(spaced), r"\s+"), lambda x: x != "")).cast("int")
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col).cast("int")
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are not letter/digit/space."""
     stripped = F.regexp_replace(col, r"[\p{L}\p{N}\s]", "")

@@ -1,49 +1,71 @@
-"""Static guards for the driver contract in __spark_entry__.py.
-
-Two real incidents motivated these: a mid-dict insert once silently
-dropped an anchor key, and two late-round `def q_*` redefinitions
-shadowed earlier query functions (the dict literal had duplicate keys,
-so two operators lost their driver queries without any error). Pure
-AST checks — no Spark session."""
+"""Guards for the driver contract: the query registry in driver_queries/
+and the view of it that __spark_entry__.py hands the driver. No Spark
+session."""
 
 import ast
+import glob
+import json
 import os
+import subprocess
+import sys
+from collections import Counter
 
-ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "__spark_entry__.py")
+import pytest
 
-
-def _tree():
-    return ast.parse(open(ENTRY).read())
-
-
-def _queries_literal_keys(tree):
-    for n in ast.walk(tree):
-        if isinstance(n, ast.FunctionDef) and n.name == "queries":
-            for r in ast.walk(n):
-                if isinstance(r, ast.Return) and isinstance(r.value, ast.Dict):
-                    return [k.value for k in r.value.keys]
-    raise AssertionError("queries() dict literal not found")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_no_duplicate_query_keys():
-    keys = _queries_literal_keys(_tree())
-    seen, dups = set(), set()
-    for k in keys:
-        (dups if k in seen else seen).add(k)
-        seen.add(k)
-    assert not dups, f"duplicate queries() keys silently shadow: {dups}"
+def _decorated_query_functions():
+    """Names of the functions declared with ``@query(...)``, one entry
+    per declaration."""
+    names = []
+    for path in glob.glob(os.path.join(REPO, "driver_queries", "*.py")):
+        for n in ast.walk(ast.parse(open(path).read())):
+            if isinstance(n, ast.FunctionDef) and any(
+                    isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "query"
+                    for d in n.decorator_list):
+                names.append(n.name)
+    return names
 
 
-def test_no_shadowed_query_functions():
-    """No module-level function name may be defined twice — the later
-    def silently replaces the earlier operator's driver query."""
-    from collections import Counter
-    names = Counter(
-        n.name for n in ast.iter_child_nodes(_tree())
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)))
-    shadowed = {k: v for k, v in names.items() if v > 1}
-    assert not shadowed, f"redefined module functions: {shadowed}"
+def test_driver_window_names_registered_queries():
+    """The driver records correctness rows for the first 50 queries:
+    the window names 50 distinct registered queries and leads
+    queries()."""
+    import __spark_entry__ as E
+    from driver_queries import QUERIES
+    window = E.DRIVER_WINDOW
+    assert len(window) == len(set(window)) == 50
+    assert not set(window) - set(QUERIES)
+    assert list(E.queries())[:50] == list(window)
+    assert list(E.queries()) == list(window) + [
+        n for n in QUERIES if n not in window]
+
+
+def test_each_query_declared_once():
+    """Every registered query is exactly one ``@query`` function named
+    ``q_<name>``."""
+    from driver_queries import QUERIES
+    declared = Counter(_decorated_query_functions())
+    twice = {k: v for k, v in declared.items() if v > 1}
+    assert not twice, f"query functions declared more than once: {twice}"
+    assert set(declared) == {f"q_{n}" for n in QUERIES}
+    assert all(fn.__name__ == f"q_{n}" for n, fn in QUERIES.items())
+
+
+def test_second_registration_raises():
+    """Registering a name twice raises and leaves the first entry."""
+    from driver_queries import ORACLES, QUERIES, query
+    first = QUERIES["sessionize"]
+
+    def q_sessionize(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="sessionize"):
+        query(oracle="SELECT 1")(q_sessionize)
+    assert QUERIES["sessionize"] is first
+    assert ORACLES["sessionize"] != "SELECT 1"
 
 
 # queries() keys with no oracle_sql() entry, by construction
@@ -65,33 +87,19 @@ def test_every_query_has_oracle_or_is_disclosed():
     assert not o - q, f"oracles without a query: {o - q}"
 
 
-def test_oracle_sql_reads_no_data(monkeypatch):
-    """oracle_sql() is a pure string builder: with DuckDB unusable it
-    still returns an oracle for every query that has one."""
-    import duckdb
-
-    import __spark_entry__ as E
-
-    def refuse(*a, **kw):
-        raise RuntimeError("oracle_sql() must not open DuckDB")
-    monkeypatch.setattr(duckdb, "connect", refuse)
-    assert set(E.oracle_sql()) == set(E.queries()) - ROWS_ONLY
-
-
-def test_oracle_dict_no_reassigned_keys():
-    """d['name'] = ... must appear at most once per oracle-building
-    function — a second assignment silently replaces the first."""
-    tree = _tree()
-    for fn in ast.iter_child_nodes(tree):
-        if not isinstance(fn, ast.FunctionDef):
-            continue
-        if "oracle" not in fn.name and fn.name != "oracle_sql":
-            continue
-        assigned = []
-        for n in ast.walk(fn):
-            if (isinstance(n, ast.Assign) and len(n.targets) == 1
-                    and isinstance(n.targets[0], ast.Subscript)
-                    and isinstance(n.targets[0].slice, ast.Constant)):
-                assigned.append(n.targets[0].slice.value)
-        dups = {k for k in assigned if assigned.count(k) > 1}
-        assert not dups, f"{fn.name}: reassigned oracle keys {dups}"
+def test_oracle_sql_reads_no_data():
+    """Oracle strings are built when driver_queries loads: a fresh
+    import with DuckDB unusable still yields an oracle for every query
+    that has one."""
+    script = (
+        "import json, duckdb\n"
+        "def refuse(*a, **kw):\n"
+        "    raise RuntimeError('oracle SQL must not open DuckDB')\n"
+        "for f in ('connect', 'sql', 'query', 'execute'):\n"
+        "    setattr(duckdb, f, refuse)\n"
+        "import __spark_entry__ as E\n"
+        "print(json.dumps([sorted(E.queries()), sorted(E.oracle_sql())]))\n")
+    out = subprocess.run([sys.executable, "-c", script], cwd=REPO,
+                         capture_output=True, text=True, check=True)
+    queries, oracles = json.loads(out.stdout.strip().splitlines()[-1])
+    assert set(oracles) == set(queries) - ROWS_ONLY

@@ -26,7 +26,7 @@ import re
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("PLAN_AUDIT_SF_DIR", "/root/testdata/sf0.001")
 OUT = os.path.join(os.path.dirname(__file__), "..", "tests",
