@@ -28,33 +28,33 @@ BENCH_QUERIES = [
     "minhash_lsh", "token_stats", "fingerprint", "embedding_topk",
     "generate_groups", "index_mapper", "corpus_pipeline",
     "latest_per_key", "tpch_q3",
-    # round-3 training-data composites
+    # training-data composites
     "training_pipeline", "bm25", "boilerplate_lines", "det_shuffle",
-    # round-3 feature-eng extensions (late): 8-lag decay fold over one
-    # window sort; int8-quantized ANN (integer dots, broadcast queries)
+    # 8-lag decay fold over one window sort; int8-quantized ANN
+    # (integer dots, broadcast queries)
     "decay_features", "embedding_topk_int8",
-    # round-3 final: sliced range join, PPJoin prefix-filtered jaccard,
-    # label-excluded hard-negative mining
+    # sliced range join, PPJoin prefix-filtered jaccard, label-excluded
+    # hard-negative mining
     "interval_join", "ngram_jaccard_prefix", "hard_negatives",
-    # round-3 continuation: bigram-LM self-perplexity (count tables +
-    # two equi-joins) and the as-of staleness audit (join + one agg)
+    # bigram-LM self-perplexity (count tables + two equi-joins) and the
+    # as-of staleness audit (join + one agg)
     "bigram_ppl", "freshness",
-    # round-3 late: full inverted-index TF-IDF keywords (explode +
-    # two aggs + join + per-doc top-k window) and the three-window
-    # gaps-and-islands run-length features
+    # full inverted-index TF-IDF keywords (explode + two aggs + join +
+    # per-doc top-k window) and the three-window gaps-and-islands
+    # run-length features
     "distinctive_terms", "role_streak",
-    # round-3 continuation: point-in-time window family — delta-encoded
-    # two-horizon count/sum (one shuffle, one sort) and panes-decomposed
-    # trailing extrema (two slice sorts + narrow rejoin)
+    # point-in-time window family: delta-encoded two-horizon count/sum
+    # (one shuffle, one sort) and panes-decomposed trailing extrema
+    # (two slice sorts + narrow rejoin)
     "pit_multi", "pit_extrema",
-    # round-3 continuation: duplicated-span detection (token-window
-    # explode + two shuffles), DSIR importance weights (two broadcast
-    # multinomials + one doc agg), multi-touch attribution (two window
-    # passes), z-order write-layout keys (bit interleave + range sort)
+    # duplicated-span detection (token-window explode + two shuffles),
+    # DSIR importance weights (two broadcast multinomials + one doc
+    # agg), multi-touch attribution (two window passes), z-order
+    # write-layout keys (bit interleave + range sort)
     "substring_dedup", "dsir", "attribution", "zorder",
-    # round-4 continuation: winnowing local-guarantee dedup tier
-    # (vectorized Arrow fingerprints + fingerprint equi-join) and the
-    # HBOS outlier scoring scan (two-agg fit + literal-histogram scan)
+    # winnowing local-guarantee dedup tier (vectorized Arrow
+    # fingerprints + fingerprint equi-join) and the HBOS outlier scoring
+    # scan (two-agg fit + literal-histogram scan)
     "winnow_dedup", "hbos",
 ]
 
@@ -134,9 +134,9 @@ def main() -> None:
     total += pipe_sec
 
     # same pipeline at 4x the conversations: data-scale evidence inside
-    # the driver artifact (VERDICT r2 next-round #7). Perfect weak
-    # scaling keeps turns/sec flat -> scale_eff_4x ~ 1.0; a plan with a
-    # super-linear stage (global sort, single-task window) would sink it.
+    # the driver artifact. Perfect weak scaling keeps turns/sec flat ->
+    # scale_eff_4x ~ 1.0; a plan with a super-linear stage (global
+    # sort, single-task window) would sink it.
     n_turns_4x, pipe_sec_4x, _ = run_flagship(4 * N_CONVS)
     timings["flagship_synthetic_4x"] = round(pipe_sec_4x, 3)
     total += pipe_sec_4x

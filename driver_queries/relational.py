@@ -558,7 +558,7 @@ def q_set_ops(spark, sf_dir):
 
 # approx_stats: sketch values have no SQL twin, but the plan
 # emits deterministic accuracy gates next to the exact distinct
-# count, all three oracle-checkable (VERDICT r3 #7).
+# count, all three oracle-checkable.
 @query(oracle="""
       SELECT l_returnflag,
              CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
@@ -566,7 +566,7 @@ def q_set_ops(spark, sf_dir):
       FROM lineitem GROUP BY l_returnflag
     """)
 def q_approx_stats(spark, sf_dir):
-    """Approximate sketches, oracle-gated (VERDICT r3 #7): the sketch
+    """Approximate sketches, oracle-gated: the sketch
     values themselves have no SQL twin by construction, so the plan
     computes the exact statistics ALONGSIDE the sketches and emits
     deterministic accuracy booleans — ``parts_ok`` (HLL distinct within
@@ -608,7 +608,7 @@ def q_approx_stats(spark, sf_dir):
       FROM range(0, 128) t(i)
     """)
 def q_media_meta(spark, sf_dir):
-    """Oracle-able slice of the multimodal extractor (VERDICT r2 #5):
+    """Oracle-able slice of the multimodal extractor:
     the fake decoder is deterministic arithmetic over (id, seed) —
     content length, thumbnail clamps, and frame counts are reproduced
     exactly in DuckDB SQL. Only the crc32 checksum (no DuckDB builtin)
@@ -673,7 +673,7 @@ def q_media_meta(spark, sf_dir):
       FROM vmean
     """)
 def q_media_decode(spark, sf_dir):
-    """REAL stdlib media decode (VERDICT r3 #3): gen_real_media emits
+    """REAL stdlib media decode: gen_real_media emits
     actual PNG (all five filter types), PCM-16 WAV, and APNG video
     bytes whose generation parameters are pure arithmetic in the id;
     decode_features (sources/multimodal.py) recovers width/height/
@@ -702,7 +702,7 @@ def q_media_decode(spark, sf_dir):
       FROM orders WHERE o_orderkey % 100 = 0
     """)
 def q_csv_roundtrip(spark, sf_dir):
-    """CSV dialect round-trip driver row (VERDICT r3 #10): derive a
+    """CSV dialect round-trip driver row: derive a
     deliberately hostile string column from orders (leading space,
     embedded separator, quote, escape char, AND newline), write it with
     the reference-dialect writer (sources/csv.py write_csv, quoting per
@@ -896,32 +896,36 @@ def q_zorder(spark, sf_dir):
 
 @query(oracle="""
       WITH src AS (
-        SELECT event_type, user_id % 50 AS user_bucket,
+        SELECT event_type, user_id,
                CAST(floor(value / 25) AS INTEGER) AS val_band
         FROM events),
       g AS (
-        SELECT event_type, user_bucket,
+        SELECT event_type, user_id,
                CAST(count(*) AS BIGINT) AS class_size,
                CAST(count(DISTINCT val_band) AS BIGINT)
                  AS distinct_sensitive
         FROM src GROUP BY 1, 2)
-      SELECT event_type, user_bucket, class_size, distinct_sensitive,
-             CASE WHEN class_size < 35 AND distinct_sensitive < 2 THEN 'k+l'
-                  WHEN class_size < 35 THEN 'k'
+      SELECT event_type, user_id, class_size, distinct_sensitive,
+             CASE WHEN class_size < 10 AND distinct_sensitive < 2 THEN 'k+l'
+                  WHEN class_size < 10 THEN 'k'
                   WHEN distinct_sensitive < 2 THEN 'l' END AS violation
-      FROM g WHERE class_size < 35 OR distinct_sensitive < 2
+      FROM g WHERE class_size < 10 OR distinct_sensitive < 2
     """)
 def q_k_anonymity(spark, sf_dir):
     """Privacy-release audit (validate.py k_anonymity): k-anonymity +
-    l-diversity violations over (event_type, user_id%50) classes with
+    l-diversity violations over (event_type, user_id) classes with
     the event value band as the sensitive attribute; one hash
-    aggregate, only the failing tail survives."""
+    aggregate, only the failing tail survives.
+
+    Users scale with the SF, so per-user classes keep one size
+    distribution at every SF and ``k=10`` flags about 14% of them at
+    both sf0.01 and sf0.1. A fixed ``user_id % 50`` bucketing with an
+    absolute ``k`` flags none once the rows grow tenfold."""
     from hipipe_spark.operators.validate import k_anonymity
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("user_id") % 50).alias("user_bucket"),
+        "event_type", "user_id",
         F.floor(F.col("value") / 25).cast("int").alias("val_band"))
-    return k_anonymity(ev, ["event_type", "user_bucket"], k=35,
+    return k_anonymity(ev, ["event_type", "user_id"], k=10,
                        sensitive_col="val_band")
 
 

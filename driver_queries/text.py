@@ -708,7 +708,7 @@ def q_corpus_pipeline(spark, sf_dir):
       SELECT doc_id, round({mlp_oracle_expr()}, 6) AS mlp_score FROM m
     """)
 def q_quality_mlp(spark, sf_dir):
-    """REAL model inference through InferenceStage (VERDICT r3 #5): the
+    """REAL model inference through InferenceStage: the
     vendored deterministic numpy MLP (operators/mlp.py) scores every
     document — JVM feature extraction, broadcast weights, per-worker
     loader, Arrow batch forward pass. Dyadic weights + ReLU + pinned

@@ -1,16 +1,14 @@
 """Cross-engine exact-rounding helpers for the oracle gate.
 
-Two lessons from round 4's bitwise driver audit, promoted to shared
-helpers so every query uses them instead of re-deriving the rule
-(VERDICT r4 next-round #6):
+Two rules of the driver's bitwise value comparison, kept as shared
+helpers so every query uses them instead of re-deriving the rule:
 
 **Signed zero breaks the value hash.** Spark's ``round()`` goes through
 Java ``BigDecimal`` HALF_UP and returns ``+0.0`` for a tiny negative
 (e.g. ``cos(3*pi/2)`` ~ ``-1.8e-16``), while DuckDB's libm-based
 ``round()`` preserves the sign bit and returns ``-0.0``. Float ``==``
 hides the difference; the driver's byte-level value hash does not
-(r4 casualties: ``bigram_pmi`` 1 cell, ``calendar`` 451 cells,
-``cuped`` 1 cell). IEEE 754 defines ``-0.0 + 0.0 == +0.0`` and
+(``bigram_pmi``, ``calendar`` and ``cuped`` each failed on it). IEEE 754 defines ``-0.0 + 0.0 == +0.0`` and
 ``x + 0.0 == x`` for every other ``x``, so appending ``+ 0.0`` on BOTH
 engines normalizes the sign bit without changing any value. Use
 :func:`round_norm` / :func:`round_norm_sql` for every rounded output

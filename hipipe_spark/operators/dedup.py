@@ -76,7 +76,7 @@ def minhash_signature(shingles: Column, n_hashes: int = 32,
 
     ``hash_family="det"`` swaps xxhash64 for the LCG/polynomial family
     (``hipipe_spark.functions.hashing.det_hash_str_i64``) whose exact
-    arithmetic DuckDB can re-run — the oracle-mode hash (VERDICT r1 #2).
+    arithmetic DuckDB can re-run — the oracle-mode hash.
     The per-shingle string fold runs ONCE; the n_hashes functions are
     cheap integer re-mixes of that base value."""
     if hash_family == "xxhash64":

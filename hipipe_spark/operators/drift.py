@@ -30,26 +30,27 @@ def uniform_bucket(col: Column, lo: float, hi: float, n_buckets: int) -> Column:
     return F.least(F.lit(n_buckets - 1), F.greatest(F.lit(0), raw)).cast("int")
 
 
-def psi_table(df_a: DataFrame, df_b: DataFrame, col: Column | str,
-              lo: float, hi: float, n_buckets: int = 10,
-              smooth: float = 0.5) -> DataFrame:
-    """Per-bucket PSI decomposition between slice ``a`` (expected /
-    reference) and slice ``b`` (actual / fresh).
+def smoothed_share(n: Column, total: Column, n_buckets: int,
+                   smooth: float) -> Column:
+    """Laplace-smoothed bucket proportion ``(n + smooth) / (total +
+    smooth * n_buckets)``: finite and non-zero for every bucket, so the
+    log terms of PSI and JSD never diverge."""
+    s = float(smooth)
+    return (n + s) / (total + s * n_buckets)
 
-    Returns one row per bucket (missing buckets included with zero
-    counts): ``bucket, n_a, n_b, psi_term`` plus the repeated total
-    ``psi`` — so both the bucket-level diagnosis and the headline
-    number ship in one result.
 
-    Proportions are Laplace-smoothed: p = (n + smooth) / (N + smooth *
-    n_buckets), keeping every term finite and the whole computation a
-    deterministic rational-plus-ln expression.
+def psi_term(p_a: Column, p_b: Column) -> Column:
+    """One bucket's PSI contribution ``(p_a - p_b) * ln(p_a / p_b)``."""
+    return (p_a - p_b) * F.log(p_a / p_b)
 
-    Plan shape: each side aggregates map-side to ≤ n_buckets rows
-    (partial_count), ONE exchange on the bucket key, then a broadcast
-    of the two scalar totals. Nothing here grows with input rows — at
-    100 TB the only full-data work is the two scans.
-    """
+
+def _bucket_shares(df_a: DataFrame, df_b: DataFrame, col: Column | str,
+                   lo: float, hi: float, n_buckets: int,
+                   smooth: float) -> DataFrame:
+    """``bucket, n_a, n_b, p_a, p_b`` for every bucket (missing buckets
+    with zero counts), proportions from :func:`smoothed_share`. Each
+    side aggregates map-side to ≤ n_buckets rows, ONE exchange on the
+    bucket key, then a broadcast of the two scalar totals."""
     c = F.col(col) if isinstance(col, str) else col
     tagged = (
         df_a.select(uniform_bucket(c, lo, hi, n_buckets).alias("bucket"),
@@ -72,17 +73,39 @@ def psi_table(df_a: DataFrame, df_b: DataFrame, col: Column | str,
     # table — a separate .agg() branch would re-execute the input
     # lineage (no subplan sharing without persist): one extra full scan
     # per side at 100 TB for two scalars.
-    s = float(smooth)
     wall = Window.partitionBy()
-    withp = counts.select(
+    return counts.select(
         "bucket", "n_a", "n_b",
-        ((F.col("n_a") + s)
-         / (F.sum("n_a").over(wall) + s * n_buckets)).alias("p_a"),
-        ((F.col("n_b") + s)
-         / (F.sum("n_b").over(wall) + s * n_buckets)).alias("p_b"),
+        smoothed_share(F.col("n_a"), F.sum("n_a").over(wall), n_buckets,
+                       smooth).alias("p_a"),
+        smoothed_share(F.col("n_b"), F.sum("n_b").over(wall), n_buckets,
+                       smooth).alias("p_b"),
     )
-    term = (F.col("p_a") - F.col("p_b")) * F.log(F.col("p_a") / F.col("p_b"))
-    withterm = withp.withColumn("psi_term", term)
+
+
+def psi_table(df_a: DataFrame, df_b: DataFrame, col: Column | str,
+              lo: float, hi: float, n_buckets: int = 10,
+              smooth: float = 0.5) -> DataFrame:
+    """Per-bucket PSI decomposition between slice ``a`` (expected /
+    reference) and slice ``b`` (actual / fresh).
+
+    Returns one row per bucket (missing buckets included with zero
+    counts): ``bucket, n_a, n_b, psi_term`` plus the repeated total
+    ``psi`` — so both the bucket-level diagnosis and the headline
+    number ship in one result.
+
+    Proportions are Laplace-smoothed: p = (n + smooth) / (N + smooth *
+    n_buckets), keeping every term finite and the whole computation a
+    deterministic rational-plus-ln expression.
+
+    Plan shape: each side aggregates map-side to ≤ n_buckets rows
+    (partial_count), ONE exchange on the bucket key, then a broadcast
+    of the two scalar totals. Nothing here grows with input rows — at
+    100 TB the only full-data work is the two scans.
+    """
+    withp = _bucket_shares(df_a, df_b, col, lo, hi, n_buckets, smooth)
+    withterm = withp.withColumn("psi_term",
+                                psi_term(F.col("p_a"), F.col("p_b")))
     total = F.sum("psi_term").over(Window.partitionBy())
     return withterm.select(
         "bucket", "n_a", "n_b", "psi_term",
@@ -266,34 +289,7 @@ def jsd_table(df_a: DataFrame, df_b: DataFrame, col: Column | str,
     rows); same Laplace smoothing so the two diagnostics share their
     proportion estimates. Returns ``bucket, n_a, n_b, jsd_term, jsd``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    tagged = (
-        df_a.select(uniform_bucket(c, lo, hi, n_buckets).alias("bucket"),
-                    F.lit(1).alias("is_a"), F.lit(0).alias("is_b"))
-        .unionByName(
-            df_b.select(uniform_bucket(c, lo, hi, n_buckets).alias("bucket"),
-                        F.lit(0).alias("is_a"), F.lit(1).alias("is_b")))
-    )
-    counts = tagged.groupBy("bucket").agg(
-        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
-    spark = df_a.sparkSession
-    all_buckets = spark.range(n_buckets).select(
-        F.col("id").cast("int").alias("bucket"))
-    counts = (
-        all_buckets.join(F.broadcast(counts), "bucket", "left")
-        .select("bucket",
-                F.coalesce("n_a", F.lit(0)).alias("n_a"),
-                F.coalesce("n_b", F.lit(0)).alias("n_b"))
-    )
-    s = float(smooth)
-    wall = Window.partitionBy()
-    withp = counts.select(
-        "bucket", "n_a", "n_b",
-        ((F.col("n_a") + s)
-         / (F.sum("n_a").over(wall) + s * n_buckets)).alias("p_a"),
-        ((F.col("n_b") + s)
-         / (F.sum("n_b").over(wall) + s * n_buckets)).alias("p_b"),
-    )
+    withp = _bucket_shares(df_a, df_b, col, lo, hi, n_buckets, smooth)
     m = (F.col("p_a") + F.col("p_b")) / 2
     term = (F.col("p_a") * F.log(F.col("p_a") / m)
             + F.col("p_b") * F.log(F.col("p_b") / m)) / 2

@@ -36,7 +36,7 @@ Scale notes per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hipipe_spark.functions.hashing import det_hash01, det_hash_i64
@@ -78,7 +78,7 @@ def kmv_distinct(df: DataFrame, group: str, key: str, k: int = 64,
     # Unsaturated groups (< k survivors below tau) use the fixed-threshold
     # theta estimator n_kept / tau — the same scaling kmv_join_estimate
     # applies — instead of the raw survivor count, which would be a ~1/tau
-    # underestimate of the true distinct count (ADVICE r3).
+    # underestimate of the true distinct count.
     est = F.when(
         F.col("h_k").isNotNull(),
         F.round((F.lit(k) - 1) / F.col("h_k"), 2)
@@ -98,6 +98,19 @@ def kmv_distinct(df: DataFrame, group: str, key: str, k: int = 64,
             .orderBy(group))
 
 
+def cms_cells(item: Column, depth: int, width: int) -> Column:
+    """The ``depth`` Count-Min counters a long-valued ``item`` hashes
+    into, as an array of ``(d int, bucket int)`` structs: row ``d``
+    uses det-hash seed ``100 + d``. The one bucketing shared by every
+    sketch builder and point query, so sketches from any of them
+    merge and probe consistently."""
+    return F.array(*[
+        F.struct(F.lit(d).alias("d"),
+                 F.pmod(det_hash_i64(item, seed=100 + d),
+                        F.lit(width)).cast("int").alias("bucket"))
+        for d in range(depth)])
+
+
 def cms_sketch(df: DataFrame, item: str, depth: int = 4,
                width: int = 256) -> DataFrame:
     """Build a Count-Min sketch of integer column ``item``: ``depth``
@@ -110,12 +123,7 @@ def cms_sketch(df: DataFrame, item: str, depth: int = 4,
     from disjoint inputs merge by ``groupBy(d, bucket).sum(cnt)`` —
     the linearity that gives incremental / streaming refresh for free.
     """
-    rows = F.array(*[
-        F.struct(F.lit(d).alias("d"),
-                 F.pmod(det_hash_i64(F.col(item).cast("long"),
-                                     seed=100 + d),
-                        F.lit(width)).cast("int").alias("bucket"))
-        for d in range(depth)])
+    rows = cms_cells(F.col(item).cast("long"), depth, width)
     return (df.select(F.explode(rows).alias("r"))
             .groupBy(F.col("r.d").alias("d"),
                      F.col("r.bucket").alias("bucket"))
@@ -146,11 +154,7 @@ def cms_heavy_hitters(df: DataFrame, item: str, top_n: int = 20,
            .limit(top_n))
     probes = top.select(
         "item", "true_cnt",
-        F.explode(F.array(*[
-            F.struct(F.lit(d).alias("d"),
-                     F.pmod(det_hash_i64(F.col("item"), seed=100 + d),
-                            F.lit(width)).cast("int").alias("bucket"))
-            for d in range(depth)])).alias("p")
+        F.explode(cms_cells(F.col("item"), depth, width)).alias("p")
     ).select("item", "true_cnt", F.col("p.d").alias("pd"),
              F.col("p.bucket").alias("pb"))
     joined = probes.join(F.broadcast(sketch),

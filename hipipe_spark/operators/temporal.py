@@ -1012,9 +1012,9 @@ def seq_patterns(df: DataFrame, key: str, token: str,
 
     The window-full test is positional (``row_number() >= n``), NOT
     ``t1 IS NOT NULL``: a null token in the leading lag position must
-    not silently drop the gram while interior nulls keep it (ADVICE
-    r3). Null tokens inside a full window are legitimate pattern
-    members (they group as SQL GROUP BY nulls).
+    not silently drop the gram while interior nulls keep it. Null
+    tokens inside a full window are legitimate pattern members (they
+    group as SQL GROUP BY nulls).
     """
     if n < 2:
         raise ValueError("n must be >= 2")

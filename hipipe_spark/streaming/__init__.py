@@ -1,12 +1,3 @@
-from hipipe_spark.streaming import (
-    decay_stream,
-    dedup_stream,
-    drift_stream,
-    quality_stream,
-    session_stream,
-)
+from hipipe_spark.streaming import drift_stream, quality_stream, sketch_stream
 
-__all__ = [
-    "decay_stream", "dedup_stream", "drift_stream", "quality_stream",
-    "session_stream",
-]
+__all__ = ["drift_stream", "quality_stream", "sketch_stream"]

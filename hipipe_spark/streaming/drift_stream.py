@@ -17,13 +17,14 @@ the hot path.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hipipe_spark.operators.drift import uniform_bucket
+from hipipe_spark.operators.drift import (
+    psi_term, smoothed_share, uniform_bucket,
+)
 
 
 def reference_histogram(df: DataFrame, col: str, lo: float, hi: float,
@@ -45,9 +46,9 @@ def psi_stream(stream_df: DataFrame, ref_counts: Sequence[int], col: str,
                smooth: float = 0.5) -> DataFrame:
     """Per-event-time-window PSI of ``col`` against the reference
     histogram. Emits one append-mode row per closed window:
-    ``window_start, window_end, n_rows, psi`` (same Laplace-smoothed
-    formula as the batch ``psi_table``, reference side pre-normalized
-    driver-side since it is frozen).
+    ``window_start, window_end, n_rows, psi``, built from the batch
+    ``psi_table``'s own ``smoothed_share`` and ``psi_term`` with the
+    frozen reference as side ``a``.
 
     The per-bucket counts are conditional sums inside ONE windowed
     aggregation — not a ``groupBy(window, bucket)`` (which would need a
@@ -58,9 +59,9 @@ def psi_stream(stream_df: DataFrame, ref_counts: Sequence[int], col: str,
     n_buckets = len(ref_counts)
     if n_buckets < 2:
         raise ValueError("need >= 2 reference buckets")
-    s = float(smooth)
-    tot_ref = sum(ref_counts)
-    p_ref = [(c + s) / (tot_ref + s * n_buckets) for c in ref_counts]
+    tot_ref = F.lit(sum(ref_counts))
+    p_ref = [smoothed_share(F.lit(c), tot_ref, n_buckets, smooth)
+             for c in ref_counts]
 
     b = uniform_bucket(F.col(col), lo, hi, n_buckets)
     aggs = [
@@ -75,9 +76,8 @@ def psi_stream(stream_df: DataFrame, ref_counts: Sequence[int], col: str,
     tot_cur = sum((F.col(f"__n{i}") for i in range(n_buckets)), F.lit(0))
     psi = F.lit(0.0)
     for i in range(n_buckets):
-        p_cur = (F.col(f"__n{i}") + s) / (tot_cur + s * n_buckets)
-        psi = psi + (p_cur - F.lit(p_ref[i])) * F.log(p_cur / F.lit(p_ref[i]))
-    assert math.isfinite(sum(p_ref))  # frozen side is always smoothed-finite
+        p_cur = smoothed_share(F.col(f"__n{i}"), tot_cur, n_buckets, smooth)
+        psi = psi + psi_term(p_ref[i], p_cur)
     return agg.select(
         F.col("__w.start").alias("window_start"),
         F.col("__w.end").alias("window_end"),

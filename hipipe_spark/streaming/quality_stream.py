@@ -5,8 +5,8 @@ Structured Streaming DataFrame unchanged — no watermark, no state
 store, every micro-batch filtered/scrubbed independently with the
 batch operators' exact semantics (pinned by the parity test). This is
 the ingest-time half of the corpus build; the stateful stages (dedup,
-contamination, packing) run as the batch pipeline over the landed data
-or via `streaming/dedup_stream.py` for bounded-horizon dedup.
+contamination, packing) run as the batch pipeline over the landed
+data, where they see the whole corpus.
 """
 
 from __future__ import annotations
@@ -28,25 +28,3 @@ def quality_filter_stream(src: DataFrame, text_col: str = "text",
     if scrub:
         out = out.withColumn(text_col, scrub_pii(F.col(text_col), scrub))
     return out
-
-
-def corpus_ingest_stream(src: DataFrame, text_col: str = "text",
-                         ts_col: str = "ts",
-                         flt: CorpusFilter = CorpusFilter(),
-                         scrub: tuple[str, ...] | None = ("email", "ipv4"),
-                         watermark: str = "1 hour",
-                         canonical: bool = False) -> DataFrame:
-    """The full streaming ingest half of the corpus build: quality
-    filter + PII scrub (stateless — pushes into the source scan of each
-    micro-batch) followed by watermarked exact dedup (the ONLY stateful
-    operator; state O(arrival rate × watermark), never O(corpus)).
-
-    Filtering BEFORE dedup matters at scale: rejected documents never
-    enter the dedup state store. Landed output then feeds the batch
-    stages that need corpus-global state (near-dedup, contamination,
-    packing) — the same division of labor as ``featurize_stream``.
-    """
-    from hipipe_spark.streaming.dedup_stream import exact_dedup_stream
-
-    out = quality_filter_stream(src, text_col, flt, scrub)
-    return exact_dedup_stream(out, text_col, ts_col, watermark, canonical)

@@ -11,8 +11,8 @@ sketch without touching the raw stream again.
 Plan shape: ONE stateful aggregation — ``groupBy(window(ts), d,
 bucket)`` after a deterministic explode — so state is O(live windows ×
 d × w), append mode emits each closed window's sketch exactly once,
-and there is no Python in the hot path. The bucketing is the SAME
-det-hash as the batch sketch, so a window's streamed sketch is
+and there is no Python in the hot path. The counters come from the
+batch sketch's own ``cms_cells``, so a window's streamed sketch is
 bit-identical to ``cms_sketch`` of that window's slice
 (pytest-pinned).
 """
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hipipe_spark.functions.hashing import det_hash_i64
+from hipipe_spark.operators.sketches import cms_cells
 
 
 def cms_stream(stream_df: DataFrame, item: str, ts_col: str = "ts",
@@ -38,12 +38,7 @@ def cms_stream(stream_df: DataFrame, item: str, ts_col: str = "ts",
     merges can therefore treat each (window, d, bucket) row as
     immutable.
     """
-    rows = F.array(*[
-        F.struct(F.lit(d).alias("d"),
-                 F.pmod(det_hash_i64(F.col(item).cast("long"),
-                                     seed=100 + d),
-                        F.lit(width)).cast("int").alias("bucket"))
-        for d in range(depth)])
+    rows = cms_cells(F.col(item).cast("long"), depth, width)
     agg = (stream_df
            .withWatermark(ts_col, watermark)
            .select(F.col(ts_col), F.explode(rows).alias("r"))
@@ -65,13 +60,9 @@ def cms_point_query(sketch: DataFrame, items: DataFrame, item: str,
     the query never shuffles the item side."""
     probes = items.select(
         F.col(item).cast("long").alias("item"),
-        F.explode(F.array(*[
-            F.struct(F.lit(d).alias("pd"),
-                     F.pmod(det_hash_i64(F.col(item).cast("long"),
-                                         seed=100 + d),
-                            F.lit(width)).cast("int").alias("pb"))
-            for d in range(depth)])).alias("p")
-    ).select("item", F.col("p.pd").alias("pd"), F.col("p.pb").alias("pb"))
+        F.explode(cms_cells(F.col(item).cast("long"), depth, width))
+        .alias("p")
+    ).select("item", F.col("p.d").alias("pd"), F.col("p.bucket").alias("pb"))
     j = probes.join(F.broadcast(sketch),
                     (probes["pd"] == sketch["d"])
                     & (probes["pb"] == sketch["bucket"]), "left")

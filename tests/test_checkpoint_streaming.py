@@ -1,4 +1,4 @@
-"""Checkpoint/resume + lineage metrics, and streaming sessionization."""
+"""Checkpoint/resume, lineage metrics and incremental refresh."""
 
 import json
 import os
@@ -55,135 +55,6 @@ def test_resume_skips_committed_stages(spark, transcripts, tmp_path):
     out3 = pipe.run(spark, transcripts)
     assert calls == []
     assert out3.count() == n
-
-
-def test_streaming_session_aggregates(spark, transcripts, tmp_path):
-    from hipipe_spark.streaming.session_stream import session_aggregates_stream
-
-    src = str(tmp_path / "stream_src")
-    transcripts.write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(transcripts.schema).parquet(src)
-    )
-    agg = session_aggregates_stream(stream, gap="30 minutes", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory").queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM sess_out")
-    # append mode only emits watermark-closed sessions; the batch oracle
-    # (Sessionize + groupBy) must agree on those sessions' turn counts.
-    batch = (
-        Sessionize(gap="30 minutes")(transcripts)
-        .groupBy("conv_id", "session_seq")
-        .agg(F.count("*").alias("n_turns"), F.min("ts").alias("session_start"))
-    )
-    got = {(r["conv_id"], r["session_start"]): r["n_turns"] for r in out.collect()}
-    want = {(r["conv_id"], r["session_start"]): r["n_turns"] for r in batch.collect()}
-    assert len(got) > 0
-    for k, v in got.items():
-        assert want.get(k) == v, k
-
-
-def test_streaming_featurize_batches(spark, transcripts, tmp_path):
-    from hipipe_spark.streaming.session_stream import featurize_stream
-
-    src = str(tmp_path / "fsrc")
-    transcripts.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-    q = featurize_stream(
-        stream, out_path=str(tmp_path / "fout"),
-        checkpoint_path=str(tmp_path / "fckpt"),
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "fout"))
-    assert out.count() == transcripts.count()
-    assert "session_id" in out.columns and "tool_filled" in out.columns
-
-
-def test_streaming_featurize_profile_parity(spark, transcripts, profiles, tmp_path):
-    """Stream-vs-batch parity INCLUDING the as-of profile enrichment:
-    featurize_stream with a static dimension-sized profile table
-    (broadcast as-of inside foreachBatch) must byte-match the batch
-    featurize over the same turns. One file -> one micro-batch so
-    windows see identical history on both paths."""
-    import pandas as pd
-
-    from hipipe_spark.operators.flagship import featurize
-    from hipipe_spark.streaming.session_stream import featurize_stream
-
-    src = str(tmp_path / "psrc")
-    transcripts.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-    q = featurize_stream(
-        stream, out_path=str(tmp_path / "pout"),
-        checkpoint_path=str(tmp_path / "pckpt"),
-        profiles=profiles,
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "pout"))
-    want = featurize(transcripts, profiles=profiles, asof_strategy="union")
-    assert sorted(got.columns) == sorted(want.columns)
-    cols = sorted(want.columns)
-
-    def canon(df):
-        return (df.select(cols).toPandas()
-                .sort_values(["conv_id", "turn_idx"])
-                .reset_index(drop=True))
-
-    pd.testing.assert_frame_equal(canon(got), canon(want), check_dtype=False)
-    assert "model_asof" in got.columns and "temperature_asof" in got.columns
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """Late-data semantics: an event older than the watermark bound at
-    the time its micro-batch runs must NOT reopen or mutate an already
-    emitted (closed) session. Two files, one per trigger: the second
-    carries a turn 10 hours older than the first file's maximum ts —
-    far beyond the 1-hour watermark — so the aggregate over its
-    session must not appear twice nor change."""
-    import pandas as pd
-
-    from hipipe_spark.streaming.session_stream import session_aggregates_stream
-
-    src = tmp_path / "late_src"
-    src.mkdir()
-    base = pd.Timestamp("2025-06-01 00:00:00")
-    on_time = pd.DataFrame({
-        "conv_id": ["c1"] * 3 + ["c2"] * 2,
-        "turn_idx": pd.array([0, 1, 2, 0, 1], dtype="int32"),
-        "role": ["user", "assistant", "user", "user", "assistant"],
-        "text": ["a", "b", "c", "d", "e"],
-        "tool": [""] * 5,
-        "ts": [base, base + pd.Timedelta("5min"), base + pd.Timedelta("10min"),
-               base + pd.Timedelta("12h"), base + pd.Timedelta("12h 5min")],
-    })
-    late = pd.DataFrame({
-        "conv_id": ["c1"], "turn_idx": pd.array([3], dtype="int32"),
-        "role": ["user"], "text": ["late"], "tool": [""],
-        "ts": [base + pd.Timedelta("2h")],  # 10h older than max seen
-    })
-    on_time.to_parquet(src / "f0.parquet", index=False, coerce_timestamps="us")
-    late.to_parquet(src / "f1.parquet", index=False, coerce_timestamps="us")
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    agg = session_aggregates_stream(stream, gap="30 minutes", watermark="1 hour")
-    q = (agg.writeStream.outputMode("append").format("memory")
-         .queryName("late_out")
-         .option("checkpointLocation", str(tmp_path / "late_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("select * from late_out").collect()
-    c1 = [r for r in rows if r["conv_id"] == "c1"
-          and r["session_start"] == base.to_pydatetime()]
-    assert len(c1) == 1            # emitted once, never re-emitted
-    assert c1[0]["n_turns"] == 3   # late turn did not mutate the session
 
 
 def test_lineage_report_dataframes(spark, transcripts, tmp_path):

@@ -1,6 +1,6 @@
-"""Property tests for the round-3 feature-eng extras: random shapes
+"""Property tests for the feature-engineering extras: random shapes
 probe invariants the fixtures don't (weight normalization, hash-vector
-conservation, PSI symmetry, decay-scan splits)."""
+conservation, PSI symmetry)."""
 
 import numpy as np
 from hypothesis import HealthCheck, given, settings
@@ -63,26 +63,3 @@ def test_psi_symmetric_under_swap(spark, xs, split):
     p_ba = psi(b, a, "x", 0, 100, 5)
     assert np.isclose(p_ab, p_ba, rtol=1e-12)
     assert p_ab >= -1e-15  # PSI is non-negative
-
-
-@settings(max_examples=20, deadline=None)
-@given(data=st.data())
-def test_decay_scan_split_invariance(data):
-    """Pure-numpy property: splitting the scan at ANY point and handing
-    the state across equals one full scan (the micro-batch contract)."""
-    from hipipe_spark.streaming.decay_stream import _decay_scan
-
-    n = data.draw(st.integers(2, 60))
-    gaps = data.draw(st.lists(st.floats(0.01, 5000.0),
-                              min_size=n, max_size=n))
-    xs = np.array(data.draw(st.lists(st.floats(0.0, 100.0),
-                                     min_size=n, max_size=n)))
-    ts = np.cumsum(np.array(gaps))
-    cut = data.draw(st.integers(1, n - 1))
-    tau = data.draw(st.sampled_from([1.0, 60.0, 3600.0]))
-    s_full, w_full, st_full = _decay_scan(ts, xs, tau, None)
-    s1, w1, mid = _decay_scan(ts[:cut], xs[:cut], tau, None)
-    s2, w2, st_split = _decay_scan(ts[cut:], xs[cut:], tau, mid)
-    assert np.allclose(np.concatenate([s1, s2]), s_full, rtol=1e-9, atol=1e-12)
-    assert np.allclose(np.concatenate([w1, w2]), w_full, rtol=1e-9, atol=1e-12)
-    assert np.allclose(st_split[1:], st_full[1:], rtol=1e-9, atol=1e-12)

@@ -1,4 +1,4 @@
-"""Round-2 scale/robustness fixes (VERDICT.md r1 items 3, 6, 8 + ADVICE).
+"""Scale and robustness regressions.
 
 - Pad with no group_by must not plan a single-partition Exchange
   (global max via agg + broadcast crossJoin, not Window over lit(1)).
@@ -6,14 +6,10 @@
   global one-task sort, identically at different parallelism.
 - ANN query-side collection: explicit bound + empty-input early return.
 - connected_components warns when label propagation doesn't converge.
-- stateful_session_stream is correct when one key's micro-batch spans
-  multiple unsorted Arrow chunks.
 """
 
-import time
 import warnings
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,46 +113,3 @@ def test_connected_components_warns_on_nonconvergence(spark):
         warnings.simplefilter("always")
         connected_components(pairs, nodes, max_iter=2)
         assert any("did not converge" in str(x.message) for x in w)
-
-
-def test_stateful_stream_multi_chunk_unsorted(spark, tmp_path):
-    """One key's micro-batch split into several Arrow chunks, rows NOT
-    time-sorted in the file: session ids/gaps/turns_seen must still match
-    the batch computation (ADVICE r1: per-chunk sorting bug)."""
-    from hipipe_spark.streaming.session_stream import stateful_session_stream
-
-    gap = 100.0
-    n = 40
-    ts = [1000.0 + (260.0 if i % 5 == 4 else 10.0) * (i + 1) for i in range(n)]
-    # cumulative-ish but ensure strictly increasing by construction:
-    ts = [1000.0 + sum(260.0 if j % 5 == 4 else 10.0 for j in range(i + 1))
-          for i in range(n)]
-    pdf = pd.DataFrame({"conv_id": "c", "turn_idx": range(n), "ts": ts})
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    shuffled = pdf.sample(frac=1.0, random_state=7).reset_index(drop=True)
-    d = tmp_path / "in"
-    d.mkdir()
-    shuffled.to_parquet(d / "part-000.parquet", index=False)
-    time.sleep(0.01)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        src = (spark.readStream
-               .schema("conv_id string, turn_idx int, ts double")
-               .parquet(str(d)))
-        out = stateful_session_stream(src, gap_seconds=gap)
-        q = (out.writeStream.format("memory").queryName("chunky")
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = (spark.sql("select * from chunky").toPandas()
-               .sort_values("turn_idx").reset_index(drop=True))
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    g = pdf.sort_values(["ts", "turn_idx"])
-    exp_sess = (g["ts"].diff() > gap).cumsum().astype("int64")
-    assert len(got) == n
-    assert got["session_id"].tolist() == exp_sess.tolist()
-    assert got["turns_seen"].tolist() == list(range(1, n + 1))

@@ -40,37 +40,3 @@ def test_stream_matches_batch(spark, tmp_path):
     assert got == expect
     assert set(got) == {1, 4, 5}
     assert got[4] == "contact <EMAIL> for data access details ok"
-
-
-def test_corpus_ingest_stream_filters_then_dedups(spark, tmp_path):
-    """Full streaming ingest: quality filter + scrub + watermarked
-    dedup; a rejected doc never reaches dedup state, a duplicate of a
-    kept doc is dropped even across micro-batches."""
-    import datetime as dt
-
-    from hipipe_spark.streaming.quality_stream import corpus_ingest_stream
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows1 = [(1, "alpha beta gamma delta epsilon zeta", base),
-             (2, "short", base + dt.timedelta(seconds=5))]
-    rows2 = [(3, "alpha beta gamma delta epsilon zeta",   # dup of 1
-              base + dt.timedelta(seconds=10)),
-             (4, "one two three four five six seven",
-              base + dt.timedelta(seconds=15))]
-    d = tmp_path / "in"
-    d.mkdir()
-    for i, chunk in enumerate((rows1, rows2)):
-        pdf = pd.DataFrame(chunk, columns=["doc_id", "text", "ts"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(d / f"p{i}.parquet", index=False)
-
-    src = (spark.readStream.schema("doc_id long, text string, ts timestamp")
-           .option("maxFilesPerTrigger", 1).parquet(str(d)))
-    q = (corpus_ingest_stream(src, flt=FLT, watermark="10 minutes")
-         .writeStream.format("memory").queryName("ingest_stream")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in
-           spark.sql("select doc_id from ingest_stream").collect()}
-    assert got == {1, 4}

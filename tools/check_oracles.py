@@ -2,12 +2,8 @@
 
 Runs every __spark_entry__.queries() entry at the given SF and compares
 against oracle_sql() via DuckDB: row count, sorted column names, and an
-order-insensitive EXACT value comparison.
-
-Round-5 hardening (VERDICT r4 next-round #2): the r4 version compared
-floats at rtol=1e-8 and stringified raw arrays — exactly the two gaps
-that let seven driver/judge-visible defects through a "293/293 green"
-self-sweep. Now:
+order-insensitive EXACT value comparison. Looser comparisons (float
+tolerance, stringified arrays) let real defects pass, so:
 
 - every float is compared BITWISE (IEEE-754 big-endian struct-pack
   hex): signed zeros, last-ulp drift and NaN payloads all count.
@@ -15,13 +11,15 @@ self-sweep. Now:
   driver's value hash (see functions/rounding.round_norm).
 - a raw array/struct/map output column is a HARD ERROR, not a
   stringified pass: the driver's canonicalizer raises
-  ``TypeError: unhashable type: 'list'`` on them (r4: embedding_pool,
-  hash_features, onehot_encode). Queries must ``to_json`` such columns
-  (functions/rounding.json_units for float arrays).
+  ``TypeError: unhashable type: 'list'`` on them. Queries must
+  ``to_json`` such columns (functions/rounding.json_units for float
+  arrays).
 - timestamps canonicalize to their integer epoch value, not a
   formatted string, so ns-vs-us pandas units can't mask or fake a
   diff.
 - NaN canonicalizes to ``<NaN>``, its own token, never to ``<NULL>``.
+- two empty answers are ``VACUOUS``, a failure: an equality of zero
+  rows checks nothing, so such a query's parameters must be fixed.
 - a selection naming an unknown query (e.g. a path passed where the
   comma-separated name list goes) exits 2 instead of passing 0/0.
 """
@@ -101,6 +99,33 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return res
 
 
+def verdict(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[str, str | None]:
+    """Compare one query's Spark answer with its DuckDB oracle answer:
+    ``("OK", None)`` or a failure status with its detail."""
+    try:
+        a, b = normalize(sdf), normalize(odf)
+    except ArrayOutputError as e:
+        return "ARRAY-OUTPUT", str(e)
+    if list(a.columns) != list(b.columns):
+        return ("SCHEMA-MISMATCH",
+                f"spark={list(a.columns)} oracle={list(b.columns)}")
+    if len(a) != len(b):
+        return "ROWCOUNT-MISMATCH", f"spark={len(a)} oracle={len(b)}"
+    if not len(a):
+        return "VACUOUS", "both engines returned 0 rows"
+    if a.equals(b):
+        return "OK", None
+    diff_cols = [c for c in a.columns if not a[c].equals(b[c])]
+    detail = [f"cols={diff_cols}"]
+    for c in diff_cols[:3]:
+        neq = a[c] != b[c]
+        idx = list(a.index[neq])[:5]
+        detail.append(
+            f"  {c}: {int(neq.sum())} diff cells, first "
+            f"{[(a[c][i], b[c][i]) for i in idx]}")
+    return "VALUE-MISMATCH (bitwise)", "\n".join(detail)
+
+
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     import __spark_entry__ as E
     from hipipe_spark.session import get_spark
@@ -126,7 +151,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
             plan = fn(spark, sf_dir)
             sdf = plan.toPandas()
             from hipipe_spark.operators.core import release_cached
-            release_cached(plan)  # 293 queries, one session: free caches
+            release_cached(plan)  # every query shares one session: free caches
         except Exception:
             results[name] = ("SPARK-ERROR", traceback.format_exc(limit=4))
             continue
@@ -143,29 +168,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
         except Exception:
             results[name] = ("ORACLE-ERROR", traceback.format_exc(limit=2))
             continue
-        try:
-            a, b = normalize(sdf), normalize(odf)
-        except ArrayOutputError as e:
-            results[name] = ("ARRAY-OUTPUT", str(e))
-            continue
-        if list(a.columns) != list(b.columns):
-            results[name] = ("SCHEMA-MISMATCH",
-                             f"spark={list(a.columns)} oracle={list(b.columns)}")
-        elif len(a) != len(b):
-            results[name] = ("ROWCOUNT-MISMATCH",
-                             f"spark={len(a)} oracle={len(b)}")
-        elif a.equals(b):
-            results[name] = (f"OK ({len(a)} rows, {time.time()-t0:.1f}s)", None)
-        else:
-            diff_cols = [c for c in a.columns if not a[c].equals(b[c])]
-            detail = [f"cols={diff_cols}"]
-            for c in diff_cols[:3]:
-                neq = a[c] != b[c]
-                idx = list(a.index[neq])[:5]
-                detail.append(
-                    f"  {c}: {int(neq.sum())} diff cells, first "
-                    f"{[(a[c][i], b[c][i]) for i in idx]}")
-            results[name] = ("VALUE-MISMATCH (bitwise)", "\n".join(detail))
+        status, detail = verdict(sdf, odf)
+        if status == "OK":
+            status = f"OK ({len(sdf)} rows, {time.time()-t0:.1f}s)"
+        results[name] = (status, detail)
     print("\n===== RESULTS =====")
     n_ok = 0
     for name, (status, detail) in results.items():
