@@ -37,13 +37,6 @@ def q_asof_broadcast(spark, sf_dir):
 
 
 @query(oracle=_ASOF_ORACLE)
-def q_asof_cogroup(spark, sf_dir):
-    left, right = asof_sides(spark, sf_dir)
-    out = asof_join(left, right, on="ts", by="user_id", strategy="cogroup")
-    return out.select("event_id", "user_id", "ts", "val")
-
-
-@query(oracle=_ASOF_ORACLE)
 def q_asof_bucketed(spark, sf_dir):
     left, right = asof_sides(spark, sf_dir)
     out = asof_join(left, right, on="ts", by="user_id", strategy="bucketed",

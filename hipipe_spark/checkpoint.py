@@ -1,4 +1,4 @@
-"""Checkpoint/resume + per-partition lineage & metrics.
+"""Checkpoint/resume + per-file lineage over atomic snapshots.
 
 North-rule requirement (BASELINE.json:6,14): "resumable from Iceberg
 snapshot checkpoints with per-partition lineage and row-count/throughput
@@ -10,17 +10,23 @@ This container has no Iceberg jars (stub note: with
 ``SnapshotStore`` maps 1:1 onto Iceberg snapshots —
 ``df.writeTo(table).createOrReplace()`` + time-travel reads; the
 interface below is written against that seam). The local implementation
-provides the same contract over parquet snapshot directories:
+provides the same contract over parquet snapshot directories on a local
+filesystem:
 
-- every committed stage is an atomic snapshot (write to a temp dir,
-  fsync, manifest JSON with row counts + stage name + input snapshot id,
-  then an atomic rename);
-- a pipeline run is a chain of stage snapshots; ``resume()`` finds the
-  longest committed prefix and re-executes only the remainder —
+- every committed stage is an atomic snapshot: one Spark write into a
+  ``.tmp-`` directory, then ``MANIFEST.json`` beside it, an fsync of
+  every data file, the manifest and the directories holding them, one
+  publishing rename, and an fsync of the name's directory;
+- the manifest is the snapshot's only record. Like an Iceberg manifest
+  it takes each data file's row count from the file as written (its
+  parquet footer), never from a rescan: ``files`` lists every data
+  file with its ``rows``, and ``rows``, ``n_partitions`` (the file
+  count), ``wall_sec`` / ``rows_per_sec`` of the write, plus the
+  caller's ``meta`` keys (stage index, refresh mode, parent snapshot);
+- a pipeline run is a chain of stage snapshots; ``ResumablePipeline.run``
+  finds the longest committed prefix and re-executes only the remainder —
   idempotent because stage outputs are pure functions of (input
-  snapshot, stage code);
-- per-partition lineage: each commit records partition row counts and
-  durations into ``metrics.jsonl`` next to the snapshot.
+  snapshot, stage code).
 """
 
 from __future__ import annotations
@@ -32,13 +38,26 @@ import time
 import uuid
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _fsync(path: str) -> None:
+    """Flush a file's data, or a directory's entries, to stable storage."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 class SnapshotStore:
     """Atomic snapshot directory store: <root>/<name>/<snapshot_id>/
-    with a MANIFEST.json committed last (rename-commit)."""
+    holding ``data/*.parquet`` and a MANIFEST.json, published by one
+    rename. Single writer per name: a commit removes the name's torn
+    ``.tmp-`` directories, and ``incremental_refresh`` reads ``latest``
+    and then commits its child."""
 
     def __init__(self, root: str):
         self.root = root
@@ -50,7 +69,8 @@ class SnapshotStore:
     def _snapshots(self, name: str) -> list[str]:
         """Committed snapshot ids, oldest first. A commit in flight, or
         one torn by a crash, sits in a ``.tmp-`` dot-directory that may
-        already hold its manifest: only the rename publishes it."""
+        already hold its manifest: only the rename publishes it, and the
+        name's next commit removes it."""
         d = os.path.join(self.root, name)
         if not os.path.isdir(d):
             return []
@@ -73,9 +93,11 @@ class SnapshotStore:
         return spark.read.parquet(os.path.join(self._dir(name, snap), "data"))
 
     def commit(self, df: DataFrame, name: str, meta: dict | None = None) -> str:
-        """Write df as a new snapshot; returns the snapshot id.
-        Partition row counts (the lineage record) are computed in the
-        same pass via a post-write scan of parquet footers."""
+        """Write df as a new snapshot; returns the snapshot id. The write
+        is the only Spark job: per-file row counts come from the footers
+        of the parquet files it wrote. The manifest records ``files``
+        (``file``, ``rows``), their sum ``rows``, ``n_partitions``,
+        the write's ``wall_sec`` and ``rows_per_sec``, then ``meta``."""
         # Lexical order must equal commit order for latest(): the id
         # embeds a fixed-width nanosecond fraction so two commits in the
         # same wall-clock second still sort chronologically (a random
@@ -85,43 +107,43 @@ class SnapshotStore:
             + f"-{time.time_ns() % 1_000_000_000:09d}-"
             + uuid.uuid4().hex[:6]
         )
+        parent = os.path.join(self.root, name)
+        if os.path.isdir(parent):
+            for torn in os.listdir(parent):
+                if torn.startswith(".tmp-"):
+                    shutil.rmtree(os.path.join(parent, torn))
         tmp = self._dir(name, f".tmp-{snap}")
-        final = self._dir(name, snap)
+        data = os.path.join(tmp, "data")
         t0 = time.time()
-        df.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
+        df.write.mode("overwrite").parquet(data)
         wall = time.time() - t0
-        spark = df.sparkSession
-        files = (
-            spark.read.parquet(os.path.join(tmp, "data"))
-            .select(F.input_file_name().alias("f"))
-            .groupBy("f").agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        lineage = [{"file": os.path.basename(r["f"]), "rows": r["rows"]} for r in files]
-        n_rows = sum(x["rows"] for x in lineage)
+        files = [{"file": f, "rows": pq.read_metadata(os.path.join(data, f)).num_rows}
+                 for f in sorted(os.listdir(data)) if f.endswith(".parquet")]
+        n_rows = sum(x["rows"] for x in files)
         manifest = {
             "snapshot": snap, "name": name, "rows": n_rows,
             "wall_sec": round(wall, 3),
             "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
-            "n_partitions": len(lineage),
+            "n_partitions": len(files),
+            "files": files,
             **(meta or {}),
         }
-        with open(os.path.join(tmp, "metrics.jsonl"), "w") as f:
-            for rec in lineage:
-                f.write(json.dumps(rec) + "\n")
         with open(os.path.join(tmp, "MANIFEST.json"), "w") as f:
             json.dump(manifest, f)
-        os.rename(tmp, final)  # atomic commit
+        for path in [*(os.path.join(data, x["file"]) for x in files), data,
+                     os.path.join(tmp, "MANIFEST.json"), tmp]:
+            _fsync(path)
+        os.rename(tmp, self._dir(name, snap))  # atomic commit
+        _fsync(parent)
         return snap
-
 
     # ------------------------------------------------ lineage surface
     def history(self, spark: SparkSession, name: str) -> DataFrame:
         """Snapshot-level lineage as a queryable DataFrame (oldest
-        first): snapshot id, rows, wall seconds, rows/sec, partition
-        count + any commit metadata keys, straight from the manifests
-        — the north-rule 'row-count/throughput metrics' surfaced for
-        SQL instead of file spelunking."""
+        first): snapshot id, rows, wall seconds, rows/sec and partition
+        count, straight from the manifests — the north-rule
+        'row-count/throughput metrics' surfaced for SQL instead of file
+        spelunking."""
         rows = [self.manifest(name, s) for s in self._snapshots(name)]
         return spark.createDataFrame(
             [(m["snapshot"], m["name"], m["rows"], m["wall_sec"],
@@ -131,22 +153,16 @@ class SnapshotStore:
 
     def partition_metrics(self, spark: SparkSession, name: str,
                           snap: str | None = None) -> DataFrame:
-        """Per-partition lineage of one snapshot (default: latest):
-        (snapshot, file, rows) from metrics.jsonl — the per-file row
-        counts recorded at commit time."""
-        import os
-
+        """Per-file lineage of one snapshot (default: latest):
+        (snapshot, file, rows) from the manifest's ``files``, the
+        footer row counts recorded at commit time."""
         snap = snap or self.latest(name)
         if snap is None:
             raise FileNotFoundError(f"no committed snapshot for {name}")
-        path = os.path.join(self._dir(name, snap), "metrics.jsonl")
-        recs = []
-        with open(path) as f:
-            for line in f:
-                r = json.loads(line)
-                recs.append((snap, r["file"], int(r["rows"])))
         return spark.createDataFrame(
-            recs, "snapshot string, file string, rows long")
+            [(snap, x["file"], x["rows"])
+             for x in self.manifest(name, snap)["files"]],
+            "snapshot string, file string, rows long")
 
 
 class ResumablePipeline:
@@ -192,7 +208,6 @@ def incremental_refresh(
     compute: Callable[[DataFrame], DataFrame],
     delta_keys: DataFrame | None = None,
     key: str = "conv_id",
-    broadcast_keys: bool = True,
     meta: dict | None = None,
 ) -> tuple[str, DataFrame]:
     """Refresh a keyed feature snapshot for ONLY the keys a delta
@@ -205,10 +220,10 @@ def incremental_refresh(
     - first run (no prior snapshot, or ``delta_keys=None``): full
       ``compute(full_df)``, committed as the base snapshot;
     - incremental run: semi-join ``full_df`` to the distinct delta
-      keys (broadcast by default — a daily delta's key set is tiny
-      next to the corpus), recompute just that slice, anti-join the
-      PREVIOUS snapshot to drop its stale rows, union the fresh slice
-      back, commit.
+      keys (broadcast — a daily delta's key set is tiny next to the
+      corpus), recompute just that slice, anti-join the PREVIOUS
+      snapshot to drop its stale rows, union the fresh slice back,
+      commit. ``compute`` runs once, inside the commit's write.
 
     At scale the incremental path reads the delta slice of the fact
     table (partition-pruned on Iceberg by the semi-join keys), never
@@ -216,8 +231,8 @@ def incremental_refresh(
     Iceberg would express as a metadata-only operation. Returns
     ``(snapshot_id, df-read-back-from-the-committed-snapshot)`` so
     downstream lineage starts from durable storage, not the union
-    plan. The commit manifest records ``n_affected_keys`` for the
-    lineage trail.
+    plan. The commit manifest records ``n_affected_keys``, the count
+    of distinct delta keys, for the lineage trail.
     """
     prev = store.latest(name)
     if prev is None or delta_keys is None:
@@ -226,13 +241,11 @@ def incremental_refresh(
                                              "mode": "full"})
         return snap, store.read(spark, name, snap)
 
-    affected = delta_keys.select(key).distinct()
-    if broadcast_keys:
-        affected = F.broadcast(affected)
+    affected = F.broadcast(delta_keys.select(key).distinct())
     fresh = compute(full_df.join(affected, key, "left_semi"))
     carried = store.read(spark, name, prev).join(affected, key,
                                                  "left_anti")
-    n_affected = fresh.select(key).distinct().count()
+    n_affected = affected.count()
     out = carried.unionByName(fresh)
     snap = store.commit(out, name, meta={**(meta or {}),
                                          "mode": "incremental",

@@ -5,7 +5,7 @@ lacks it; pandas-on-Spark's ``merge_asof`` rewrites to union+window).
 hipipe users approximated point-in-time lookup with driver-side maps
 built from ``dataframe::index_cols`` (reference
 ``include/hipipe/core/dataframe.hpp:758-798``) applied inside per-batch
-``transform`` stages — single-node only. This module provides four
+``transform`` stages — single-node only. This module provides three
 distributed strategies with identical semantics:
 
 ``asof_join(left, right, on="ts", by="conv_id", direction="backward")``
@@ -15,8 +15,8 @@ within the same ``by`` key — i.e. zero temporal leakage by construction.
 
 Strategies
 ----------
-Four strategies plus ``auto``; each is the only path in some regime or
-the test reference.
+Three strategies plus ``auto``; each is the only path in some regime.
+Tests check every strategy against a pandas ``merge_asof`` oracle.
 
 - **union** (default, the scale path): tag both sides, union, and take
   ``last(value, ignorenulls=True)`` over a window partitioned by the key
@@ -32,9 +32,6 @@ the test reference.
   (by, time bucket) and stitched with a carry-in table. 1.73x over
   union at 16M rows on 32 cores, but 0.88x at 4M rows on 4 cores
   (BENCH/SKEW.md, one conversation = half of the rows).
-- **cogroup**: ``cogroup(...).applyInPandas(pd.merge_asof)`` per key —
-  the validation reference the other strategies are checked against;
-  each key's rows must fit a Python worker.
 - **auto**: ``broadcast`` when Catalyst's optimized-plan size estimate
   of the right side is at most ``AUTO_BROADCAST_BYTES``, else
   ``union``. Reading the estimate runs no job; a source with no
@@ -45,7 +42,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,9 +88,6 @@ def asof_join(
     if strategy == "union":
         return _asof_union(left, right, on, by, direction, allow_exact_matches,
                            tolerance_sec, value_cols, suffix)
-    if strategy == "cogroup":
-        return _asof_cogroup(left, right, on, by, direction, allow_exact_matches,
-                             tolerance_sec, value_cols, suffix)
     if strategy == "broadcast":
         return _asof_broadcast(left, right, on, by, direction, allow_exact_matches,
                                tolerance_sec, value_cols, suffix)
@@ -298,60 +291,6 @@ def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
         for c in value_cols
     ]
     return out.select(*[F.col(c) for c in left.columns], *proj)
-
-
-# one cogroup (left rows + right rows for a key set) must fit a python
-# worker; refuse loudly past this rather than OOM an executor (the
-# salted_join / kendall_tau refuse-fast policy). ~100 bytes/row -> the
-# default is ~2 GB of pandas frames.
-MAX_COGROUP_ROWS = 20_000_000
-
-
-def _asof_cogroup(left, right, on, by, direction, exact, tol, value_cols, suffix):
-    lcols = left.columns
-    out_fields = [left.schema[c] for c in lcols]
-    out_schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields]
-    out_schema_parts += [
-        f"`{c}{suffix}` {right.schema[c].dataType.simpleString()}" for c in value_cols
-    ]
-    schema = ", ".join(out_schema_parts)
-    rsel = right.select(*by, on, *value_cols)
-    tol_td = pd.Timedelta(seconds=tol) if tol is not None else None
-    rename = {c: f"{c}{suffix}" for c in value_cols}
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) + len(rpdf) > MAX_COGROUP_ROWS:
-            key = lpdf[list(by)].iloc[0].tolist() if len(lpdf) else "?"
-            raise ValueError(
-                f"asof cogroup for key {key} holds "
-                f"{len(lpdf)}+{len(rpdf)} rows > MAX_COGROUP_ROWS "
-                f"({MAX_COGROUP_ROWS}); use strategy='union' or "
-                "'bucketed' for monster keys")
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if rpdf.empty:
-            for c in value_cols:
-                lpdf[f"{c}{suffix}"] = None
-            return lpdf
-        rpdf = rpdf.sort_values(on, kind="mergesort").drop(columns=by)
-        m = pd.merge_asof(
-            lpdf, rpdf, on=on, direction=direction,
-            allow_exact_matches=exact, tolerance=tol_td,
-            suffixes=("", "__r"),
-        )
-        # merge_asof collides when a value col name already exists on the
-        # left; normalize to the requested suffix.
-        for c in value_cols:
-            src = f"{c}__r" if f"{c}__r" in m.columns else c
-            m[f"{c}{suffix}"] = m[src]
-            if src != f"{c}{suffix}":
-                m = m.drop(columns=[src])
-        return m[[f.name for f in out_fields] + [f"{c}{suffix}" for c in value_cols]]
-
-    return (
-        left.groupBy(*by)
-        .cogroup(rsel.groupBy(*by))
-        .applyInPandas(merge, schema=schema)
-    )
 
 
 def _asof_broadcast(left, right, on, by, direction, exact, tol, value_cols, suffix):

@@ -87,7 +87,7 @@ def freshness_report(left: DataFrame, right: DataFrame, on: str = "ts",
 
     Plan: the right side's own timestamp rides through the as-of join
     as a value column (works with every strategy — union / broadcast /
-    cogroup / bucketed — no join-internals access needed), then one
+    bucketed — no join-internals access needed), then one
     aggregate to a single row. ``exact=False`` uses the mergeable
     percentile_approx sketch (the 100-TB path); ``exact=True`` is for
     oracle/test settings."""

@@ -21,7 +21,6 @@ reference's pull-based lazy ranges (``for_each.hpp:46`` "applied lazily").
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
@@ -98,15 +97,6 @@ class Pipeline:
 
     def named(self) -> list[str]:
         return [s.name for s in self.stages]
-
-    def run_with_metrics(self, df: DataFrame, sink: Callable[[DataFrame], None]) -> dict:
-        """Execute via ``sink`` and return wall time + stage list —
-        the per-run lineage/metrics record (BASELINE.md resumability row).
-        """
-        t0 = time.time()
-        out = self(df)
-        sink(out)
-        return {"stages": self.named(), "wall_sec": time.time() - t0}
 
     def __repr__(self) -> str:
         return f"Pipeline({' | '.join(self.named())})"

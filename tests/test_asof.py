@@ -8,7 +8,7 @@ import pytest
 
 from hipipe_spark.operators.asof import asof_join
 
-STRATEGIES = ["union", "cogroup", "broadcast", "bucketed"]
+STRATEGIES = ["union", "broadcast", "bucketed"]
 
 
 def _mk(spark, transcripts, profiles):
@@ -52,7 +52,7 @@ def test_backward_strict(spark, transcripts, profiles, strategy):
     _compare(out, _oracle(lpdf, rpdf, exact=False))
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "broadcast"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast"])
 def test_forward(spark, transcripts, profiles, strategy):
     left, right, lpdf, rpdf = _mk(spark, transcripts, profiles)
     out = asof_join(left, right, strategy=strategy, direction="forward")
@@ -103,7 +103,7 @@ def test_no_right_rows_for_some_keys(spark):
         assert rows == {"a": 1.0, "b": None}
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "broadcast"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast"])
 @pytest.mark.parametrize("exact", [True, False])
 def test_nearest(spark, transcripts, profiles, strategy, exact):
     left, right, lpdf, rpdf = _mk(spark, transcripts, profiles)
@@ -112,7 +112,7 @@ def test_nearest(spark, transcripts, profiles, strategy, exact):
     _compare(out, _oracle(lpdf, rpdf, direction="nearest", exact=exact))
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "broadcast"])
+@pytest.mark.parametrize("strategy", ["union", "broadcast"])
 def test_nearest_tolerance(spark, transcripts, profiles, strategy):
     left, right, lpdf, rpdf = _mk(spark, transcripts, profiles)
     out = asof_join(left, right, strategy=strategy, direction="nearest",
@@ -139,15 +139,3 @@ def test_multi_table_asof(spark, transcripts, profiles, strategy):
     _compare(out.withColumnsRenamed({"model_m": "model",
                                      "temperature_t": "temperature"}),
              merged)
-
-
-def test_cogroup_monster_key_refuses(spark, transcripts, profiles,
-                                     monkeypatch):
-    """A cogroup whose key exceeds MAX_COGROUP_ROWS must raise the
-    documented refuse-fast error, not OOM a worker."""
-    from hipipe_spark.operators import asof as asof_mod
-    monkeypatch.setattr(asof_mod, "MAX_COGROUP_ROWS", 3)
-    left = transcripts.select("conv_id", "turn_idx", "ts")
-    out = asof_join(left, profiles, strategy="cogroup")
-    with pytest.raises(Exception, match="MAX_COGROUP_ROWS"):
-        out.collect()

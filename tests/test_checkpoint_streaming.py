@@ -1,6 +1,5 @@
 """Checkpoint/resume, lineage metrics and incremental refresh."""
 
-import json
 import os
 
 from pyspark.sql import functions as F
@@ -16,11 +15,110 @@ def test_snapshot_commit_and_lineage(spark, transcripts, tmp_path):
     assert man["rows"] == transcripts.count()
     assert man["n_partitions"] >= 1
     assert man["rows_per_sec"] > 0
-    metrics = os.path.join(str(tmp_path / "snaps"), "turns", snap, "metrics.jsonl")
-    recs = [json.loads(l) for l in open(metrics)]
-    assert sum(r["rows"] for r in recs) == man["rows"]
+    assert len(man["files"]) == man["n_partitions"]
+    assert sum(r["rows"] for r in man["files"]) == man["rows"]
+    data = os.path.join(str(tmp_path / "snaps"), "turns", snap, "data")
+    assert sorted(r["file"] for r in man["files"]) == sorted(
+        f for f in os.listdir(data) if f.endswith(".parquet"))
     back = store.read(spark, "turns")
     assert back.count() == man["rows"]
+
+
+def test_commit_of_empty_frame(spark, transcripts, tmp_path):
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    snap = store.commit(transcripts.filter("1=0"), "turns")
+    assert store.manifest("turns", snap)["rows"] == 0
+    back = store.read(spark, "turns")
+    assert back.columns == transcripts.columns
+    assert back.count() == 0
+
+
+def test_commit_and_refresh_start_no_extra_job(spark, transcripts, tmp_path):
+    """A commit is its write: it starts as many Spark jobs as a plain
+    ``df.write.parquet`` of the same frame, since row counts come from
+    the written files. An incremental refresh runs ``compute`` over the
+    delta slice once, inside that write."""
+    from hipipe_spark.checkpoint import incremental_refresh
+
+    sc = spark.sparkContext
+
+    def n_jobs(group, action):
+        sc.setJobGroup(group, "job-count assertion")
+        try:
+            action()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    transcripts.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    n_write = n_jobs("plain_write_probe",
+                     lambda: src.write.parquet(str(tmp_path / "plain")))
+    assert n_jobs("commit_probe", lambda: store.commit(src, "turns")) \
+        == n_write
+
+    # counts the rows compute consumes; nondeterministic, so the filter
+    # stays above the semi-join and sees exactly the slice rows
+    rows_seen = sc.accumulator(0)
+
+    def see(_):
+        rows_seen.add(1)
+        return True
+
+    seen = F.udf(see, "boolean").asNondeterministic()
+
+    def compute(df):
+        return df.filter(seen("conv_id")).groupBy("conv_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_turns"))
+
+    incremental_refresh(spark, store, "feats", src, compute)
+    delta_convs = src.select("conv_id").distinct() \
+        .filter(F.crc32(F.col("conv_id")) % 3 == 0)
+    n_slice = src.join(delta_convs, "conv_id", "left_semi").count()
+    rows_seen.value = 0
+    incremental_refresh(spark, store, "feats", src, compute,
+                        delta_keys=delta_convs)
+    assert rows_seen.value == n_slice
+
+
+def test_commit_fsyncs_before_publishing(spark, transcripts, tmp_path,
+                                         monkeypatch):
+    """Every data file and the manifest reach stable storage before the
+    rename publishes the snapshot; the rename itself is flushed by an
+    fsync of the name's directory."""
+    import hipipe_spark.checkpoint as checkpoint
+
+    def inode(path):
+        st = os.stat(path)
+        return st.st_dev, st.st_ino
+
+    synced, at_rename = set(), {}
+    fsync, rename = os.fsync, os.rename
+
+    def recording_fsync(fd):
+        st = os.fstat(fd)
+        synced.add((st.st_dev, st.st_ino))
+        fsync(fd)
+
+    def checking_rename(src, dst):
+        data = os.path.join(src, "data")
+        at_rename["unsynced"] = [
+            p for p in [os.path.join(src, "MANIFEST.json"),
+                        *(os.path.join(data, f) for f in os.listdir(data)
+                          if f.endswith(".parquet"))]
+            if inode(p) not in synced]
+        at_rename["synced"] = set(synced)
+        rename(src, dst)
+
+    monkeypatch.setattr(checkpoint.os, "fsync", recording_fsync)
+    monkeypatch.setattr(checkpoint.os, "rename", checking_rename)
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    store.commit(transcripts, "turns")
+    assert at_rename["unsynced"] == []
+    name_dir = inode(str(tmp_path / "snaps" / "turns"))
+    assert name_dir in synced - at_rename["synced"]
 
 
 def test_resume_skips_committed_stages(spark, transcripts, tmp_path):
@@ -147,8 +245,8 @@ def test_torn_commit_stays_invisible_and_refresh_resumes(
         spark, transcripts, tmp_path, monkeypatch):
     """A crash between the manifest write and the publishing rename
     leaves a ``.tmp-`` directory that already holds MANIFEST.json. It
-    must not surface as a snapshot, and the next refresh must build on
-    the last committed one."""
+    must not surface as a snapshot, the next refresh must build on the
+    last committed one, and that refresh's commit removes it."""
     import pytest
 
     import hipipe_spark.checkpoint as checkpoint
@@ -203,3 +301,5 @@ def test_torn_commit_stays_invisible_and_refresh_resumes(
     have = got.toPandas().set_index("conv_id").sort_index()
     assert len(want) == len(have)
     assert (want == have).all().all()
+    assert not [d for d in os.listdir(str(tmp_path / "snaps" / "feats"))
+                if d.startswith(".tmp-")]

@@ -186,5 +186,14 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
 
 
 if __name__ == "__main__":
-    only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-    sys.exit(main(only=only))
+    import argparse
+
+    ap = argparse.ArgumentParser(
+        description="Compare registry queries with their DuckDB oracles.")
+    ap.add_argument("names", nargs="?",
+                    help="comma-separated query names (default: all)")
+    ap.add_argument("--sf-dir",
+                    help="testdata directory (default: main's sf0.01)")
+    args = ap.parse_args()
+    only = args.names.split(",") if args.names else None
+    sys.exit(main(args.sf_dir, only) if args.sf_dir else main(only=only))
