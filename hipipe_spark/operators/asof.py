@@ -116,14 +116,12 @@ def asof_join_multi(
     order); each table's value columns land as ``<col><suffix>``.
 
     Composition note: with ``strategy="union"`` each table adds one
-    union+window pass over the fact side keyed on the SAME ``by`` —
-    Catalyst keeps the fact partitioning across passes (exchange reuse
-    at equal keys), so N tables cost N window sorts but not N full
-    re-partitions. With ``strategy="broadcast"`` and dimension-sized
-    feature tables the fact side is never reshuffled at all: N packed
-    broadcasts, one narrow map each — the shape to pick when the
-    feature tables are per-conversation profiles and the fact side is
-    the 10^12-row transcript."""
+    union+window pass keyed on the SAME ``by``, and each pass exchanges
+    the fact side again with its table (the union of a partitioned and
+    an unpartitioned side has no partitioning), so N tables cost N
+    exchanges and N window sorts. With ``strategy="broadcast"`` and
+    dimension-sized feature tables the fact side is never shuffled at
+    all: N packed broadcasts, one narrow map each."""
     items = list(rights.items()) if isinstance(rights, dict) else \
         [(sfx, df) for df, sfx in rights]
     out = left
@@ -249,48 +247,30 @@ def _bracket(u, on, by, value_cols, frames, is_right=None):
 
 
 def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
-    if direction == "nearest":
-        return _asof_union_nearest(left, right, on, by, exact, tol,
-                                   value_cols, suffix)
-    if direction not in ("backward", "forward"):
-        raise ValueError(direction)
-    u = _tagged_union(left, right, on, by, value_cols, 0 if exact else 2)
-    out = _bracket(u, on, by, value_cols, [(direction, "__f_", "__match_ts")])
-    if tol is not None:
-        delta = F.abs(ts_seconds(F.col(on)) - ts_seconds(F.col("__match_ts")))
-        within = F.col("__match_ts").isNotNull() & (delta <= tol)
-        proj = [
-            F.when(within, F.col(f"__f_{c}")).alias(f"{c}{suffix}") for c in value_cols
-        ]
-    else:
-        proj = [F.col(f"__f_{c}").alias(f"{c}{suffix}") for c in value_cols]
-    return out.select(*[F.col(c) for c in left.columns], *proj)
-
-
-def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
-    """``direction="nearest"``: one union, the backward and forward
+    """The union strategy. ``nearest`` takes the backward and forward
     brackets over the same hash partition (one shuffle, two
-    partition-local sorts). pandas semantics: tolerance filters each
+    partition-local sorts); pandas semantics: tolerance filters each
     direction's candidate first, then the closer one wins; ties prefer
     backward (``pd.merge_asof`` behavior)."""
+    frames = {"backward": _BOTH[:1], "forward": _BOTH[1:], "nearest": _BOTH}.get(direction)
+    if frames is None:
+        raise ValueError(direction)
     u = _tagged_union(left, right, on, by, value_cols, 0 if exact else 2)
-    out = _bracket(u, on, by, value_cols, _BOTH)
+    out = _bracket(u, on, by, value_cols, frames)
     ts_l = ts_seconds(F.col(on))
-    db = ts_l - ts_seconds(F.col("__b_ts"))
-    df_ = ts_seconds(F.col("__f_ts")) - ts_l
-    b_ok = F.col("__b_ts").isNotNull()
-    f_ok = F.col("__f_ts").isNotNull()
-    if tol is not None:
-        b_ok = b_ok & (db <= tol)
-        f_ok = f_ok & (df_ <= tol)
-    use_b = b_ok & (~f_ok | (db <= df_))
-    proj = [
-        F.when(use_b, F.col(f"__b_{c}"))
-        .when(f_ok, F.col(f"__f_{c}"))
-        .alias(f"{c}{suffix}")
-        for c in value_cols
-    ]
-    return out.select(*[F.col(c) for c in left.columns], *proj)
+    gap = {"__b_": ts_l - ts_seconds(F.col("__b_ts")),
+           "__f_": ts_seconds(F.col("__f_ts")) - ts_l}
+    ok = {p: F.col(t).isNotNull() if tol is None else F.col(t).isNotNull() & (gap[p] <= tol)
+          for _, p, t in frames}
+    if direction == "nearest":
+        use_b = ok["__b_"] & (~ok["__f_"] | (gap["__b_"] <= gap["__f_"]))
+        proj = [F.when(use_b, F.col(f"__b_{c}")).when(ok["__f_"], F.col(f"__f_{c}"))
+                for c in value_cols]
+    else:
+        p = frames[0][1]
+        proj = [F.when(ok[p], F.col(f"{p}{c}")) for c in value_cols]
+    return out.select(*[F.col(c) for c in left.columns],
+                      *[v.alias(f"{c}{suffix}") for v, c in zip(proj, value_cols)])
 
 
 def _asof_broadcast(left, right, on, by, direction, exact, tol, value_cols, suffix):

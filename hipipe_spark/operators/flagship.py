@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from hipipe_spark.operators.asof import asof_join
 from hipipe_spark.operators.temporal import (
-    Backfill, FrameSpec, LagLead, RollingAgg, Sessionize, TimeSincePrev,
+    Backfill, LagLead, RollingAgg, Sessionize, TimeSincePrev,
 )
 from hipipe_spark.plans.pipeline import Pipeline
 

@@ -26,7 +26,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from hipipe_spark.plans.pipeline import Stage
+from hipipe_spark.plans.pipeline import Stage, WindowStage
 
 DEFAULT_KEY = "conv_id"
 DEFAULT_ORDER = ("ts", "turn_idx")
@@ -74,12 +74,7 @@ class FrameSpec:
 
     def over(self, key: str | Sequence[str] = DEFAULT_KEY,
              order: Sequence[str] = DEFAULT_ORDER) -> WindowSpec:
-        keys = [key] if isinstance(key, str) else list(key)
-        return (
-            Window.partitionBy(*keys)
-            .orderBy(*[F.col(c) for c in order])
-            .rowsBetween(self.start, self.end)
-        )
+        return ordered_window(key, order).rowsBetween(self.start, self.end)
 
 
 def ordered_window(key: str | Sequence[str] = DEFAULT_KEY,
@@ -88,14 +83,15 @@ def ordered_window(key: str | Sequence[str] = DEFAULT_KEY,
     return Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order])
 
 
-class Sessionize(Stage):
+class Sessionize(WindowStage):
     """Gap-based sessionization: a new session starts when the time since
     the previous turn exceeds ``gap``. Emits ``session_id`` (string,
     ``<conv_id>#<n>``) and ``session_seq`` (int, 0-based within conv).
 
     Composition of built-ins: lag(ts) → gap>threshold flag → running sum
     (the classic cumsum trick; hipipe users did this in a stateful
-    ``transform(dim<0>)`` — reference §2.3).
+    ``transform(dim<0>)`` — reference §2.3). Levels: ``__prev_ts`` (one
+    lag, shared with :class:`TimeSincePrev`), the sum, ``session_id``.
 
     lag() reads the *previous* row only (ts' < ts): leakage-free.
     """
@@ -106,24 +102,23 @@ class Sessionize(Stage):
         self.gap_sec = _interval_seconds(gap)
         self.key, self.ts_col, self.order = key, ts_col, order
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = ordered_window(self.key, self.order)
-        prev_ts = F.lag(F.col(self.ts_col)).over(w)
+        prev = f"__prev_{self.ts_col}"
         # epoch double keeps sub-second precision (unix_timestamp truncates)
-        gap = ts_seconds(F.col(self.ts_col)) - ts_seconds(prev_ts)
+        gap = ts_seconds(F.col(self.ts_col)) - ts_seconds(F.col(prev))
         new_sess = F.when(
-            prev_ts.isNull() | (gap > float(self.gap_sec)), F.lit(1)
+            F.col(prev).isNull() | (gap > float(self.gap_sec)), F.lit(1)
         ).otherwise(F.lit(0))
-        df = df.withColumn(
-            "session_seq",
-            (F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("int"),
-        )
-        return df.withColumn(
-            "session_id", F.concat(F.col(self.key), F.lit("#"), F.col("session_seq"))
-        )
+        running = w.rowsBetween(Window.unboundedPreceding, 0)
+        return [
+            {prev: F.lag(self.ts_col).over(w)},
+            {"session_seq": (F.sum(new_sess).over(running) - 1).cast("int")},
+            {"session_id": F.concat(F.col(self.key), F.lit("#"), F.col("session_seq"))},
+        ]
 
 
-class LagLead(Stage):
+class LagLead(WindowStage):
     """lag/lead features over the stable per-conversation order.
 
     ``LagLead("role", lags=[1,2])`` → ``role_lag_1``, ``role_lag_2``.
@@ -139,17 +134,16 @@ class LagLead(Stage):
         self.lags, self.leads = list(lags), list(leads)
         self.key, self.order = key, order
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = ordered_window(self.key, self.order)
+        out = {}
         for c in self.cols:
-            for k in self.lags:
-                df = df.withColumn(f"{c}_lag_{k}", F.lag(c, k).over(w))
-            for k in self.leads:
-                df = df.withColumn(f"{c}_lead_{k}_label", F.lead(c, k).over(w))
-        return df
+            out.update({f"{c}_lag_{k}": F.lag(c, k).over(w) for k in self.lags})
+            out.update({f"{c}_lead_{k}_label": F.lead(c, k).over(w) for k in self.leads})
+        return [out]
 
 
-class TimeSincePrev(Stage):
+class TimeSincePrev(WindowStage):
     """Seconds since the previous turn (null on the first turn)."""
 
     def __init__(self, ts_col: str = "ts", out: str = "secs_since_prev",
@@ -157,16 +151,14 @@ class TimeSincePrev(Stage):
         super().__init__("time_since_prev")
         self.ts_col, self.out, self.key, self.order = ts_col, out, key, order
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
+        prev = f"__prev_{self.ts_col}"  # Sessionize's temporary too
+        secs = ts_seconds(F.col(self.ts_col)) - ts_seconds(F.col(prev))
         w = ordered_window(self.key, self.order)
-        prev = F.lag(F.col(self.ts_col)).over(w)
-        return df.withColumn(
-            self.out,
-            F.round(ts_seconds(F.col(self.ts_col)) - ts_seconds(prev), 6),
-        )
+        return [{prev: F.lag(self.ts_col).over(w)}, {self.out: F.round(secs, 6)}]
 
 
-class Backfill(Stage):
+class Backfill(WindowStage):
     """Sliding-window backfill: fill nulls (or a sentinel) with the most
     recent non-null value within ``lookback`` prior rows (None =
     unbounded). ``last(x, ignorenulls=True)`` over a bounded frame — the
@@ -188,17 +180,18 @@ class Backfill(Stage):
         self.sentinel = sentinel
         self.key, self.order, self.suffix = key, order, suffix
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = self.frame.over(self.key, self.order)
+        out = {}
         for c in self.cols:
             v = F.col(c)
             if self.sentinel is not None:
                 v = F.when(v != F.lit(self.sentinel), v)  # sentinel → null
-            df = df.withColumn(f"{c}{self.suffix}", F.last(v, ignorenulls=True).over(w))
-        return df
+            out[f"{c}{self.suffix}"] = F.last(v, ignorenulls=True).over(w)
+        return [out]
 
 
-class RollingAgg(Stage):
+class RollingAgg(WindowStage):
     """Rolling aggregate over the last ``lookback`` rows (strictly past by
     default — set ``include_current=True`` to include the current row).
 
@@ -214,11 +207,9 @@ class RollingAgg(Stage):
         self.frame = FrameSpec(lookback=lookback, include_current=include_current)
         self.key, self.order = key, order
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = self.frame.over(self.key, self.order)
-        for out, (fn, col) in self.aggs.items():
-            df = df.withColumn(out, fn(col).over(w))
-        return df
+        return [{out: fn(col).over(w) for out, (fn, col) in self.aggs.items()}]
 
 
 class BucketedRollingAgg(Stage):
@@ -261,9 +252,7 @@ class BucketedRollingAgg(Stage):
 
         def attach(u: DataFrame, w: WindowSpec) -> DataFrame:
             w = w.rowsBetween(-self.lookback, end)
-            for out, (fn, col) in self.aggs.items():
-                u = u.withColumn(out, fn(col).over(w))
-            return u
+            return u.withColumns({out: fn(col).over(w) for out, (fn, col) in self.aggs.items()})
 
         return _in_turn_buckets(df, attach, self.lookback, self.bucket_size,
                                self.key, self.idx_col, self.order)
@@ -417,16 +406,9 @@ class CumulativeDistinct(Stage):
 
     def apply(self, df: DataFrame) -> DataFrame:
         end = 0 if self.include_current else -1
-        run = (
-            Window.partitionBy(self.key)
-            .orderBy(*[F.col(c) for c in self.order])
-            .rowsBetween(Window.unboundedPreceding, end)
-        )
+        run = ordered_window(self.key, self.order).rowsBetween(Window.unboundedPreceding, end)
         for c in self.cols:
-            first_w = (
-                Window.partitionBy(self.key, c)
-                .orderBy(*[F.col(o) for o in self.order])
-            )
+            first_w = ordered_window([self.key, c], self.order)
             flag = F.when(
                 F.col(c).isNotNull() & (F.row_number().over(first_w) == 1),
                 F.lit(1),
@@ -438,7 +420,7 @@ class CumulativeDistinct(Stage):
         return df
 
 
-class PriorSessionStats(Stage):
+class PriorSessionStats(WindowStage):
     """Per-turn features of the user's PREVIOUS session: how long it
     was, its mean of ``value_cols``, and seconds elapsed since it ended
     — the "returning user" features every engagement / retention model
@@ -462,34 +444,27 @@ class PriorSessionStats(Stage):
         cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
         super().__init__(f"prior_session({','.join(cols) or ts_col})")
         self.value_cols, self.key = cols, key
-        self.ts_col, self.seq_col = ts_col, seq_col
+        self.ts_col, self.seq_col, self.order = ts_col, seq_col, (seq_col,)
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = (
             Window.partitionBy(self.key)
             .orderBy(F.col(self.seq_col).cast("long"))
             .rangeBetween(-1, -1)
         )
         has_prev = F.col(self.seq_col) > 0
-        df = df.withColumn(
-            "prev_session_n_turns",
-            F.when(has_prev, F.count(F.lit(1)).over(w).cast("int")),
-        )
         prev_end = F.max(F.col(self.ts_col)).over(w)
-        df = df.withColumn(
-            "secs_since_prev_session_end",
-            F.when(has_prev,
-                   F.round(ts_seconds(F.col(self.ts_col)) - ts_seconds(prev_end), 6)),
-        )
+        out = {
+            "prev_session_n_turns": F.when(has_prev, F.count(F.lit(1)).over(w).cast("int")),
+            "secs_since_prev_session_end": F.when(
+                has_prev, F.round(ts_seconds(F.col(self.ts_col)) - ts_seconds(prev_end), 6)),
+        }
         for c in self.value_cols:
-            df = df.withColumn(
-                f"prev_session_mean_{c}",
-                F.when(has_prev, F.avg(F.col(c).cast("double")).over(w)),
-            )
-        return df
+            out[f"prev_session_mean_{c}"] = F.when(has_prev, F.avg(F.col(c).cast("double")).over(w))
+        return [out]
 
 
-class RollingQuantile(Stage):
+class RollingQuantile(WindowStage):
     """Exact nearest-rank quantile over the last ``lookback``
     strictly-past rows (e.g. median response length of the previous 20
     turns). Definition: ``sorted(values)[ceil(q * n)]`` (1-based) —
@@ -514,17 +489,15 @@ class RollingQuantile(Stage):
         self.frame = FrameSpec(lookback=lookback, include_current=include_current)
         self.key, self.order = key, order
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def levels(self) -> list[dict[str, Column]]:
         w = self.frame.over(self.key, self.order)
+        out = {}
         for c in self.cols:
             arr = F.sort_array(F.collect_list(F.col(c)).over(w))
             n = F.size(arr)
             idx = F.ceil(F.lit(self.q) * n).cast("int")
-            df = df.withColumn(
-                f"{c}_q{int(self.q * 100)}",
-                F.when(n > 0, F.element_at(arr, idx)),
-            )
-        return df
+            out[f"{c}_q{int(self.q * 100)}"] = F.when(n > 0, F.element_at(arr, idx))
+        return [out]
 
 
 def transition_matrix(df: DataFrame, col: str = "role",

@@ -11,9 +11,14 @@ composed *DataFrame lineage* is the IR, optimized by Catalyst. Stages are
 declarative: chaining never triggers execution, exactly like the
 reference's pull-based lazy ranges (``for_each.hpp:46`` "applied lazily").
 
+Catalyst fuses row-local work across stages, but not windows: each
+stage's ``Project`` between two ``Window`` s stops ``CollapseWindow``,
+so chained window stages cost a Window exec each. :class:`Pipeline`
+fuses consecutive :class:`WindowStage` s over one spec itself.
+
     pipe = Pipeline([
         Sessionize(gap="30 minutes"),
-        Lag("text_len", offsets=[1, 2, 3]),
+        LagLead("text_len", lags=[1, 2, 3]),
         Backfill("tool", lookback=10),
     ])
     features = pipe(turns)           # or: turns | pipe  (readability alias)
@@ -21,9 +26,11 @@ reference's pull-based lazy ranges (``for_each.hpp:46`` "applied lazily").
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
+from itertools import zip_longest
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame
 
 
 class Stage:
@@ -69,13 +76,48 @@ class FnStage(Stage):
         return self._fn(df)
 
 
-class Pipeline:
-    """An ordered chain of stages; itself a Stage-like callable.
+class WindowStage(Stage):
+    """Window expressions over one ``(key, order)`` spec. :meth:`levels`
+    gives the named outputs by dependency level (a level reads only the
+    input and earlier levels); ``__`` names are temporaries, dropped at
+    the end, and a temporary's name fixes its expression, so fused
+    stages share it. :meth:`apply` runs one ``select`` per level."""
 
-    Unlike the reference there IS an optimizer between composition and
-    execution — Catalyst — so stage boundaries are logical only; Spark is
-    free to fuse, reorder filters, prune columns across them.
-    """
+    key: str | Sequence[str]
+    order: Sequence[str]
+
+    def levels(self) -> list[dict[str, Column]]:  # pragma: no cover
+        raise NotImplementedError
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        return _select_levels(df, [self.levels()])
+
+
+def _select_levels(df: DataFrame, stages: list[list[dict[str, Column]]]) -> DataFrame:
+    """Level ``i`` of every stage in one ``select``; outputs follow the
+    input columns in stage order, or replace the input column they name.
+    A stage reading another's output at its own level fails analysis:
+    then the stages run one at a time."""
+    out = df
+    try:
+        for group in zip_longest(*stages, fillvalue={}):
+            out = out.withColumns({n: c for level in group for n, c in level.items()})
+    except AnalysisException:
+        if len(stages) == 1:
+            raise
+        for levels in stages:
+            df = _select_levels(df, [levels])
+        return df
+    new = [n for levels in stages for level in levels for n in level
+           if not n.startswith("__") and n not in df.columns]
+    return out.select(*df.columns, *dict.fromkeys(new))
+
+
+class Pipeline:
+    """An ordered chain of stages; itself a Stage-like callable. A run
+    of consecutive window stages with one spec is fused into one
+    ``select`` (one Window exec) per dependency level; a stage joins
+    only if its output names are new to the run's input and outputs."""
 
     def __init__(self, stages: Iterable[Stage | Callable[[DataFrame], DataFrame]] = ()):
         self.stages: list[Stage] = [
@@ -83,9 +125,21 @@ class Pipeline:
         ]
 
     def __call__(self, df: DataFrame) -> DataFrame:
+        run, spec, taken = [], None, set()  # fused levels; their spec; taken names
         for stage in self.stages:
-            df = stage(df)
-        return df
+            levels = stage.levels() if isinstance(stage, WindowStage) else []
+            names = {n for level in levels for n in level}
+            if run and (not levels or (stage.key, tuple(stage.order)) != spec
+                        or names & taken):
+                df, run = _select_levels(df, run), []
+            if levels and not run:
+                spec, taken = (stage.key, tuple(stage.order)), set(df.columns)
+            if levels and not names & taken:
+                run.append(levels)
+                taken |= {n for n in names if not n.startswith("__")}
+            else:
+                df = stage(df)
+        return _select_levels(df, run) if run else df
 
     def __ror__(self, df: DataFrame) -> DataFrame:
         return self(df)

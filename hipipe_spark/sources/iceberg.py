@@ -132,12 +132,5 @@ class IcebergTable:
                 f"SELECT * FROM {self.identifier}.snapshots "
                 "ORDER BY committed_at").collect()
             return [r.asDict() for r in rows]
-        import os
-        d = os.path.join(self.store.root, self.identifier)
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for s in sorted(os.listdir(d)):
-            if os.path.exists(os.path.join(d, s, "MANIFEST.json")):
-                out.append(self.store.manifest(self.identifier, s))
-        return out
+        return [self.store.manifest(self.identifier, s)
+                for s in self.store._snapshots(self.identifier)]

@@ -28,11 +28,9 @@ def test_fallback_requires_store_without_runtime(spark):
 
 
 def test_real_iceberg_roundtrip(spark, tmp_path):
-    """The REAL `format("iceberg")` path (VERDICT r4 next-round #7):
-    auto-enables the moment an iceberg-spark-runtime jar is on the
-    classpath; skip-marked (not deleted) in jar-less containers so the
-    integration coverage is one environment change away, never a code
-    change. Exercises a hadoop catalog end-to-end: CREATE, append,
+    """The REAL `format("iceberg")` path: enabled whenever an
+    iceberg-spark-runtime jar is on the classpath, skipped otherwise.
+    Exercises a hadoop catalog end-to-end: CREATE, append,
     snapshot listing, and snapshot-id time travel."""
     if not iceberg_available(spark):
         pytest.skip("no Iceberg runtime jar on the classpath")
@@ -89,6 +87,22 @@ def test_snapshot_log(spark, table):
     assert [m["rows"] for m in log] == [2, 3]
     # ids are chronologically ordered (lexical == commit order)
     assert log[0]["snapshot"] < log[1]["snapshot"]
+
+
+def test_torn_commit_stays_out_of_snapshot_log(spark, table, tmp_path):
+    """A commit torn after its manifest was written leaves a ``.tmp-``
+    directory holding ``MANIFEST.json``; it is not a snapshot, so the
+    log and ``as_of`` time travel skip it."""
+    import json
+
+    s1 = table.overwrite(_df(spark, 0, 3))
+    torn_id = "29991231T235959-000000000-torn"
+    torn = tmp_path / "transcripts" / f".tmp-{torn_id}"
+    torn.mkdir()
+    (torn / "MANIFEST.json").write_text(json.dumps(
+        {"snapshot": torn_id, "name": "transcripts", "rows": 9}))
+    assert [m["snapshot"] for m in table.snapshots()] == [s1]
+    assert table.read(as_of=_snap_ts(torn_id) + 1).count() == 3
 
 
 def test_append_to_empty_table(spark, table):

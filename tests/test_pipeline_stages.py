@@ -1,13 +1,14 @@
-"""Ewma / Calendar pipeline stages: composition, one-exchange plan,
-leakage safety (past-only), value replicas."""
+"""Pipeline stages: window-stage fusion equals stage-by-stage
+application; Ewma / Calendar composition, one-exchange plan, leakage
+safety (past-only), value replicas."""
 
 import numpy as np
 import pandas as pd
 
 from hipipe_spark.operators.temporal import (
-    Calendar, Ewma, LagLead, RollingAgg, Sessionize, TimeSincePrev,
+    Backfill, Calendar, Ewma, LagLead, RollingAgg, Sessionize, TimeSincePrev,
 )
-from hipipe_spark.plans.pipeline import Pipeline
+from hipipe_spark.plans.pipeline import FnStage, Pipeline
 
 import pyspark.sql.functions as F
 
@@ -35,6 +36,40 @@ def test_composed_pipeline_adds_no_exchange(spark, transcripts):
     cols = set(out.columns)
     assert "turn_idx_ewma" in cols
     assert {"hour_sin", "dow_cos", "is_weekend"} <= cols
+
+
+def _column_sums(df):
+    return df.select(*[F.sum(F.xxhash64(c).cast("decimal(20,0)")).alias(c)
+                       for c in df.columns]).first()
+
+
+def test_fused_pipeline_equals_unfused(transcripts):
+    """Pipeline fuses window stages; each stage applied on its own must
+    give the same columns, in the same order, with the same values.
+    Covered: a row-local stage between window stages, stages over
+    another spec, a stage reading an earlier stage's output, and a
+    stage replacing an input column."""
+    stages = [
+        Sessionize(gap="10 minutes"),
+        TimeSincePrev(),
+        LagLead("session_id", lags=[1]),
+        FnStage(lambda d: d.withColumn("len2", F.length("text") * 2)),
+        LagLead(["role", "len2"], lags=[1, 2], leads=[1]),
+        RollingAgg({"len2_sum_3": (F.sum, F.col("len2")),
+                    "len2_max": (F.max, "len2")}, lookback=3),
+        LagLead("turn_idx", key=["conv_id", "role"]),
+        TimeSincePrev(out="secs_in_role", key=["conv_id", "role"]),
+        Backfill("tool", sentinel="", lookback=5),
+        LagLead("session_seq", lags=[1]),
+        Backfill("tool", sentinel="", suffix=""),
+        RollingAgg({"n_prev": (F.count, F.lit(1))}, lookback=None),
+    ]
+    fused = Pipeline(stages)(transcripts)
+    unfused = transcripts
+    for stage in stages:
+        unfused = stage(unfused)
+    assert fused.columns == unfused.columns
+    assert _column_sums(fused) == _column_sums(unfused)
 
 
 def test_ewma_stage_past_only(spark):

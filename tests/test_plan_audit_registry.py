@@ -1,4 +1,4 @@
-"""Registry-wide physical-plan audit (VERDICT r3 #4).
+"""Registry-wide physical-plan audit.
 
 Every ``__spark_entry__.queries()`` entry is built at sf0.001 and its
 executed-plan shape asserted against the recorded budget

@@ -1,0 +1,70 @@
+"""Physical-plan shape of the flagship, read from the final AQE plan
+after an action: the fused window pipeline costs one sort and two
+Window execs, and the default as-of adds no exchange of the fact
+side."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from hipipe_spark.operators.flagship import feature_pipeline, featurize
+
+
+def _final_nodes(df):
+    """Nodes of ``df``'s final physical plan; run an action first."""
+    todo, out = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.finalPhysicalPlan())
+            continue
+        if node.nodeName().endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        ch = node.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def _count(df, kind):
+    return sum(n.nodeName() == kind for n in _final_nodes(df))
+
+
+def _exchanged_rows(df):
+    """Rows written by each shuffle exchange of ``df``'s final plan."""
+    return [int(n.metrics().get("shuffleRecordsWritten").get().value())
+            for n in _final_nodes(df) if n.nodeName() == "Exchange"]
+
+
+@pytest.fixture()
+def scanned(spark, transcripts, profiles, tmp_path):
+    """Turns and profiles as plain parquet scans: no generator windows
+    under them should the session cache have been cleared."""
+    for name, df in (("turns", transcripts), ("profiles", profiles)):
+        df.write.parquet(str(tmp_path / name))
+    return (spark.read.parquet(str(tmp_path / "turns")),
+            spark.read.parquet(str(tmp_path / "profiles")))
+
+
+def _checksum(df):
+    h = F.xxhash64(*df.columns).cast("decimal(20,0)")
+    return df.select(F.count(F.lit(1)), F.sum(h)).first()
+
+
+def test_pipeline_two_windows(scanned):
+    turns, _ = scanned
+    out = feature_pipeline()(
+        turns.withColumn("text_len", F.length("text").cast("int")))
+    out.collect()
+    assert _count(out, "Window") == 2
+    assert _count(out, "Sort") == 1
+
+
+def test_featurize_exchanges_fact_side_once(scanned):
+    turns, profiles = scanned
+    out = featurize(turns, profiles)
+    out.collect()
+    assert _count(out, "Window") == 2
+    assert sum(r >= turns.count() for r in _exchanged_rows(out)) == 1
+    assert _checksum(out) == _checksum(
+        featurize(turns, profiles, asof_strategy="union"))
