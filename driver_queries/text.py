@@ -1296,7 +1296,7 @@ def q_compress_pinned(spark, sf_dir):
 def q_unigram_roundtrip(spark, sf_dir):
     """Unigram-LM tokenizer round-trip gate (unigram.unigram_train /
     unigram_segment): train on a bounded hash-sample (two cluster
-    jobs at any vocab size — the bpe_merge_table_sampled policy),
+    jobs at any vocab size — the bpe_merge_table sample_cap policy),
     Viterbi-segment every document with an Arrow-batched pandas_udf,
     and emit the LOSSLESSNESS invariant the oracle can recompute
     from raw text alone: concatenated piece characters must equal

@@ -102,9 +102,13 @@ class SnapshotStore:
         # embeds a fixed-width nanosecond fraction so two commits in the
         # same wall-clock second still sort chronologically (a random
         # suffix alone made latest() nondeterministic under fast loops).
+        # Seconds and fraction come from ONE clock read: two reads can
+        # straddle a second boundary and pair the old second with the
+        # new second's near-zero fraction, sorting before earlier ids.
+        sec, frac = divmod(time.time_ns(), 1_000_000_000)
         snap = (
-            time.strftime("%Y%m%dT%H%M%S")
-            + f"-{time.time_ns() % 1_000_000_000:09d}-"
+            time.strftime("%Y%m%dT%H%M%S", time.localtime(sec))
+            + f"-{frac:09d}-"
             + uuid.uuid4().hex[:6]
         )
         parent = os.path.join(self.root, name)

@@ -5,26 +5,21 @@ data lives instead of sampling to one machine. The classic algorithm
 (Sennrich et al. 2016, public): start from words as character
 sequences, repeatedly merge the most frequent adjacent symbol pair.
 
-Scale design — the whole point of doing this in Spark:
-
-1. ONE corpus-scale shuffle up front: tokenize + ``groupBy(word)``
-   count. Everything after runs on the distinct-word table (vocab-sized
-   — millions of rows at 100 TB, KBs per executor), so ``k`` merge
-   iterations cost k tiny shuffles over the vocab, never a second pass
-   over the corpus. Counting pairs over (distinct word × count) is
-   exactly equivalent to counting over raw text.
-2. Per-iteration argmax is a ``limit(1).collect()`` of a one-row
-   aggregate — dimension-sized driver traffic, not a hot-path collect.
-3. The merge itself is a pure ``F.aggregate`` left-fold over each
-   word's symbol array (greedy left-to-right, the standard BPE apply
-   order) — JVM-side, no Python. The vocab frame is
-   ``localCheckpoint``-ed per iteration so lineage/codegen depth stays
-   O(1) across iterations instead of O(k).
+Scale design: ONE corpus-scale shuffle (tokenize + ``groupBy(word)``
+count), then one collect of the distinct-word table — vocab-sized,
+KBs to MBs, never the corpus. Counting pairs over (distinct word x
+count) is exactly equivalent to counting over raw text, so all ``k``
+merges train driver-side over that table with incremental pair-count
+maintenance: two cluster jobs at any ``k``. ``sample_cap`` bounds the
+collect for vocabularies too large for the driver. Applying the table
+(:func:`bpe_segment`) is distributed: each merge is one ``F.aggregate``
+left-fold over each word's symbol array (greedy left-to-right, the
+standard BPE apply order) — JVM-side, no Python.
 
 Determinism: ties on pair count break lexicographically (smallest
-(a, b) in UTF8 byte order) — byte-identical merge tables at any
-parallelism. Verified against the pure-Python reference implementation
-(``hipipe_spark.reference_impl.bpe_reference``) in
+(a, b) by code point, the same order as UTF-8 bytes) — byte-identical
+merge tables at any parallelism. Verified against the pure-Python
+reference implementation (``hipipe_spark.reference_impl.bpe_reference``) in
 ``tests/test_bpe.py``; an iterative driver-loop algorithm, so the
 driver gate records a rows-only row (no single SQL oracle exists —
 disclosed, same class as ``embedding_ivf_topk``).
@@ -73,95 +68,46 @@ def _merge_pair(syms: Column, a: str, b: str) -> Column:
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(a, b, n): adjacent-symbol pair frequencies, weighted by word
-    count; overlapping pairs count ([l,l,l] → (l,l) twice)."""
-    pair_structs = F.transform(
-        F.sequence(F.lit(1), F.size("syms") - 1),
-        lambda j: F.struct(
-            F.element_at(F.col("syms"), j).alias("a"),
-            F.element_at(F.col("syms"), j + 1).alias("b"),
-        ),
-    )
-    return (
-        words.filter(F.size("syms") >= 2)
-        .select(F.explode(pair_structs).alias("p"), "cnt")
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("cnt").alias("n"))
-    )
-
-
 def bpe_merge_table(
     df: DataFrame,
     text_col: str = "text",
     k: int = 10,
     lowercase: bool = True,
     min_count: int = 2,
-    store=None,
-    job_name: str = "bpe",
-    checkpoint_every: int = 4,
+    sample_cap: int | None = None,
+    seed: int = 7,
 ) -> DataFrame:
     """Learn the first ``k`` BPE merges over ``df[text_col]`` and
     return the merge table (rank, a, b, n) — rank is 1-based merge
-    order, n the pair's frequency at merge time.
+    order, n the pair's frequency at merge time. Stops early when no
+    pair reaches ``min_count``.
 
-    Stops early when no pair reaches ``min_count``. See module
-    docstring for the scale architecture.
+    Two cluster jobs at any ``k``: the corpus-scale tokenize +
+    ``groupBy(word)`` count, then one collect of the distinct-word
+    table. The merges train driver-side over that table
+    (:func:`_train_merges_local`).
 
-    **Resumable**: pass a :class:`hipipe_spark.checkpoint.SnapshotStore`
-    as ``store`` and every ``checkpoint_every`` merges the vocab state
-    + merge list commit as an atomic snapshot (``<job_name>_words``).
-    A rerun with the same store resumes from the last committed merge —
-    the corpus-scale tokenize+count shuffle is NOT repeated (the north
-    rule's resume-from-checkpoint contract applied to an iterative
-    job; tests prove resume by passing a *different* corpus on the
-    second call). Cache note: per-iteration ``localCheckpoint`` blocks
-    are vocab-sized and freed by Spark's ContextCleaner as soon as the
-    superseded frame is unreferenced driver-side (the loop rebinds
-    ``words`` each round) — no unbounded accumulation.
+    ``sample_cap=None`` (default) collects every distinct word, so the
+    table is exact. An int keeps only the ``sample_cap`` words with the
+    smallest ``xxhash64(word, seed)`` (one ``TakeOrdered`` collect,
+    reproducible at any parallelism): merge ranks and counts then
+    reflect that sample, and equal the exact table computed over the
+    same words. ``sample_cap`` words x average length is the driver
+    footprint — dimension-sized by contract, never a corpus collect.
     """
     spark: SparkSession = df.sparkSession
-    merges: list[tuple[int, str, str, int]] = []
-    words = None
-    if store is not None and store.latest(f"{job_name}_words") is not None:
-        snap = store.latest(f"{job_name}_words")
-        manifest = store.manifest(f"{job_name}_words", snap)
-        done = [tuple(m) for m in manifest.get("merges", [])]
-        if done:
-            merges = [(int(r), str(a), str(b), int(n)) for r, a, b, n in done]
-            words = store.read(spark, f"{job_name}_words", snap)
-    if words is None:
-        txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-        words = (
-            df.select(F.explode(tokens(txt)).alias("w"))
-            .filter(F.col("w") != "")
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(_chars(F.col("w")).alias("syms"), "cnt")
-            .localCheckpoint(eager=False)
-        )
-    last_committed = len(merges)
-    for rank in range(len(merges) + 1, k + 1):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_count:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((rank, a, b, n))
-        # localCheckpoint: truncate lineage so expression/codegen depth
-        # stays constant across iterations (vocab-sized materialization)
-        words = words.select(
-            _merge_pair(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint(eager=False)
-        if store is not None and (rank % checkpoint_every == 0 or rank == k):
-            store.commit(words, f"{job_name}_words", meta={"merges": merges})
-            last_committed = rank
-    if store is not None and len(merges) > last_committed:
-        store.commit(words, f"{job_name}_words", meta={"merges": merges})
+    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    wc = (
+        df.select(F.explode(tokens(txt)).alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    if sample_cap is not None:
+        wc = (wc.orderBy(F.xxhash64(F.col("w"), F.lit(seed)), F.col("w"))
+              .limit(sample_cap))
+    words = {r["w"]: int(r["cnt"]) for r in wc.collect()}
+    merges = _train_merges_local(words, k, min_count)
     return spark.createDataFrame(merges, MERGE_SCHEMA)
 
 
@@ -174,7 +120,7 @@ def _train_merges_local(
     count change; per merge only the words CONTAINING the merged pair
     are re-segmented, so total work is O(total symbol updates + heap
     traffic), not O(k x vocab) like the naive recount. Convention is
-    byte-identical to :func:`bpe_merge_table` / ``bpe_reference``:
+    byte-identical to ``bpe_reference``:
     overlapping adjacent pairs weighted by word count, ties broken by
     lexicographically smallest (a, b), greedy left-to-right merge."""
     import heapq
@@ -241,60 +187,6 @@ def _train_merges_local(
             if p in counts:
                 heapq.heappush(heap, (-counts[p], p[0], p[1]))
     return merges
-
-
-def bpe_merge_table_sampled(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 1000,
-    lowercase: bool = True,
-    min_count: int = 2,
-    sample_cap: int = 100_000,
-    seed: int = 7,
-) -> DataFrame:
-    """Learn ``k`` BPE merges on a BOUNDED, deterministic hash-ordered
-    sample of the distinct-word count table — the scale path for real
-    vocab sizes (the ``pq_train`` bounded-training policy at
-    ``similarity.py``).
-
-    Why this exists: :func:`bpe_merge_table` is exact but
-    iteration-bound — each merge is one ``_pair_counts -> orderBy ->
-    limit(1).collect()`` round trip, so a production 32k-merge vocab
-    is 32k sequential Spark jobs over the vocab table (days of
-    scheduler overhead at any data size). This twin spends exactly TWO
-    cluster jobs regardless of ``k``: the corpus-scale tokenize+count
-    shuffle, then ONE ``TakeOrdered`` collect of the ``sample_cap``
-    hash-smallest distinct words (with their corpus-wide counts). All
-    ``k`` merges then train driver-side over that table with
-    incremental pair-count maintenance — milliseconds per merge — and
-    :func:`bpe_segment` applies them distributed as before. This is
-    how production tokenizer trainers actually work (train on a
-    bounded sample, apply everywhere).
-
-    The trade, stated plainly: merge RANKS and counts reflect the
-    sample, not the full corpus — on the sampled words the table is
-    bit-identical to running the exact trainer on those same words
-    (pytest-pinned in ``tests/test_bpe.py``), and the hash-ordered
-    sample is reproducible at any parallelism. ``sample_cap`` words x
-    avg length ~ a few MB driver-side; the collect is dimension-sized
-    by contract, not a corpus collect.
-    """
-    spark: SparkSession = df.sparkSession
-    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    wc = (
-        df.select(F.explode(tokens(txt)).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    rows = (
-        wc.orderBy(F.xxhash64(F.col("w"), F.lit(seed)), F.col("w"))
-        .limit(sample_cap)
-        .collect()
-    )
-    words = {r["w"]: int(r["cnt"]) for r in rows}
-    merges = _train_merges_local(words, k, min_count)
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
 
 
 def bpe_segment(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from hipipe_spark.functions.hashing import det_hash_i64, det_hash_str_i64
 from hipipe_spark.functions.text import exact_fingerprint, fingerprint, tokens
+from hipipe_spark.functions.text import word_ngrams as text_ngrams
 
 
 # ------------------------------------------------------------------ exact
@@ -58,13 +59,8 @@ def char_shingles(col: Column, k: int = 5) -> Column:
 
 
 def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (space-joined)."""
-    toks = tokens(F.lower(col))
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    idx = _idx_1_to(cnt)
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    )
+    """Distinct word n-grams (space-joined) of the lowercased text."""
+    return F.array_distinct(text_ngrams(tokens(F.lower(col)), n))
 
 
 # --------------------------------------------------------------- MinHash
@@ -117,6 +113,89 @@ def _exact_prepass(df: DataFrame, id_col: str, text_col: str):
     return reps, star
 
 
+def _minhash_base(df: DataFrame, id_col: str, text_col: str,
+                  shingle_k: int, n_hashes: int, shingle: str,
+                  hash_family: str, exact_prepass: bool):
+    """``(id, sh, sig)`` per document: shingle set and MinHash
+    signature. With ``exact_prepass`` the rows are the min-id
+    representatives of each distinct text and the second return value
+    holds the star edges of the collapsed members (else None)."""
+    star = None
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
+    if exact_prepass:
+        src, star = _exact_prepass(df, id_col, text_col)
+    sh_fn = char_shingles if shingle == "char" else word_ngrams
+    base = src.select("id", sh_fn(F.col("__txt"), shingle_k).alias("sh"))
+    return base.withColumn(
+        "sig", minhash_signature(F.col("sh"), n_hashes, hash_family)), star
+
+
+def _band_key(b: int, rows_per_band: int, hash_family: str) -> Column:
+    """Bucket key of band ``b``: xxhash64 of the signature slice (an
+    8-byte shuffle key) for the default family; the raw slice for
+    "det", so a DuckDB oracle can group on the same key."""
+    sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
+    return F.xxhash64(sl) if hash_family == "xxhash64" else sl
+
+
+def _banded(frame: DataFrame, n_hashes: int, bands: int,
+            hash_family: str) -> DataFrame:
+    """``(id, band, bh)``: one row per document and band. Ids only —
+    carrying the shingle arrays through the explode would shuffle every
+    shingle set ``bands`` times."""
+    rows_per_band = n_hashes // bands
+    assert rows_per_band * bands == n_hashes, "bands must divide n_hashes"
+    return frame.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     _band_key(b, rows_per_band, hash_family).alias("bh"))
+            for b in range(bands)])).alias("bb"),
+    ).select("id", "bb.band", "bb.bh")
+
+
+def _band_self_pairs(banded: DataFrame) -> DataFrame:
+    """``(id_a, id_b)``, ``id_a < id_b``: pairs sharing a band bucket —
+    an equi-join on (band, bh), broadcast-free, shuffled on a uniform
+    key."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (a.join(b, on=["band", "bh"])
+            .filter(F.col("a.id") < F.col("b.id"))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def _with_sets(cand: DataFrame, sets: DataFrame, col: str) -> DataFrame:
+    """Fetch each side's set once: ``(id_a, id_b)`` candidates joined
+    with ``sets`` ``(id, col)`` into ``col_a`` / ``col_b``."""
+    def side(s):
+        return sets.select(F.col("id").alias(f"id_{s}"),
+                           F.col(col).alias(f"{col}_{s}"))
+    return cand.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two distinct-element arrays; 0.0 when both are
+    empty."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def _verified(pairs: DataFrame, jaccard_threshold: float | None,
+              star: DataFrame | None) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` from ``(id_a, id_b, sh_a, sh_b)``
+    candidates, kept at ``jaccard >= jaccard_threshold`` (all when
+    None), plus the exact-prepass star edges at jaccard 1.0."""
+    out = pairs.select("id_a", "id_b",
+                       _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
+    if jaccard_threshold is not None:
+        out = out.filter(F.col("jaccard") >= jaccard_threshold)
+    if star is not None:
+        out = out.unionByName(star.withColumn("jaccard", F.lit(1.0)))
+    return out
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -160,64 +239,17 @@ def minhash_lsh_pairs(
     materializing the result, call
     :func:`hipipe_spark.operators.core.release_cached` on it.
     """
-    rows_per_band = n_hashes // bands
-    assert rows_per_band * bands == n_hashes, "bands must divide n_hashes"
-    sh_fn = char_shingles if shingle == "char" else word_ngrams
-    star = None
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__txt"))
-    if exact_prepass:
-        src, star = _exact_prepass(df, id_col, text_col)
-    base = src.select(
-        "id", sh_fn(F.col("__txt"), shingle_k).alias("sh"),
-    ).withColumn("sig", minhash_signature(F.col("sh"), n_hashes, hash_family))
+    base, star = _minhash_base(df, id_col, text_col, shingle_k, n_hashes,
+                               shingle, hash_family, exact_prepass)
     base = base.persist()
-
-    # candidate pairs from band buckets ONLY (ids, not shingle arrays —
-    # carrying the arrays through the band explode would shuffle every
-    # shingle set `bands` times). Band key: xxhash64 of the signature
-    # slice (8-byte shuffle key) for the default family; the raw slice
-    # array for "det" so a DuckDB oracle can group on the same key.
-    def _band_key(b):
-        sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
-        return F.xxhash64(sl) if hash_family == "xxhash64" else sl
-    banded = base.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), _band_key(b).alias("bh"))
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bh")
+    banded = _banded(base, n_hashes, bands, hash_family)
     if bucket_cap is not None:
         wb = Window.partitionBy("band", "bh")
         banded = (banded.withColumn("__bn", F.count("*").over(wb))
                   .filter(F.col("__bn") <= bucket_cap).drop("__bn"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(b, on=["band", "bh"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # verify: fetch each side's shingle set once, exact Jaccard
-    sh = base.select("id", "sh")
-    pairs = (
-        cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = pairs.withColumn(
-        "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    ).select("id_a", "id_b", "jaccard")
-    if jaccard_threshold is not None:
-        out = out.filter(F.col("jaccard") >= jaccard_threshold)
-    if star is not None:
-        out = out.unionByName(star.withColumn("jaccard", F.lit(1.0)))
+    pairs = _with_sets(_band_self_pairs(banded), base, "sh")
     from hipipe_spark.operators.core import register_cached
-    return register_cached(out, base)
+    return register_cached(_verified(pairs, jaccard_threshold, star), base)
 
 
 # --------------------------------------------------------------- SimHash
@@ -366,18 +398,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    gs = base.select("id", "gs")
-    pairs = (
-        cand.join(gs.withColumnRenamed("id", "id_a").withColumnRenamed("gs", "gs_a"), "id_a")
-        .join(gs.withColumnRenamed("id", "id_b").withColumnRenamed("gs", "gs_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
-    union = F.size(F.array_union("gs_a", "gs_b")).cast("double")
+    pairs = _with_sets(cand, base, "gs")
     from hipipe_spark.operators.core import register_cached
     return register_cached(
-        pairs.withColumn(
-            "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
-        .select("id_a", "id_b", "jaccard")
+        pairs.select("id_a", "id_b",
+                     _jaccard(F.col("gs_a"), F.col("gs_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold),
         base,
     )
@@ -447,20 +472,11 @@ def ngram_jaccard_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    gs = base.select("id", "gs")
-    pairs = (
-        cand.join(gs.withColumnRenamed("id", "id_a")
-                  .withColumnRenamed("gs", "gs_a"), "id_a")
-        .join(gs.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("gs", "gs_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
-    union = F.size(F.array_union("gs_a", "gs_b")).cast("double")
+    pairs = _with_sets(cand, base, "gs")
     from hipipe_spark.operators.core import register_cached
     return register_cached(
-        pairs.withColumn(
-            "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
-        .select("id_a", "id_b", "jaccard")
+        pairs.select("id_a", "id_b",
+                     _jaccard(F.col("gs_a"), F.col("gs_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold),
         base,
     )
@@ -498,13 +514,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str = "doc_id",
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    gs = base.select("id", "gs")
-    pairs = (
-        cand.join(gs.withColumnRenamed("id", "id_a")
-                  .withColumnRenamed("gs", "gs_a"), "id_a")
-        .join(gs.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("gs", "gs_b"), "id_b")
-    )
+    pairs = _with_sets(cand, base, "gs")
     inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
     sa = F.size("gs_a").cast("double")
     sb = F.size("gs_b").cast("double")
@@ -745,11 +755,8 @@ def minhash_index(
     :func:`minhash_lsh_pairs_incremental` — the corpus is scanned, but
     never re-shingled row-by-row against the delta and never shuffled.
     Parameters must match the incremental call."""
-    sh_fn = char_shingles if shingle == "char" else word_ngrams
-    return df.select(
-        F.col(id_col).alias("id"),
-        sh_fn(F.col(text_col), shingle_k).alias("sh"),
-    ).withColumn("sig", minhash_signature(F.col("sh"), n_hashes, hash_family))
+    return _minhash_base(df, id_col, text_col, shingle_k, n_hashes, shingle,
+                         hash_family, exact_prepass=False)[0]
 
 
 def minhash_lsh_pairs_incremental(
@@ -793,34 +800,11 @@ def minhash_lsh_pairs_incremental(
     gives equal signatures, which collide in every band and verify at
     jaccard 1.0.
     """
-    rows_per_band = n_hashes // bands
-    assert rows_per_band * bands == n_hashes, "bands must divide n_hashes"
-    sh_fn = char_shingles if shingle == "char" else word_ngrams
-
-    star = None
-    src = new_docs.select(F.col(id_col).alias("id"),
-                          F.col(text_col).alias("__txt"))
-    if exact_prepass:
-        src, star = _exact_prepass(new_docs, id_col, text_col)
-    nb = src.select(
-        "id", sh_fn(F.col("__txt"), shingle_k).alias("sh"),
-    ).withColumn("sig", minhash_signature(F.col("sh"), n_hashes, hash_family))
+    nb, star = _minhash_base(new_docs, id_col, text_col, shingle_k, n_hashes,
+                             shingle, hash_family, exact_prepass)
     nb = nb.persist()
-
-    def _band_key(b):
-        sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
-        return F.xxhash64(sl) if hash_family == "xxhash64" else sl
-
-    def _banded(frame):
-        return frame.select(
-            "id",
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"), _band_key(b).alias("bh"))
-                for b in range(bands)])).alias("bb"),
-        ).select("id", "bb.band", "bb.bh")
-
-    new_banded = _banded(nb)
-    idx_banded = _banded(index)  # narrow map over the index scan
+    new_banded = _banded(nb, n_hashes, bands, hash_family)
+    idx_banded = _banded(index, n_hashes, bands, hash_family)  # narrow map
 
     cand_nc = (idx_banded.alias("c")
                .join(F.broadcast(new_banded.alias("n")), on=["band", "bh"])
@@ -829,44 +813,18 @@ def minhash_lsh_pairs_incremental(
                        F.greatest(F.col("c.id"), F.col("n.id")).alias("id_b"),
                        F.col("c.id").alias("cid"), F.col("n.id").alias("nid"))
                .dropDuplicates(["id_a", "id_b"]))
-    a = new_banded.alias("a")
-    b = new_banded.alias("b")
-    cand_nn = (a.join(b, on=["band", "bh"])
-               .filter(F.col("a.id") < F.col("b.id"))
-               .select(F.col("a.id").alias("id_a"),
-                       F.col("b.id").alias("id_b"))
-               .dropDuplicates(["id_a", "id_b"]))
-
     idx_sh = index.select("id", "sh")
     new_sh = nb.select("id", "sh")
-    ver_nc = (idx_sh.join(
-                  F.broadcast(cand_nc.select("id_a", "id_b", "cid", "nid")),
-                  idx_sh.id == F.col("cid"))
-              .select("id_a", "id_b", "nid",
-                      F.col("sh").alias("sh_c"))
-              .join(new_sh.withColumnRenamed("id", "nid")
-                          .withColumnRenamed("sh", "sh_n"), "nid")
+    ver_nc = (idx_sh.join(F.broadcast(cand_nc), idx_sh.id == F.col("cid"))
+              .select("id_a", "id_b", "nid", F.col("sh").alias("sh_c"))
+              .join(new_sh.select(F.col("id").alias("nid"),
+                                  F.col("sh").alias("sh_n")), "nid")
               .select("id_a", "id_b", F.col("sh_c").alias("sh_a"),
                       F.col("sh_n").alias("sh_b")))
-    ver_nn = (cand_nn
-              .join(new_sh.withColumnRenamed("id", "id_a")
-                          .withColumnRenamed("sh", "sh_a"), "id_a")
-              .join(new_sh.withColumnRenamed("id", "id_b")
-                          .withColumnRenamed("sh", "sh_b"), "id_b")
-              .select("id_a", "id_b", "sh_a", "sh_b"))
-
+    ver_nn = _with_sets(_band_self_pairs(new_banded), new_sh, "sh")
     both = ver_nc.unionByName(ver_nn)
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (both.withColumn(
-               "jaccard",
-               F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
-           .select("id_a", "id_b", "jaccard")
-           .dropDuplicates(["id_a", "id_b"]))
-    if jaccard_threshold is not None:
-        out = out.filter(F.col("jaccard") >= jaccard_threshold)
-    if star is not None:
-        out = out.unionByName(star.withColumn("jaccard", F.lit(1.0)))
+    out = _verified(both.dropDuplicates(["id_a", "id_b"]),
+                    jaccard_threshold, star)
     from hipipe_spark.operators.core import register_cached
     return register_cached(out, nb)
 

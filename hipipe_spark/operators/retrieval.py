@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hipipe_spark.functions.text import tokens
@@ -207,10 +207,54 @@ def bigram_pmi(docs: DataFrame, id_col: str = "doc_id",
     return joined.select("tok_a", "tok_b", "n_ab", pmi.alias("pmi"))
 
 
-# Sentence-boundary sentinels for the bigram LM: control chars that
+# Sentence-boundary sentinels for the n-gram LMs: control chars that
 # whitespace tokenization can't produce from normal text (and that the
 # DuckDB oracle reproduces as chr(2)/chr(3)).
 BOS, EOS = "\x02", "\x03"
+BIGRAM, TRIGRAM = ("ctx", "nxt"), ("u", "v", "w")
+
+
+def _events(frame: DataFrame, text_col: str, names: tuple[str, ...],
+            id_col: str | None = None) -> DataFrame:
+    """One row per n-gram event of the chain ``BOS^(n-1) w_1 … w_m EOS``
+    over the lowercased tokens, ``n = len(names)``: m+1 events, the
+    columns ``names`` holding each event's n tokens, plus ``id`` when
+    ``id_col`` is given. An empty text yields the single all-padding
+    event; a NULL text keeps its row with null event columns
+    (``explode_outer``), so it scores n_events 0 and null, never a
+    spurious score."""
+    order = len(names)
+    t = tokens(F.lower(F.col(text_col)))
+    p = F.concat(F.array(*[F.lit(BOS)] * (order - 1)), t, F.array(F.lit(EOS)))
+    n = F.size(p) - (order - 1)
+    zipped = F.arrays_zip(*[F.slice(p, i + 1, n).alias(c)
+                            for i, c in enumerate(names)])
+    ids = [F.col(id_col).alias("id")] if id_col is not None else []
+    ev = frame.select(*ids, F.explode_outer(zipped).alias("e"))
+    return ev.select(*(["id"] if ids else []),
+                     *[F.col(f"e.{c}").alias(c) for c in names])
+
+
+def _no_scores(docs: DataFrame, id_col: str, names: tuple[str, str]) -> DataFrame:
+    """The result for an empty (or null-only) fit corpus: n_events 0
+    and null scores for every document."""
+    return docs.select(F.col(id_col).alias("id"),
+                       F.lit(0).cast("long").alias("n_events"),
+                       *[F.lit(None).cast("double").alias(c) for c in names])
+
+
+def _mean_scores(scored: DataFrame, lnp: Column, count_col: str,
+                 names: tuple[str, str], cached: DataFrame) -> DataFrame:
+    """``(id, n_events, <mean ln score>, exp(-mean))`` per document:
+    ``lnp`` averaged over the rows where ``count_col`` is non-null."""
+    scored = scored.withColumn("__lnp", lnp)
+    n_ev = F.count(count_col)
+    mean = F.when(n_ev > 0, F.sum("__lnp") / n_ev)
+    out = scored.groupBy("id").agg(n_ev.cast("long").alias("n_events"),
+                                   mean.alias(names[0]),
+                                   F.exp(-mean).alias(names[1]))
+    from hipipe_spark.operators.core import register_cached
+    return register_cached(out, cached)
 
 
 def bigram_perplexity(docs: DataFrame, id_col: str = "doc_id",
@@ -243,19 +287,7 @@ def bigram_perplexity(docs: DataFrame, id_col: str = "doc_id",
     V. At web scale the count tables are ≪ corpus (they grow with
     vocabulary², capped hard by Heaps' law, not with corpus size)."""
     fit = fit_docs if fit_docs is not None else docs
-
-    def _events(frame: DataFrame, with_id: bool) -> DataFrame:
-        t = tokens(F.lower(F.col(text_col)))
-        cols = [F.col(id_col).alias("id")] if with_id else []
-        zipped = F.arrays_zip(
-            F.concat(F.array(F.lit(BOS)), t).alias("ctx"),
-            F.concat(t, F.array(F.lit(EOS))).alias("nxt"))
-        ev = frame.select(*cols, F.explode_outer(zipped).alias("e"))
-        keep = ["id"] if with_id else []
-        return ev.select(*keep, F.col("e.ctx").alias("ctx"),
-                         F.col("e.nxt").alias("nxt"))
-
-    fit_ev = _events(fit, with_id=False).filter(F.col("ctx").isNotNull())
+    fit_ev = _events(fit, text_col, BIGRAM).filter(F.col("ctx").isNotNull())
     # persist the bigram table: it feeds the context-count derivation,
     # the V scalar, and the scoring join — unpersisted, each would
     # re-scan the fit corpus. Caller owns the release (register_cached
@@ -266,26 +298,15 @@ def bigram_perplexity(docs: DataFrame, id_col: str = "doc_id",
     v = big.select("nxt").distinct().count()
     if v == 0:  # empty/null-only fit corpus: nothing to score against
         big.unpersist()
-        return docs.select(F.col(id_col).alias("id"),
-                           F.lit(0).cast("long").alias("n_events"),
-                           F.lit(None).cast("double").alias("logprob"),
-                           F.lit(None).cast("double").alias("ppl"))
+        return _no_scores(docs, id_col, ("logprob", "ppl"))
     kf = float(k)
     lnp = F.log((F.coalesce(F.col("__cb"), F.lit(0)).cast("double") + kf)
                 / (F.coalesce(F.col("__cc"), F.lit(0)).cast("double")
                    + kf * float(v)))
-    scored = (_events(docs, with_id=True)
+    scored = (_events(docs, text_col, BIGRAM, id_col)
               .join(big, ["ctx", "nxt"], "left")
-              .join(ctxc, ["ctx"], "left")
-              .withColumn("__lnp", lnp))
-    n_ev = F.count("ctx")
-    mean_lp = F.when(n_ev > 0, F.sum("__lnp") / n_ev)
-    out = (scored.groupBy("id")
-           .agg(n_ev.cast("long").alias("n_events"),
-                mean_lp.alias("logprob"),
-                F.exp(-mean_lp).alias("ppl")))
-    from hipipe_spark.operators.core import register_cached
-    return register_cached(out, big)
+              .join(ctxc, ["ctx"], "left"))
+    return _mean_scores(scored, lnp, "ctx", ("logprob", "ppl"), big)
 
 
 def kneser_ney_perplexity(docs: DataFrame, id_col: str = "doc_id",
@@ -318,19 +339,7 @@ def kneser_ney_perplexity(docs: DataFrame, id_col: str = "doc_id",
     equi-joins of the scored event stream against Heaps-bounded count
     tables."""
     fit = fit_docs if fit_docs is not None else docs
-
-    def _events(frame: DataFrame, with_id: bool) -> DataFrame:
-        t = tokens(F.lower(F.col(text_col)))
-        cols = [F.col(id_col).alias("id")] if with_id else []
-        zipped = F.arrays_zip(
-            F.concat(F.array(F.lit(BOS)), t).alias("ctx"),
-            F.concat(t, F.array(F.lit(EOS))).alias("nxt"))
-        ev = frame.select(*cols, F.explode_outer(zipped).alias("e"))
-        keep = ["id"] if with_id else []
-        return ev.select(*keep, F.col("e.ctx").alias("ctx"),
-                         F.col("e.nxt").alias("nxt"))
-
-    fit_ev = _events(fit, with_id=False).filter(F.col("ctx").isNotNull())
+    fit_ev = _events(fit, text_col, BIGRAM).filter(F.col("ctx").isNotNull())
     big = (fit_ev.groupBy("ctx", "nxt")
            .agg(F.count(F.lit(1)).alias("__cb")).persist())
     # context table: total count AND distinct-continuation count, both
@@ -342,10 +351,7 @@ def kneser_ney_perplexity(docs: DataFrame, id_col: str = "doc_id",
     b_types = big.count()
     if b_types == 0:  # empty/null-only fit corpus
         big.unpersist()
-        return docs.select(F.col(id_col).alias("id"),
-                           F.lit(0).cast("long").alias("n_events"),
-                           F.lit(None).cast("double").alias("logprob"),
-                           F.lit(None).cast("double").alias("ppl"))
+        return _no_scores(docs, id_col, ("logprob", "ppl"))
     d = float(discount)
     p_cont = (F.coalesce(F.col("__n1p_left"), F.lit(0)).cast("double")
               / F.lit(float(b_types)))
@@ -355,19 +361,12 @@ def kneser_ney_perplexity(docs: DataFrame, id_col: str = "doc_id",
                 + d * F.col("__n1p_ctx").cast("double") * p_cont) / cc
     # unseen context (held-out scoring only): back off to continuation
     prob = F.when(F.col("__cc").isNotNull(), seen_ctx).otherwise(p_cont)
-    scored = (_events(docs, with_id=True)
+    scored = (_events(docs, text_col, BIGRAM, id_col)
               .join(big, ["ctx", "nxt"], "left")
               .join(ctxc, ["ctx"], "left")
-              .join(cont, ["nxt"], "left")
-              .withColumn("__lnp", F.when(prob > 0, F.log(prob))))
-    n_ev = F.count("ctx")
-    mean_lp = F.when(n_ev > 0, F.sum("__lnp") / n_ev)
-    out = (scored.groupBy("id")
-           .agg(n_ev.cast("long").alias("n_events"),
-                mean_lp.alias("logprob"),
-                F.exp(-mean_lp).alias("ppl")))
-    from hipipe_spark.operators.core import register_cached
-    return register_cached(out, big)
+              .join(cont, ["nxt"], "left"))
+    return _mean_scores(scored, F.when(prob > 0, F.log(prob)), "ctx",
+                        ("logprob", "ppl"), big)
 
 
 def distinctive_terms(docs: DataFrame, id_col: str = "doc_id",
@@ -452,26 +451,7 @@ def stupid_backoff_logprob(docs: DataFrame, id_col: str = "doc_id",
     (default: ``docs`` itself, the self-scoring quality-filter mode).
     """
     fit = fit_docs if fit_docs is not None else docs
-
-    def _events(frame: DataFrame, with_id: bool) -> DataFrame:
-        t = tokens(F.lower(F.col(text_col)))
-        p = F.concat(F.array(F.lit(BOS), F.lit(BOS)), t,
-                     F.array(F.lit(EOS)))
-        n = F.size(p)
-        zipped = F.arrays_zip(
-            F.slice(p, 1, n - 2).alias("u"),
-            F.slice(p, 2, n - 2).alias("v"),
-            F.slice(p, 3, n - 2).alias("w"))
-        cols = [F.col(id_col).alias("id")] if with_id else []
-        # explode_outer + null guard: a NULL-text row keeps its id and
-        # lands with null events -> n_events 0, null scores (matching
-        # bigram_perplexity's contract), never a spurious OOV score.
-        ev = frame.select(*cols, F.explode_outer(zipped).alias("e"))
-        keep = ["id"] if with_id else []
-        return ev.select(*keep, F.col("e.u").alias("u"),
-                         F.col("e.v").alias("v"), F.col("e.w").alias("w"))
-
-    tri = (_events(fit, with_id=False)
+    tri = (_events(fit, text_col, TRIGRAM)
            .filter(F.col("u").isNotNull())
            .groupBy("u", "v", "w").agg(F.count(F.lit(1)).alias("c3"))
            .persist())
@@ -484,10 +464,7 @@ def stupid_backoff_logprob(docs: DataFrame, id_col: str = "doc_id",
     n_total, v_total = (nv[0]["n"], nv[0]["v"]) if nv else (0, 0)
     if not n_total:  # empty fit corpus: nothing to score against
         tri.unpersist()
-        return docs.select(F.col(id_col).alias("id"),
-                           F.lit(0).cast("long").alias("n_events"),
-                           F.lit(None).cast("double").alias("sb_logscore"),
-                           F.lit(None).cast("double").alias("sb_ppl"))
+        return _no_scores(docs, id_col, ("sb_logscore", "sb_ppl"))
     af, kf = float(alpha), float(k)
     base = (F.coalesce(F.col("cu"), F.lit(0)).cast("double") + kf) \
         / (float(n_total) + kf * float(v_total))
@@ -496,22 +473,16 @@ def stupid_backoff_logprob(docs: DataFrame, id_col: str = "doc_id",
           .when(F.coalesce(F.col("c2"), F.lit(0)) > 0,
                 af * F.col("c2").cast("double") / F.col("cc1"))
           .otherwise(af * af * base))
-    scored = (_events(docs, with_id=True)
+    scored = (_events(docs, text_col, TRIGRAM, id_col)
               .join(tri, ["u", "v", "w"], "left")
               .join(ctx3, ["u", "v"], "left")
               .join(bi, ["v", "w"], "left")
               .join(ctx1, ["v"], "left")
-              .join(uni, ["w"], "left")
-              .withColumn("__lns",
-                          F.when(F.col("u").isNotNull(), F.log(s))))
-    n_ev = F.count("__lns")
-    mean_ls = F.when(n_ev > 0, F.sum("__lns") / n_ev)
-    out = (scored.groupBy("id")
-           .agg(n_ev.cast("long").alias("n_events"),
-                mean_ls.alias("sb_logscore"),
-                F.exp(-mean_ls).alias("sb_ppl")))
-    from hipipe_spark.operators.core import register_cached
-    return register_cached(out, tri)
+              .join(uni, ["w"], "left"))
+    # the log-score itself is the count column: a null-text row has a
+    # null u and no score
+    return _mean_scores(scored, F.when(F.col("u").isNotNull(), F.log(s)),
+                        "__lnp", ("sb_logscore", "sb_ppl"), tri)
 
 
 def rrf_fuse(runs: DataFrame, k: int = 60, query: str = "query_id",

@@ -355,7 +355,12 @@ class DecayAgg(Stage):
         return self._attach(df, ordered_window(self.key, self.order))
 
     def _attach(self, df: DataFrame, w: WindowSpec) -> DataFrame:
-        weights = [self._weight(j, w) for j in range(1, self.lookback + 1)]
+        # each weight (one lag(ts, j)) once, in a temporary column read
+        # by the weight sum and every value column's sum
+        tmps = {f"__decay_w{j}": self._weight(j, w)
+                for j in range(1, self.lookback + 1)}
+        df = df.withColumns(tmps)
+        weights = [F.col(t) for t in tmps]
         # left-associated explicit sums pin evaluation order for oracles
         wsum = F.coalesce(weights[0], F.lit(0.0))
         for wt in weights[1:]:
@@ -376,7 +381,7 @@ class DecayAgg(Stage):
                 F.when(F.col("decay_wsum") > 0.0,
                        F.col(f"{c}_decay_sum") / F.col("decay_wsum")),
             )
-        return df
+        return df.drop(*tmps)
 
 
 class CumulativeDistinct(Stage):
@@ -490,14 +495,20 @@ class RollingQuantile(WindowStage):
         self.key, self.order = key, order
 
     def levels(self) -> list[dict[str, Column]]:
+        # level 1: each sorted frame array once (Catalyst keeps every
+        # copy of a repeated window function); the temporary's name
+        # fixes column and frame, so fused quantile stages share it
         w = self.frame.over(self.key, self.order)
+        frame = f"{self.frame.start}_{self.frame.end}".replace("-", "m")
+        arrs = {c: f"__sorted_{c}_{frame}" for c in self.cols}
         out = {}
-        for c in self.cols:
-            arr = F.sort_array(F.collect_list(F.col(c)).over(w))
-            n = F.size(arr)
+        for c, tmp in arrs.items():
+            n = F.size(tmp)
             idx = F.ceil(F.lit(self.q) * n).cast("int")
-            out[f"{c}_q{int(self.q * 100)}"] = F.when(n > 0, F.element_at(arr, idx))
-        return [out]
+            out[f"{c}_q{int(self.q * 100)}"] = F.when(
+                n > 0, F.element_at(tmp, idx))
+        return [{tmp: F.sort_array(F.collect_list(F.col(c)).over(w))
+                 for c, tmp in arrs.items()}, out]
 
 
 def transition_matrix(df: DataFrame, col: str = "role",
@@ -612,7 +623,11 @@ def rolling_quantile(df: DataFrame, value, q: float = 0.5, n: int = 5,
     """
     x = (F.col(value) if isinstance(value, str) else value).cast("double")
     w = (ordered_window(key, order).rowsBetween(-(n - 1), 0))
-    arr = F.array_sort(F.collect_list(x).over(w))
+    # the sorted frame in a temporary column: the window runs once,
+    # not once per reference below
+    tmp = f"__{out}_sorted"
+    df = df.withColumn(tmp, F.array_sort(F.collect_list(x).over(w)))
+    arr = F.col(tmp)
     sz = F.size(arr)
     h = (sz - 1).cast("double") * F.lit(float(q))
     lo = F.floor(h).cast("int")
@@ -622,7 +637,7 @@ def rolling_quantile(df: DataFrame, value, q: float = 0.5, n: int = 5,
     res = F.when(sz > 0, lo_v + frac * (hi_v - lo_v))
     if round_to is not None:
         res = F.round(res, round_to)
-    return df.withColumn(out, res)
+    return df.withColumn(out, res).drop(tmp)
 
 
 def rolling_slope(df: DataFrame, y, n: int = 8,
@@ -1123,17 +1138,22 @@ def ewma_bounded(df: DataFrame, key: str, order: list[str],
     x = F.col(value).cast("double")
     w = Window.partitionBy(key).orderBy(*order)
     decay = 1.0 - alpha
+    # each lag once, in a temporary column read by the three sums
+    lags = {f"__{out_col}_lag{j}": F.lag(x, j).over(w)
+            for j in range(1, window)}
     num = x
     den = F.lit(1.0)
     cnt = F.lit(1)
-    for j in range(1, window):
-        lj = F.lag(x, j).over(w)
+    for j, tmp in enumerate(lags, start=1):
+        lj = F.col(tmp)
         wt = F.lit(decay ** j)
         num = num + F.when(lj.isNotNull(), lj * wt).otherwise(F.lit(0.0))
         den = den + F.when(lj.isNotNull(), wt).otherwise(F.lit(0.0))
         cnt = cnt + F.when(lj.isNotNull(), 1).otherwise(0)
-    return (df.withColumn(out_col, F.round(num / den, ndigits))
-              .withColumn(f"{out_col}_n", cnt.cast("int")))
+    return (df.withColumns(lags)
+              .withColumn(out_col, F.round(num / den, ndigits))
+              .withColumn(f"{out_col}_n", cnt.cast("int"))
+              .drop(*lags))
 
 
 def pacf_table(df: DataFrame, t_col: str, value: str,

@@ -6,7 +6,7 @@ greedy pair merging, a VOCABULARY of candidate pieces with unigram
 log-probabilities is trained by EM and each word is segmented into
 its maximum-likelihood piece sequence by Viterbi.
 
-Scale design — the ``bpe_merge_table_sampled`` / ``pq_train``
+Scale design — the ``bpe_merge_table(sample_cap=...)`` / ``pq_train``
 bounded-training policy, applied again:
 
 1. Training spends exactly TWO cluster jobs at any ``vocab_size``:

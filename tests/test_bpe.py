@@ -69,27 +69,6 @@ def test_segment_guard():
         bpe_segment(None, [("a", "b")] * 65)
 
 
-def test_resume_from_checkpoint(spark, corpus_df, tmp_path):
-    """A rerun with the same SnapshotStore continues from the last
-    committed merge WITHOUT re-reading the corpus: the second call gets
-    a decoy corpus, so matching the reference proves the vocab state
-    came from the snapshot."""
-    from hipipe_spark.checkpoint import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "snaps"))
-    first = bpe_merge_table(corpus_df, k=4, store=store,
-                            checkpoint_every=2)
-    assert first.count() == 4
-    decoy = spark.createDataFrame([("zzz qqq xxx",)], "text string")
-    resumed = bpe_merge_table(decoy, k=8, store=store, checkpoint_every=2)
-    got = [(r["rank"], r["a"], r["b"], r["n"])
-           for r in resumed.orderBy("rank").collect()]
-    assert got == bpe_reference(CORPUS, k=8)
-    # snapshot manifest carries the merge list (resume metadata)
-    snap = store.latest("bpe_words")
-    assert len(store.manifest("bpe_words", snap)["merges"]) == 8
-
-
 def test_local_trainer_matches_reference():
     """_train_merges_local (incremental heap maintenance) is
     bit-identical to the O(k*vocab) recount reference on the same
@@ -105,23 +84,31 @@ def test_local_trainer_matches_reference():
     assert _train_merges_local(dict(words), k=8) == bpe_reference(CORPUS, k=8)
 
 
-def test_sampled_full_cap_matches_exact(corpus_df):
+def test_sample_cap_above_vocab_matches_exact(corpus_df):
     """With sample_cap >= vocab size the sample IS the vocab, so the
-    sampled trainer must emit the exact trainer's table bit-for-bit."""
-    from hipipe_spark.operators.bpe import bpe_merge_table_sampled
-
+    table is the exact one bit-for-bit."""
     got = [(r["rank"], r["a"], r["b"], r["n"])
-           for r in bpe_merge_table_sampled(corpus_df, k=8, sample_cap=10**6)
+           for r in bpe_merge_table(corpus_df, k=8, sample_cap=10**6)
            .orderBy("rank").collect()]
     assert got == bpe_reference(CORPUS, k=8)
 
 
-def test_sampled_k1000_bounded_jobs(spark):
-    """The scale claim (VERDICT r3 #2): k=1000 merges must NOT cost
-    O(k) Spark jobs — the sampled trainer spends one bounded collect
-    regardless of k, then trains driver-side."""
-    from hipipe_spark.operators.bpe import bpe_merge_table_sampled
+def test_sample_cap_bounds_the_vocab(corpus_df):
+    """A cap below the vocab size trains on that many distinct words:
+    every merged pair occurs in the sample, and the run is reproducible."""
+    def table(cap):
+        return [tuple(r) for r in bpe_merge_table(
+            corpus_df, k=4, min_count=1, sample_cap=cap)
+            .orderBy("rank").collect()]
+    got = table(3)
+    assert got == table(3)
+    assert len(got) == 4
+    assert got != table(None)
 
+
+def test_k1000_bounded_jobs(spark):
+    """k=1000 merges do not cost O(k) Spark jobs: the exact trainer
+    collects the distinct-word table once, then trains driver-side."""
     # deterministic synthetic vocab: 1500 distinct 12-char words over a
     # 4-letter alphabet (LCG, no RNG), enough pair mass for 1000 merges
     x, rows = 12345, []
@@ -134,17 +121,16 @@ def test_sampled_k1000_bounded_jobs(spark):
     df = spark.createDataFrame(rows, "text string")
 
     sc = spark.sparkContext
-    sc.setJobGroup("bpe_sampled_probe", "bounded-job assertion")
+    sc.setJobGroup("bpe_k1000_probe", "bounded-job assertion")
     try:
-        out = bpe_merge_table_sampled(df, k=1000, min_count=1,
-                                      sample_cap=10**6)
+        out = bpe_merge_table(df, k=1000, min_count=1, sample_cap=None)
         n_merges = out.count()
-        jobs = sc.statusTracker().getJobIdsForGroup("bpe_sampled_probe")
+        jobs = sc.statusTracker().getJobIdsForGroup("bpe_k1000_probe")
     finally:
         sc.setJobGroup("", "")
     assert n_merges == 1000
-    # one sample collect (limit may split into <=2 jobs) + the count()
-    # of the local merge table; NEVER O(k)
+    # the word-table collect (AQE may split it into several jobs) + the
+    # count() of the local merge table; NEVER O(k)
     assert 1 <= len(jobs) <= 6, jobs
 
 

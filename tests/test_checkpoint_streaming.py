@@ -24,6 +24,42 @@ def test_snapshot_commit_and_lineage(spark, transcripts, tmp_path):
     assert back.count() == man["rows"]
 
 
+def test_snapshot_ids_sort_in_commit_order_across_second_boundary(
+        spark, monkeypatch, tmp_path):
+    """The second commit's clock reads straddle a second boundary: the
+    first read is 1 ns before it, any later read 100 ns after. An id
+    built from two reads names the old second with the new fraction and
+    sorts before the first commit; latest() must still be the second
+    commit."""
+    import time as real_time
+    import types
+
+    import hipipe_spark.checkpoint as ckpt
+
+    s0 = int(real_time.time()) * 1_000_000_000
+    reads = iter(())
+
+    def time_ns():
+        return next(reads)
+
+    def strftime(fmt, t=None):
+        if t is None:
+            t = real_time.localtime(time_ns() // 1_000_000_000)
+        return real_time.strftime(fmt, t)
+
+    monkeypatch.setattr(ckpt, "time", types.SimpleNamespace(
+        time=real_time.time, localtime=real_time.localtime,
+        time_ns=time_ns, strftime=strftime))
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    df = spark.range(3)
+    reads = iter([s0 + 500_000_000, s0 + 500_000_100])
+    first = store.commit(df, "t")
+    reads = iter([s0 + 999_999_999, s0 + 1_000_000_100])
+    second = store.commit(df, "t")
+    assert sorted([second, first]) == [first, second]
+    assert store.latest("t") == second
+
+
 def test_commit_of_empty_frame(spark, transcripts, tmp_path):
     store = SnapshotStore(str(tmp_path / "snaps"))
     snap = store.commit(transcripts.filter("1=0"), "turns")

@@ -77,3 +77,20 @@ def test_incremental_empty_delta_and_disjoint(spark):
         [(200, "zzz yyy xxx www vvv uuu")], "doc_id long, text string")
     out2 = _pairs(minhash_lsh_pairs_incremental(idx, alien, **KW))
     assert out2 == []
+
+
+def test_incremental_against_empty_index_equals_batch(spark):
+    """With nothing indexed every pair is within the delta, so the
+    incremental run is the batch run: same pairs, same jaccard, same
+    star edges, for both shingle kinds and hash families."""
+    docs = _docs(spark)
+    for kw in (KW, dict(shingle_k=4, n_hashes=16, bands=4,
+                        jaccard_threshold=None, hash_family="det")):
+        idx = minhash_index(docs.filter(F.col("doc_id") < 0),
+                            shingle_k=kw["shingle_k"],
+                            n_hashes=kw["n_hashes"],
+                            shingle=kw.get("shingle", "char"),
+                            hash_family=kw.get("hash_family", "xxhash64"))
+        inc = _pairs(minhash_lsh_pairs_incremental(idx, docs, **kw))
+        assert inc == _pairs(minhash_lsh_pairs(docs, **kw))
+        assert (0, 104, 1.0) in inc  # 101 and 104 repeat doc 0

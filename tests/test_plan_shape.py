@@ -68,3 +68,52 @@ def test_featurize_exchanges_fact_side_once(scanned):
     assert sum(r >= turns.count() for r in _exchanged_rows(out)) == 1
     assert _checksum(out) == _checksum(
         featurize(turns, profiles, asof_strategy="union"))
+
+
+def _window_functions(df):
+    """``name(input, ...)`` text of every window function computed by
+    a Window exec of ``df``'s final plan (spec stripped); run an action
+    first."""
+    out = []
+    for node in _final_nodes(df):
+        if node.nodeName() == "Window":
+            we = node.windowExpression()
+            out += [we.apply(i).toString().split(" windowspecdefinition")[0]
+                    for i in range(we.size())]
+    return out
+
+
+def test_each_window_function_once(scanned):
+    """Catalyst keeps every copy of a repeated window function, so each
+    operator computes it once into a temporary: one sorted frame per
+    quantile column (shared by fused stages on the same frame), one
+    lag per column and offset."""
+    import re
+    from collections import Counter
+
+    from hipipe_spark.operators.temporal import (
+        DecayAgg, RollingQuantile, ewma_bounded, rolling_quantile)
+    from hipipe_spark.plans.pipeline import Pipeline
+
+    turns, _ = scanned
+    turns = turns.withColumn("text_len", F.length("text").cast("int"))
+
+    def funcs(df):
+        df.collect()
+        return Counter(re.sub(r"#\d+", "", f) for f in _window_functions(df))
+
+    fused = Pipeline([RollingQuantile(["text_len", "turn_idx"], q=0.5),
+                      RollingQuantile(["text_len", "turn_idx"], q=0.9)])
+    assert funcs(fused(turns)) == {"collect_list(text_len, 0, 0)": 1,
+                                   "collect_list(turn_idx, 0, 0)": 1}
+    rq = funcs(rolling_quantile(turns, "text_len", n=5))
+    assert [f.split("(")[0] for f in rq.elements()] == ["collect_list"]
+    ewma = funcs(ewma_bounded(turns, "conv_id", ["turn_idx"], "text_len",
+                              window=8))
+    assert len(ewma) == 7 and set(ewma.values()) == {1}, ewma
+    for mode in ("time", "rows"):
+        got = funcs(DecayAgg(["text_len", "turn_idx"], lookback=4,
+                             mode=mode).apply(turns))
+        assert got == {f"lag({c}, -{j}, null)": 1
+                       for c in ("ts", "text_len", "turn_idx")
+                       for j in range(1, 5)}, got
