@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hipipe_spark.functions.tails import chi2_sf
+
 
 def uniform_bucket(col: Column, lo: float, hi: float, n_buckets: int) -> Column:
     """Bucket index in [0, n_buckets-1]: uniform width over [lo, hi),
@@ -44,23 +46,39 @@ def psi_term(p_a: Column, p_b: Column) -> Column:
     return (p_a - p_b) * F.log(p_a / p_b)
 
 
+def _two_sample_counts(df_a: DataFrame, df_b: DataFrame, key: Column,
+                       name: str) -> DataFrame:
+    """``name, n_a, n_b``: rows of each side per distinct ``key``. The
+    sides are tagged and unioned into ONE aggregate, so each
+    partial-aggregates map-side to its distinct keys and the only
+    exchange is on the key."""
+    tagged = (
+        df_a.select(key.alias(name), F.lit(1).alias("is_a"),
+                    F.lit(0).alias("is_b"))
+        .unionByName(df_b.select(key.alias(name), F.lit(0).alias("is_a"),
+                                 F.lit(1).alias("is_b"))))
+    return tagged.groupBy(name).agg(
+        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
+
+
+def _value_counts(df_a: DataFrame, df_b: DataFrame,
+                  col: Column | str) -> DataFrame:
+    """:func:`_two_sample_counts` per distinct double ``value`` of
+    ``col``: the merged-support table of the eCDF statistics."""
+    c = F.col(col) if isinstance(col, str) else col
+    return _two_sample_counts(df_a, df_b, c.cast("double"), "value")
+
+
 def _bucket_shares(df_a: DataFrame, df_b: DataFrame, col: Column | str,
                    lo: float, hi: float, n_buckets: int,
                    smooth: float) -> DataFrame:
     """``bucket, n_a, n_b, p_a, p_b`` for every bucket (missing buckets
-    with zero counts), proportions from :func:`smoothed_share`. Each
-    side aggregates map-side to ≤ n_buckets rows, ONE exchange on the
-    bucket key, then a broadcast of the two scalar totals."""
+    with zero counts), proportions from :func:`smoothed_share`: the
+    :func:`_two_sample_counts` of the buckets, then a broadcast of the
+    two scalar totals."""
     c = F.col(col) if isinstance(col, str) else col
-    tagged = (
-        df_a.select(uniform_bucket(c, lo, hi, n_buckets).alias("bucket"),
-                    F.lit(1).alias("is_a"), F.lit(0).alias("is_b"))
-        .unionByName(
-            df_b.select(uniform_bucket(c, lo, hi, n_buckets).alias("bucket"),
-                        F.lit(0).alias("is_a"), F.lit(1).alias("is_b")))
-    )
-    counts = tagged.groupBy("bucket").agg(
-        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
+    counts = _two_sample_counts(
+        df_a, df_b, uniform_bucket(c, lo, hi, n_buckets), "bucket")
     spark = df_a.sparkSession
     all_buckets = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
     counts = (
@@ -122,21 +140,12 @@ def ks_table(df_a: DataFrame, df_b: DataFrame, col: Column | str) -> DataFrame:
     continuous features pre-bucket with :func:`uniform_bucket` — the KS
     of the binned distributions lower-bounds the continuous statistic.
 
-    Plan shape: each side partial-aggregates to its distinct values,
-    ONE exchange on the value key, then cumulative sums over the
+    Plan shape: :func:`_value_counts`, then cumulative sums over the
     post-aggregation table. The ordered window has no partition key,
     which is fine precisely because the table is dimension-sized
     (|distinct values|, not input rows) by the time it runs — the same
     contract as :func:`psi_table`'s bucket table."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    tagged = (
-        df_a.select(c.alias("value"), F.lit(1).alias("is_a"),
-                    F.lit(0).alias("is_b"))
-        .unionByName(df_b.select(c.alias("value"), F.lit(0).alias("is_a"),
-                                 F.lit(1).alias("is_b")))
-    )
-    counts = tagged.groupBy("value").agg(
-        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
+    counts = _value_counts(df_a, df_b, col)
     # Totals as unpartitioned window sums over the post-aggregation
     # table, NOT a separate .agg() branch: a second aggregate would
     # re-execute the whole input lineage (Catalyst does not share
@@ -307,21 +316,12 @@ def wasserstein_table(df_a: DataFrame, df_b: DataFrame,
     PSI/KS/JSD only answer "it moved"). Exact on the merged discrete
     support: ``Σ |F_a(vᵢ) − F_b(vᵢ)| · (vᵢ₊₁ − vᵢ)``.
 
-    Same plan contract as :func:`ks_table`: both sides partial-
-    aggregate to distinct values, ONE exchange on the value key,
-    eCDF gaps + support gaps via windows on the dimension-sized
-    merged-support table, then one fold. Output: one row —
-    ``n_a, n_b (bigints), n_support (bigint), w1 (double rounded
-    6)``.
+    Plan: :func:`_value_counts`, eCDF gaps + support gaps via windows
+    on that dimension-sized merged-support table, then one fold.
+    Output: one row — ``n_a, n_b (bigints), n_support (bigint), w1
+    (double rounded 6)``.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    tagged = (
-        df_a.select(c.alias("value"), F.lit(1).alias("is_a"),
-                    F.lit(0).alias("is_b"))
-        .unionByName(df_b.select(c.alias("value"), F.lit(0).alias("is_a"),
-                                 F.lit(1).alias("is_b"))))
-    counts = tagged.groupBy("value").agg(
-        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
+    counts = _value_counts(df_a, df_b, col)
     wall = Window.partitionBy()
     wcum = Window.orderBy("value").rowsBetween(
         Window.unboundedPreceding, 0)
@@ -343,10 +343,8 @@ def wasserstein_table(df_a: DataFrame, df_b: DataFrame,
 
 def chi2_test(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Pearson χ² test of independence between two categorical
-    columns, with dof and the Wilson–Hilferty-approximated p (Bowling
-    Φ — the same closed form the oracle writes; no χ² CDF in either
-    engine). The inferential companion to :func:`cramers_v_table`
-    (which reports effect size only).
+    columns, with dof and the ``chi2_sf`` p. The inferential companion
+    to :func:`cramers_v_table` (which reports effect size only).
 
     ONE hash aggregate to the contingency cells (class²-sized), then
     marginal joins on the category-dimension frames. Output: one row
@@ -373,11 +371,7 @@ def chi2_test(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
                    F.first("ka").alias("ka"),
                    F.first("kb").alias("kb"))
     dof = (F.col("ka") - 1) * (F.col("kb") - 1)
-    k = dof.cast("double")
-    z = ((F.pow(F.col("chi2") / k, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * k)))
-         / F.sqrt(2.0 / (9.0 * k)))
-    p = 1.0 / (1.0 + F.exp(0.07056 * z * z * z + 1.5976 * z))
+    p = chi2_sf(F.col("chi2"), dof.cast("double"))
     return agg.select(
         F.col("nt").cast("bigint").alias("n"),
         F.round(F.col("chi2"), 6).alias("chi2"),
@@ -405,29 +399,24 @@ def ad_table(df_a: DataFrame, df_b: DataFrame,
     ``(value, n_a, n_b, contrib)`` with ``a2`` (the total) repeated
     on every row, mirroring ks_table's output contract.
 
-    Plan shape identical to ks_table: each side partial-aggregates to
-    its distinct values, ONE exchange on the value key, cumulative
-    windows over the post-aggregation (dimension-sized) table — the
-    unpartitioned windows are safe by the same contract. Exact for
-    discrete domains; pre-bucket continuous features with
+    Plan: :func:`_value_counts`, then each total and cumulative count
+    computed once by a window over that dimension-sized table — the
+    unpartitioned windows are safe by :func:`ks_table`'s contract.
+    Exact for discrete domains; pre-bucket continuous features with
     :func:`uniform_bucket`.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    tagged = (
-        df_a.select(c.alias("value"), F.lit(1).alias("is_a"),
-                    F.lit(0).alias("is_b"))
-        .unionByName(df_b.select(c.alias("value"), F.lit(0).alias("is_a"),
-                                 F.lit(1).alias("is_b")))
-    )
-    counts = tagged.groupBy("value").agg(
-        F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b"))
     wall = Window.partitionBy()
     wcum = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-    na, nb = F.sum("n_a").over(wall), F.sum("n_b").over(wall)
+    counts = _value_counts(df_a, df_b, col).select(
+        "value", "n_a", "n_b",
+        F.sum("n_a").over(wall).alias("__na"),
+        F.sum("n_b").over(wall).alias("__nb"),
+        F.sum("n_a").over(wcum).alias("__ma"),
+        F.sum("n_b").over(wcum).alias("__mb"))
+    na, nb, ma = F.col("__na"), F.col("__nb"), F.col("__ma")
     big_n = na + nb
     l = F.col("n_a") + F.col("n_b")
-    h = (F.sum("n_a").over(wcum) + F.sum("n_b").over(wcum))
-    ma = F.sum("n_a").over(wcum)
+    h = ma + F.col("__mb")
     contrib = F.when(
         h < big_n,
         l * F.pow(big_n * ma - na * h, F.lit(2.0))
@@ -506,7 +495,7 @@ def srm_check(df: DataFrame, segment: str, arm: str,
     trustworthy experiment pipeline checks: do the observed arm
     counts match the intended allocation? Pearson chi-square against
     the ``expected`` proportions (e.g. ``{"a": 0.5, "b": 0.5}``)
-    with the Wilson–Hilferty tail through the shared logistic Φ.
+    with the ``chi2_sf`` tail.
     One row per segment: ``n, chi2, dof, p_value, srm`` (the α=0.001
     verdict — SRM alarms use a conservative threshold because a true
     mismatch invalidates the whole experiment).
@@ -531,17 +520,11 @@ def srm_check(df: DataFrame, segment: str, arm: str,
         e = n * float(expected[a])
         term = (F.col(f"__o_{i}") - e) * (F.col(f"__o_{i}") - e) / e
         chi2 = term if chi2 is None else chi2 + term
-    dof = float(len(arms) - 1)
-    import math
-    z = F.when(n > 0,
-               (F.pow(chi2 / dof, F.lit(1.0 / 3.0))
-                - (1.0 - 2.0 / (9.0 * dof)))
-               / math.sqrt(2.0 / (9.0 * dof)))
-    p = F.when(z.isNotNull(),
-               1.0 / (1.0 + F.exp(0.07056 * z * z * z + 1.5976 * z)))
+    dof = len(arms) - 1
+    p = F.when(n > 0, chi2_sf(chi2, float(dof)))
     return agg.select(
         segment, n.cast("bigint").alias("n"),
         F.round(chi2, ndigits).alias("chi2"),
-        F.lit(int(dof)).cast("int").alias("dof"),
+        F.lit(dof).cast("int").alias("dof"),
         F.round(p, ndigits).alias("p_value"),
         (p < 0.001).alias("srm"))

@@ -11,21 +11,28 @@ layer (reference ``stream/transform.hpp``, ``core/dataframe.hpp``);
 these are the downstream consumers its columns feed, re-expressed as
 single-pass Spark aggregations.
 
-Design rules shared by every operator here:
+Design rules shared by every operator here, each written once as a
+helper:
 
 - **Aggregate-first.** Tests reduce to per-segment sufficient
   statistics (counts, sums, sums of squares, rank sums) computed in
   ONE map-side-combinable ``groupBy`` — never a per-row Python path,
   never a collect. The post-aggregate arithmetic runs on a
   segment-dimension frame (thousands of rows at most at 100 TB).
-- **Closed-form normal CDF.** Spark and DuckDB both lack ``erf``, so
-  p-values use the Bowling et al. (2009) logistic approximation
-  ``Φ(z) ≈ 1/(1+exp(−(0.07056 z³ + 1.5976 z)))`` (|error| < 1.4e-4),
-  written with IDENTICAL arithmetic in the oracle SQL — the driver
-  hash-compare is exact, not tolerance-based.
+  :func:`_arm_sums` builds an arm's or cell's ``(n, Σx, Σx²)`` as
+  conditional sums, :func:`_sample_var` turns sums into a sample
+  variance, :func:`_midranks` ranks a value-count table and
+  :func:`_oneway` decomposes one-way sums of squares.
+- **Closed-form tails.** Spark and DuckDB both lack ``erf``, so
+  p-values come from :mod:`hipipe_spark.functions.tails` (the Bowling
+  logistic Φ and the Wilson–Hilferty χ² tail), written with IDENTICAL
+  arithmetic in the oracle SQL — the driver hash-compare is exact, not
+  tolerance-based.
 - **Rounded handoffs.** Any coefficient reused downstream (CUPED's
-  θ) is rounded BEFORE reuse so both engines adjust with the same
-  constant — float noise cannot compound across stages.
+  θ, a group mean used to centre the data) is rounded BEFORE reuse so
+  both engines adjust with the same constant — float noise cannot
+  compound across stages. :func:`_centered` is the rounded-mean
+  centering step.
 """
 
 from __future__ import annotations
@@ -35,14 +42,96 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hipipe_spark.functions.tails import (chi2_sf, norm_sf, norm_sf2,
+                                          wilson_hilferty_z)
 
-def norm_sf2(z: Column) -> Column:
-    """Two-sided normal tail ``2·(1 − Φ(|z|))`` via the Bowling
-    logistic approximation (see module docstring). |error| < 2.8e-4
-    — ranking/thresholding-grade, and reproducible bit-for-bit in any
-    SQL engine (the point: the oracle writes the same expression)."""
-    a = F.abs(z)
-    return 2.0 / (1.0 + F.exp(0.07056 * a * a * a + 1.5976 * a))
+
+def _arm_sums(cond: Column, x: Column, tag: str) -> list[Column]:
+    """``n_<tag>, s_<tag>, q_<tag>``: count, Σx and Σx² of the rows
+    where ``cond`` holds, as conditional sums that fold into one
+    map-side-combinable aggregate with the other arms or cells."""
+    return [F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{tag}"),
+            F.sum(F.when(cond, x).otherwise(0.0)).alias(f"s_{tag}"),
+            F.sum(F.when(cond, x * x).otherwise(0.0)).alias(f"q_{tag}")]
+
+
+def _sample_var(n: Column, s: Column, q: Column) -> Column:
+    """Sample variance ``(Σx² − (Σx)²/n)/(n − 1)`` from ``n, Σx, Σx²``."""
+    return (q - s * s / n) / (n - 1)
+
+
+def _two_arms(df: DataFrame, segment: str, x: Column, arm: str,
+              arm_a: str, arm_b: str) -> DataFrame:
+    """Per-``segment`` :func:`_arm_sums` of ``x`` for arms ``a`` and
+    ``b`` (rows whose ``arm`` is ``arm_a`` / ``arm_b``) in ONE
+    aggregate: one shuffle on the segment key, no second pass."""
+    in_a, in_b = F.col(arm) == arm_a, F.col(arm) == arm_b
+    return (df.filter(in_a | in_b).groupBy(segment)
+              .agg(*_arm_sums(in_a, x, "a"), *_arm_sums(in_b, x, "b")))
+
+
+def _arm_moments(tag: str) -> tuple[Column, Column, Column]:
+    """``n, mean, sample variance`` of arm or cell ``tag`` from its
+    :func:`_arm_sums` columns."""
+    n, s = F.col(f"n_{tag}"), F.col(f"s_{tag}")
+    return n, s / n, _sample_var(n, s, F.col(f"q_{tag}"))
+
+
+def _centered(df: DataFrame, keys: str | list[str], x: Column,
+              stat=F.avg) -> DataFrame:
+    """``df`` plus ``__mu``, the per-``keys`` ``stat`` (mean) of ``x``
+    ROUNDED to 6 dp and broadcast-joined back, and ``__d = x − __mu``.
+    Power sums of ``__d`` stay at deviation scale: raw
+    ``Σx² − (Σx)²/n`` keeps ~3 safe decimal digits when 1e13-scale
+    terms cancel to 1e9."""
+    mu = df.groupBy(keys).agg(F.round(stat(x), 6).alias("__mu"))
+    return (df.join(F.broadcast(mu), keys)
+              .withColumn("__d", x - F.col("__mu")))
+
+
+def _oneway(df: DataFrame, segment: str, group: str, value: str,
+            *extra: Column) -> DataFrame:
+    """Per-``segment`` one-way decomposition across the levels of
+    ``group``: ``k, n, ssb, ssw`` (plus ``extra`` aggregates over the
+    per-group ``ng, sg, qg`` frame). Centred by :func:`_centered`, then
+    ONE aggregate to per-(segment, group) ``(n_g, Σd, Σd²)`` and a
+    segment-level reduce of that group-dimension frame::
+
+        SS_within  = Σ_g (Σd² − (Σd)²/n_g)
+        SS_between = Σ_g (Σd)²/n_g − (Σ_g Σd)²/N
+    """
+    x = F.col("__d")
+    g = (_centered(df, segment, F.col(value).cast("double"))
+         .groupBy(segment, group).agg(
+             F.count(F.lit(1)).cast("double").alias("ng"),
+             F.sum(x).alias("sg"), F.sum(x * x).alias("qg")))
+    agg = g.groupBy(segment).agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum("ng").alias("n"),
+        F.sum("sg").alias("s"),
+        F.sum(F.col("sg") * F.col("sg") / F.col("ng")).alias("sb_raw"),
+        F.sum(F.col("qg") - F.col("sg") * F.col("sg") / F.col("ng"))
+         .alias("ssw"),
+        *extra)
+    return agg.withColumn(
+        "ssb", F.col("sb_raw") - F.col("s") * F.col("s") / F.col("n"))
+
+
+def _midranks(vc: DataFrame, segment: str) -> DataFrame:
+    """Value-count table ``(segment, __v, __t, …)`` plus ``__r``, the
+    midrank of each distinct value: the ranks below it plus
+    ``(t+1)/2``, from a cumulative window over the value-dimension
+    frame — never over raw rows."""
+    w = (Window.partitionBy(segment).orderBy("__v")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return vc.withColumn(
+        "__r", F.sum("__t").over(w) - F.col("__t") + (F.col("__t") + 1) / 2)
+
+
+def _tie_sum() -> Column:
+    """``Σ(t³ − t)`` over ``__t``: the rank tests' tie correction."""
+    t = F.col("__t")
+    return F.sum(t * t * t - t)
 
 
 def welch_ttest(df: DataFrame, segment: str, value: str, arm: str,
@@ -53,40 +142,14 @@ def welch_ttest(df: DataFrame, segment: str, value: str, arm: str,
     approximation to the t tail — large-n experimentation regime;
     null when either arm has n < 2 or both sample variances are 0).
 
-    Plan: a single hash aggregate per segment computing both arms'
-    (n, Σx, Σx²) via conditional sums — map-side combinable, one
-    shuffle on the segment key, post-arithmetic on the
-    segment-dimension result. At 10^12 rows this is the same cost as
-    any groupBy; there is no second pass.
-
-    Sample variance uses the sum-of-squares identity
-    ``(Σx² − (Σx)²/n)/(n−1)``; outputs are rounded so the identical
-    oracle expression hashes equal despite summation-order noise.
+    Plan: :func:`_two_arms`, then arithmetic on the segment-dimension
+    result. Outputs are rounded so the identical oracle expression
+    hashes equal despite summation-order noise.
     """
-    x = F.col(value).cast("double")
-    in_a = F.col(arm) == arm_a
-    in_b = F.col(arm) == arm_b
-
-    def _side(cond, tag):
-        return [
-            F.sum(F.when(cond, 1).otherwise(0)).cast("bigint").alias(f"n_{tag}"),
-            F.sum(F.when(cond, x).otherwise(0.0)).alias(f"s_{tag}"),
-            F.sum(F.when(cond, x * x).otherwise(0.0)).alias(f"q_{tag}"),
-        ]
-
-    agg = (df.filter(in_a | in_b)
-             .groupBy(segment)
-             .agg(*_side(in_a, "a"), *_side(in_b, "b")))
-
-    def _stats(tag):
-        n = F.col(f"n_{tag}")
-        mean = F.col(f"s_{tag}") / n
-        var = (F.col(f"q_{tag}") - F.col(f"s_{tag}") * F.col(f"s_{tag}") / n) \
-            / (n - 1)
-        return n, mean, var
-
-    n_a, m_a, v_a = _stats("a")
-    n_b, m_b, v_b = _stats("b")
+    agg = _two_arms(df, segment, F.col(value).cast("double"), arm,
+                    arm_a, arm_b)
+    n_a, m_a, v_a = _arm_moments("a")
+    n_b, m_b, v_b = _arm_moments("b")
     ok = (n_a >= 2) & (n_b >= 2)
     sa, sb = v_a / n_a, v_b / n_b
     se2 = sa + sb
@@ -149,13 +212,11 @@ def mann_whitney(df: DataFrame, segment: str, value: str, arm: str,
     ``σ² = n_a·n_b/12 · (n+1 − Σ(t³−t)/(n(n−1)))`` (no continuity
     correction — documented choice so the oracle is exact).
 
-    Plan: ranks are computed on the (segment, value)-AGGREGATED table,
-    not the raw rows — one groupBy producing per-distinct-value counts
-    (total and arm-a), then a cumulative-count window over that
-    value-dimension frame yields the average rank of every tie group
-    in closed form (``cum_before + (t+1)/2``). Rank sums and the tie
-    term then reduce in a second segment-level aggregate. Two shuffles
-    total, both on aggregated frames; the raw rows are touched once.
+    Plan: one groupBy to per-(segment, value) counts (total and
+    arm-a), :func:`_midranks` over that value-dimension frame, then
+    rank sums and the tie term in a second segment-level aggregate.
+    Two shuffles total, both on aggregated frames; the raw rows are
+    touched once.
     """
     x = F.col(value).cast("double")
     in_a, in_b = F.col(arm) == arm_a, F.col(arm) == arm_b
@@ -164,17 +225,11 @@ def mann_whitney(df: DataFrame, segment: str, value: str, arm: str,
             .agg(F.count(F.lit(1)).cast("double").alias("__t"),
                  F.sum(F.when(in_a, 1).otherwise(0))
                   .cast("double").alias("__ta")))
-    w = (Window.partitionBy(segment).orderBy("__v")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum_before = F.sum("__t").over(w) - F.col("__t")
-    avg_rank = cum_before + (F.col("__t") + 1) / 2
-    ranked = vc.withColumn("__r", avg_rank)
-    agg = ranked.groupBy(segment).agg(
+    agg = _midranks(vc, segment).groupBy(segment).agg(
         F.sum("__ta").alias("na"),
         F.sum(F.col("__t") - F.col("__ta")).alias("nb"),
         F.sum(F.col("__ta") * F.col("__r")).alias("ra"),
-        F.sum(F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t"))
-         .alias("tie"),
+        _tie_sum().alias("tie"),
     )
     na, nb = F.col("na"), F.col("nb")
     n = na + nb
@@ -274,10 +329,10 @@ def cuped(df: DataFrame, group: str, metric: str, covariate: str,
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(F.avg(y), ndigits).alias("mean_raw"),
         F.round(F.avg(ya), ndigits).alias("mean_cuped"),
-        ((F.sum(y * y) - F.sum(y) * F.sum(y) / F.count(F.lit(1)))
-         / (F.count(F.lit(1)) - 1)).alias("__vr"),
-        ((F.sum(ya * ya) - F.sum(ya) * F.sum(ya) / F.count(F.lit(1)))
-         / (F.count(F.lit(1)) - 1)).alias("__va"),
+        _sample_var(F.count(F.lit(1)), F.sum(y), F.sum(y * y))
+         .alias("__vr"),
+        _sample_var(F.count(F.lit(1)), F.sum(ya), F.sum(ya * ya))
+         .alias("__va"),
     )
     from hipipe_spark.functions.rounding import round_norm
     # var_reduction_pct can round to zero from below when the
@@ -504,11 +559,11 @@ def theil_sen(df: DataFrame, group: str, t_col: str,
 def diff_in_diff(df: DataFrame, segment: str, treat: str, post: str,
                  value: str) -> DataFrame:
     """Per-``segment`` difference-in-differences estimator from ONE
-    conditional-sum aggregate: the four cell means (treat×post), the
-    DiD effect ``(T,post − T,pre) − (C,post − C,pre)``, its standard
-    error ``sqrt(Σ s²ᵢ/nᵢ)`` over the four cells (the unequal-variance
-    Welch composition), z-statistic, and the Bowling-approximated
-    two-sided p — the identical expression the oracle writes.
+    aggregate of the four treat×post cells' :func:`_arm_sums`: the cell
+    means, the DiD effect ``(T,post − T,pre) − (C,post − C,pre)``, its
+    standard error ``sqrt(Σ s²ᵢ/nᵢ)`` over the four cells (the
+    unequal-variance Welch composition), z-statistic, and the
+    two-sided ``norm_sf2`` p.
 
     ``treat``/``post`` are boolean-ish columns (cast to int).
     Output: ``segment, n (bigint), mean_t_pre, mean_t_post,
@@ -521,37 +576,25 @@ def diff_in_diff(df: DataFrame, segment: str, treat: str, post: str,
     v = F.col(value).cast("double")
     cells = {"tpre": (t == 1) & (p == 0), "tpost": (t == 1) & (p == 1),
              "cpre": (t == 0) & (p == 0), "cpost": (t == 0) & (p == 1)}
-    aggs = []
-    for tag, cond in cells.items():
-        aggs += [F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{tag}"),
-                 F.sum(F.when(cond, v).otherwise(0.0)).alias(f"s_{tag}"),
-                 F.sum(F.when(cond, v * v).otherwise(0.0))
-                  .alias(f"q_{tag}")]
-    g = df.groupBy(F.col(segment)).agg(*aggs)
-
-    def mean(tag):
-        return F.col(f"s_{tag}") / F.col(f"n_{tag}")
-
-    def sem2(tag):
-        n = F.col(f"n_{tag}")
-        return ((F.col(f"q_{tag}") - F.col(f"s_{tag}")
-                 * F.col(f"s_{tag}") / n) / (n - 1) / n)
-
-    did = (mean("tpost") - mean("tpre")) - (mean("cpost") - mean("cpre"))
-    var = sum((sem2(tag) for tag in cells), F.lit(0.0))
-    ok = (F.lit(True))
-    for tag in cells:
-        ok = ok & (F.col(f"n_{tag}") >= 2)
+    g = df.groupBy(F.col(segment)).agg(
+        *[c for tag, cond in cells.items() for c in _arm_sums(cond, v, tag)])
+    mom = {tag: _arm_moments(tag) for tag in cells}   # (n, mean, var)
+    mean = {tag: mu for tag, (_, mu, _) in mom.items()}
+    did = (mean["tpost"] - mean["tpre"]) - (mean["cpost"] - mean["cpre"])
+    var = sum((s2 / n for n, _, s2 in mom.values()), F.lit(0.0))
+    ok = F.lit(True)
+    for n, _, _ in mom.values():
+        ok = ok & (n >= 2)
     ok = ok & (var > 0)
     z = did / F.sqrt(var)
-    n_tot = sum((F.col(f"n_{tag}") for tag in cells), F.lit(0))
+    n_tot = sum((n for n, _, _ in mom.values()), F.lit(0))
     return (g.select(
         F.col(segment),
         n_tot.cast("bigint").alias("n"),
-        F.round(mean("tpre"), 6).alias("mean_t_pre"),
-        F.round(mean("tpost"), 6).alias("mean_t_post"),
-        F.round(mean("cpre"), 6).alias("mean_c_pre"),
-        F.round(mean("cpost"), 6).alias("mean_c_post"),
+        F.round(mean["tpre"], 6).alias("mean_t_pre"),
+        F.round(mean["tpost"], 6).alias("mean_t_post"),
+        F.round(mean["cpre"], 6).alias("mean_c_pre"),
+        F.round(mean["cpost"], 6).alias("mean_c_post"),
         F.round(did, 6).alias("did"),
         F.round(F.when(ok, F.sqrt(var)), 6).alias("se"),
         F.round(F.when(ok, z), 6).alias("z_stat"),
@@ -620,8 +663,7 @@ def mde_report(df: DataFrame, segment: str, value: str,
         F.sum(x * x).alias("q"))
     n = F.col("n").cast("double")
     mean = F.col("s") / n
-    var = (F.col("q") - F.col("s") * F.col("s") / n) / (n - 1)
-    sd = F.sqrt(var)
+    sd = F.sqrt(_sample_var(n, F.col("s"), F.col("q")))
     mde = (float(z_alpha_2) + float(z_power)) * sd * F.sqrt(4.0 / n)
     ok = F.col("n") >= 2
     return (agg.select(
@@ -658,7 +700,7 @@ def burstiness(df: DataFrame, key: str, ts_col: str,
         F.sum(F.col("__g") * F.col("__g")).alias("q"))
     n = F.col("n_gaps").cast("double")
     mu = F.col("s") / n
-    sd = F.sqrt((F.col("q") - F.col("s") * F.col("s") / n) / (n - 1))
+    sd = F.sqrt(_sample_var(n, F.col("s"), F.col("q")))
     ok = (F.col("n_gaps") >= 2) & (mu > 0)
     return (agg.select(
         F.col(key),
@@ -781,21 +823,15 @@ def prop_ztest(df: DataFrame, segment: str, flag: str, arm: str,
     """Two-sample pooled proportion z-test per segment — the binary-
     metric twin of :func:`welch_ttest` (conversion / click-through
     rates): ``z = (p̂_a − p̂_b) / √(p̂(1−p̂)(1/n_a + 1/n_b))`` with
-    the pooled p̂, Bowling two-sided p. ONE conditional-sum
+    the pooled p̂, ``norm_sf2`` two-sided p. ONE :func:`_two_arms`
     aggregate; inference nulls when either arm is empty or the
     pooled rate is degenerate (0 or 1).
 
     Output: ``segment, n_a, n_b (bigints), rate_a, rate_b, diff,
     z_stat, p_value (doubles rounded 6)``, ordered by segment.
     """
-    x = F.col(flag).cast("int").cast("double")
-    in_a = F.col(arm) == arm_a
-    in_b = F.col(arm) == arm_b
-    agg = (df.filter(in_a | in_b).groupBy(segment).agg(
-        F.sum(F.when(in_a, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(in_a, x).otherwise(0.0)).alias("s_a"),
-        F.sum(F.when(in_b, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(in_b, x).otherwise(0.0)).alias("s_b")))
+    agg = _two_arms(df, segment, F.col(flag).cast("int").cast("double"),
+                    arm, arm_a, arm_b)
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     pa, pb = F.col("s_a") / na, F.col("s_b") / nb
     pool = (F.col("s_a") + F.col("s_b")) / (na + nb)
@@ -1000,7 +1036,7 @@ def logrank_test(df: DataFrame, duration: str, event: str, is_a,
     :func:`kaplan_meier` shape), then a single-row aggregate. E and V
     are rounded (9 dp) before the z arithmetic — the rounded-handoff
     rule — so the oracle's different summation order cannot flip the
-    statistic. p-value via the Bowling logistic Φ (module docstring).
+    statistic. p-value via ``norm_sf2``.
 
     Output (one row): ``n_a, n_b, n_events, observed_a, expected_a,
     var_a, z, p_value``.
@@ -1052,43 +1088,13 @@ def anova_oneway(df: DataFrame, segment: str, group: str, value: str,
     DuckDB has a closed-form incomplete beta, and the statistic plus
     effect size is what a feature platform thresholds on).
 
-    Plan: pass 1 aggregates per-SEGMENT grand means, ROUNDED to 6 dp
-    (the module's rounded-handoff rule) and broadcast-joined back to
-    center the metric — shifting leaves every sum of squares
-    invariant but keeps all power-sum terms at DEVIATION scale, so
-    the 6-dp output rounding is immune to the catastrophic
-    cancellation that raw ``Σx² − (Σx)²/n`` exhibits when the metric
-    mean dwarfs its spread (1e13-scale terms cancelling to 1e9 leave
-    only ~3 safe decimal digits in a double). Pass 2 is ONE
-    map-side-combinable aggregate to per-(segment, group)
-    ``(n_g, Σd, Σd²)``, then a segment-level reduce of the
-    group-dimension frame::
-
-        SS_within  = Σ_g (Σd² − (Σd)²/n_g)
-        SS_between = Σ_g (Σd)²/n_g − (Σ_g Σd)²/N
-
-    Two fact scans, zero raw-row shuffles (the aggregate is the only
-    exchange, as in :func:`welch_ttest`).
+    Plan: :func:`_oneway` — per-segment means centre the metric
+    (:func:`_centered`), then one aggregate to the group-dimension
+    frame. Two fact scans, zero raw-row shuffles.
     """
-    xr = F.col(value).cast("double")
-    gm = df.groupBy(segment).agg(F.round(F.avg(xr), 6).alias("__gm"))
-    df = (df.join(F.broadcast(gm), segment)
-            .withColumn("__cx", xr - F.col("__gm")))
-    x = F.col("__cx")
-    g = df.groupBy(segment, group).agg(
-        F.count(F.lit(1)).cast("double").alias("ng"),
-        F.sum(x).alias("sg"),
-        F.sum(x * x).alias("qg"))
-    agg = g.groupBy(segment).agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("ng").alias("n"),
-        F.sum("sg").alias("s"),
-        F.sum(F.col("sg") * F.col("sg") / F.col("ng")).alias("sb_raw"),
-        F.sum(F.col("qg") - F.col("sg") * F.col("sg") / F.col("ng"))
-         .alias("ssw"))
+    agg = _oneway(df, segment, group, value)
     k, n = F.col("k"), F.col("n")
-    ssb = F.col("sb_raw") - F.col("s") * F.col("s") / n
-    ssw = F.col("ssw")
+    ssb, ssw = F.col("ssb"), F.col("ssw")
     sst = ssb + ssw
     df_b, df_w = (k - 1).cast("double"), n - k
     msw = F.when(df_w > 0, ssw / df_w)
@@ -1113,23 +1119,15 @@ def levene_bf(df: DataFrame, segment: str, group: str, value: str,
     where W is the one-way ANOVA F computed on the absolute
     deviations ``z = |x − median_g|``.
 
-    Plan: pass 1 aggregates exact interpolated group medians
-    (map-side-combinable ``percentile``), ROUNDED to 6 dp before
-    reuse (the module's rounded-handoff rule — Spark and DuckDB both
-    interpolate linearly, so the rounded medians agree bit-for-bit);
-    the group-dimension median table broadcast-joins back onto the
-    fact rows, and pass 2 is :func:`anova_oneway`'s single aggregate
-    over z. The fact table is scanned twice (the algorithm's lower
-    bound — medians cannot stream with the deviations) but never
-    shuffled on raw rows.
+    Plan: :func:`_centered` on exact interpolated group medians
+    (Spark and DuckDB both interpolate linearly, so the rounded medians
+    agree bit-for-bit), then :func:`anova_oneway` over z. The fact
+    table is scanned twice (medians cannot stream with the deviations)
+    but never shuffled on raw rows.
     """
-    x = F.col(value).cast("double")
-    med = df.groupBy(segment, group).agg(
-        F.round(F.expr(f"percentile(CAST({value} AS DOUBLE), 0.5)"), 6)
-         .alias("__med"))
-    z = (df.join(F.broadcast(med), [segment, group])
-           .select(segment, group,
-                   F.abs(x - F.col("__med")).alias("__z")))
+    z = (_centered(df, [segment, group], F.col(value).cast("double"),
+                   F.median)
+         .select(segment, group, F.abs("__d").alias("__z")))
     out = anova_oneway(z, segment, group, "__z", ndigits)
     return out.select(
         segment, "k", "n",
@@ -1145,21 +1143,13 @@ def jarque_bera(df: DataFrame, group: str, value: str,
     kurtosis). Flags heavy-tailed / skewed feature distributions that
     violate the normal-theory tests upstream of them.
 
-    Plan: pass 1 aggregates per-group means, ROUNDED to 6 dp
-    (rounded-handoff rule) and broadcast-joined back; pass 2
-    aggregates the CENTRAL power sums ``Σ(x−μ̂)^{2,3,4}`` directly.
-    Centering before the power sums is deliberate: raw fourth-power
-    sums cancel catastrophically (Σx⁴ terms of ~1e16 subtracting to
-    ~1e12 loses 4 significant digits and breaks 6-dp oracle parity),
-    while central sums keep every term at deviation scale. Same
-    two-scan / zero-raw-shuffle shape as :func:`levene_bf`.
+    Plan: :func:`_centered`, then one aggregate of the CENTRAL power
+    sums ``Σ(x−μ̂)^{2,3,4}`` (raw fourth-power sums of ~1e16 cancelling
+    to ~1e12 would lose 4 significant digits and break 6-dp oracle
+    parity).
     """
-    x = F.col(value).cast("double")
-    mu = df.groupBy(group).agg(F.round(F.avg(x), 6).alias("__mu"))
-    d = (df.join(F.broadcast(mu), group)
-           .select(group, (x - F.col("__mu")).alias("__d"), "__mu"))
     dd = F.col("__d")
-    agg = d.groupBy(group).agg(
+    agg = _centered(df, group, F.col(value).cast("double")).groupBy(group).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.first("__mu").alias("mean"),
         F.sum(dd * dd).alias("c2"),
@@ -1187,33 +1177,24 @@ def kruskal_wallis(df: DataFrame, segment: str, group: str, value: str,
     ``group`` — the k-group generalization of :func:`mann_whitney`:
     ``k, n, h_stat, h_tied, p_value`` per segment, with midranks for
     ties and the tie correction ``H' = H / (1 − Σ(t³−t)/(N³−N))``;
-    p-value from the chi-square(k−1) survival via the Wilson–Hilferty
-    cube-root normal transform (both engines lack the incomplete
-    gamma; the transform reduces it to the module's shared logistic
-    Φ, written identically in the oracle).
+    p-value from the chi-square(k−1) tail (``chi2_sf``).
 
-    Plan: rank arithmetic on AGGREGATED frames only, as in
-    mann_whitney: one groupBy to per-(segment, group, value) counts,
-    a value-level total via a second aggregate, midranks from a
-    cumulative window over the value-dimension frame, an aggregated
+    Plan: rank arithmetic on AGGREGATED frames only: one groupBy to
+    per-(segment, group, value) counts, a value-level total via a
+    second aggregate, :func:`_midranks` over it, an aggregated
     equi-join to attach midranks back to the per-group counts, and a
     final segment reduce. The raw rows are touched exactly once.
     """
     x = F.col(value).cast("double")
     gv = df.groupBy(segment, group, x.alias("__v")).agg(
         F.count(F.lit(1)).cast("double").alias("__c"))
-    vt = gv.groupBy(segment, "__v").agg(F.sum("__c").alias("__t"))
-    w = (Window.partitionBy(segment).orderBy("__v")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    vt = vt.withColumn("__r", F.sum("__t").over(w) - F.col("__t")
-                       + (F.col("__t") + 1) / 2)
+    vt = _midranks(gv.groupBy(segment, "__v").agg(
+        F.sum("__c").alias("__t")), segment)
     joined = gv.join(vt, [segment, "__v"])
     per_g = joined.groupBy(segment, group).agg(
         F.sum("__c").alias("ng"),
         F.sum(F.col("__c") * F.col("__r")).alias("rg"))
-    ties = vt.groupBy(segment).agg(
-        F.sum(F.col("__t") * F.col("__t") * F.col("__t") - F.col("__t"))
-         .alias("tie"))
+    ties = vt.groupBy(segment).agg(_tie_sum().alias("tie"))
     agg = (per_g.groupBy(segment).agg(
                F.count(F.lit(1)).cast("bigint").alias("k"),
                F.sum("ng").alias("n"),
@@ -1224,15 +1205,7 @@ def kruskal_wallis(df: DataFrame, segment: str, group: str, value: str,
                12.0 / (n * (n + 1)) * F.col("r2") - 3.0 * (n + 1))
     corr = 1.0 - F.col("tie") / (n * n * n - n)
     h_tied = F.when(corr > 0, h / corr)
-    # Wilson-Hilferty: X² ~ chi2(v)  =>  (X²/v)^(1/3) approx normal
-    v = (k - 1).cast("double")
-    zwh = F.when(h_tied >= 0,
-                 ((F.pow(h_tied / v, F.lit(1.0 / 3.0)))
-                  - (1.0 - 2.0 / (9.0 * v)))
-                 / F.sqrt(2.0 / (9.0 * v)))
-    p = F.when(zwh.isNotNull(),
-               1.0 / (1.0 + F.exp(0.07056 * zwh * zwh * zwh
-                                  + 1.5976 * zwh)))
+    p = F.when(h_tied >= 0, chi2_sf(h_tied, (k - 1).cast("double")))
     return agg.select(
         segment, k, n.cast("bigint").alias("n"),
         F.round(h, ndigits).alias("h_stat"),
@@ -1281,14 +1254,15 @@ def cmh_test(df: DataFrame, stratum: str, exposed, outcome,
         F.round(ea, 9).alias("__ea"), F.round(va, 9).alias("__va"),
         F.round(num_or, 9).alias("__no"), F.round(den_or, 9).alias("__do"))
     wall = Window.partitionBy()
-    s_a = F.sum(F.col("a").cast("double")).over(wall)
-    s_ea = F.sum("__ea").over(wall)
-    s_va = F.sum("__va").over(wall)
-    s_no = F.sum("__no").over(wall)
-    s_do = F.sum("__do").over(wall)
+    tot = per.select(
+        "*", F.sum(F.col("a").cast("double")).over(wall).alias("__s_a"),
+        *[F.sum(f"__{c}").over(wall).alias(f"__s_{c}")
+          for c in ("ea", "va", "no", "do")])
+    s_a, s_ea, s_va, s_no, s_do = (
+        F.col(f"__s_{c}") for c in ("a", "ea", "va", "no", "do"))
     chi2 = F.when(s_va > 0, F.pow(s_a - s_ea, F.lit(2.0)) / s_va)
     or_mh = F.when(s_do > 0, s_no / s_do)
-    return per.select(
+    return tot.select(
         stratum, "a", "b", "c", "d",
         F.round(chi2, ndigits).alias("cmh_chi2"),
         F.round(or_mh, ndigits).alias("or_mh"))
@@ -1305,41 +1279,27 @@ def tost_equiv(df: DataFrame, segment: str, value: str, arm: str,
     where z_lower tests diff > −margin, z_upper tests diff < +margin,
     ``p_tost`` is the larger of the two one-sided normal p-values
     (the TOST decision rule) and ``equivalent`` is the α=0.05 verdict
-    ``min(z_lower, −z_upper) ≥ z_crit`` (large-sample normal regime,
-    matching the module's Welch machinery).
-
-    Plan: identical to welch_ttest — one conditional-sum aggregate,
-    segment-dimension arithmetic after.
+    ``min(z_lower, −z_upper) ≥ z_crit`` (large-sample normal regime;
+    the arms come from :func:`_two_arms`, as in :func:`welch_ttest`).
     """
-    x = F.col(value).cast("double")
-    in_a, in_b = F.col(arm) == arm_a, F.col(arm) == arm_b
-    agg = (df.filter(in_a | in_b).groupBy(segment).agg(
-        F.sum(F.when(in_a, 1).otherwise(0)).cast("double").alias("na"),
-        F.sum(F.when(in_a, x).otherwise(0.0)).alias("sa"),
-        F.sum(F.when(in_a, x * x).otherwise(0.0)).alias("qa"),
-        F.sum(F.when(in_b, 1).otherwise(0)).cast("double").alias("nb"),
-        F.sum(F.when(in_b, x).otherwise(0.0)).alias("sb"),
-        F.sum(F.when(in_b, x * x).otherwise(0.0)).alias("qb")))
-    na, nb = F.col("na"), F.col("nb")
-    ma, mb = F.col("sa") / na, F.col("sb") / nb
-    va = (F.col("qa") - F.col("sa") * F.col("sa") / na) / (na - 1)
-    vb = (F.col("qb") - F.col("sb") * F.col("sb") / nb) / (nb - 1)
+    agg = _two_arms(df, segment, F.col(value).cast("double"), arm,
+                    arm_a, arm_b)
+    na, ma, va = _arm_moments("a")
+    nb, mb, vb = _arm_moments("b")
     ok = (na >= 2) & (nb >= 2)
     se = F.when(ok, F.sqrt(va / na + vb / nb))
     diff = ma - mb
     zl = F.when(ok & (se > 0), (diff + F.lit(margin)) / se)
     zu = F.when(ok & (se > 0), (diff - F.lit(margin)) / se)
-    # logistic Phi(z); p1 = P(Z >= z_lower) = 1 - Phi, p2 = P(Z <= z_upper)
-    def phi(zc):
-        return 1.0 / (1.0 + F.exp(-(0.07056 * zc * zc * zc + 1.5976 * zc)))
-    p_l = 1.0 - phi(zl)   # small when z_lower is large positive
-    p_u = phi(zu)         # small when z_upper is large negative
+    # p_l = P(Z >= z_lower) = 1 - Phi(z_lower), p_u = P(Z <= z_upper)
+    # = Phi(z_upper); Phi(z) is norm_sf(-z)
+    p_l = 1.0 - norm_sf(-zl)   # small when z_lower is large positive
+    p_u = norm_sf(-zu)         # small when z_upper is large negative
     p_tost = F.greatest(p_l, p_u)
     equiv = F.when(zl.isNotNull() & zu.isNotNull(),
                    (zl >= F.lit(z_crit)) & (zu <= F.lit(-z_crit)))
     return agg.select(
-        segment,
-        na.cast("bigint").alias("n_a"), nb.cast("bigint").alias("n_b"),
+        segment, na, nb,
         F.round(diff, ndigits).alias("diff"),
         F.round(se, ndigits).alias("se"),
         F.round(zl, ndigits).alias("z_lower"),
@@ -1359,27 +1319,23 @@ def runs_test(df: DataFrame, key: str, order: Sequence[str], value: str,
         E[R] = 2·n1·n2/N + 1
         Var  = 2·n1·n2·(2·n1·n2 − N) / (N²·(N−1))
 
-    with the module's logistic-Φ two-sided p. The trend/oscillation
+    with the two-sided ``norm_sf2`` p. The trend/oscillation
     complement to :func:`~hipipe_spark.operators.regression.
     durbin_watson`: DW measures lag-1 magnitude correlation, runs
     count sign persistence.
 
-    Plan: rounded-handoff key medians broadcast back, one key-window
-    ``lag`` to flag run boundaries, one aggregate. Keys with fewer
-    than ``min_rows`` surviving rows keep their row with null ``z``.
+    Plan: :func:`_centered` on key medians, one key-window ``lag`` to
+    flag run boundaries, one aggregate. Keys with fewer than
+    ``min_rows`` surviving rows keep their row with null ``z``.
     """
     x = F.col(value).cast("double")
-    med = df.groupBy(key).agg(
-        F.round(F.expr(f"percentile(CAST({value} AS DOUBLE), 0.5)"), 6)
-         .alias("__med"))
-    d = (df.join(F.broadcast(med), key)
-           .where(x != F.col("__med"))
-           .select(key, *order, (x > F.col("__med")).alias("__up")))
+    d = (_centered(df, key, x, F.median)
+         .where(x != F.col("__mu"))
+         .select(key, *order, (x > F.col("__mu")).alias("__up")))
     w = Window.partitionBy(key).orderBy(*order)
-    d = d.withColumn("__new",
-                     F.when(F.lag("__up").over(w).isNull()
-                            | (F.lag("__up").over(w) != F.col("__up")),
-                            1).otherwise(0))
+    d = d.withColumn("__new", F.when(F.lag("__up").over(w)
+                                     .eqNullSafe(F.col("__up")), 0)
+                               .otherwise(1))
     agg = d.groupBy(key).agg(
         F.sum(F.when(F.col("__up"), 1).otherwise(0))
          .cast("double").alias("n1"),
@@ -1407,25 +1363,20 @@ def grubbs_stat(df: DataFrame, group: str, value: str,
     the single-outlier screen that complements HBOS/MAD: G near
     ``(n−1)/√n`` means one point carries essentially all the spread.
 
-    The max deviation folds into the same centered one-pass
-    aggregate as everything else in this module: with d = x − μ̂
-    (rounded-handoff mean) and the exact residual center c = Σd/n,
+    The max deviation folds into the same :func:`_centered` one-pass
+    aggregate: with d = x − μ̂ and the exact residual center c = Σd/n,
     ``max|x − x̄| = max(max(d) − c, c − min(d))`` — no second scan,
     no per-row ranking.
     """
-    x = F.col(value).cast("double")
-    mu = df.groupBy(group).agg(F.round(F.avg(x), 6).alias("__mu"))
-    d = (df.join(F.broadcast(mu), group)
-           .select(group, (x - F.col("__mu")).alias("__d"), "__mu"))
     dd = F.col("__d")
-    agg = d.groupBy(group).agg(
+    agg = _centered(df, group, F.col(value).cast("double")).groupBy(group).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.first("__mu").alias("mean"),
         F.sum(dd).alias("u"), F.sum(dd * dd).alias("q"),
         F.max(dd).alias("dmax"), F.min(dd).alias("dmin"))
     n = F.col("n")
     c = F.col("u") / n
-    var = (F.col("q") - F.col("u") * F.col("u") / n) / (n - 1)
+    var = _sample_var(n, F.col("u"), F.col("q"))
     sd = F.when((n >= 3) & (var > 0), F.sqrt(var))
     g = F.greatest(F.col("dmax") - c, c - F.col("dmin")) / sd
     return agg.select(
@@ -1444,30 +1395,14 @@ def icc_oneway(df: DataFrame, segment: str, group: str, value: str,
         n0     = (N − Σ n_g²/N) / (k − 1)      (unbalanced-design size)
         ICC(1) = (MSB − MSW) / (MSB + (n0 − 1)·MSW)
 
-    ``k, n, n0, msb, msw, icc1`` per segment. Same centered
-    one-aggregate plan as :func:`anova_oneway` with one extra
-    sufficient statistic (Σn_g²); negative estimates are reported
-    as-is (the standard convention — truncation hides degenerate
-    designs).
+    ``k, n, n0, msb, msw, icc1`` per segment. :func:`_oneway` with
+    one extra sufficient statistic (Σn_g²); negative estimates are
+    reported as-is (the standard convention — truncation hides
+    degenerate designs).
     """
-    xr = F.col(value).cast("double")
-    gm = df.groupBy(segment).agg(F.round(F.avg(xr), 6).alias("__gm"))
-    d = (df.join(F.broadcast(gm), segment)
-           .withColumn("__cx", xr - F.col("__gm")))
-    x = F.col("__cx")
-    g = d.groupBy(segment, group).agg(
-        F.count(F.lit(1)).cast("double").alias("ng"),
-        F.sum(x).alias("sg"), F.sum(x * x).alias("qg"))
-    agg = g.groupBy(segment).agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("ng").alias("n"),
-        F.sum(F.col("ng") * F.col("ng")).alias("n2"),
-        F.sum("sg").alias("s"),
-        F.sum(F.col("sg") * F.col("sg") / F.col("ng")).alias("sb_raw"),
-        F.sum(F.col("qg") - F.col("sg") * F.col("sg") / F.col("ng"))
-         .alias("ssw"))
-    k, n = F.col("k"), F.col("n")
-    ssb = F.col("sb_raw") - F.col("s") * F.col("s") / n
+    agg = _oneway(df, segment, group, value,
+                  F.sum(F.col("ng") * F.col("ng")).alias("n2"))
+    k, n, ssb = F.col("k"), F.col("n"), F.col("ssb")
     ok = (k > 1) & (n - k > 0)
     msb = F.when(ok, ssb / (k - 1))
     msw = F.when(ok, F.col("ssw") / (n - k))
@@ -1498,33 +1433,25 @@ def overdispersion(df: DataFrame, group: str, entity: str,
     conversation): a Poisson rate column is the wrong feature when
     dispersion ≫ 1 — burstiness/heterogeneity must be modeled.
 
-    Plan: one aggregate to the (group, entity) count grid, rounded-
-    handoff centering, one aggregate per group — the grid exchange
-    is the only fact-scale shuffle.
+    Plan: one aggregate to the (group, entity) count grid,
+    :func:`_centered`, one aggregate per group — the grid exchange is
+    the only fact-scale shuffle.
     """
     grid = df.groupBy(group, entity).agg(
         F.count(F.lit(1)).cast("double").alias("__c"))
-    mu = grid.groupBy(group).agg(F.round(F.avg("__c"), 6).alias("__mu"))
-    c = (grid.join(F.broadcast(mu), group)
-             .select(group, (F.col("__c") - F.col("__mu")).alias("d"),
-                     "__mu"))
-    dd = F.col("d")
-    agg = c.groupBy(group).agg(
+    dd = F.col("__d")
+    agg = _centered(grid, group, F.col("__c")).groupBy(group).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.first("__mu").alias("mean"),
         F.sum(dd).alias("u"), F.sum(dd * dd).alias("q"))
     n = F.col("n")
     mean = F.col("mean") + F.col("u") / n       # exact grid mean
-    var = (F.col("q") - F.col("u") * F.col("u") / n) / (n - 1)
+    var = _sample_var(n, F.col("u"), F.col("q"))
     ok = (n >= 2) & (mean > 0)
     disp = F.when(ok, var / mean)
     dstat = F.when(ok, (n - 1) * var / mean)
-    v = n - 1
-    z = F.when(ok & (dstat >= 0),
-               (F.pow(dstat / v, F.lit(1.0 / 3.0))
-                - (1.0 - 2.0 / (9.0 * v))) / F.sqrt(2.0 / (9.0 * v)))
-    p = F.when(z.isNotNull(),
-               1.0 / (1.0 + F.exp(0.07056 * z * z * z + 1.5976 * z)))
+    z = F.when(ok & (dstat >= 0), wilson_hilferty_z(dstat, n - 1))
+    p = norm_sf(z)
     over = ok & (var > mean)
     nb_r = F.when(over, mean * mean / (var - mean))
     nb_p = F.when(over, mean / var)

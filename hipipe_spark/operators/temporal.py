@@ -26,6 +26,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from hipipe_spark.functions.tails import chi2_sf
 from hipipe_spark.plans.pipeline import Stage, WindowStage
 
 DEFAULT_KEY = "conv_id"
@@ -895,9 +896,8 @@ def acf_ljung_box(df: DataFrame, t_col: str, value: str,
       difference with the same constant);
     - ``Q_k = n(n+2) Σ_{j≤k} r_j²/(n−j)`` from the ROUNDED r_j —
       integer-plus-6dp inputs make Q bit-identical cross-engine;
-    - p via the Wilson–Hilferty cube-root normal approximation of
-      the χ²_k upper tail, Bowling-logistic Φ (same expression in
-      the oracle).
+    - p is the χ²_k upper tail ``chi2_sf(Q_k, k)`` (same expression
+      in the oracle).
 
     The input is a dimension-sized SERIES (same contract as
     :func:`seasonal_decompose`): all ``max_lag`` lag columns share
@@ -935,13 +935,7 @@ def acf_ljung_box(df: DataFrame, t_col: str, value: str,
     q = (n * (n + 2)
          * F.sum(F.col("r") * F.col("r") / (n - F.col("lag"))).over(wq))
     per2 = per.select("lag", "r", F.round(q, 6).alias("q_stat"))
-    # Wilson–Hilferty: χ²_k upper tail ≈ 1 − Φ(z),
-    # z = ((Q/k)^⅓ − (1 − 2/(9k))) / sqrt(2/(9k))
-    k = F.col("lag").cast("double")
-    z = ((F.pow(F.col("q_stat") / k, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * k)))
-         / F.sqrt(2.0 / (9.0 * k)))
-    p = 1.0 / (1.0 + F.exp(0.07056 * z * z * z + 1.5976 * z))
+    p = chi2_sf(F.col("q_stat"), F.col("lag").cast("double"))
     return (per2.select("lag", "r", "q_stat",
                         F.round(p, 6).alias("p_value"))
             .orderBy("lag"))

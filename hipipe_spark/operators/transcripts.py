@@ -334,16 +334,16 @@ def topic_segments(
     plan with a lexical predicate.
     """
     from hipipe_spark.functions.text import tokens
+    from hipipe_spark.operators.dedup import _jaccard
 
     order = [F.col(c).asc() for c in order_cols]
     w = Window.partitionBy(key).orderBy(*order)
     toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
-    base = df.withColumn("__ts_set", toks)
-    prev = F.lag("__ts_set").over(w)
-    inter = F.size(F.array_intersect("__ts_set", prev))
-    union = F.size(F.array_union("__ts_set", prev))
+    base = (df.withColumn("__ts_set", toks)
+              .withColumn("__ts_prev", F.lag("__ts_set").over(w)))
+    prev = F.col("__ts_prev")
     jac = F.when(prev.isNull(), F.lit(None).cast("double")).otherwise(
-        F.when(union > 0, inter.cast("double") / union).otherwise(0.0))
+        _jaccard(F.col("__ts_set"), prev))
     base = base.withColumn("prev_jaccard", F.round(jac, 6))
     new_seg = F.when(F.col("prev_jaccard").isNull()
                      | (F.col("prev_jaccard") < threshold), 1).otherwise(0)
@@ -353,4 +353,4 @@ def topic_segments(
             .withColumn("segment_id",
                         F.concat_ws("#", F.col(key).cast("string"),
                                     F.col("segment_seq").cast("string")))
-            .drop("__ts_set"))
+            .drop("__ts_set", "__ts_prev"))

@@ -117,3 +117,49 @@ def test_each_window_function_once(scanned):
         assert got == {f"lag({c}, -{j}, null)": 1
                        for c in ("ts", "text_len", "turn_idx")
                        for j in range(1, 5)}, got
+
+
+def _window_calls(df):
+    """Every window function of ``df``'s final plan with its spec,
+    expression ids stripped; runs an action first."""
+    import re
+    from collections import Counter
+
+    df.collect()
+    out = []
+    for node in _final_nodes(df):
+        if node.nodeName() == "Window":
+            we = node.windowExpression()
+            out += [re.sub(r"#\d+", "", we.apply(i).child().toString())
+                    for i in range(we.size())]
+    return Counter(out)
+
+
+def test_topic_segments_lags_the_token_set_once(scanned):
+    from hipipe_spark.operators.transcripts import topic_segments
+
+    turns, _ = scanned
+    calls = _window_calls(topic_segments(turns))
+    lags = [f for f in calls.elements() if f.startswith("lag(__ts_set")]
+    assert len(lags) == 1, calls
+
+
+def test_ad_table_window_sums_once(spark):
+    """The totals and cumulative counts are one window function each,
+    however often the statistic reads them."""
+    from hipipe_spark.operators.drift import ad_table
+
+    a = spark.createDataFrame([(float(i % 7),) for i in range(40)], "x double")
+    b = spark.createDataFrame([(float(i % 5),) for i in range(30)], "x double")
+    calls = _window_calls(ad_table(a, b, "x"))
+    assert set(calls.values()) == {1} and len(calls) == 5, calls
+
+
+def test_cmh_window_sums_once(spark):
+    from hipipe_spark.operators.stats import cmh_test
+
+    cells = spark.createDataFrame(
+        [(f"s{i % 3}", i % 2 == 0, i % 5 < 2) for i in range(60)],
+        "s string, e boolean, o boolean")
+    calls = _window_calls(cmh_test(cells, "s", "e", "o"))
+    assert set(calls.values()) == {1} and len(calls) == 5, calls
